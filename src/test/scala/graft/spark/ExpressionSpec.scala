@@ -77,19 +77,15 @@ class ExpressionSpec extends AnyFunSuite {
     val rnd = new java.util.SplittableRandom(12L)
     val rows = (0 until 30000).map(i => (s"g${i % 5}", rnd.nextDouble() * 1e5))
     val df = rows.toDF("g", "v").repartition(8)
-    val a = df
+    def bytesOf(agg: org.apache.spark.sql.Column): Map[String, Array[Byte]] = df
       .groupBy(col("g"))
-      .agg(hist_sketch(col("v"), layout).as("sk"))
+      .agg(agg.as("sk"))
       .collect()
-      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq)
+      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1))
       .toMap
-    val b = df
-      .groupBy(col("g"))
-      .agg(hist_sketch_binary(col("v"), layout).as("sk"))
-      .collect()
-      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq)
-      .toMap
-    assert(a == b)
+    // the golden holds the kryo Aggregator's bytes for this input
+    Goldens.check("expr.hist_sketch", bytesOf(hist_sketch(col("v"), layout)))
+    Goldens.check("expr.hist_sketch", bytesOf(hist_sketch_binary(col("v"), layout)))
     // the binary-buffer variant must shuffle compact V1 payloads: its
     // serialized buffer is dramatically smaller than the kryo object graph
     val h = graft.core.Histogram(layout)
@@ -306,9 +302,10 @@ class ExpressionSpec extends AnyFunSuite {
       .collect()
       .map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq)
       .toMap
-    val kryo = bytesOf(hist_sketch_weighted(col("v"), col("w"), layout))
+    // the golden holds the kryo weighted Aggregator's bytes for this input
     val native = bytesOf(hist_sketch_weighted_binary(col("v"), col("w"), layout))
-    assert(kryo == native)
+    Goldens.check("expr.hist_sketch_weighted", native.map { case (g, b) => g -> b.toArray })
+    assert(bytesOf(hist_sketch_weighted(col("v"), col("w"), layout)) == native)
     // weight w must equal adding the value w times (reference addValue(v, n))
     val repeated = rows
       .flatMap { case (g, v, w) => Seq.fill(w.toInt)((g, v)) }
@@ -339,12 +336,11 @@ class ExpressionSpec extends AnyFunSuite {
       .toDF("s", "wi")
     def b(c: org.apache.spark.sql.Column): Array[Byte] =
       df.agg(c).collect()(0).getAs[Array[Byte]](0)
-    assert(java.util.Arrays.equals(
-      b(graft.spark.expressions.HllSketchAgg(col("s"), 12)),
-      b(functions.hll_sketch(col("s"), 12))))
-    assert(java.util.Arrays.equals(
-      b(graft.spark.expressions.CountMinSketchAgg(col("s"), 5, 512)),
-      b(functions.cms_sketch(col("s"), 5, 512))))
+    // the goldens hold the kryo String-path bytes for these inputs
+    Goldens.check("expr.utf8.hll", b(graft.spark.expressions.HllSketchAgg(col("s"), 12)))
+    Goldens.check("expr.utf8.hll", b(functions.hll_sketch(col("s"), 12)))
+    Goldens.check("expr.utf8.cms", b(graft.spark.expressions.CountMinSketchAgg(col("s"), 5, 512)))
+    Goldens.check("expr.utf8.cms", b(functions.cms_sketch(col("s"), 5, 512)))
     // malformed UTF-8 (unreachable via well-formed sources, but parquet
     // bytes are not validated): the hash must match what the kryo String
     // path computes after toString's U+FFFD replacement
@@ -364,9 +360,9 @@ class ExpressionSpec extends AnyFunSuite {
       graft.spark.expressions.CountMinWeightedSketchAgg(
         ColumnBridge.expression(col("s")), ColumnBridge.expression(col("wi")),
         5, 512).toAggregateExpression())
-    assert(java.util.Arrays.equals(
-      b(rawIntWeight),
-      b(functions.cms_sketch_weighted(col("s"), col("wi").cast("long"), 5, 512))))
+    Goldens.check("expr.utf8.cms_weighted", b(rawIntWeight))
+    Goldens.check("expr.utf8.cms_weighted",
+      b(functions.cms_sketch_weighted(col("s"), col("wi").cast("long"), 5, 512)))
   }
 
   test("compact shuffle buffers: grouped native companion sketches stay " +
@@ -378,14 +374,19 @@ class ExpressionSpec extends AnyFunSuite {
     val rnd = new java.util.SplittableRandom(9L)
     val rows = (0 until 6000).map { i => (i % 300, s"it_${rnd.nextInt(200)}", i.toLong) }
     val df = rows.toDF("g", "s", "id").repartition(4)
-    def collectMap(c: org.apache.spark.sql.Column): Map[Int, Seq[Byte]] =
+    def collectMap(c: org.apache.spark.sql.Column): Map[String, Array[Byte]] =
       df.groupBy(col("g")).agg(c.as("sk")).collect()
-        .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(collectMap(graft.spark.expressions.HllSketchAgg(col("id"), 14)) ==
-      collectMap(functions.hll_sketch_long(col("id"), 14)))
-    assert(collectMap(graft.spark.expressions.CountMinSketchAgg(col("s"), 5, 2048)) ==
-      collectMap(functions.cms_sketch(col("s"), 5, 2048)))
-    assert(collectMap(graft.spark.expressions.BloomSketchAgg(col("id"), 100000, 0.01)) ==
+        .map(r => r.getInt(0).toString -> r.getAs[Array[Byte]](1)).toMap
+    // the goldens hold the kryo Aggregators' bytes for this input
+    Goldens.check("expr.grouped.hll_long",
+      collectMap(graft.spark.expressions.HllSketchAgg(col("id"), 14)))
+    Goldens.check("expr.grouped.hll_long", collectMap(functions.hll_sketch_long(col("id"), 14)))
+    Goldens.check("expr.grouped.cms",
+      collectMap(graft.spark.expressions.CountMinSketchAgg(col("s"), 5, 2048)))
+    Goldens.check("expr.grouped.cms", collectMap(functions.cms_sketch(col("s"), 5, 2048)))
+    Goldens.check("expr.grouped.bloom",
+      collectMap(graft.spark.expressions.BloomSketchAgg(col("id"), 100000, 0.01)))
+    Goldens.check("expr.grouped.bloom",
       collectMap(functions.bloom_sketch(col("id"), 100000, 0.01)))
   }
 
@@ -521,31 +522,29 @@ class ExpressionSpec extends AnyFunSuite {
     def dslBytes(c: org.apache.spark.sql.Column): Array[Byte] =
       df.agg(c).collect()(0).getAs[Array[Byte]](0)
 
-    // deterministic formats: native SQL builder with explicit parameters is
-    // byte-identical to the kryo Aggregator DSL (HLL register-max, CMS
-    // counter-add, Bloom bit-OR are order-insensitive)
-    assert(java.util.Arrays.equals(
-      bytes("SELECT hll_sketch(s, 12) FROM sql_comp"),
-      dslBytes(functions.hll_sketch(col("s"), 12))))
-    assert(java.util.Arrays.equals(
-      bytes("SELECT cms_sketch(s, 7, 1024) FROM sql_comp"),
-      dslBytes(functions.cms_sketch(col("s"), 7, 1024))))
-    assert(java.util.Arrays.equals(
-      bytes("SELECT cms_sketch_weighted(s, w, 7, 1024) FROM sql_comp"),
-      dslBytes(functions.cms_sketch_weighted(col("s"), col("w"), 7, 1024))))
-    assert(java.util.Arrays.equals(
-      bytes("SELECT bloom_sketch(id, 10000, 0.01) FROM sql_comp"),
-      dslBytes(functions.bloom_sketch(col("id"), 10000L, 0.01))))
+    // deterministic formats: native SQL builder with explicit parameters
+    // gives the DSL's bytes, pinned to goldens of the kryo Aggregator DSL
+    // (HLL register-max, CMS counter-add, Bloom bit-OR are order-insensitive)
+    def same(golden: String, sql: String, dsl: org.apache.spark.sql.Column): Unit = {
+      Goldens.check(golden, bytes(sql))
+      Goldens.check(golden, dslBytes(dsl))
+    }
+    same("expr.sql.hll_12", "SELECT hll_sketch(s, 12) FROM sql_comp",
+      functions.hll_sketch(col("s"), 12))
+    same("expr.sql.cms_7_1024", "SELECT cms_sketch(s, 7, 1024) FROM sql_comp",
+      functions.cms_sketch(col("s"), 7, 1024))
+    same("expr.sql.cms_weighted_7_1024", "SELECT cms_sketch_weighted(s, w, 7, 1024) FROM sql_comp",
+      functions.cms_sketch_weighted(col("s"), col("w"), 7, 1024))
+    same("expr.sql.bloom_10000", "SELECT bloom_sketch(id, 10000, 0.01) FROM sql_comp",
+      functions.bloom_sketch(col("id"), 10000L, 0.01))
     // long input through the native HLL (unboxed ordinal path) matches the
     // long-typed DSL aggregator
-    assert(java.util.Arrays.equals(
-      bytes("SELECT hll_sketch(id, 12) FROM sql_comp"),
-      dslBytes(functions.hll_sketch_long(col("id"), 12))))
+    same("expr.sql.hll_long_12", "SELECT hll_sketch(id, 12) FROM sql_comp",
+      functions.hll_sketch_long(col("id"), 12))
 
     // default-parameter 1-arg forms still resolve (DSL defaults)
-    assert(java.util.Arrays.equals(
-      bytes("SELECT hll_sketch(s) FROM sql_comp"),
-      dslBytes(functions.hll_sketch(col("s")))))
+    same("expr.sql.hll_default", "SELECT hll_sketch(s) FROM sql_comp",
+      functions.hll_sketch(col("s")))
 
     // scalar queries over the SQL-built sketches: estimate within HLL bound,
     // CMS overestimates-only, Bloom no false negatives
