@@ -72,7 +72,7 @@ object Bench {
               * lit(math.log(1e4) - math.log(10.0)) + lit(math.log(10.0))).as("turn_len"))
         .groupBy(col("role_idx"))
         // native TypedImperativeAggregate: V1 shuffle buffers + unboxed
-        // per-row update (measured ~20% faster than the kryo Aggregator)
+        // per-row update
         .agg(graft.spark.functions.hist_sketch_binary(col("turn_len"), layout))
         .collect()
     engine() // warm-up

@@ -75,9 +75,16 @@ final class CountMin private (
 
 object CountMin {
 
+  /** Largest depth x width whose dense encoding (16-byte header, 8 bytes
+   * a counter) still fits in one JVM array. */
+  val MaxCells: Long = (Int.MaxValue - 8 - 16) / 8
+
   def apply(depth: Int = 5, width: Int = 2048): CountMin = {
     require(depth > 0 && width > 0)
-    new CountMin(depth, width, new Array[Long](depth * width), 0L)
+    val cells = depth.toLong * width
+    require(cells <= MaxCells,
+      s"count-min $depth x $width = $cells counters exceeds the $MaxCells an encoding can hold")
+    new CountMin(depth, width, new Array[Long](cells.toInt), 0L)
   }
 
   /** Sizes the sketch for the published (eps, delta) guarantee. */
@@ -102,9 +109,9 @@ object CountMin {
       if (c.counters(i) != 0L) nNonzero += 1
       i += 1
     }
-    val dense = 4 + 4 + 8 + n * 8
+    val dense = 16L + n * 8L
     // conservative sparse bound: ~5 B gap + ~10 B value per pair + header
-    if (20L + nNonzero.toLong * 15L >= dense.toLong) return c.toBytes
+    if (20L + nNonzero.toLong * 15L >= dense) return c.toBytes
     val out = new java.io.ByteArrayOutputStream(20 + nNonzero * 8)
     out.write(0xff)
     Varint.write(out, c.depth.toLong)
@@ -129,7 +136,7 @@ object CountMin {
       val r = new Varint.Reader(bytes, 1)
       val depth = r.read().toInt
       val width = r.read().toInt
-      require(depth > 0 && width > 0 && depth.toLong * width <= Int.MaxValue,
+      require(depth > 0 && width > 0 && depth.toLong * width <= MaxCells,
         "corrupt count-min payload (sparse dims)")
       val total = r.read()
       val n = depth * width
@@ -149,6 +156,8 @@ object CountMin {
     val buf = ByteBuffer.wrap(bytes)
     val depth = buf.getInt
     val width = buf.getInt
+    require(depth > 0 && width > 0 && depth.toLong * width <= MaxCells,
+      "corrupt count-min payload (dims)")
     val total = buf.getLong
     val counters = Array.fill(depth * width)(buf.getLong)
     new CountMin(depth, width, counters, total)
@@ -222,14 +231,21 @@ final class BloomFilter private (
 
 object BloomFilter {
 
+  /** Largest bitset, in 64-bit words, whose dense encoding (12-byte header,
+   * 8 bytes a word) still fits in one JVM array. */
+  val MaxWords: Long = (Int.MaxValue - 8 - 12) / 8
+
   /** Sizes for expected insertions at the target false-positive probability. */
   def apply(expectedItems: Long, fpp: Double): BloomFilter = {
     require(expectedItems > 0 && fpp > 0 && fpp < 1)
     val ln2 = math.log(2)
     val m = math.max(64L, math.ceil(-expectedItems * math.log(fpp) / (ln2 * ln2)).toLong)
-    val mWords = ((m + 63) >>> 6).toInt
+    val mWords = (m + 63) >>> 6
+    require(mWords <= MaxWords,
+      s"bloom filter for $expectedItems items at fpp $fpp needs $mWords words, " +
+        s"over the $MaxWords an encoding can hold")
     val k = math.max(1, math.round(ln2 * m / expectedItems).toInt)
-    new BloomFilter(mWords.toLong * 64L, k, new Array[Long](mWords))
+    new BloomFilter(mWords * 64L, k, new Array[Long](mWords.toInt))
   }
 
   /**
@@ -249,8 +265,8 @@ object BloomFilter {
       if (words(i) != 0L) nNonzero += 1
       i += 1
     }
-    val dense = 8 + 4 + words.length * 8
-    if (16L + nNonzero.toLong * 13L >= dense.toLong) return f.toBytes
+    val dense = 12L + words.length * 8L
+    if (16L + nNonzero.toLong * 13L >= dense) return f.toBytes
     val out = new java.io.ByteArrayOutputStream(16 + nNonzero * 10)
     out.write(0xff)
     Varint.write(out, f.numBits)
@@ -276,7 +292,7 @@ object BloomFilter {
       val r = new Varint.Reader(bytes, 1)
       val numBits = r.read()
       val numHashes = r.read().toInt
-      require(numBits > 0 && (numBits & 63L) == 0L && (numBits >>> 6) <= Int.MaxValue &&
+      require(numBits > 0 && (numBits & 63L) == 0L && (numBits >>> 6) <= MaxWords &&
         numHashes > 0, "corrupt bloom payload (sparse dims)")
       val nWords = (numBits >>> 6).toInt
       val nNonzero = r.read().toInt
@@ -298,6 +314,8 @@ object BloomFilter {
     val buf = ByteBuffer.wrap(bytes)
     val numBits = buf.getLong
     val numHashes = buf.getInt
+    require(numBits > 0 && (numBits & 63L) == 0L && (numBits >>> 6) <= MaxWords &&
+      numHashes > 0, "corrupt bloom payload (dims)")
     val bits = Array.fill((numBits >>> 6).toInt)(buf.getLong)
     new BloomFilter(numBits, numHashes, bits)
   }

@@ -17,13 +17,12 @@ import graft.spark.expressions._
  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
  * }}}
  *
- * Native expressions (scalar sketch queries and layout-parameterized
- * histogram aggregates) are registered via `injectFunction` with expression
- * builders — SQL-callable with arbitrary layout parameters, e.g.
- * `hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0, 1e6)`. The udaf-backed
- * companion sketches (HLL/CMS/Bloom/t-digest/KLL) register through the
- * session UDF registry on first use (they are `Aggregator`s, which have no
- * expression-builder form).
+ * Native expressions (every sketch aggregate and the histogram scalar
+ * queries) are registered via `injectFunction` with expression builders —
+ * SQL-callable with per-call parameters, e.g.
+ * `hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0, 1e6)` or `hll_sketch(c, 12)`.
+ * The companion scalar queries and text scalars register through the
+ * session UDF registry on first use.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -140,9 +139,18 @@ object GraftExtensions {
       mkLayout(args.drop(2)))
       .toAggregateExpression()
 
+  /** The layout of the parameterless SQL `hist_sketch(v)` and
+   * `hist_sketch_weighted(v, w)`. */
+  private val SqlDefaultLayout: Layout = LogQuadraticLayout(1e-8, 1e-2, -1e9, 1e9)
+
   /** Expression builders shared by `injectFunction` (new sessions) and
    * [[functions.registerAll]] (existing sessions). */
-  private[spark] val nativeBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[spark] val nativeBuilders: Seq[(String, Seq[Expression] => Expression)] =
+    Seq[(String, Seq[Expression] => Expression)](
+    "hist_sketch" ->
+      expectArgs("hist_sketch", 1)(sketchAgg("hist_sketch", _ => SqlDefaultLayout)),
+    "hist_sketch_weighted" -> expectArgs("hist_sketch_weighted", 2)(
+      weightedSketchAgg("hist_sketch_weighted", _ => SqlDefaultLayout)),
     // scalar sketch queries. hist_quantile also takes the estimator-
     // parameterized forms (sk, p, alphap, betap[, estimator]);
     // hist_value_at_rank takes (sk, rank[, estimator]).
@@ -268,10 +276,9 @@ object GraftExtensions {
       expectArgs("hist_sketch_packed_custom", 2, atLeast = true)(packedSketchAgg(
         "hist_sketch_packed_custom",
         a => CustomLayout(a.map(litDouble("hist_sketch_packed_custom", _)).toArray))),
-    // parameterized companion-sketch aggregates: native TypedImperativeAggregate
-    // forms whose accuracy parameters are per-call SQL literals (the udaf
-    // registry can only bind fixed constructor parameters). 1-arg forms use
-    // the library defaults, matching the DSL.
+    // parameterized companion-sketch aggregates: accuracy parameters are
+    // per-call SQL literals; 1-arg forms use the library defaults, matching
+    // the DSL.
     "hll_sketch" -> { args =>
       val p = args.length match {
         case 1 => graft.sketches.Hll.DefaultPrecision
@@ -345,5 +352,8 @@ object GraftExtensions {
     "hist_bin_index_custom" -> expectArgs("hist_bin_index_custom", 2, atLeast = true)(args =>
       HistBinIndex(
         Cast(args(0), DoubleType),
-        CustomLayout(args.tail.map(litDouble("hist_bin_index_custom", _)).toArray))))
+        CustomLayout(args.tail.map(litDouble("hist_bin_index_custom", _)).toArray)))) ++
+    // re-merge of stored sketch blobs: hist_merge, hll_merge, ..., kll_merge
+    MergeKind.all.map(k => k.name -> expectArgs(k.name, 1)(args =>
+      SketchMergeAgg(args.head, k).toAggregateExpression()))
 }

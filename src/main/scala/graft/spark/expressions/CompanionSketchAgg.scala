@@ -17,13 +17,12 @@ import graft.sketches._
  * creation; dynahist `Histogram.createDynamic(layout)` is the histogram
  * instance of the same pattern).
  *
- * Functionally identical to the kryo `Aggregator`s in
- * [[graft.spark.Aggs]] (byte-identical outputs for the deterministic
- * formats — HLL register-max, CMS counter-add, Bloom bit-OR — asserted in
- * ExpressionSpec), but the aggregation buffer crossing the
- * partial->shuffle->final boundary is each sketch's compact wire format
- * rather than a kryo object graph, and the per-row update path is unboxed
- * for primitive inputs (getDouble/getLong on the bound ordinal).
+ * They also back the `graft.spark.functions` DSL, which casts its input
+ * first (string for `hll_sketch`/`cms_sketch`, long for `hll_sketch_long`/
+ * `bloom_sketch`, double for `tdigest_sketch`/`kll_sketch`). The aggregation
+ * buffer crossing the partial->shuffle->final boundary is each sketch's
+ * compact wire format, and the per-row update path is unboxed for
+ * primitive inputs (getDouble/getLong on the bound ordinal).
  */
 abstract class CompanionSketchAgg[S <: AnyRef] extends TypedImperativeAggregate[S] {
   def child: Expression
@@ -41,7 +40,7 @@ abstract class CompanionSketchAgg[S <: AnyRef] extends TypedImperativeAggregate[
 }
 
 private[spark] object ItemSketchAgg {
-  /** Hash of a string input, bit-identical to the kryo path's
+  /** Hash of a string input, bit-identical to
    * `Hashing.hashString(s.toString)` on EVERY input: valid UTF-8 hashes
    * its bytes directly (no per-row `java.lang.String` — `hashString` is
    * defined as the hash of the UTF-8 encoding, and valid bytes round-trip
@@ -54,8 +53,7 @@ private[spark] object ItemSketchAgg {
 }
 
 /** Item-keyed sketches (HLL / CMS / Bloom): string inputs hash as strings,
- * integral inputs as longs — matching the `Aggs.*StringAgg`/`*LongAgg`
- * split, dispatched on the child's type at bind time.
+ * integral inputs as longs, dispatched on the child's type at bind time.
  *
  * String rows hash through [[ItemSketchAgg.utf8Hash]] (no per-row
  * `java.lang.String` for valid UTF-8 — the 100 TB string-key path); both
@@ -309,6 +307,17 @@ case class TDigestSketchAgg(
   override def prettyName: String = "tdigest_sketch"
 }
 
+object TDigestSketchAgg {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.graftbridge.ColumnBridge
+
+  /** Column constructor over `c` cast to double. */
+  def apply(c: Column, compression: Double): Column =
+    ColumnBridge.column(
+      TDigestSketchAgg(ColumnBridge.expression(c.cast("double")), compression)
+        .toAggregateExpression())
+}
+
 case class KllSketchAgg(
     child: Expression,
     k: Int,
@@ -327,4 +336,14 @@ case class KllSketchAgg(
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KllSketchAgg =
     copy(child = c.head)
   override def prettyName: String = "kll_sketch"
+}
+
+object KllSketchAgg {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.graftbridge.ColumnBridge
+
+  /** Column constructor over `c` cast to double. */
+  def apply(c: Column, k: Int): Column =
+    ColumnBridge.column(
+      KllSketchAgg(ColumnBridge.expression(c.cast("double")), k).toAggregateExpression())
 }

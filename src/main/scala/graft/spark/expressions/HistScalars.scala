@@ -163,7 +163,7 @@ case class HistStat(child: Expression, stat: HistStat.Stat)
 }
 
 object HistBins {
-  /** Matches [[graft.spark.BinRow]]. */
+  /** One (bin_index, cnt, lower, upper) struct per non-empty bin. */
   val schema: StructType = StructType(Seq(
     StructField("bin_index", IntegerType, nullable = false),
     StructField("cnt", LongType, nullable = false),

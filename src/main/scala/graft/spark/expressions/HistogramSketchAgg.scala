@@ -9,14 +9,15 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
 import graft.core.{Histogram, HistogramSerde, Layout, SketchEnvelope}
 
 /**
- * Histogram sketch aggregation as a native `TypedImperativeAggregate`.
+ * Histogram sketch aggregation (`hist_sketch`) as a native
+ * `TypedImperativeAggregate`: recording is `update`, `Histogram.add` is
+ * `merge` and the envelope bytes are `eval`.
  *
- * Functionally identical to the `Aggregator`-based `hist_sketch`, but the
- * aggregation buffer crossing the partial->shuffle->final boundary is the V1
- * wire format rather than a kryo object graph: a compact bit-packed payload
- * (dense-or-sparse, whichever is fewer bits) instead of the raw 8-byte-per-
- * bin counter array. At 10^5-10^6 shuffled group buffers that is the
- * difference between KBs and tens of bytes per sketch on the wire.
+ * The aggregation buffer crossing the partial->shuffle->final boundary is
+ * the V1 wire format: a compact bit-packed payload (dense-or-sparse,
+ * whichever is fewer bits) instead of the raw 8-byte-per-bin counter array.
+ * At 10^5-10^6 shuffled group buffers that is the difference between KBs
+ * and tens of bytes per sketch on the wire.
  */
 case class HistogramSketchAgg(
     child: Expression,
@@ -78,25 +79,24 @@ case class HistogramSketchAgg(
       newChildren: IndexedSeq[Expression]): HistogramSketchAgg =
     copy(child = newChildren.head)
 
-  override def prettyName: String = "hist_sketch_binary"
+  override def prettyName: String = "hist_sketch"
 }
 
 object HistogramSketchAgg {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
-  /** Column constructor: aggregate with a V1-binary buffer. */
-  def apply(c: Column, layout: Layout): Column =
+  /** Column constructor over `c` cast to double; `packed` selects
+   * adaptive bit-width partial buffers. */
+  def apply(c: Column, layout: Layout, packed: Boolean): Column =
     ColumnBridge.column(
-      HistogramSketchAgg(ColumnBridge.expression(c.cast("double")), layout)
+      HistogramSketchAgg(ColumnBridge.expression(c.cast("double")), layout, packed = packed)
         .toAggregateExpression())
 }
 
 /**
- * Count-weighted histogram aggregation with the same V1-wire aggregation
- * buffer as [[HistogramSketchAgg]] (reference semantics
- * `addValue(double, long)`, Histogram.java:283-290). The kryo
- * `Aggregator`-based `hist_sketch_weighted` remains as the
- * encoder-API variant; this is the high-group-cardinality path — compact
+ * Count-weighted histogram aggregation (`hist_sketch_weighted`) with the
+ * same V1-wire aggregation buffer as [[HistogramSketchAgg]] (reference
+ * semantics `addValue(double, long)`, Histogram.java:283-290): compact
  * shuffle buffers plus an unboxed (getDouble/getLong) per-row update.
  */
 case class HistogramSketchWeightedAgg(
@@ -164,13 +164,13 @@ case class HistogramSketchWeightedAgg(
       newChildren: IndexedSeq[Expression]): HistogramSketchWeightedAgg =
     copy(value = newChildren(0), weight = newChildren(1))
 
-  override def prettyName: String = "hist_sketch_weighted_binary"
+  override def prettyName: String = "hist_sketch_weighted"
 }
 
 object HistogramSketchWeightedAgg {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
-  /** Column constructor: (value, weight) aggregate with a V1-binary buffer. */
+  /** Column constructor over (value cast to double, weight cast to long). */
   def apply(value: Column, weight: Column, layout: Layout): Column =
     ColumnBridge.column(
       HistogramSketchWeightedAgg(

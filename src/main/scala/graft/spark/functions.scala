@@ -1,21 +1,23 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.{udaf, udf}
+import org.apache.spark.sql.functions.udf
 
 import graft.core._
 import graft.sketches._
-
-/** One exploded histogram bin row. */
-final case class BinRow(bin_index: Int, cnt: Long, lower: Double, upper: Double)
+import graft.spark.expressions._
 
 /**
  * Column-level sketch API: aggregation functions producing sketch bytes, and
- * scalar functions querying them. Aggregations run distributed (partial +
- * final); the scalar query functions are cheap per-group post-processing.
+ * scalar functions querying them.
  *
- * Everything is also SQL-registrable via [[functions.registerAll]].
+ * Every aggregation is a native `TypedImperativeAggregate`
+ * ([[graft.spark.expressions]]): it runs as a partial aggregate per input
+ * partition, ships each group's buffer across the shuffle in the sketch's
+ * compact wire format, and merges the partials in a final aggregate. The
+ * same classes back the SQL names ([[functions.registerAll]],
+ * [[GraftExtensions]]).
  */
 object functions {
 
@@ -23,119 +25,76 @@ object functions {
   // aggregation columns
   // -------------------------------------------------------------------------
 
-  /** Error-bounded histogram sketch of a double column. */
+  /** Error-bounded histogram sketch of a column cast to double. */
   def hist_sketch(c: Column, layout: Layout): Column =
-    udaf(new Aggs.HistogramAgg(layout), Encoders.DOUBLE).apply(c)
+    HistogramSketchAgg(c, layout, packed = false)
 
   /** Same aggregation with adaptive bit-width (packed) counter buffers —
    * up to 64x smaller resident per-group state; prefer when millions of
    * group buffers are live in the aggregation hash map at once. */
   def hist_sketch_packed(c: Column, layout: Layout): Column =
-    udaf(new Aggs.HistogramAgg(layout, packed = true), Encoders.DOUBLE).apply(c)
+    HistogramSketchAgg(c, layout, packed = true)
 
-  /** Same aggregation with a native TypedImperativeAggregate whose shuffle
-   * buffer is the compact V1 wire format instead of a kryo object graph —
-   * prefer for very high group cardinality. */
-  def hist_sketch_binary(c: Column, layout: Layout): Column =
-    graft.spark.expressions.HistogramSketchAgg(c, layout)
+  /** Alias of [[hist_sketch]]. */
+  def hist_sketch_binary(c: Column, layout: Layout): Column = hist_sketch(c, layout)
 
-  /** Count-weighted histogram sketch over (value, weight). */
+  /** Count-weighted histogram sketch over (value as double, weight as long). */
   def hist_sketch_weighted(value: Column, weight: Column, layout: Layout): Column =
-    udaf(
-      new Aggs.HistogramWeightedAgg(layout),
-      Encoders.tuple(Encoders.DOUBLE, Encoders.LONG)).apply(value, weight)
+    HistogramSketchWeightedAgg(value, weight, layout)
 
-  /** Count-weighted histogram sketch with the native TypedImperativeAggregate
-   * (V1-format shuffle buffers, unboxed update) — the [[hist_sketch_binary]]
-   * treatment for the weighted path; byte-identical output to
-   * [[hist_sketch_weighted]]. Prefer at high group cardinality. */
+  /** Alias of [[hist_sketch_weighted]]. */
   def hist_sketch_weighted_binary(value: Column, weight: Column, layout: Layout): Column =
-    graft.spark.expressions.HistogramSketchWeightedAgg(value, weight, layout)
+    hist_sketch_weighted(value, weight, layout)
 
-  /** Merges a column of histogram sketch bytes into one sketch (phase 2 of
-   * salted/tree aggregation; checkpoint resume). */
-  def hist_merge(c: Column): Column =
-    udaf(new Aggs.HistogramMergeAgg, Encoders.BINARY).apply(c)
-
-  /** HyperLogLog sketch of a string column. */
+  /** HyperLogLog sketch of a column cast to string. */
   def hll_sketch(c: Column, precision: Int = Hll.DefaultPrecision): Column =
-    udaf(new Aggs.HllStringAgg(precision), Encoders.STRING).apply(c)
+    HllSketchAgg(c.cast("string"), precision)
 
-  /** HyperLogLog sketch of a long column. */
+  /** HyperLogLog sketch of a column cast to long. */
   def hll_sketch_long(c: Column, precision: Int = Hll.DefaultPrecision): Column =
-    udaf(new Aggs.HllLongAgg(precision), Encoders.LONG).apply(c)
+    HllSketchAgg(c.cast("long"), precision)
 
-  /** Count-min frequency sketch of a string column. */
+  /** Count-min frequency sketch of a column cast to string. */
   def cms_sketch(c: Column, depth: Int = 5, width: Int = 2048): Column =
-    udaf(new Aggs.CountMinAgg(depth, width), Encoders.STRING).apply(c)
+    CountMinSketchAgg(c.cast("string"), depth, width)
 
-  /** Re-merge aggregators for stored companion-sketch byte columns — the
-   * second phase of two-level rollups (per-day sketch tables -> monthly). */
-  def hll_merge(c: Column): Column =
-    udaf(new Aggs.HllMergeAgg, Encoders.BINARY).apply(c)
-  def cms_merge(c: Column): Column =
-    udaf(new Aggs.CountMinMergeAgg, Encoders.BINARY).apply(c)
-  def bloom_merge(c: Column): Column =
-    udaf(new Aggs.BloomMergeAgg, Encoders.BINARY).apply(c)
-  def tdigest_merge(c: Column): Column =
-    udaf(new Aggs.TDigestMergeAgg, Encoders.BINARY).apply(c)
-  def kll_merge(c: Column): Column =
-    udaf(new Aggs.KllMergeAgg, Encoders.BINARY).apply(c)
-
-  /** Count-weighted count-min sketch over (item, weight). */
+  /** Count-weighted count-min sketch over (item as string, weight as long). */
   def cms_sketch_weighted(
       item: Column,
       weight: Column,
       depth: Int = 5,
       width: Int = 2048): Column =
-    udaf(
-      new Aggs.CountMinWeightedAgg(depth, width),
-      Encoders.tuple(Encoders.STRING, Encoders.LONG)).apply(item, weight)
+    CountMinWeightedSketchAgg(item.cast("string"), weight, depth, width)
 
-  /** Bloom filter of a long column. */
+  /** Bloom filter of a column cast to long. */
   def bloom_sketch(c: Column, expectedItems: Long, fpp: Double = 0.01): Column =
-    udaf(new Aggs.BloomLongAgg(expectedItems, fpp), Encoders.LONG).apply(c)
+    BloomSketchAgg(c.cast("long"), expectedItems, fpp)
 
-  /** t-digest quantile sketch of a double column. */
+  /** t-digest quantile sketch of a column cast to double. */
   def tdigest_sketch(c: Column, compression: Double = 100.0): Column =
-    udaf(new Aggs.TDigestAgg(compression), Encoders.DOUBLE).apply(c)
+    TDigestSketchAgg(c, compression)
 
-  /** KLL rank/quantile sketch of a double column. */
-  def kll_sketch(c: Column, k: Int = 200): Column =
-    udaf(new Aggs.KllAgg(k), Encoders.DOUBLE).apply(c)
+  /** KLL rank/quantile sketch of a column cast to double. */
+  def kll_sketch(c: Column, k: Int = 200): Column = KllSketchAgg(c, k)
+
+  /** Re-merge aggregators over stored sketch byte columns — the second
+   * level of two-level rollups (per-day sketch tables -> monthly) and of
+   * salted aggregation. Null and zero-length blobs are skipped; a group
+   * without a sketch yields zero-length bytes. */
+  def hist_merge(c: Column): Column = SketchMergeAgg(c, MergeKind.HistMerge)
+  def hll_merge(c: Column): Column = SketchMergeAgg(c, MergeKind.HllMerge)
+  def cms_merge(c: Column): Column = SketchMergeAgg(c, MergeKind.CmsMerge)
+  def bloom_merge(c: Column): Column = SketchMergeAgg(c, MergeKind.BloomMerge)
+  def tdigest_merge(c: Column): Column = SketchMergeAgg(c, MergeKind.TDigestMerge)
+  def kll_merge(c: Column): Column = SketchMergeAgg(c, MergeKind.KllMerge)
 
   // -------------------------------------------------------------------------
   // scalar sketch query functions (over sketch bytes)
   // -------------------------------------------------------------------------
 
-  private def hist(b: Array[Byte]): Histogram = SketchEnvelope.fromBytes(b)
-
-  val histQuantileUdf: UserDefinedFunction =
-    udf((b: Array[Byte], p: Double) => hist(b).quantile(p))
-
-  val histQuantilesUdf: UserDefinedFunction =
-    udf((b: Array[Byte], ps: Seq[Double]) => {
-      val pre = hist(b).preprocessed // O(log bins) per quantile
-      ps.map(pre.quantile(_))
-    })
-
-  val histValueAtRankUdf: UserDefinedFunction =
-    udf((b: Array[Byte], rank: Long) => hist(b).valueAt(rank))
-
-  val histTotalUdf: UserDefinedFunction = udf((b: Array[Byte]) => hist(b).totalCount)
-  val histMinUdf: UserDefinedFunction = udf((b: Array[Byte]) => hist(b).min)
-  val histMaxUdf: UserDefinedFunction = udf((b: Array[Byte]) => hist(b).max)
-  val histUnderflowUdf: UserDefinedFunction = udf((b: Array[Byte]) => hist(b).underflowCount)
-  val histOverflowUdf: UserDefinedFunction = udf((b: Array[Byte]) => hist(b).overflowCount)
-
-  val histBinsUdf: UserDefinedFunction = udf((b: Array[Byte]) =>
-    hist(b).nonEmptyBins.map(bin =>
-      BinRow(bin.binIndex, bin.binCount, bin.lowerBound, bin.upperBound)))
-
-  // The scalar query functions below are native Catalyst expressions
+  // The histogram scalar query functions are native Catalyst expressions
   // (graft.spark.expressions.HistScalars): a static call inside whole-stage
-  // codegen, no UDF boxing/encoding boundary. The UDF variants above remain
-  // for compatibility.
+  // codegen, no UDF boxing/encoding boundary.
   def hist_quantile(sketch: Column, p: Double): Column =
     expressions.HistScalars.quantile(sketch, org.apache.spark.sql.functions.lit(p))
 
@@ -196,15 +155,6 @@ object functions {
    * toolchain reads back with `Layout.readWithTypeInfo` + V1 read. */
   def hist_to_reference(c: Column): Column = expressions.HistParamScalars.toReference(c)
 
-  /** Scalar merge of two sketch columns. */
-  val histMerge2Udf: UserDefinedFunction = udf((a: Array[Byte], b: Array[Byte]) => {
-    if (a == null || a.isEmpty) b
-    else if (b == null || b.isEmpty) a
-    else SketchEnvelope.toBytes(hist(a).add(hist(b)))
-  })
-
-  def hist_merge2(a: Column, b: Column): Column = histMerge2Udf(a, b)
-
   /** Bin index of a value under a layout — a native Catalyst expression
    * (whole-stage codegen, no boxing); see
    * [[graft.spark.expressions.HistBinIndex]]. */
@@ -259,37 +209,17 @@ object functions {
   /**
    * Registers the sketch functions for SQL use on an existing session.
    *
-   * The histogram scalar queries and layout-parameterized aggregates go in
-   * as NATIVE expression builders (same table `SparkSessionExtensions`
-   * injects — `hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0, 1e6)` etc. are
-   * SQL-callable with arbitrary layout literals); the `Aggregator`-backed
-   * companion sketches register through the UDF registry.
+   * Every sketch aggregate and histogram scalar goes in as a NATIVE
+   * expression builder from [[GraftExtensions.nativeBuilders]] (the table
+   * `SparkSessionExtensions` injects), so `hist_sketch(v)`,
+   * `hll_sketch(c, 12)` and `hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0,
+   * 1e6)` run on the same aggregates as the Column DSL. The companion
+   * scalar queries and the text scalars register through the UDF registry.
    */
   def registerAll(spark: SparkSession): Unit = {
     GraftExtensions.nativeBuilders.foreach { case (name, builder) =>
       org.apache.spark.sql.graftbridge.RegistryBridge.registerNative(spark, name, builder)
     }
-    val defaultLayout: Layout = LogQuadraticLayout(1e-8, 1e-2, -1e9, 1e9)
-    spark.udf.register(
-      "hist_sketch",
-      udaf(new Aggs.HistogramAgg(defaultLayout), Encoders.DOUBLE))
-    spark.udf.register("hist_merge", udaf(new Aggs.HistogramMergeAgg, Encoders.BINARY))
-    spark.udf.register(
-      "hist_sketch_weighted",
-      udaf(
-        new Aggs.HistogramWeightedAgg(defaultLayout),
-        Encoders.tuple(Encoders.DOUBLE, Encoders.LONG)))
-    // hll_sketch / cms_sketch / cms_sketch_weighted / bloom_sketch /
-    // tdigest_sketch / kll_sketch register above as NATIVE parameterized
-    // builders (per-call accuracy literals, e.g. hll_sketch(c, 12),
-    // cms_sketch(c, 5, 1024), bloom_sketch(k, 1e5, 0.01)); the kryo
-    // Aggregator forms stay on the Column DSL (functions.hll_sketch etc.)
-    // two-level rollup re-aggregators over stored sketch byte columns
-    spark.udf.register("hll_merge", udaf(new Aggs.HllMergeAgg, Encoders.BINARY))
-    spark.udf.register("cms_merge", udaf(new Aggs.CountMinMergeAgg, Encoders.BINARY))
-    spark.udf.register("bloom_merge", udaf(new Aggs.BloomMergeAgg, Encoders.BINARY))
-    spark.udf.register("tdigest_merge", udaf(new Aggs.TDigestMergeAgg, Encoders.BINARY))
-    spark.udf.register("kll_merge", udaf(new Aggs.KllMergeAgg, Encoders.BINARY))
     spark.udf.register("hll_estimate", hllEstimateUdf)
     spark.udf.register("cms_estimate", cmsEstimateUdf)
     spark.udf.register("bloom_might_contain", bloomMightContainUdf)

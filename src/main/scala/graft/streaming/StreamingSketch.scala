@@ -16,7 +16,9 @@ import graft.core.{Layout, SketchEnvelope}
 object StreamingSketch {
 
   /** Event-time windowed histogram sketches: standard watermark + window
-   * grouping with the histogram UDAF as the aggregate. */
+   * grouping with `hist_sketch` as the aggregate. The state store holds
+   * each window's V1-serialized aggregation buffer, so a checkpoint is
+   * tied to that buffer format. */
   def windowedHistogram(
       events: DataFrame,
       tsCol: String,

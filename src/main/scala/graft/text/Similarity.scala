@@ -1,8 +1,16 @@
 package graft.text
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types._
 
 /**
  * Similarity search over an embedding column (array<float>).
@@ -147,25 +155,34 @@ object Similarity {
       .toDF("query_id", "neighbor_id", "cosine", "rank")
   }
 
-  /** Bounded top-k aggregator over (cosine, neighbor_id): every partial
+  /** Bounded top-k aggregate over (cosine, neighbor_id): every partial
    * buffer is trimmed to k entries, so after map-side combine the shuffle
    * carries at most k rows per (query, partition) — a distributed top-k
    * with no global window sort. Ordering (cosine desc, neighbor_id asc)
-   * matches [[cosineTopK]]. */
-  private final class TopKAgg(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (Double, Long),
-        scala.collection.mutable.ArrayBuffer[(Double, Long)],
-        Seq[(Long, Double, Int)]] {
-    import scala.collection.mutable.ArrayBuffer
+   * matches [[cosineTopK]]. The result is an array of (neighbor_id,
+   * cosine, rank) structs; partial buffers cross the shuffle as packed
+   * (cosine, id) pairs. */
+  private case class TopKAgg(
+      cosine: Expression,
+      id: Expression,
+      k: Int,
+      mutableAggBufferOffset: Int = 0,
+      inputAggBufferOffset: Int = 0)
+      extends TypedImperativeAggregate[ArrayBuffer[(Double, Long)]] {
     private def top(b: ArrayBuffer[(Double, Long)]): ArrayBuffer[(Double, Long)] =
       if (b.length <= k) b
       else ArrayBuffer.from(b.sortBy { case (c, id) => (-c, id) }.take(k))
-    override def zero: ArrayBuffer[(Double, Long)] = ArrayBuffer.empty
-    override def reduce(
+    override def children: Seq[Expression] = Seq(cosine, id)
+    override def nullable: Boolean = false
+    override def dataType: DataType = ArrayType(StructType(Seq(
+      StructField("_1", LongType, nullable = false),
+      StructField("_2", DoubleType, nullable = false),
+      StructField("_3", IntegerType, nullable = false))), containsNull = false)
+    override def createAggregationBuffer(): ArrayBuffer[(Double, Long)] = ArrayBuffer.empty
+    override def update(
         b: ArrayBuffer[(Double, Long)],
-        a: (Double, Long)): ArrayBuffer[(Double, Long)] = {
-      b += a
+        input: InternalRow): ArrayBuffer[(Double, Long)] = {
+      b += ((cosine.eval(input).asInstanceOf[Double], id.eval(input).asInstanceOf[Long]))
       // amortized trim: let the buffer grow a few multiples of k, then cut
       if (b.length >= 4 * k + 16) top(b) else b
     }
@@ -173,17 +190,29 @@ object Similarity {
         b1: ArrayBuffer[(Double, Long)],
         b2: ArrayBuffer[(Double, Long)]): ArrayBuffer[(Double, Long)] =
       top(b1 ++= b2)
-    override def finish(b: ArrayBuffer[(Double, Long)]): Seq[(Long, Double, Int)] =
-      b.sortBy { case (c, id) => (-c, id) }
-        .take(k)
-        .iterator
-        .zipWithIndex
-        .map { case ((c, id), i) => (id, c, i + 1) }
-        .toSeq
-    override def bufferEncoder: org.apache.spark.sql.Encoder[ArrayBuffer[(Double, Long)]] =
-      org.apache.spark.sql.Encoders.kryo[ArrayBuffer[(Double, Long)]]
-    override def outputEncoder: org.apache.spark.sql.Encoder[Seq[(Long, Double, Int)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Double, Int)]]()
+    override def eval(b: ArrayBuffer[(Double, Long)]): Any =
+      new GenericArrayData(
+        b.sortBy { case (c, id) => (-c, id) }
+          .take(k)
+          .zipWithIndex
+          .map { case ((c, id), i) => InternalRow(id, c, i + 1) }
+          .toArray[Any])
+    override def serialize(b: ArrayBuffer[(Double, Long)]): Array[Byte] = {
+      val buf = java.nio.ByteBuffer.allocate(16 * b.length)
+      b.foreach { case (c, id) => buf.putDouble(c).putLong(id) }
+      buf.array()
+    }
+    override def deserialize(bytes: Array[Byte]): ArrayBuffer[(Double, Long)] = {
+      val buf = java.nio.ByteBuffer.wrap(bytes)
+      ArrayBuffer.fill(bytes.length / 16)((buf.getDouble, buf.getLong))
+    }
+    override def withNewMutableAggBufferOffset(n: Int): TopKAgg =
+      copy(mutableAggBufferOffset = n)
+    override def withNewInputAggBufferOffset(n: Int): TopKAgg =
+      copy(inputAggBufferOffset = n)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): TopKAgg =
+      copy(cosine = c(0), id = c(1))
+    override def prettyName: String = "cosine_top_k"
   }
 
   /**
@@ -206,11 +235,9 @@ object Similarity {
       k: Int): DataFrame = {
     val q = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("cv"))
-    val topk = udaf(
-      new TopKAgg(k),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.Encoders.scalaLong))
+    def topk(cosine: Column, id: Column): Column = ColumnBridge.column(
+      TopKAgg(ColumnBridge.expression(cosine), ColumnBridge.expression(id), k)
+        .toAggregateExpression())
     q.join(broadcast(c), col("query_id") =!= col("neighbor_id"))
       .select(
         col("query_id"),

@@ -228,4 +228,29 @@ class SketchSpec extends AnyFunSuite {
       if (n >= 90000) assert(c.length == bf.toBytes.length) // dense fallback
     }
   }
+
+  test("count-min and bloom sizes are Long: oversized sketches fail at construction") {
+    // 2^16 x 2^16 = 2^32 counters wrapped to a zero-length Int array before,
+    // failing later with an index error; the product is now checked as a
+    // Long against the largest matrix whose encoding fits in one array
+    for ((d, w) <- Seq((1 << 16, 1 << 16), (3, 715827883), (2, Int.MaxValue))) {
+      val e = intercept[IllegalArgumentException](CountMin(d, w))
+      assert(e.getMessage.contains("exceeds"), e.getMessage)
+    }
+    val over = CountMin.MaxCells + 1
+    intercept[IllegalArgumentException](CountMin(1, over.toInt))
+    assert(16L + CountMin.MaxCells * 8L <= Int.MaxValue - 8)
+    // a bitset past the array limit (including sizes whose word count
+    // wrapped as an Int) is rejected instead of allocated short
+    for ((n, fpp) <- Seq((1L << 40, 0.01), (1L << 34, 1e-9), (Long.MaxValue / 4, 0.5))) {
+      val e = intercept[IllegalArgumentException](BloomFilter(n, fpp))
+      assert(e.getMessage.contains("words"), e.getMessage)
+    }
+    assert(12L + BloomFilter.MaxWords * 8L <= Int.MaxValue - 8)
+    // dense headers that claim such sizes are rejected before allocation
+    val cmsHeader = java.nio.ByteBuffer.allocate(16).putInt(1 << 16).putInt(1 << 16).array()
+    intercept[IllegalArgumentException](CountMin.fromBytes(cmsHeader))
+    val bloomHeader = java.nio.ByteBuffer.allocate(12).putLong(1L << 40).putInt(3).array()
+    intercept[IllegalArgumentException](BloomFilter.fromBytes(bloomHeader))
+  }
 }

@@ -85,7 +85,7 @@ class PlanAndParitySpec extends AnyFunSuite {
       .toString
     val nBin = "ObjectHashAggregate".r.findAllIn(planBin).size
     assert(nBin >= 2, s"native agg lost partial+final, plan:\n$planBin")
-    assert(planBin.contains("partial_hist_sketch_binary"), s"no partial phase:\n$planBin")
+    assert(planBin.contains("partial_hist_sketch("), s"no partial phase:\n$planBin")
   }
 
   test("HLL accuracy is in the same class as approx_count_distinct (HLL++)") {
@@ -200,5 +200,72 @@ class PlanAndParitySpec extends AnyFunSuite {
       SparkSession.setDefaultSession(prior)
       SparkSession.setActiveSession(prior)
     }
+  }
+
+  test("every DSL and SQL sketch aggregate is a native aggregate, never a udaf wrapper") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+    // Spark plans `udaf(Aggregator)` as a ScalaAggregator (kryo-encoded
+    // buffers) and a UserDefinedAggregateFunction as a ScalaUDAF
+    def aggregates(e: Expression): Seq[String] =
+      e.collect { case a: AggregateFunction => a.getClass.getName }
+    def wrapped(cls: String): Boolean =
+      cls.endsWith(".ScalaAggregator") || cls.endsWith(".ScalaUDAF")
+    def native(classes: Seq[String]): Boolean =
+      classes.nonEmpty && classes.forall(_.startsWith("graft.spark.expressions."))
+    val sketchAggregates = Seq("hist_sketch", "hist_sketch_weighted", "hll_sketch",
+      "cms_sketch", "cms_sketch_weighted", "bloom_sketch", "tdigest_sketch", "kll_sketch",
+      "hist_merge", "hll_merge", "cms_merge", "bloom_merge", "tdigest_merge", "kll_merge")
+
+    // DSL: every Column-returning method of `functions`, called with
+    // placeholder arguments of its parameter types (a double or a binary
+    // column for each Column), analyzed in a select
+    import spark.implicits._
+    val guard = Seq((1.0, 1L, Array[Byte](1))).toDF("x", "w", "b")
+    def placeholder(c: Class[_], column: String): AnyRef =
+      if (c == classOf[Column]) col(column)
+      else if (classOf[graft.core.Layout].isAssignableFrom(c)) layout
+      else if (c == java.lang.Integer.TYPE) Int.box(12)
+      else if (c == java.lang.Long.TYPE) Long.box(1000L)
+      else if (c == java.lang.Double.TYPE) Double.box(0.5)
+      else if (c == classOf[String]) "uniform"
+      else if (c == classOf[Seq[_]]) Seq(0.5)
+      else fail(s"no placeholder for $c")
+    val dsl = functions.getClass.getMethods.toSeq
+      .filter(m => m.getReturnType == classOf[Column] && !m.getName.contains("$"))
+      .map { m =>
+        m.getName -> Seq("x", "b").flatMap { column =>
+          val c = m.invoke(functions, m.getParameterTypes.map(placeholder(_, column)): _*)
+          scala.util.Try(guard.select(c.asInstanceOf[Column]).queryExecution.analyzed
+            .flatMap(_.expressions.flatMap(aggregates))).getOrElse(Nil)
+        }
+      }
+      .filter(_._2.nonEmpty)
+    val dslWrapped = dsl.filter(_._2.exists(wrapped))
+    assert(dslWrapped.isEmpty, s"DSL aggregates on a udaf wrapper: $dslWrapped")
+    val dslNative = dsl.filter(d => native(d._2)).map(_._1).toSet
+    assert((sketchAggregates.toSet ++ Set("hll_sketch_long", "hist_sketch_packed"))
+      .subsetOf(dslNative), s"DSL aggregates not native: $dsl")
+
+    // SQL: every function registerAll installs, analyzed over argument
+    // lists that fit each sketch aggregate's signature
+    val s = spark.newSession()
+    functions.registerAll(s)
+    s.createDataFrame(guard.rdd, guard.schema).createOrReplaceTempView("guard_t")
+    val argLists = Seq("x", "b", "x, w", "x, 12", "x, 5, 64", "x, w, 5, 64",
+      "x, 1e-3, 1e-2, 0.0, 1e6", "x, w, 1e-3, 1e-2, 0.0, 1e6")
+    val names = s.catalog.listFunctions().collect().filter(_.isTemporary).map(_.name).toSeq
+    val sql = names.map { name =>
+      name -> argLists.flatMap { args =>
+        scala.util.Try(
+          s.sql(s"SELECT $name($args) FROM guard_t").queryExecution.analyzed
+            .flatMap(_.expressions.flatMap(aggregates))).getOrElse(Nil)
+      }
+    }.filter(_._2.nonEmpty)
+    val sqlWrapped = sql.filter(_._2.exists(wrapped))
+    assert(sqlWrapped.isEmpty, s"SQL aggregates on a udaf wrapper: $sqlWrapped")
+    assert(sketchAggregates.toSet.subsetOf(sql.filter(q => native(q._2)).map(_._1).toSet),
+      s"SQL aggregates not native: $sql")
   }
 }

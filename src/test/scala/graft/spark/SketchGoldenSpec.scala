@@ -19,6 +19,12 @@ import graft.spark.functions._
  *    sort-based path after two groups (buffers are serialized, sorted and
  *    merged back mid-partition).
  *
+ * Adaptive partition coalescing is off for every plan: it sizes the final
+ * stage from the shuffled bytes, so a smaller partial buffer would
+ * otherwise change the number of final tasks, hence how many groups one
+ * task holds, whether it falls back to sorting, and so the merge order —
+ * which the t-digest and KLL bytes depend on.
+ *
  * Inputs: 400 synthesized conversations (seed 11, one hot conversation of
  * 4000 turns), grouped by `conv_id`.
  */
@@ -44,13 +50,16 @@ class SketchGoldenSpec extends AnyFunSuite {
     case _       => turns.repartition(4, col("turn_idx"))
   }
 
-  private def withPlan[T](plan: String)(body: => T): T =
-    if (plan != "fallback") body
-    else {
-      val prev = spark.conf.get(FallbackKey)
-      try { spark.conf.set(FallbackKey, "2"); body }
-      finally spark.conf.set(FallbackKey, prev)
+  private def withPlan[T](plan: String)(body: => T): T = {
+    val confs = Map("spark.sql.adaptive.coalescePartitions.enabled" -> "false") ++
+      (if (plan == "fallback") Map(FallbackKey -> "2") else Map.empty)
+    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
     }
+  }
 
   /** name -> (group -> bytes) for each named aggregate, in one pass. */
   private def perGroup(df: DataFrame, aggs: Seq[(String, Column)])
@@ -127,7 +136,7 @@ class SketchGoldenSpec extends AnyFunSuite {
         (lit(-1) - col("id")).cast("int").as("part"),
         when(col("id") === 0, lit(Array.empty[Byte])).cast("binary").as("blank")))
       .select(col("g") +: col("part") +: kinds.map(k => col("blank").as(k)): _*)
-    val stored = level1.unionByName(blanks).localCheckpoint()
+    val stored = withPlan("whole")(level1.unionByName(blanks).localCheckpoint())
     def merges: Seq[(String, Column)] = Seq(
       "hist_merge" -> hist_merge(col("hist")),
       "hll_merge" -> hll_merge(col("hll")),
@@ -145,11 +154,11 @@ class SketchGoldenSpec extends AnyFunSuite {
   test("SQL sketch aggregates and *_merge match their goldens") {
     functions.registerAll(spark)
     planned("split").createOrReplaceTempView("golden_turns")
-    val rows = spark.sql(
+    val rows = withPlan("split")(spark.sql(
       """SELECT g, hist_sketch(len) AS hist, hist_sketch_weighted(len, w) AS histw,
                 hll_sketch(text, 10) AS hll, cms_sketch(tool, 4, 256) AS cms,
                 bloom_sketch(turn_idx, 1000) AS bloom
-         FROM golden_turns GROUP BY g""").localCheckpoint()
+         FROM golden_turns GROUP BY g""").localCheckpoint())
     rows.createOrReplaceTempView("golden_level1")
     val merged = spark.sql(
       """SELECT substr(g, 1, 12) AS g, hist_merge(hist) AS hist, hist_merge(histw) AS histw,
@@ -161,7 +170,7 @@ class SketchGoldenSpec extends AnyFunSuite {
         s"$prefix.$c" -> got.toSeq.map(r => r.getString(0) -> r.getAs[Array[Byte]](i + 1))
       }
     }
-    verify(named(rows, "sql") ++ named(merged, "sql_merge"))
+    verify(withPlan("split")(named(rows, "sql") ++ named(merged, "sql_merge")))
   }
 
   test("*_merge edge cases: empty input, all-null rows and zero-length blobs yield empty bytes") {
