@@ -31,7 +31,7 @@ object SparkEntry {
    * knob, applied per query. Every action of `body` must run inside. */
   /** A long metric of a completed `Observation`, 0 when the batch produced
    * none (a no-data micro-batch can leave it absent or null). */
-  private def observedCount(obs: org.apache.spark.sql.Observation, name: String): Long =
+  private[graft] def observedCount(obs: org.apache.spark.sql.Observation, name: String): Long =
     obs.get.get(name).collect { case n: java.lang.Long => n.longValue() }.getOrElse(0L)
 
   private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {

@@ -230,9 +230,9 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("count-min and bloom sizes are Long: oversized sketches fail at construction") {
-    // 2^16 x 2^16 = 2^32 counters wrapped to a zero-length Int array before,
-    // failing later with an index error; the product is now checked as a
-    // Long against the largest matrix whose encoding fits in one array
+    // 2^16 x 2^16 = 2^32 counters is 0 in Int arithmetic: the product must
+    // be checked as a Long against the largest matrix whose encoding fits
+    // in one array
     for ((d, w) <- Seq((1 << 16, 1 << 16), (3, 715827883), (2, Int.MaxValue))) {
       val e = intercept[IllegalArgumentException](CountMin(d, w))
       assert(e.getMessage.contains("exceeds"), e.getMessage)

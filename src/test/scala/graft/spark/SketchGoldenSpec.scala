@@ -14,7 +14,9 @@ import graft.spark.functions._
  *  - `whole`: input hash-partitioned by the group key, so each group has
  *    exactly one partial buffer;
  *  - `split`: input partitioned by turn index, so every group's rows are
- *    spread over several partials that cross the shuffle and merge;
+ *    spread over several partials that cross the shuffle and merge (each
+ *    partial task holds most of the 400 groups, past Spark's default
+ *    128-group threshold, so its last groups already take the sort path);
  *  - `fallback`: `split` with the object-hash aggregate forced onto its
  *    sort-based path after two groups (buffers are serialized, sorted and
  *    merged back mid-partition).

@@ -11,6 +11,23 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.spark.SparkTestSession.spark
   private val layout = LogQuadraticLayout(1e-3, 1e-2, 0, 1e6)
 
+  test("q35/q36 emission counts read a missing or null observed metric as 0") {
+    import org.apache.spark.sql.Observation
+    // a no-data micro-batch can complete its Observation without the
+    // metric or with a null; the per-batch count must then be 0, not a
+    // NoSuchElementException on the streaming thread
+    val empty = spark.range(0).toDF("id")
+    val other = Observation()
+    empty.observe(other, count(lit(1)).as("m")).collect()
+    assert(graft.SparkEntry.observedCount(other, "n") == 0L)
+    val nulls = Observation()
+    empty.observe(nulls, max(col("id")).as("n")).collect()
+    assert(graft.SparkEntry.observedCount(nulls, "n") == 0L)
+    val counted = Observation()
+    spark.range(7).observe(counted, count(lit(1)).as("n")).collect()
+    assert(graft.SparkEntry.observedCount(counted, "n") == 7L)
+  }
+
   test("windowed streaming histogram equals the batch aggregation") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
