@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.functions._
 
 /**
@@ -45,12 +46,12 @@ object BenchExtra {
     def measure(name: String)(body: => Unit): String = {
       spark.sparkContext.setJobDescription(name)
       body // warm-up
-      Thread.sleep(200)
+      ListenerBridge.drain(spark.sparkContext)
       val (r0, w0) = (shufRead.get(), shufWrite.get())
       val t0 = System.nanoTime()
       body
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200) // let task-end events drain
+      ListenerBridge.drain(spark.sparkContext) // task-end events
       val json = f"""\"$name\":{\"sec\":$sec%.3f,\"shuffle_read_bytes\":${shufRead
           .get() - r0},\"shuffle_write_bytes\":${shufWrite.get() - w0}}"""
       spark.sparkContext.setJobDescription(null)

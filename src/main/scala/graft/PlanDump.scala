@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /**
  * Writes `.explain("formatted")` of every declared query's returned frame
@@ -54,7 +55,7 @@ object PlanDump {
         val explain = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         df.write.format("noop").mode("overwrite").save() // run the frame itself
-        Thread.sleep(300)
+        ListenerBridge.drain(spark.sparkContext)
         import scala.jdk.CollectionConverters._
         val trace = jobs.asScala.toSeq.sortBy(_._1).map { case (id, j) =>
           f"  job $id%3d  ${j.tasks}%4d tasks  ${j.desc.take(80)}"

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /**
  * Per-job profiler for a single driver query: runs `SparkEntry.queries(name)`
@@ -49,7 +50,7 @@ object QueryProbe {
     val t0 = System.nanoTime()
     fn(spark, sfDir).count()
     val totalSec = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(300) // let trailing listener events drain
+    ListenerBridge.drain(spark.sparkContext) // trailing job-end events
 
     import scala.jdk.CollectionConverters._
     val rows = jobs.asScala.toSeq.sortBy(_._1)

@@ -12,11 +12,22 @@ import java.nio.ByteBuffer
 final class CountMin private (
     val depth: Int,
     val width: Int,
-    val counters: Array[Long], // depth * width, row-major
+    private var cells: Array[Long], // depth * width, row-major; null until first write
     private var totalVar: Long)
     extends Serializable {
 
   def total: Long = totalVar
+
+  /** True until the first counter is written: no counter matrix exists
+   * yet, so an unused aggregation buffer costs only this object. */
+  def isPristine: Boolean = cells == null && totalVar == 0L
+
+  /** The depth x width counters, row-major, allocated (all zero) on first
+   * access. */
+  def counters: Array[Long] = {
+    if (cells == null) cells = new Array[Long](depth * width)
+    cells
+  }
 
   def epsilon: Double = math.E / width
   def delta: Double = math.exp(-depth.toDouble)
@@ -28,9 +39,10 @@ final class CountMin private (
 
   def addHash(hash: Long, count: Long = 1L): this.type = {
     require(count >= 0)
+    val c = counters
     var row = 0
     while (row < depth) {
-      counters(row * width + bucket(hash, row)) += count
+      c(row * width + bucket(hash, row)) += count
       row += 1
     }
     totalVar += count
@@ -41,10 +53,11 @@ final class CountMin private (
   def addString(v: String, count: Long = 1L): this.type = addHash(Hashing.hashString(v), count)
 
   def estimateHash(hash: Long): Long = {
+    if (cells == null) return 0L
     var est = Long.MaxValue
     var row = 0
     while (row < depth) {
-      val c = counters(row * width + bucket(hash, row))
+      val c = cells(row * width + bucket(hash, row))
       if (c < est) est = c
       row += 1
     }
@@ -56,19 +69,30 @@ final class CountMin private (
 
   def merge(other: CountMin): this.type = {
     require(depth == other.depth && width == other.width, "dimension mismatch")
-    var i = 0
-    while (i < counters.length) {
-      counters(i) += other.counters(i)
-      i += 1
+    val o = other.cells
+    if (o != null) {
+      val c = counters
+      var i = 0
+      while (i < c.length) {
+        c(i) += o(i)
+        i += 1
+      }
     }
     totalVar += other.totalVar
     this
   }
 
   def toBytes: Array[Byte] = {
-    val buf = ByteBuffer.allocate(4 + 4 + 8 + counters.length * 8)
+    val n = depth * width
+    val buf = ByteBuffer.allocate(4 + 4 + 8 + n * 8)
     buf.putInt(depth).putInt(width).putLong(totalVar)
-    counters.foreach(buf.putLong)
+    if (cells != null) {
+      var i = 0
+      while (i < n) {
+        buf.putLong(cells(i))
+        i += 1
+      }
+    }
     buf.array()
   }
 }
@@ -84,7 +108,7 @@ object CountMin {
     val cells = depth.toLong * width
     require(cells <= MaxCells,
       s"count-min $depth x $width = $cells counters exceeds the $MaxCells an encoding can hold")
-    new CountMin(depth, width, new Array[Long](cells.toInt), 0L)
+    new CountMin(depth, width, null, 0L)
   }
 
   /** Sizes the sketch for the published (eps, delta) guarantee. */
@@ -102,36 +126,46 @@ object CountMin {
    * wire format is unchanged.
    */
   def toCompactBytes(c: CountMin): Array[Byte] = {
-    val n = c.counters.length
+    val cells = c.cells
+    val n = c.depth * c.width
     var nNonzero = 0
+    var pairBytes = 0
+    var prev = -1
     var i = 0
-    while (i < n) {
-      if (c.counters(i) != 0L) nNonzero += 1
+    if (cells != null) while (i < n) {
+      if (cells(i) != 0L) {
+        nNonzero += 1
+        pairBytes += Varint.size((i - prev).toLong) + Varint.size(cells(i))
+        prev = i
+      }
       i += 1
     }
     val dense = 16L + n * 8L
     // conservative sparse bound: ~5 B gap + ~10 B value per pair + header
     if (20L + nNonzero.toLong * 15L >= dense) return c.toBytes
-    val out = new java.io.ByteArrayOutputStream(20 + nNonzero * 8)
-    out.write(0xff)
-    Varint.write(out, c.depth.toLong)
-    Varint.write(out, c.width.toLong)
-    Varint.write(out, c.total)
-    Varint.write(out, nNonzero.toLong)
-    var prev = -1
+    val out = new Array[Byte](1 + Varint.size(c.depth.toLong) + Varint.size(c.width.toLong) +
+      Varint.size(c.total) + Varint.size(nNonzero.toLong) + pairBytes)
+    out(0) = -1
+    var pos = Varint.write(out, 1, c.depth.toLong)
+    pos = Varint.write(out, pos, c.width.toLong)
+    pos = Varint.write(out, pos, c.total)
+    pos = Varint.write(out, pos, nNonzero.toLong)
+    prev = -1
     i = 0
-    while (i < n) {
-      if (c.counters(i) != 0L) {
-        Varint.write(out, (i - prev).toLong)
-        Varint.write(out, c.counters(i))
+    if (cells != null) while (i < n) {
+      if (cells(i) != 0L) {
+        pos = Varint.write(out, pos, (i - prev).toLong)
+        pos = Varint.write(out, pos, cells(i))
         prev = i
       }
       i += 1
     }
-    out.toByteArray
+    out
   }
 
   def fromBytes(bytes: Array[Byte]): CountMin = {
+    require(bytes.length >= 16 || (bytes.length > 0 && bytes(0) == -1.toByte),
+      "corrupt count-min payload (header)")
     if (bytes(0) == -1.toByte) { // compact sparse-pair form
       val r = new Varint.Reader(bytes, 1)
       val depth = r.read().toInt
@@ -142,7 +176,7 @@ object CountMin {
       val n = depth * width
       val nNonzero = r.read().toInt
       require(nNonzero >= 0 && nNonzero <= n, "corrupt count-min payload (sparse count)")
-      val counters = new Array[Long](n)
+      val counters = if (nNonzero == 0) null else new Array[Long](n)
       var idx = -1
       var k = 0
       while (k < nNonzero) {
@@ -159,7 +193,14 @@ object CountMin {
     require(depth > 0 && width > 0 && depth.toLong * width <= MaxCells,
       "corrupt count-min payload (dims)")
     val total = buf.getLong
-    val counters = Array.fill(depth * width)(buf.getLong)
+    val n = depth * width
+    require(n.toLong * 8 <= buf.remaining, "corrupt count-min payload (length)")
+    val counters = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      counters(i) = buf.getLong
+      i += 1
+    }
     new CountMin(depth, width, counters, total)
   }
 }
@@ -172,28 +213,42 @@ object CountMin {
 final class BloomFilter private (
     val numBits: Long,
     val numHashes: Int,
-    val bits: Array[Long])
+    private var words: Array[Long]) // numBits / 64 words; null until first write
     extends Serializable {
 
+  private def numWords: Int = (numBits >>> 6).toInt
+
+  /** True until the first bit is set: no bitset exists yet, so an unused
+   * aggregation buffer costs only this object. */
+  def isPristine: Boolean = words == null
+
+  /** The bitset as 64-bit words, allocated (all zero) on first access. */
+  def bits: Array[Long] = {
+    if (words == null) words = new Array[Long](numWords)
+    words
+  }
+
   def addHash(hash: Long): this.type = {
+    val w = bits
     val h1 = hash
     val h2 = Hashing.hashLong(hash, seed = 0x5bf03635L)
     var i = 0
     while (i < numHashes) {
       val pos = java.lang.Math.floorMod(h1 + i.toLong * h2, numBits)
-      bits((pos >>> 6).toInt) |= (1L << (pos & 63))
+      w((pos >>> 6).toInt) |= (1L << (pos & 63))
       i += 1
     }
     this
   }
 
   def mightContainHash(hash: Long): Boolean = {
+    if (words == null) return false
     val h1 = hash
     val h2 = Hashing.hashLong(hash, seed = 0x5bf03635L)
     var i = 0
     while (i < numHashes) {
       val pos = java.lang.Math.floorMod(h1 + i.toLong * h2, numBits)
-      if ((bits((pos >>> 6).toInt) & (1L << (pos & 63))) == 0L) return false
+      if ((words((pos >>> 6).toInt) & (1L << (pos & 63))) == 0L) return false
       i += 1
     }
     true
@@ -206,9 +261,12 @@ final class BloomFilter private (
 
   def merge(other: BloomFilter): this.type = {
     require(numBits == other.numBits && numHashes == other.numHashes, "dimension mismatch")
+    val o = other.words
+    if (o == null) return this
+    val w = bits
     var i = 0
-    while (i < bits.length) {
-      bits(i) |= other.bits(i)
+    while (i < w.length) {
+      w(i) |= o(i)
       i += 1
     }
     this
@@ -217,14 +275,21 @@ final class BloomFilter private (
   /** Expected false-positive probability at the current fill ratio. */
   def expectedFpp: Double = {
     var ones = 0L
-    bits.foreach(w => ones += java.lang.Long.bitCount(w))
+    if (words != null) words.foreach(w => ones += java.lang.Long.bitCount(w))
     math.pow(ones.toDouble / numBits, numHashes.toDouble)
   }
 
   def toBytes: Array[Byte] = {
-    val buf = ByteBuffer.allocate(8 + 4 + bits.length * 8)
+    val n = numWords
+    val buf = ByteBuffer.allocate(8 + 4 + n * 8)
     buf.putLong(numBits).putInt(numHashes)
-    bits.foreach(buf.putLong)
+    if (words != null) {
+      var i = 0
+      while (i < n) {
+        buf.putLong(words(i))
+        i += 1
+      }
+    }
     buf.array()
   }
 }
@@ -245,7 +310,7 @@ object BloomFilter {
       s"bloom filter for $expectedItems items at fpp $fpp needs $mWords words, " +
         s"over the $MaxWords an encoding can hold")
     val k = math.max(1, math.round(ln2 * m / expectedItems).toInt)
-    new BloomFilter(mWords * 64L, k, new Array[Long](mWords.toInt))
+    new BloomFilter(mWords * 64L, k, null)
   }
 
   /**
@@ -258,36 +323,50 @@ object BloomFilter {
    * Shuffle-internal only; the stored wire format is unchanged.
    */
   def toCompactBytes(f: BloomFilter): Array[Byte] = {
-    val words = f.bits
+    val words = f.words
+    val n = f.numWords
     var nNonzero = 0
-    var i = 0
-    while (i < words.length) {
-      if (words(i) != 0L) nNonzero += 1
-      i += 1
-    }
-    val dense = 12L + words.length * 8L
-    if (16L + nNonzero.toLong * 13L >= dense) return f.toBytes
-    val out = new java.io.ByteArrayOutputStream(16 + nNonzero * 10)
-    out.write(0xff)
-    Varint.write(out, f.numBits)
-    Varint.write(out, f.numHashes.toLong)
-    Varint.write(out, nNonzero.toLong)
+    var gapBytes = 0
     var prev = -1
-    i = 0
-    while (i < words.length) {
+    var i = 0
+    if (words != null) while (i < n) {
       if (words(i) != 0L) {
-        Varint.write(out, (i - prev).toLong)
-        var s = 56
-        val w = words(i)
-        while (s >= 0) { out.write(((w >>> s) & 0xffL).toInt); s -= 8 }
+        nNonzero += 1
+        gapBytes += Varint.size((i - prev).toLong)
         prev = i
       }
       i += 1
     }
-    out.toByteArray
+    val dense = 12L + n * 8L
+    if (16L + nNonzero.toLong * 13L >= dense) return f.toBytes
+    val out = new Array[Byte](1 + Varint.size(f.numBits) + Varint.size(f.numHashes.toLong) +
+      Varint.size(nNonzero.toLong) + gapBytes + nNonzero * 8)
+    out(0) = -1
+    var pos = Varint.write(out, 1, f.numBits)
+    pos = Varint.write(out, pos, f.numHashes.toLong)
+    pos = Varint.write(out, pos, nNonzero.toLong)
+    prev = -1
+    i = 0
+    if (words != null) while (i < n) {
+      if (words(i) != 0L) {
+        pos = Varint.write(out, pos, (i - prev).toLong)
+        var s = 56
+        val w = words(i)
+        while (s >= 0) {
+          out(pos) = (w >>> s).toByte
+          pos += 1
+          s -= 8
+        }
+        prev = i
+      }
+      i += 1
+    }
+    out
   }
 
   def fromBytes(bytes: Array[Byte]): BloomFilter = {
+    require(bytes.length >= 12 || (bytes.length > 0 && bytes(0) == -1.toByte),
+      "corrupt bloom payload (header)")
     if (bytes(0) == -1.toByte) { // compact sparse-word form
       val r = new Varint.Reader(bytes, 1)
       val numBits = r.read()
@@ -297,7 +376,7 @@ object BloomFilter {
       val nWords = (numBits >>> 6).toInt
       val nNonzero = r.read().toInt
       require(nNonzero >= 0 && nNonzero <= nWords, "corrupt bloom payload (sparse count)")
-      val words = new Array[Long](nWords)
+      val words = if (nNonzero == 0) null else new Array[Long](nWords)
       var idx = -1
       var k = 0
       while (k < nNonzero) {
@@ -316,7 +395,14 @@ object BloomFilter {
     val numHashes = buf.getInt
     require(numBits > 0 && (numBits & 63L) == 0L && (numBits >>> 6) <= MaxWords &&
       numHashes > 0, "corrupt bloom payload (dims)")
-    val bits = Array.fill((numBits >>> 6).toInt)(buf.getLong)
+    val n = (numBits >>> 6).toInt
+    require(n.toLong * 8 <= buf.remaining, "corrupt bloom payload (length)")
+    val bits = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      bits(i) = buf.getLong
+      i += 1
+    }
     new BloomFilter(numBits, numHashes, bits)
   }
 }

@@ -27,16 +27,21 @@ object Hashing {
   def hashString(s: String, seed: Long = 0L): Long =
     hashBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8), seed)
 
-  def hashBytes(data: Array[Byte], seed: Long = 0L): Long = {
-    val len = data.length
+  def hashBytes(data: Array[Byte], seed: Long = 0L): Long =
+    hashBytes(data, 0, data.length, seed)
+
+  /** Hash of the `len` bytes of `data` starting at `from`, read in place:
+   * equal to `hashBytes` of a copy of that range. */
+  def hashBytes(data: Array[Byte], from: Int, len: Int, seed: Long): Long = {
+    val end = from + len
     var h = 0L
-    var i = 0
+    var i = from
     if (len >= 32) {
       var v1 = seed + Prime1 + Prime2
       var v2 = seed + Prime2
       var v3 = seed
       var v4 = seed - Prime1
-      while (i + 32 <= len) {
+      while (i + 32 <= end) {
         v1 = round(v1, readLong(data, i))
         v2 = round(v2, readLong(data, i + 8))
         v3 = round(v3, readLong(data, i + 16))
@@ -53,17 +58,17 @@ object Hashing {
       h = seed + Prime5
     }
     h += len.toLong
-    while (i + 8 <= len) {
+    while (i + 8 <= end) {
       h ^= round(0L, readLong(data, i))
       h = java.lang.Long.rotateLeft(h, 27) * Prime1 + Prime4
       i += 8
     }
-    if (i + 4 <= len) {
+    if (i + 4 <= end) {
       h ^= (readInt(data, i) & 0xffffffffL) * Prime1
       h = java.lang.Long.rotateLeft(h, 23) * Prime2 + Prime3
       i += 4
     }
-    while (i < len) {
+    while (i < end) {
       h ^= (data(i) & 0xffL) * Prime5
       h = java.lang.Long.rotateLeft(h, 11) * Prime1
       i += 1

@@ -9,18 +9,30 @@ package graft.sketches
  * register-wise max — associative, commutative, idempotent — so partial
  * aggregation over any partitioning yields the identical sketch.
  */
-final class Hll private (val precision: Int, val registers: Array[Byte]) extends Serializable {
+final class Hll private (val precision: Int, private var regs: Array[Byte])
+    extends Serializable {
   require(precision >= 4 && precision <= 18, "precision must be in [4, 18]")
 
   private def m: Int = 1 << precision
 
+  /** True until the first register is written: no register array exists
+   * yet, so an unused aggregation buffer costs only this object. */
+  def isPristine: Boolean = regs == null
+
+  /** The 2^precision registers, allocated (all zero) on first access. */
+  def registers: Array[Byte] = {
+    if (regs == null) regs = new Array[Byte](m)
+    regs
+  }
+
   def addHash(hash: Long): this.type = {
+    val r = registers
     val idx = (hash >>> (64 - precision)).toInt
     val w = hash << precision
     // rank: position of the leftmost 1-bit in the remaining 64-p bits, 1-based;
     // all-zero remainder gets the max rank 64-p+1
     val rank = (if (w == 0L) 64 - precision else java.lang.Long.numberOfLeadingZeros(w)) + 1
-    if (rank > registers(idx)) registers(idx) = rank.toByte
+    if (rank > r(idx)) r(idx) = rank.toByte
     this
   }
 
@@ -30,9 +42,12 @@ final class Hll private (val precision: Int, val registers: Array[Byte]) extends
 
   def merge(other: Hll): this.type = {
     require(precision == other.precision, "precision mismatch")
+    val o = other.regs
+    if (o == null) return this
+    val r = registers
     var i = 0
-    while (i < registers.length) {
-      if (other.registers(i) > registers(i)) registers(i) = other.registers(i)
+    while (i < r.length) {
+      if (o(i) > r(i)) r(i) = o(i)
       i += 1
     }
     this
@@ -40,12 +55,13 @@ final class Hll private (val precision: Int, val registers: Array[Byte]) extends
 
   /** Cardinality estimate. */
   def estimate: Double = {
+    val r = registers
     var sum = 0.0
     var zeros = 0
     var i = 0
-    while (i < registers.length) {
-      sum += java.lang.Double.longBitsToDouble((1023L - registers(i)) << 52) // 2^-reg
-      if (registers(i) == 0) zeros += 1
+    while (i < r.length) {
+      sum += java.lang.Double.longBitsToDouble((1023L - r(i)) << 52) // 2^-reg
+      if (r(i) == 0) zeros += 1
       i += 1
     }
     val raw = alpha * m.toDouble * m.toDouble / sum
@@ -64,9 +80,9 @@ final class Hll private (val precision: Int, val registers: Array[Byte]) extends
   }
 
   def toBytes: Array[Byte] = {
-    val out = new Array[Byte](1 + registers.length)
+    val out = new Array[Byte](1 + m)
     out(0) = precision.toByte
-    System.arraycopy(registers, 0, out, 1, registers.length)
+    if (regs != null) System.arraycopy(regs, 0, out, 1, m)
     out
   }
 }
@@ -75,7 +91,7 @@ object Hll {
   val DefaultPrecision = 14 // 16384 registers, ~0.81% standard error
 
   def apply(precision: Int = DefaultPrecision): Hll =
-    new Hll(precision, new Array[Byte](1 << precision))
+    new Hll(precision, null)
 
   /**
    * Compact aggregation-buffer encoding for partial aggregation at extreme
@@ -92,30 +108,37 @@ object Hll {
    * ever crosses the partial->final shuffle inside an aggregation.
    */
   def toCompactBytes(h: Hll): Array[Byte] = {
-    val regs = h.registers
-    val m = regs.length
+    val regs = h.regs
+    val m = 1 << h.precision
     var nSet = 0
-    var i = 0
-    while (i < m) {
-      if (regs(i) != 0) nSet += 1
-      i += 1
-    }
-    // conservative sparse upper bound: 1 marker + 5 count + nSet * (5 + 1)
-    if (6L + nSet.toLong * 6L >= 1L + m) return h.toBytes
-    val out = new java.io.ByteArrayOutputStream(8 + nSet * 3)
-    out.write((-h.precision).toByte & 0xff)
-    Varint.write(out, nSet.toLong)
+    var pairBytes = 0
     var prev = -1
-    i = 0
-    while (i < m) {
+    var i = 0
+    if (regs != null) while (i < m) {
       if (regs(i) != 0) {
-        Varint.write(out, (i - prev).toLong)
-        out.write(regs(i).toInt)
+        nSet += 1
+        pairBytes += Varint.size((i - prev).toLong) + 1
         prev = i
       }
       i += 1
     }
-    out.toByteArray
+    // conservative sparse upper bound: 1 marker + 5 count + nSet * (5 + 1)
+    if (6L + nSet.toLong * 6L >= 1L + m) return h.toBytes
+    val out = new Array[Byte](1 + Varint.size(nSet.toLong) + pairBytes)
+    out(0) = (-h.precision).toByte
+    var pos = Varint.write(out, 1, nSet.toLong)
+    prev = -1
+    i = 0
+    if (regs != null) while (i < m) {
+      if (regs(i) != 0) {
+        pos = Varint.write(out, pos, (i - prev).toLong)
+        out(pos) = regs(i)
+        pos += 1
+        prev = i
+      }
+      i += 1
+    }
+    out
   }
 
   def fromBytes(bytes: Array[Byte]): Hll = {
@@ -124,10 +147,10 @@ object Hll {
       val p = -first
       require(p >= 4 && p <= 18, "corrupt HLL payload (sparse precision)")
       val m = 1 << p
-      val regs = new Array[Byte](m)
       val r = new Varint.Reader(bytes, 1)
       val nSet = r.read().toInt
       require(nSet >= 0 && nSet <= m, "corrupt HLL payload (sparse count)")
+      val regs = if (nSet == 0) null else new Array[Byte](m)
       var idx = -1
       var k = 0
       while (k < nSet) {

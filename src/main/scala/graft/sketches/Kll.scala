@@ -16,7 +16,7 @@ import scala.collection.mutable.ArrayBuffer
  */
 final class Kll private (
     val k: Int,
-    private var compactors: ArrayBuffer[ArrayBuffer[Double]],
+    private var compactors: ArrayBuffer[Kll.Level],
     private var totalVar: Long,
     private var coinState: Long)
     extends Serializable {
@@ -32,8 +32,32 @@ final class Kll private (
     math.max(2, math.ceil(k * math.pow(c, depth.toDouble)).toInt)
   }
 
-  private def size: Int = compactors.map(_.length).sum
-  private def capacityTotal: Int = compactors.indices.map(capacity).sum
+  private def size: Int = {
+    var n = 0
+    var level = 0
+    while (level < compactors.length) {
+      n += compactors(level).length
+      level += 1
+    }
+    n
+  }
+
+  // capacities depend only on the level count, so their sum is cached per count
+  private var capTotalLevels = -1
+  private var capTotal = 0
+  private def capacityTotal: Int = {
+    if (capTotalLevels != compactors.length) {
+      var sum = 0
+      var level = 0
+      while (level < compactors.length) {
+        sum += capacity(level)
+        level += 1
+      }
+      capTotal = sum
+      capTotalLevels = compactors.length
+    }
+    capTotal
+  }
 
   /** Deterministic pseudo-random coin (splitmix64 step over internal state):
    * reproducible for a fixed insertion order, unbiased across compactions. */
@@ -57,29 +81,30 @@ final class Kll private (
     var level = 0
     var done = false
     while (!done && level < compactors.length) {
-      if (compactors(level).length >= capacity(level)) {
-        if (level + 1 == compactors.length) compactors += ArrayBuffer.empty[Double]
-        val sorted = compactors(level).sortInPlace()
-        val n = sorted.length
+      val cur = compactors(level)
+      if (cur.length >= capacity(level)) {
+        if (level + 1 == compactors.length) compactors += new Kll.Level
+        cur.sort()
+        val sorted = cur.items
+        val n = cur.length
         // compact an even-length range so total weight is conserved exactly;
         // an odd count retains one edge item (random edge) at this level
         var evenStart = 0
         var evenEnd = n
-        var retained: Option[Double] = None
+        var retained = 0.0
         if (n % 2 == 1) {
-          if (coin()) { retained = Some(sorted(0)); evenStart = 1 }
-          else { retained = Some(sorted(n - 1)); evenEnd = n - 1 }
+          if (coin()) { retained = sorted(0); evenStart = 1 }
+          else { retained = sorted(n - 1); evenEnd = n - 1 }
         }
         val offset = if (coin()) 1 else 0
-        val promoted = new ArrayBuffer[Double]((evenEnd - evenStart) / 2)
+        val next = compactors(level + 1)
         var i = evenStart + offset
         while (i < evenEnd) {
-          promoted += sorted(i)
+          next += sorted(i)
           i += 2
         }
-        compactors(level) = ArrayBuffer.empty[Double]
-        retained.foreach(compactors(level) += _)
-        compactors(level + 1) ++= promoted
+        cur.length = 0
+        if (n % 2 == 1) cur += retained
         done = true
       }
       level += 1
@@ -89,7 +114,7 @@ final class Kll private (
   def merge(other: Kll): this.type = {
     require(k == other.k, "k mismatch")
     while (compactors.length < other.compactors.length) {
-      compactors += ArrayBuffer.empty[Double]
+      compactors += new Kll.Level
     }
     var level = 0
     while (level < other.compactors.length) {
@@ -108,7 +133,12 @@ final class Kll private (
     var level = 0
     while (level < compactors.length) {
       val w = 1L << level
-      compactors(level).foreach(v => out += ((v, w)))
+      val cc = compactors(level)
+      var i = 0
+      while (i < cc.length) {
+        out += ((cc.items(i), w))
+        i += 1
+      }
       level += 1
     }
     out.sortInPlace()(Ordering.by(_._1))
@@ -136,7 +166,12 @@ final class Kll private (
     var level = 0
     while (level < compactors.length) {
       val w = 1L << level
-      compactors(level).foreach(v => if (v <= x) r += w)
+      val cc = compactors(level)
+      var i = 0
+      while (i < cc.length) {
+        if (cc.items(i) <= x) r += w
+        i += 1
+      }
       level += 1
     }
     r
@@ -147,29 +182,79 @@ final class Kll private (
     val buf = ByteBuffer.allocate(4 + 8 + 8 + 4 + compactors.length * 4 + n * 8)
     buf.putInt(k).putLong(totalVar).putLong(coinState).putInt(compactors.length)
     compactors.foreach(cc => buf.putInt(cc.length))
-    compactors.foreach(_.foreach(buf.putDouble))
+    compactors.foreach { cc =>
+      var i = 0
+      while (i < cc.length) {
+        buf.putDouble(cc.items(i))
+        i += 1
+      }
+    }
     buf.array()
   }
 }
 
 object Kll {
 
+  /** One compactor: a growable array of unboxed doubles. */
+  private[sketches] final class Level(var items: Array[Double], var length: Int)
+      extends Serializable {
+    def this() = this(new Array[Double](0), 0)
+
+    private def reserve(n: Int): Unit =
+      if (n > items.length) items = java.util.Arrays.copyOf(items, math.max(n, 2 * items.length))
+
+    def +=(x: Double): Unit = {
+      reserve(length + 1)
+      items(length) = x
+      length += 1
+    }
+
+    def ++=(other: Level): Unit = {
+      val n = other.length
+      val src = other.items
+      reserve(length + n)
+      System.arraycopy(src, 0, items, length, n)
+      length += n
+    }
+
+    /** Ascending under the total `Double` order (-0.0 before 0.0). */
+    def sort(): Unit = java.util.Arrays.sort(items, 0, length)
+  }
+
   def apply(k: Int = 200): Kll = {
     require(k >= 8)
-    new Kll(k, ArrayBuffer(ArrayBuffer.empty[Double]), 0L, 0x243f6a8885a308d3L)
+    new Kll(k, ArrayBuffer(new Level), 0L, 0x243f6a8885a308d3L)
   }
 
   def fromBytes(bytes: Array[Byte]): Kll = {
+    require(bytes.length >= 24, "corrupt KLL payload (header)")
     val buf = ByteBuffer.wrap(bytes)
     val k = buf.getInt
     val total = buf.getLong
     val coinState = buf.getLong
     val nLevels = buf.getInt
-    val sizes = Array.fill(nLevels)(buf.getInt)
-    val compactors = ArrayBuffer.tabulate(nLevels) { i =>
-      val cc = new ArrayBuffer[Double](sizes(i))
-      (0 until sizes(i)).foreach(_ => cc += buf.getDouble)
-      cc
+    require(nLevels >= 0 && nLevels.toLong * 4 <= buf.remaining, "corrupt KLL payload (levels)")
+    val sizes = new Array[Int](nLevels)
+    var items = 0L
+    var i = 0
+    while (i < nLevels) {
+      sizes(i) = buf.getInt
+      require(sizes(i) >= 0, "corrupt KLL payload (level size)")
+      items += sizes(i)
+      i += 1
+    }
+    require(items * 8 <= buf.remaining, "corrupt KLL payload (count)")
+    val compactors = new ArrayBuffer[Level](nLevels)
+    i = 0
+    while (i < nLevels) {
+      val a = new Array[Double](sizes(i))
+      var j = 0
+      while (j < a.length) {
+        a(j) = buf.getDouble
+        j += 1
+      }
+      compactors += new Level(a, a.length)
+      i += 1
     }
     new Kll(k, compactors, total, coinState)
   }

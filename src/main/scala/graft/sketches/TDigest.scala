@@ -22,9 +22,12 @@ final class TDigest private (
     private var maxVar: Double)
     extends Serializable {
 
+  // Insertion buffer: starts empty and doubles up to bufferCap, so a digest
+  // that is only decoded, merged or encoded never allocates one. It is
+  // flushed exactly when bufLen reaches bufferCap, whatever its capacity.
   private val bufferCap = math.max(64, (5 * compression).toInt)
-  private var bufMeans = new Array[Double](bufferCap)
-  private var bufWeights = new Array[Double](bufferCap)
+  private var bufMeans = TDigest.NoDoubles
+  private var bufWeights = TDigest.NoDoubles
   private var bufLen = 0
 
   def totalWeight: Double = { flush(); totalVar }
@@ -36,6 +39,7 @@ final class TDigest private (
     require(!x.isNaN, "value must not be NaN")
     require(w > 0)
     if (bufLen == bufferCap) flush()
+    if (bufLen == bufMeans.length) growBuffer()
     bufMeans(bufLen) = x
     bufWeights(bufLen) = w
     bufLen += 1
@@ -56,6 +60,12 @@ final class TDigest private (
     this
   }
 
+  private def growBuffer(): Unit = {
+    val cap = math.min(bufferCap, math.max(16, 2 * bufMeans.length))
+    bufMeans = java.util.Arrays.copyOf(bufMeans, cap)
+    bufWeights = java.util.Arrays.copyOf(bufWeights, cap)
+  }
+
   private def scale(q: Double): Double =
     compression / (2 * math.Pi) * math.asin(2 * math.max(0.0, math.min(1.0, q)) - 1)
 
@@ -71,10 +81,17 @@ final class TDigest private (
     System.arraycopy(bufWeights, 0, ws, nCentroids, bufLen)
     bufLen = 0
     // sort (mean, weight) pairs by mean
-    val order = (0 until n).sortBy(ms(_))
-    val sm = order.map(ms(_)).toArray
-    val sw = order.map(ws(_)).toArray
-    val total = sw.sum
+    val order = TDigest.stableOrder(ms, n)
+    val sm = new Array[Double](n)
+    val sw = new Array[Double](n)
+    var total = 0.0
+    var j = 0
+    while (j < n) {
+      sm(j) = ms(order(j))
+      sw(j) = ws(order(j))
+      total += sw(j)
+      j += 1
+    }
     val outM = new Array[Double](n)
     val outW = new Array[Double](n)
     var out = 0
@@ -181,6 +198,49 @@ final class TDigest private (
 
 object TDigest {
 
+  private val NoDoubles = new Array[Double](0)
+
+  /** Indices 0 until n ordered by `keys` under `java.lang.Double.compare`
+   * (-0.0 before 0.0), ties kept in index order: the order a stable sort
+   * by the total `Double` ordering gives, without boxing. Bottom-up merge
+   * sort over two index arrays. */
+  private[sketches] def stableOrder(keys: Array[Double], n: Int): Array[Int] = {
+    var src = new Array[Int](n)
+    var dst = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      src(i) = i
+      i += 1
+    }
+    var width = 1
+    while (width < n) {
+      var lo = 0
+      while (lo < n) {
+        val mid = math.min(lo + width, n)
+        val hi = math.min(lo + 2 * width, n)
+        var a = lo
+        var b = mid
+        var k = lo
+        while (k < hi) {
+          if (b >= hi || (a < mid && java.lang.Double.compare(keys(src(a)), keys(src(b))) <= 0)) {
+            dst(k) = src(a)
+            a += 1
+          } else {
+            dst(k) = src(b)
+            b += 1
+          }
+          k += 1
+        }
+        lo = hi
+      }
+      val t = src
+      src = dst
+      dst = t
+      width *= 2
+    }
+    src
+  }
+
   def apply(compression: Double = 100.0): TDigest = {
     require(compression >= 10)
     new TDigest(
@@ -194,12 +254,14 @@ object TDigest {
   }
 
   def fromBytes(bytes: Array[Byte]): TDigest = {
+    require(bytes.length >= 36, "corrupt t-digest payload (header)")
     val buf = ByteBuffer.wrap(bytes)
     val compression = buf.getDouble
     val n = buf.getInt
     val total = buf.getDouble
     val minV = buf.getDouble
     val maxV = buf.getDouble
+    require(n >= 0 && n.toLong * 16 <= buf.remaining, "corrupt t-digest payload (count)")
     val ms = new Array[Double](n)
     val ws = new Array[Double](n)
     var i = 0

@@ -7,16 +7,31 @@ package graft.sketches
  * ships ~10 bytes, not a dense 2^p register array). The STORED wire
  * formats (`toBytes`) stay dense; each sketch's `fromBytes` dispatches on
  * a marker byte, so both forms decode to identical state.
+ *
+ * Encoders size their output exactly with [[size]] in the pass that counts
+ * the nonzero cells, then [[write]] into that one array.
  */
 private[sketches] object Varint {
 
-  def write(out: java.io.ByteArrayOutputStream, v0: Long): Unit = {
+  /** Encoded length of `v` in bytes (1..10). */
+  def size(v: Long): Int = {
+    var n = 1
+    var r = v >>> 7
+    while (r != 0L) { n += 1; r >>>= 7 }
+    n
+  }
+
+  /** Writes `v` at `pos`; returns the position after it. */
+  def write(out: Array[Byte], pos: Int, v0: Long): Int = {
     var v = v0
+    var p = pos
     while ((v & ~0x7fL) != 0L) {
-      out.write(((v & 0x7fL) | 0x80L).toInt)
+      out(p) = ((v & 0x7fL) | 0x80L).toByte
+      p += 1
       v >>>= 7
     }
-    out.write(v.toInt)
+    out(p) = v.toByte
+    p + 1
   }
 
   final class Reader(val bytes: Array[Byte], var pos: Int) {

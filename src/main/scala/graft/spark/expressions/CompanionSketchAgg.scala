@@ -4,6 +4,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sketches._
 
@@ -23,6 +25,16 @@ import graft.sketches._
  * buffer crossing the partial->shuffle->final boundary is each sketch's
  * compact wire format, and the per-row update path is unboxed for
  * primitive inputs (getDouble/getLong on the bound ordinal).
+ *
+ * An empty buffer allocates nothing: HLL registers, count-min counters and
+ * Bloom words are created on the first write, and a t-digest's insertion
+ * buffer on the first `add`. Spark creates one buffer per group in the
+ * final phase only to merge the group's partials into it, so HLL, CMS and
+ * Bloom `merge` adopt the first partial when the buffer is still pristine
+ * (`other` is freshly deserialized and owned by this aggregate — the rule
+ * `SketchMergeAgg.merge` applies). T-digest and KLL keep merging into the
+ * fresh buffer: KLL's merge mixes its coin state, and a t-digest's flush
+ * points would move once a group has several partials.
  */
 abstract class CompanionSketchAgg[S <: AnyRef] extends TypedImperativeAggregate[S] {
   def child: Expression
@@ -46,10 +58,17 @@ private[spark] object ItemSketchAgg {
    * defined as the hash of the UTF-8 encoding, and valid bytes round-trip
    * `toString.getBytes` unchanged); malformed sequences fall back to the
    * String path so they hash the same U+FFFD-replaced encoding
-   * `toString` would have produced. `isValid` caches per UTF8String. */
-  def utf8Hash(s: org.apache.spark.unsafe.types.UTF8String): Long =
-    if (s.isValid) Hashing.hashBytes(s.getBytes)
-    else Hashing.hashString(s.toString)
+   * `toString` would have produced. `isValid` caches per UTF8String.
+   *
+   * An on-heap string (the `UnsafeRow` case) is hashed in place from its
+   * backing array, with no `getBytes` copy; an off-heap one is copied. */
+  def utf8Hash(s: UTF8String): Long =
+    if (!s.isValid) Hashing.hashString(s.toString)
+    else s.getBaseObject match {
+      case a: Array[Byte] =>
+        Hashing.hashBytes(a, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes, 0L)
+      case _ => Hashing.hashBytes(s.getBytes)
+    }
 }
 
 /** Item-keyed sketches (HLL / CMS / Bloom): string inputs hash as strings,
@@ -82,7 +101,7 @@ abstract class ItemSketchAgg[S <: AnyRef] extends CompanionSketchAgg[S] {
     } else {
       val v = child.eval(input)
       if (v != null) v match {
-        case s: org.apache.spark.unsafe.types.UTF8String =>
+        case s: UTF8String =>
           addHash(buffer, ItemSketchAgg.utf8Hash(s))
         case l: java.lang.Long                           => addLong(buffer, l.longValue())
         case i: java.lang.Integer                        => addLong(buffer, i.longValue())
@@ -126,7 +145,8 @@ case class HllSketchAgg(
   override def createAggregationBuffer(): Hll = Hll(precision)
   override protected def addHash(b: Hll, h: Long): Unit = b.addHash(h)
   override protected def addLong(b: Hll, v: Long): Unit = b.addLong(v)
-  override def merge(buffer: Hll, other: Hll): Hll = buffer.merge(other)
+  override def merge(buffer: Hll, other: Hll): Hll =
+    if (buffer.isPristine) other else buffer.merge(other)
   override protected def toBytes(s: Hll): Array[Byte] = s.toBytes
   override protected def fromBytes(b: Array[Byte]): Hll = Hll.fromBytes(b)
   // shuffle buffers take the compact (sparse) form: a group that saw few
@@ -163,7 +183,8 @@ case class CountMinSketchAgg(
   override def createAggregationBuffer(): CountMin = CountMin(depth, width)
   override protected def addHash(b: CountMin, h: Long): Unit = b.addHash(h)
   override protected def addLong(b: CountMin, v: Long): Unit = b.addLong(v)
-  override def merge(buffer: CountMin, other: CountMin): CountMin = buffer.merge(other)
+  override def merge(buffer: CountMin, other: CountMin): CountMin =
+    if (buffer.isPristine) other else buffer.merge(other)
   override protected def toBytes(s: CountMin): Array[Byte] = s.toBytes
   override protected def fromBytes(b: Array[Byte]): CountMin = CountMin.fromBytes(b)
   // shuffle buffers varint-encode the counter matrix (zero counters cost
@@ -214,7 +235,7 @@ case class CountMinWeightedSketchAgg(
             s"cms_sketch_weighted: unsupported weight ${other.getClass.getSimpleName}")
       }
       v match {
-        case s: org.apache.spark.unsafe.types.UTF8String =>
+        case s: UTF8String =>
           buffer.addHash(ItemSketchAgg.utf8Hash(s), cnt)
         case l: java.lang.Long                           => buffer.addLong(l.longValue(), cnt)
         case i: java.lang.Integer                        => buffer.addLong(i.longValue(), cnt)
@@ -225,7 +246,8 @@ case class CountMinWeightedSketchAgg(
     }
     buffer
   }
-  override def merge(buffer: CountMin, other: CountMin): CountMin = buffer.merge(other)
+  override def merge(buffer: CountMin, other: CountMin): CountMin =
+    if (buffer.isPristine) other else buffer.merge(other)
   override protected def toBytes(s: CountMin): Array[Byte] = s.toBytes
   override protected def fromBytes(b: Array[Byte]): CountMin = CountMin.fromBytes(b)
   override def serialize(buffer: CountMin): Array[Byte] = CountMin.toCompactBytes(buffer)
@@ -262,7 +284,8 @@ case class BloomSketchAgg(
   override def createAggregationBuffer(): BloomFilter = BloomFilter(expectedItems, fpp)
   override protected def addHash(b: BloomFilter, h: Long): Unit = b.addHash(h)
   override protected def addLong(b: BloomFilter, v: Long): Unit = b.addLong(v)
-  override def merge(buffer: BloomFilter, other: BloomFilter): BloomFilter = buffer.merge(other)
+  override def merge(buffer: BloomFilter, other: BloomFilter): BloomFilter =
+    if (buffer.isPristine) other else buffer.merge(other)
   override protected def toBytes(s: BloomFilter): Array[Byte] = s.toBytes
   override protected def fromBytes(b: Array[Byte]): BloomFilter = BloomFilter.fromBytes(b)
   // shuffle buffers take the sparse nonzero-word form; result bytes stay

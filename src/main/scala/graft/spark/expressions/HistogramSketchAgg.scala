@@ -18,6 +18,12 @@ import graft.core.{Histogram, HistogramSerde, Layout, SketchEnvelope}
  * whichever is fewer bits) instead of the raw 8-byte-per-bin counter array.
  * At 10^5-10^6 shuffled group buffers that is the difference between KBs
  * and tens of bytes per sketch on the wire.
+ *
+ * An empty buffer allocates no counters (they grow as values arrive, as in
+ * DynaHist's dynamic histogram). In the final phase Spark creates one empty
+ * buffer per group only to merge the group's partials into it, so `merge`
+ * adopts the first partial while the buffer has recorded nothing: `other`
+ * is freshly deserialized and owned by this aggregate.
  */
 case class HistogramSketchAgg(
     child: Expression,
@@ -60,7 +66,8 @@ case class HistogramSketchAgg(
     buffer
   }
 
-  override def merge(buffer: Histogram, other: Histogram): Histogram = buffer.add(other)
+  override def merge(buffer: Histogram, other: Histogram): Histogram =
+    if (buffer.totalCount == 0L) other else buffer.add(other)
 
   override def eval(buffer: Histogram): Any = SketchEnvelope.toBytes(buffer)
 
@@ -97,7 +104,8 @@ object HistogramSketchAgg {
  * Count-weighted histogram aggregation (`hist_sketch_weighted`) with the
  * same V1-wire aggregation buffer as [[HistogramSketchAgg]] (reference
  * semantics `addValue(double, long)`, Histogram.java:283-290): compact
- * shuffle buffers plus an unboxed (getDouble/getLong) per-row update.
+ * shuffle buffers plus an unboxed (getDouble/getLong) per-row update, and
+ * the same adoption of the first partial into an empty buffer.
  */
 case class HistogramSketchWeightedAgg(
     value: Expression,
@@ -145,7 +153,8 @@ case class HistogramSketchWeightedAgg(
     buffer
   }
 
-  override def merge(buffer: Histogram, other: Histogram): Histogram = buffer.add(other)
+  override def merge(buffer: Histogram, other: Histogram): Histogram =
+    if (buffer.totalCount == 0L) other else buffer.add(other)
 
   override def eval(buffer: Histogram): Any = SketchEnvelope.toBytes(buffer)
 

@@ -31,3 +31,14 @@ object RegistryBridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 }
+
+/**
+ * Bridge to the context's (private[spark]) listener bus, so a tool can
+ * settle its listener's counters after an action by draining the queued
+ * events instead of sleeping.
+ */
+object ListenerBridge {
+  import org.apache.spark.SparkContext
+
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

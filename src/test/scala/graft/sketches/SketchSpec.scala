@@ -253,4 +253,50 @@ class SketchSpec extends AnyFunSuite {
     val bloomHeader = java.nio.ByteBuffer.allocate(12).putLong(1L << 40).putInt(3).array()
     intercept[IllegalArgumentException](BloomFilter.fromBytes(bloomHeader))
   }
+
+  test("t-digest's unboxed order equals a stable sortBy on duplicates and signed zeros") {
+    val rnd = new java.util.SplittableRandom(17L)
+    val pools = Seq(
+      Array(0.0, -0.0, 1.0, -1.0, 0.0, -0.0),
+      Array(2.5, 2.5, 2.5, 1.0, 2.5),
+      Array(Double.NegativeInfinity, -0.0, Double.MinPositiveValue, 0.0, 3.0, 3.0))
+    for (pool <- pools; n <- Seq(0, 1, 2, 3, 7, 64, 65, 500, 1003)) {
+      val keys = Array.fill(n)(pool(rnd.nextInt(pool.length)))
+      val expected = (0 until n).sortBy(keys(_))
+      assert(TDigest.stableOrder(keys, n).toSeq == expected, s"n=$n pool=${pool.toSeq}")
+    }
+    // only the first n keys take part
+    val keys = Array(3.0, 1.0, 2.0, -5.0)
+    assert(TDigest.stableOrder(keys, 3).toSeq == Seq(1, 2, 0))
+  }
+
+  test("truncated t-digest, KLL and dense count-min/bloom blobs fail as corrupt") {
+    val td = TDigest(50.0)
+    val kll = Kll(16)
+    val cm = CountMin(2, 8)
+    val bf = BloomFilter(100L, 0.01)
+    (0 until 300).foreach { i =>
+      td.add(i * 1.5); kll.add(i.toDouble); cm.addLong(i); bf.addLong(i)
+    }
+    val blobs = Seq[(String, Array[Byte], Array[Byte] => Any)](
+      ("t-digest", td.toBytes, TDigest.fromBytes),
+      ("KLL", kll.toBytes, Kll.fromBytes),
+      ("count-min", cm.toBytes, CountMin.fromBytes),
+      ("bloom", bf.toBytes, BloomFilter.fromBytes))
+    for ((name, full, decode) <- blobs) {
+      decode(full)
+      for (len <- 0 until full.length) {
+        val e = intercept[IllegalArgumentException](decode(java.util.Arrays.copyOf(full, len)))
+        assert(e.getMessage.contains("corrupt"), s"$name at $len bytes: ${e.getMessage}")
+      }
+    }
+    // a count far beyond the bytes present is rejected before allocating
+    val hugeTd = java.nio.ByteBuffer.allocate(36).putDouble(100.0).putInt(Int.MaxValue).array()
+    intercept[IllegalArgumentException](TDigest.fromBytes(hugeTd))
+    val negTd = java.nio.ByteBuffer.allocate(36).putDouble(100.0).putInt(-1).array()
+    intercept[IllegalArgumentException](TDigest.fromBytes(negTd))
+    val hugeKll = java.nio.ByteBuffer.allocate(28).putInt(16).putLong(1L).putLong(0L)
+      .putInt(1).putInt(Int.MaxValue).array()
+    intercept[IllegalArgumentException](Kll.fromBytes(hugeKll))
+  }
 }
