@@ -167,7 +167,7 @@ object CountMin {
     require(bytes.length >= 16 || (bytes.length > 0 && bytes(0) == -1.toByte),
       "corrupt count-min payload (header)")
     if (bytes(0) == -1.toByte) { // compact sparse-pair form
-      val r = new Varint.Reader(bytes, 1)
+      val r = new Varint.Reader(bytes, 1, "count-min")
       val depth = r.read().toInt
       val width = r.read().toInt
       require(depth > 0 && width > 0 && depth.toLong * width <= MaxCells,
@@ -368,7 +368,7 @@ object BloomFilter {
     require(bytes.length >= 12 || (bytes.length > 0 && bytes(0) == -1.toByte),
       "corrupt bloom payload (header)")
     if (bytes(0) == -1.toByte) { // compact sparse-word form
-      val r = new Varint.Reader(bytes, 1)
+      val r = new Varint.Reader(bytes, 1, "bloom")
       val numBits = r.read()
       val numHashes = r.read().toInt
       require(numBits > 0 && (numBits & 63L) == 0L && (numBits >>> 6) <= MaxWords &&

@@ -142,12 +142,13 @@ object Hll {
   }
 
   def fromBytes(bytes: Array[Byte]): Hll = {
+    require(bytes.length > 0, "corrupt HLL payload (empty)")
     val first = bytes(0).toInt
     if (first < 0) { // compact (sparse) aggregation-buffer form
       val p = -first
       require(p >= 4 && p <= 18, "corrupt HLL payload (sparse precision)")
       val m = 1 << p
-      val r = new Varint.Reader(bytes, 1)
+      val r = new Varint.Reader(bytes, 1, "HLL")
       val nSet = r.read().toInt
       require(nSet >= 0 && nSet <= m, "corrupt HLL payload (sparse count)")
       val regs = if (nSet == 0) null else new Array[Byte](m)

@@ -34,20 +34,24 @@ private[sketches] object Varint {
     p + 1
   }
 
-  final class Reader(val bytes: Array[Byte], var pos: Int) {
+  /** Reads varints and raw bytes from `pos` on. Running past the end of
+   * `bytes`, or a varint longer than 10 bytes, fails with
+   * `require` "corrupt `what` payload (...)". */
+  final class Reader(val bytes: Array[Byte], var pos: Int, what: String) {
     def read(): Long = {
       var shift = 0
       var acc = 0L
       var b = 0
       do {
-        b = bytes(pos) & 0xff
-        pos += 1
+        require(shift < 70, s"corrupt $what payload (varint too long)")
+        b = readByte() & 0xff
         acc |= (b & 0x7fL) << shift
         shift += 7
       } while ((b & 0x80) != 0)
       acc
     }
     def readByte(): Byte = {
+      require(pos < bytes.length, s"corrupt $what payload (truncated)")
       val b = bytes(pos)
       pos += 1
       b

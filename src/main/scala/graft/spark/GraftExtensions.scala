@@ -22,7 +22,8 @@ import graft.spark.expressions._
  * SQL-callable with per-call parameters, e.g.
  * `hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0, 1e6)` or `hll_sketch(c, 12)`.
  * The companion scalar queries and text scalars register through the
- * session UDF registry on first use.
+ * session UDF registry on first use, which also installs
+ * [[PullOutSketchInputs]] ([[functions.registerAll]]).
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

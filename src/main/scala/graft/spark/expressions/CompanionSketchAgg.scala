@@ -61,14 +61,33 @@ private[spark] object ItemSketchAgg {
    * `toString` would have produced. `isValid` caches per UTF8String.
    *
    * An on-heap string (the `UnsafeRow` case) is hashed in place from its
-   * backing array, with no `getBytes` copy; an off-heap one is copied. */
+   * backing array, with no `getBytes` copy; an off-heap one is copied.
+   * ASCII strings (see [[isAscii]]) skip the byte-by-byte `isValid` scan. */
   def utf8Hash(s: UTF8String): Long =
-    if (!s.isValid) Hashing.hashString(s.toString)
+    if (!isAscii(s) && !s.isValid) Hashing.hashString(s.toString)
     else s.getBaseObject match {
       case a: Array[Byte] =>
         Hashing.hashBytes(a, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes, 0L)
       case _ => Hashing.hashBytes(s.getBytes)
     }
+
+  /** True when no byte of `s` has its high bit set, so it is valid UTF-8.
+   * Reads eight bytes at a time. */
+  def isAscii(s: UTF8String): Boolean = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var i = 0
+    while (i + 8 <= n) {
+      if ((Platform.getLong(base, off + i) & 0x8080808080808080L) != 0L) return false
+      i += 8
+    }
+    while (i < n) {
+      if (Platform.getByte(base, off + i) < 0) return false
+      i += 1
+    }
+    true
+  }
 }
 
 /** Item-keyed sketches (HLL / CMS / Bloom): string inputs hash as strings,
@@ -81,6 +100,12 @@ abstract class ItemSketchAgg[S <: AnyRef] extends CompanionSketchAgg[S] {
   protected def addHash(buffer: S, h: Long): Unit
   protected def addLong(buffer: S, v: Long): Unit
 
+  /** Ordinal of a bound long (or string) input column, else -1. A plain
+   * column binds to a `BoundReference`, and so does a computed input once
+   * [[graft.spark.PullOutSketchInputs]] has projected it below the
+   * aggregate; `update` then reads it unboxed. The `child.eval` branch
+   * serves inputs the rule leaves in place (no rule installed, a `FILTER`
+   * or `DISTINCT` aggregate). */
   @transient private lazy val longOrdinal: Int = child match {
     case b: BoundReference if b.dataType == LongType => b.ordinal
     case _ => -1
@@ -119,6 +144,9 @@ abstract class ItemSketchAgg[S <: AnyRef] extends CompanionSketchAgg[S] {
 abstract class DoubleSketchAgg[S <: AnyRef] extends CompanionSketchAgg[S] {
   protected def addDouble(buffer: S, v: Double): Unit
 
+  /** Ordinal of a bound double input column, else -1: the unboxed path,
+   * as for [[ItemSketchAgg]]'s ordinals (computed inputs arrive bound once
+   * [[graft.spark.PullOutSketchInputs]] has projected them). */
   @transient private lazy val boundOrdinal: Int = child match {
     case b: BoundReference if b.dataType == DoubleType => b.ordinal
     case _ => -1
@@ -165,12 +193,12 @@ case class HllSketchAgg(
 object HllSketchAgg {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.graftbridge.ColumnBridge
+  import graft.spark.PullOutSketchInputs
 
   /** Column constructor (the [[graft.spark.expressions.HistogramSketchAgg]]
    * DSL pattern): native aggregate with the compact wire-format buffer. */
   def apply(c: Column, precision: Int): Column =
-    ColumnBridge.column(
-      HllSketchAgg(ColumnBridge.expression(c), precision).toAggregateExpression())
+    PullOutSketchInputs.column(HllSketchAgg(ColumnBridge.expression(c), precision))
 }
 
 case class CountMinSketchAgg(
@@ -202,11 +230,11 @@ case class CountMinSketchAgg(
 object CountMinSketchAgg {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.graftbridge.ColumnBridge
+  import graft.spark.PullOutSketchInputs
 
   /** Column constructor — native aggregate, compact wire-format buffer. */
   def apply(c: Column, depth: Int, width: Int): Column =
-    ColumnBridge.column(
-      CountMinSketchAgg(ColumnBridge.expression(c), depth, width).toAggregateExpression())
+    PullOutSketchInputs.column(CountMinSketchAgg(ColumnBridge.expression(c), depth, width))
 }
 
 /** (item, weight) count-min: each row adds `weight` to its item's counters —
@@ -264,14 +292,14 @@ case class CountMinWeightedSketchAgg(
 object CountMinWeightedSketchAgg {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.graftbridge.ColumnBridge
+  import graft.spark.PullOutSketchInputs
 
   /** Column constructor — native aggregate, compact wire-format buffer. */
   def apply(item: Column, weight: Column, depth: Int, width: Int): Column =
-    ColumnBridge.column(
-      CountMinWeightedSketchAgg(
-        ColumnBridge.expression(item),
-        ColumnBridge.expression(weight.cast("long")),
-        depth, width).toAggregateExpression())
+    PullOutSketchInputs.column(CountMinWeightedSketchAgg(
+      ColumnBridge.expression(item),
+      ColumnBridge.expression(weight.cast("long")),
+      depth, width))
 }
 
 case class BloomSketchAgg(
@@ -303,11 +331,11 @@ case class BloomSketchAgg(
 object BloomSketchAgg {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.graftbridge.ColumnBridge
+  import graft.spark.PullOutSketchInputs
 
   /** Column constructor — native aggregate, compact wire-format buffer. */
   def apply(c: Column, expectedItems: Long, fpp: Double): Column =
-    ColumnBridge.column(
-      BloomSketchAgg(ColumnBridge.expression(c), expectedItems, fpp).toAggregateExpression())
+    PullOutSketchInputs.column(BloomSketchAgg(ColumnBridge.expression(c), expectedItems, fpp))
 }
 
 case class TDigestSketchAgg(
@@ -333,12 +361,12 @@ case class TDigestSketchAgg(
 object TDigestSketchAgg {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.graftbridge.ColumnBridge
+  import graft.spark.PullOutSketchInputs
 
   /** Column constructor over `c` cast to double. */
   def apply(c: Column, compression: Double): Column =
-    ColumnBridge.column(
-      TDigestSketchAgg(ColumnBridge.expression(c.cast("double")), compression)
-        .toAggregateExpression())
+    PullOutSketchInputs.column(
+      TDigestSketchAgg(ColumnBridge.expression(c.cast("double")), compression))
 }
 
 case class KllSketchAgg(
@@ -364,9 +392,9 @@ case class KllSketchAgg(
 object KllSketchAgg {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.graftbridge.ColumnBridge
+  import graft.spark.PullOutSketchInputs
 
   /** Column constructor over `c` cast to double. */
   def apply(c: Column, k: Int): Column =
-    ColumnBridge.column(
-      KllSketchAgg(ColumnBridge.expression(c.cast("double")), k).toAggregateExpression())
+    PullOutSketchInputs.column(KllSketchAgg(ColumnBridge.expression(c.cast("double")), k))
 }

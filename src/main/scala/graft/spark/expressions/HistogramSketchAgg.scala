@@ -45,10 +45,13 @@ case class HistogramSketchAgg(
   override def createAggregationBuffer(): Histogram =
     if (packed) Histogram.packed(layout) else Histogram(layout)
 
-  // Unboxed hot path: after Spark binds references, a plain double column
-  // arrives as a BoundReference — read it with getDouble instead of eval()
-  // (which boxes a java.lang.Double per row; at 10^8-row rates the boxing
-  // garbage alone drives young-GC pauses, measured on multi-executor runs).
+  /** Unboxed hot path: after Spark binds references, a plain double column
+   * arrives as a BoundReference — read it with getDouble instead of eval()
+   * (which boxes a java.lang.Double per row; at 10^8-row rates the boxing
+   * garbage alone drives young-GC pauses, measured on multi-executor runs).
+   * A computed input such as `cast(length(text) as double)` arrives bound
+   * too once [[graft.spark.PullOutSketchInputs]] has projected it below the
+   * aggregate; `eval()` serves only inputs the rule leaves in place. */
   @transient private lazy val boundOrdinal: Int = child match {
     case b: org.apache.spark.sql.catalyst.expressions.BoundReference
         if b.dataType == org.apache.spark.sql.types.DoubleType => b.ordinal
@@ -91,13 +94,13 @@ case class HistogramSketchAgg(
 
 object HistogramSketchAgg {
   import org.apache.spark.sql.graftbridge.ColumnBridge
+  import graft.spark.PullOutSketchInputs
 
   /** Column constructor over `c` cast to double; `packed` selects
    * adaptive bit-width partial buffers. */
   def apply(c: Column, layout: Layout, packed: Boolean): Column =
-    ColumnBridge.column(
-      HistogramSketchAgg(ColumnBridge.expression(c.cast("double")), layout, packed = packed)
-        .toAggregateExpression())
+    PullOutSketchInputs.column(
+      HistogramSketchAgg(ColumnBridge.expression(c.cast("double")), layout, packed = packed))
 }
 
 /**
@@ -123,8 +126,9 @@ case class HistogramSketchWeightedAgg(
 
   override def createAggregationBuffer(): Histogram = Histogram(layout)
 
-  // Unboxed hot path for BOTH children (see HistogramSketchAgg.boundOrdinal):
-  // eval() boxes a java.lang.Double + java.lang.Long per row otherwise.
+  /** Unboxed hot path for BOTH children (see HistogramSketchAgg.boundOrdinal,
+   * including its note on [[graft.spark.PullOutSketchInputs]]): eval() boxes
+   * a java.lang.Double + java.lang.Long per row otherwise. */
   @transient private lazy val valueOrdinal: Int = value match {
     case b: org.apache.spark.sql.catalyst.expressions.BoundReference
         if b.dataType == DoubleType => b.ordinal
@@ -178,13 +182,12 @@ case class HistogramSketchWeightedAgg(
 
 object HistogramSketchWeightedAgg {
   import org.apache.spark.sql.graftbridge.ColumnBridge
+  import graft.spark.PullOutSketchInputs
 
   /** Column constructor over (value cast to double, weight cast to long). */
   def apply(value: Column, weight: Column, layout: Layout): Column =
-    ColumnBridge.column(
-      HistogramSketchWeightedAgg(
-        ColumnBridge.expression(value.cast("double")),
-        ColumnBridge.expression(weight.cast("long")),
-        layout)
-        .toAggregateExpression())
+    PullOutSketchInputs.column(HistogramSketchWeightedAgg(
+      ColumnBridge.expression(value.cast("double")),
+      ColumnBridge.expression(weight.cast("long")),
+      layout))
 }

@@ -17,7 +17,8 @@ import graft.spark.expressions._
  * partition, ships each group's buffer across the shuffle in the sketch's
  * compact wire format, and merges the partials in a final aggregate. The
  * same classes back the SQL names ([[functions.registerAll]],
- * [[GraftExtensions]]).
+ * [[GraftExtensions]]). Building a sketch aggregate column installs
+ * [[PullOutSketchInputs]] on the active session.
  */
 object functions {
 
@@ -215,8 +216,11 @@ object functions {
    * `hll_sketch(c, 12)` and `hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0,
    * 1e6)` run on the same aggregates as the Column DSL. The companion
    * scalar queries and the text scalars register through the UDF registry.
+   * It also installs [[PullOutSketchInputs]], so computed SQL sketch inputs
+   * are evaluated once per row below the aggregate.
    */
   def registerAll(spark: SparkSession): Unit = {
+    PullOutSketchInputs.install(spark)
     GraftExtensions.nativeBuilders.foreach { case (name, builder) =>
       org.apache.spark.sql.graftbridge.RegistryBridge.registerNative(spark, name, builder)
     }

@@ -299,4 +299,27 @@ class SketchSpec extends AnyFunSuite {
       .putInt(1).putInt(Int.MaxValue).array()
     intercept[IllegalArgumentException](Kll.fromBytes(hugeKll))
   }
+
+  test("truncated sparse HLL, count-min and bloom blobs fail as corrupt") {
+    val hll = Hll(10)
+    val cm = CountMin(4, 256)
+    val bf = BloomFilter(1000L, 0.01)
+    (0 until 5).foreach { i => hll.addLong(i * 977L); cm.addLong(i); bf.addLong(i) }
+    val blobs = Seq[(String, Array[Byte], Array[Byte] => Any)](
+      ("HLL", Hll.toCompactBytes(hll), Hll.fromBytes),
+      ("count-min", CountMin.toCompactBytes(cm), CountMin.fromBytes),
+      ("bloom", BloomFilter.toCompactBytes(bf), BloomFilter.fromBytes))
+    for ((name, full, decode) <- blobs) {
+      assert(full(0) < 0, s"$name blob is not the sparse form")
+      decode(full)
+      for (len <- 0 until full.length) {
+        val e = intercept[IllegalArgumentException](decode(java.util.Arrays.copyOf(full, len)))
+        assert(e.getMessage.contains("corrupt"), s"$name at $len bytes: ${e.getMessage}")
+      }
+    }
+    // a varint running past 10 bytes is rejected, not read as a wrapped value
+    val long = Array[Byte](-10) ++ Array.fill[Byte](11)(0x81.toByte) ++ Array[Byte](1)
+    val e = intercept[IllegalArgumentException](Hll.fromBytes(long))
+    assert(e.getMessage.contains("corrupt HLL payload (varint too long)"))
+  }
 }

@@ -192,4 +192,32 @@ class EmptyBufferSpec extends AnyFunSuite {
       assert(ItemSketchAgg.utf8Hash(u) != Hashing.hashBytes(bad))
     }
   }
+
+  test("the word-at-a-time ASCII check leaves every string hash unchanged") {
+    def check(buf: Array[Byte], off: Int, len: Int, ascii: Boolean): Unit = {
+      val s = UTF8String.fromBytes(buf, off, len)
+      assert(ItemSketchAgg.isAscii(s) == ascii, s"len=$len off=$off")
+      assert(ItemSketchAgg.utf8Hash(s) == Hashing.hashString(s.toString), s"len=$len off=$off")
+    }
+    for (len <- 0 to 96; off <- Seq(0, 1, 3, 8, 13)) {
+      val buf = Array.tabulate[Byte](off + len + 9)(i => ('a' + i % 26).toByte)
+      check(buf, off, len, ascii = true)
+      // one high byte at every position: a lone continuation byte (malformed)
+      // and a two-byte sequence (é, valid multi-byte)
+      for (p <- off until off + len) {
+        val b = buf.clone()
+        b(p) = 0x80.toByte
+        check(b, off, len, ascii = false)
+        if (p + 1 < off + len) {
+          b(p) = 0xC3.toByte
+          b(p + 1) = 0xA9.toByte
+          check(b, off, len, ascii = false)
+        }
+      }
+      // a high byte just past the string is not part of it
+      val past = buf.clone()
+      past(off + len) = 0x80.toByte
+      check(past, off, len, ascii = true)
+    }
+  }
 }
