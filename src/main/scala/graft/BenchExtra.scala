@@ -8,14 +8,23 @@ import org.apache.spark.sql.functions._
  * Supplementary measurements OUTSIDE the frozen driver bench (guide §1.4):
  * per-probe wall time plus exact shuffle read/write bytes from a listener.
  *
- * Probes:
- *  - hll_partials_G: grouped native hll_sketch at G group cardinality —
- *    the partial-aggregation buffers ARE the shuffle payload, so this
- *    measures the partial-buffer encoding (dense 1+2^p bytes vs the sparse
- *    (index-delta, rank) form) at the group cardinalities where it matters.
- *  - cms/bloom partials for the same shape (dense reference points).
+ * Probes (each run once to warm up, then timed three times: the JSON
+ * has the fastest time and the shuffle bytes of one run), at G = 1, 10k
+ * and 100k groups:
+ *  - hll_sketch_G, cms_sketch_G: the native aggregates over 2M distinct
+ *    longs grouped by `id mod G`, with conv_sketches' parameters
+ *    (precision 10; 4 x 256). At 100k groups a group sees 20 rows, as a
+ *    conversation does, and its buffers stay sparse; at 1 and 10k groups
+ *    they go dense. The partial buffers are the shuffle payload.
+ *  - hll_merge_G, cms_merge_G: `hll_merge`/`cms_merge` of 200k stored
+ *    blobs (10 rows each, staged once in parquet) into G groups: 200k, 20
+ *    or 2 blobs a group.
+ *  - hll_string_keys_4: q04-shaped, few groups and string items — the
+ *    per-row hashing path.
+ * Each probe reports rows/s (input rows or blobs) and shuffle bytes per
+ * group.
  *
- * Usage: SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.BenchExtra"
+ * Usage: SPARK_GRAFT_CPUS=4 sbt -batch "runMain graft.BenchExtra"
  * Prints one JSON line; not part of the driver contract.
  */
 object BenchExtra {
@@ -43,49 +52,62 @@ object BenchExtra {
       }
     })
 
-    def measure(name: String)(body: => Unit): String = {
+    def measure(name: String, rows: Long, groups: Long)(body: => Unit): String = {
       spark.sparkContext.setJobDescription(name)
       body // warm-up
       ListenerBridge.drain(spark.sparkContext)
       val (r0, w0) = (shufRead.get(), shufWrite.get())
-      val t0 = System.nanoTime()
-      body
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = (1 to 3).map { _ =>
+        val t0 = System.nanoTime()
+        body
+        (System.nanoTime() - t0) / 1e9
+      }.min
       ListenerBridge.drain(spark.sparkContext) // task-end events
-      val json = f"""\"$name\":{\"sec\":$sec%.3f,\"shuffle_read_bytes\":${shufRead
-          .get() - r0},\"shuffle_write_bytes\":${shufWrite.get() - w0}}"""
+      val read = (shufRead.get() - r0) / 3
+      val written = (shufWrite.get() - w0) / 3
+      val json = f"""\"$name\":{\"sec\":$sec%.3f,\"rows_per_s\":${rows / sec}%.0f,""" +
+        f"""\"shuffle_read_bytes\":$read,\"shuffle_write_bytes\":$written,""" +
+        f"""\"shuffle_bytes_per_group\":${written.toDouble / groups}%.1f}"""
       spark.sparkContext.setJobDescription(null)
       json
     }
 
-    val n = 4000000L
-    val out = Seq(100, 10000, 100000).map { g =>
-      measure(s"hll_partials_$g") {
-        spark
-          .range(0, n, 1, cpus.toInt * 2)
-          .groupBy(pmod(col("id"), lit(g)).as("g"))
-          .agg(graft.spark.expressions.HllSketchAgg(col("id"), 14).as("sk"))
-          .write.format("noop").mode("overwrite").save()
-      }
-    } ++ Seq(
-      measure("cms_partials_10000") {
-        spark
-          .range(0, n, 1, cpus.toInt * 2)
-          .groupBy(pmod(col("id"), lit(10000)).as("g"))
-          .agg(graft.spark.expressions.CountMinSketchAgg(col("id"), 5, 2048).as("sk"))
-          .write.format("noop").mode("overwrite").save()
-      },
-      measure("hll_string_keys_4") {
-        // q04-shaped: few groups, string items — the per-row hashing path
-        spark
-          .range(0, n, 1, cpus.toInt * 2)
-          .select(pmod(col("id"), lit(4)).as("g"),
-            concat(lit("user_"), col("id")).cast("string").as("s"))
-          .groupBy(col("g"))
-          .agg(graft.spark.expressions.HllSketchAgg(col("s"), 14).as("sk"))
-          .write.format("noop").mode("overwrite").save()
-      })
+    import graft.spark.functions.{cms_merge, hll_merge}
+    import graft.spark.expressions.{CountMinSketchAgg, HllSketchAgg}
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    val parts = cpus.toInt * 2
+    val n = 2000000L
+    val blobs = 200000L
+    val groupCounts = Seq(1L, 10000L, 100000L)
+    val ids = spark.range(0, n, 1, parts)
+    val tmp = java.nio.file.Files.createTempDirectory("bench-extra")
+    val stored = tmp.resolve("blobs").toString
+    ids.groupBy(pmod(col("id"), lit(blobs)).as("k"))
+      .agg(HllSketchAgg(col("id"), 10).as("hll"), CountMinSketchAgg(col("id"), 4, 256).as("cms"))
+      .write.parquet(stored)
+    val blobTable = spark.read.parquet(stored)
+    val out = groupCounts.flatMap { g =>
+      val key = pmod(col("id"), lit(g)).as("g")
+      Seq(
+        measure(s"hll_sketch_$g", n, g)(noop(ids.groupBy(key).agg(HllSketchAgg(col("id"), 10)))),
+        measure(s"cms_sketch_$g", n, g)(
+          noop(ids.groupBy(key).agg(CountMinSketchAgg(col("id"), 4, 256)))),
+        measure(s"hll_merge_$g", blobs, g)(
+          noop(blobTable.groupBy(pmod(col("k"), lit(g))).agg(hll_merge(col("hll"))))),
+        measure(s"cms_merge_$g", blobs, g)(
+          noop(blobTable.groupBy(pmod(col("k"), lit(g))).agg(cms_merge(col("cms"))))))
+    } :+ measure("hll_string_keys_4", 4000000L, 4L) {
+      // q04-shaped: few groups, string items — the per-row hashing path
+      noop(spark
+        .range(0, 4000000L, 1, parts)
+        .select(pmod(col("id"), lit(4)).as("g"),
+          concat(lit("user_"), col("id")).cast("string").as("s"))
+        .groupBy(col("g"))
+        .agg(HllSketchAgg(col("s"), 14).as("sk")))
+    }
     println(s"{${out.mkString(",")}}")
     spark.stop()
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 }

@@ -391,6 +391,20 @@ object HistogramSerde {
     b.minV = min
     b.maxV = max
 
+    // One counter window for the whole decode, over the first and last
+    // effective bins and the bins of min and max that lie in the regular
+    // range, so restoreExtremes does not regrow it.
+    val firstRegular = layout.underflowBinIndex + 1
+    val lastRegular = layout.overflowBinIndex - 1
+    var lo = Int.MaxValue
+    var hi = Int.MinValue
+    def cover(i: Int): Unit = if (i >= firstRegular && i <= lastRegular) {
+      lo = math.min(lo, i)
+      hi = math.max(hi, i)
+    }
+    cover(minBinIndex)
+    cover(maxBinIndex)
+
     if (effRegularClass >= 1) {
       var firstIdx = readSignedVarInt(in)
       var lastIdx = firstIdx
@@ -405,27 +419,15 @@ object HistogramSerde {
         }
       }
 
+      if (firstRegular <= lastRegular) {
+        cover(Algorithms.clip(firstIdx, firstRegular, lastRegular))
+        cover(Algorithms.clip(lastIdx, firstRegular, lastRegular))
+      }
+      if (lo <= hi) b.allocate(lo, hi)
+
       if (effRegularClass >= 3) {
         val bits = new BitReader(in)
         val bitsPerCount = bits.readBits(6).toInt
-
-        if (layout.underflowBinIndex + 1 < layout.overflowBinIndex) {
-          val minAllocUnclipped =
-            if (minBinIndex <= layout.underflowBinIndex) firstIdx
-            else math.min(minBinIndex, firstIdx)
-          val maxAllocUnclipped =
-            if (maxBinIndex >= layout.overflowBinIndex) lastIdx
-            else math.max(maxBinIndex, lastIdx)
-          b.allocate(
-            Algorithms.clip(
-              minAllocUnclipped,
-              layout.underflowBinIndex + 1,
-              layout.overflowBinIndex - 1),
-            Algorithms.clip(
-              maxAllocUnclipped,
-              layout.underflowBinIndex + 1,
-              layout.overflowBinIndex - 1))
-        }
 
         if (dense) {
           var binIndex = firstIdx
@@ -455,7 +457,7 @@ object HistogramSerde {
           totalCount += 1
         }
       }
-    }
+    } else if (lo <= hi) b.allocate(lo, hi)
 
     b.restoreExtremes(minBinIndex, maxBinIndex)
     b.under += effUnder

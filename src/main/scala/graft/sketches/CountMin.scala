@@ -2,31 +2,64 @@ package graft.sketches
 
 import java.nio.ByteBuffer
 
+import org.apache.spark.unsafe.Platform
+
 /**
  * Count-min frequency sketch (Cormode & Muthukrishnan 2005). depth x width
  * counter matrix; row i uses the seeded hash family i. Point estimate is the
  * row minimum: always >= the true count, and <= true + eps*N with probability
  * 1 - delta, for eps = e/width and delta = e^-depth. Merge is element-wise
  * addition — associative and commutative.
+ *
+ * Counters are stored sparse first (see [[SparseCells]]): the touched
+ * cells as (index, count) pairs sorted by index, until more than
+ * [[SparseCells.cap]] are touched; then the dense depth x width matrix. A
+ * new sketch holds the empty list and allocates nothing. Both forms give
+ * the same bytes and estimates.
  */
 final class CountMin private (
     val depth: Int,
     val width: Int,
-    private var cells: Array[Long], // depth * width, row-major; null until first write
+    private var cells: Array[Long], // dense depth * width, row-major; null while sparse
+    private var keys: Array[Int], // sparse: touched cell indices, ascending
+    private var vals: Array[Long], // sparse: their counts
+    private var n: Int, // sparse: entries in use
     private var totalVar: Long)
     extends Serializable {
 
   def total: Long = totalVar
 
-  /** True until the first counter is written: no counter matrix exists
-   * yet, so an unused aggregation buffer costs only this object. */
-  def isPristine: Boolean = cells == null && totalVar == 0L
+  private def numCells: Int = depth * width
 
-  /** The depth x width counters, row-major, allocated (all zero) on first
-   * access. */
-  def counters: Array[Long] = {
-    if (cells == null) cells = new Array[Long](depth * width)
-    cells
+  /** True until the first count is added: the sparse list is empty, so an
+   * unused aggregation buffer costs only this object. */
+  def isPristine: Boolean = cells == null && n == 0 && totalVar == 0L
+
+  /** A copy of the depth x width counters, row-major. */
+  def counters: Array[Long] =
+    if (cells != null) cells.clone()
+    else {
+      val out = new Array[Long](numCells)
+      var k = 0
+      while (k < n) {
+        out(keys(k)) = vals(k)
+        k += 1
+      }
+      out
+    }
+
+  /** True once the sketch has moved to its dense array. */
+  private[graft] def isDense: Boolean = cells != null
+
+  /** Moves to the dense counter matrix (a no-op once dense). */
+  private[graft] def densify(): this.type = {
+    if (cells == null) {
+      cells = counters
+      keys = SparseCells.NoKeys
+      vals = CountMin.NoVals
+      n = 0
+    }
+    this
   }
 
   def epsilon: Double = math.E / width
@@ -37,13 +70,46 @@ final class CountMin private (
     ((h % width + width) % width).toInt
   }
 
+  /** Counter `i`. */
+  private def cell(i: Int): Long =
+    if (cells != null) cells(i)
+    else {
+      val k = java.util.Arrays.binarySearch(keys, 0, n, i)
+      if (k >= 0) vals(k) else 0L
+    }
+
+  /** Adds `v` to counter `i`. */
+  private def addCell(i: Int, v: Long): Unit =
+    if (cells != null) cells(i) += v
+    else {
+      val k = java.util.Arrays.binarySearch(keys, 0, n, i)
+      if (k >= 0) vals(k) += v
+      else if (n == SparseCells.cap(numCells)) {
+        densify()
+        cells(i) += v
+      } else {
+        val at = -k - 1
+        if (n == keys.length) {
+          val len = SparseCells.grown(n, SparseCells.cap(numCells))
+          keys = java.util.Arrays.copyOf(keys, len)
+          vals = java.util.Arrays.copyOf(vals, len)
+        }
+        System.arraycopy(keys, at, keys, at + 1, n - at)
+        System.arraycopy(vals, at, vals, at + 1, n - at)
+        keys(at) = i
+        vals(at) = v
+        n += 1
+      }
+    }
+
   def addHash(hash: Long, count: Long = 1L): this.type = {
     require(count >= 0)
-    val c = counters
-    var row = 0
-    while (row < depth) {
-      c(row * width + bucket(hash, row)) += count
-      row += 1
+    if (count != 0L) {
+      var row = 0
+      while (row < depth) {
+        addCell(row * width + bucket(hash, row), count)
+        row += 1
+      }
     }
     totalVar += count
     this
@@ -53,11 +119,10 @@ final class CountMin private (
   def addString(v: String, count: Long = 1L): this.type = addHash(Hashing.hashString(v), count)
 
   def estimateHash(hash: Long): Long = {
-    if (cells == null) return 0L
     var est = Long.MaxValue
     var row = 0
     while (row < depth) {
-      val c = cells(row * width + bucket(hash, row))
+      val c = cell(row * width + bucket(hash, row))
       if (c < est) est = c
       row += 1
     }
@@ -67,30 +132,45 @@ final class CountMin private (
   def estimateLong(v: Long): Long = estimateHash(Hashing.hashLong(v))
   def estimateString(v: String): Long = estimateHash(Hashing.hashString(v))
 
+  /** Counter-wise sum of `other` into this sketch. A sparse `other` is
+   * added entry by entry; a dense one makes this sketch dense. */
   def merge(other: CountMin): this.type = {
     require(depth == other.depth && width == other.width, "dimension mismatch")
     val o = other.cells
     if (o != null) {
-      val c = counters
+      val c = densify().cells
       var i = 0
       while (i < c.length) {
         c(i) += o(i)
         i += 1
+      }
+    } else {
+      var k = 0
+      while (k < other.n) {
+        addCell(other.keys(k), other.vals(k))
+        k += 1
       }
     }
     totalVar += other.totalVar
     this
   }
 
+  /** Stored format: [int32 depth, int32 width, int64 total, int64 counter*],
+   * big-endian, counters row-major. */
   def toBytes: Array[Byte] = {
-    val n = depth * width
-    val buf = ByteBuffer.allocate(4 + 4 + 8 + n * 8)
+    val buf = ByteBuffer.allocate(16 + numCells * 8)
     buf.putInt(depth).putInt(width).putLong(totalVar)
     if (cells != null) {
       var i = 0
-      while (i < n) {
+      while (i < cells.length) {
         buf.putLong(cells(i))
         i += 1
+      }
+    } else {
+      var k = 0
+      while (k < n) {
+        buf.putLong(16 + keys(k) * 8, vals(k))
+        k += 1
       }
     }
     buf.array()
@@ -103,12 +183,14 @@ object CountMin {
    * a counter) still fits in one JVM array. */
   val MaxCells: Long = (Int.MaxValue - 8 - 16) / 8
 
+  private val NoVals = new Array[Long](0)
+
   def apply(depth: Int = 5, width: Int = 2048): CountMin = {
     require(depth > 0 && width > 0)
     val cells = depth.toLong * width
     require(cells <= MaxCells,
       s"count-min $depth x $width = $cells counters exceeds the $MaxCells an encoding can hold")
-    new CountMin(depth, width, null, 0L)
+    new CountMin(depth, width, null, SparseCells.NoKeys, NoVals, 0, 0L)
   }
 
   /** Sizes the sketch for the published (eps, delta) guarantee. */
@@ -124,25 +206,52 @@ object CountMin {
    * positive int32 depth, i.e. 0); dense fallback when not clearly
    * smaller. Only ever crosses the partial->final shuffle; the stored
    * wire format is unchanged.
+   *
+   * A sparse sketch writes its list as it stands; a dense one is scanned
+   * for its nonzero counters.
    */
   def toCompactBytes(c: CountMin): Array[Byte] = {
     val cells = c.cells
-    val n = c.depth * c.width
+    val n = c.numCells
+    var keys = c.keys
+    var vals = c.vals
+    var len = c.n
+    if (cells != null) {
+      len = 0
+      var i = 0
+      while (i < n) {
+        if (cells(i) != 0L) len += 1
+        i += 1
+      }
+      if (20L + len.toLong * 15L >= 16L + n * 8L) return c.toBytes
+      keys = new Array[Int](len)
+      vals = new Array[Long](len)
+      var k = 0
+      i = 0
+      while (k < len) {
+        if (cells(i) != 0L) {
+          keys(k) = i
+          vals(k) = cells(i)
+          k += 1
+        }
+        i += 1
+      }
+    }
+    // a sparse counter that wrapped to zero is not written, as in the dense scan
     var nNonzero = 0
     var pairBytes = 0
     var prev = -1
-    var i = 0
-    if (cells != null) while (i < n) {
-      if (cells(i) != 0L) {
+    var k = 0
+    while (k < len) {
+      if (vals(k) != 0L) {
         nNonzero += 1
-        pairBytes += Varint.size((i - prev).toLong) + Varint.size(cells(i))
-        prev = i
+        pairBytes += Varint.size((keys(k) - prev).toLong) + Varint.size(vals(k))
+        prev = keys(k)
       }
-      i += 1
+      k += 1
     }
-    val dense = 16L + n * 8L
     // conservative sparse bound: ~5 B gap + ~10 B value per pair + header
-    if (20L + nNonzero.toLong * 15L >= dense) return c.toBytes
+    if (20L + nNonzero.toLong * 15L >= 16L + n * 8L) return c.toBytes
     val out = new Array[Byte](1 + Varint.size(c.depth.toLong) + Varint.size(c.width.toLong) +
       Varint.size(c.total) + Varint.size(nNonzero.toLong) + pairBytes)
     out(0) = -1
@@ -151,41 +260,55 @@ object CountMin {
     pos = Varint.write(out, pos, c.total)
     pos = Varint.write(out, pos, nNonzero.toLong)
     prev = -1
-    i = 0
-    if (cells != null) while (i < n) {
-      if (cells(i) != 0L) {
-        pos = Varint.write(out, pos, (i - prev).toLong)
-        pos = Varint.write(out, pos, cells(i))
-        prev = i
+    k = 0
+    while (k < len) {
+      if (vals(k) != 0L) {
+        pos = Varint.write(out, pos, (keys(k) - prev).toLong)
+        pos = Varint.write(out, pos, vals(k))
+        prev = keys(k)
       }
-      i += 1
+      k += 1
     }
     out
   }
 
+  /** Decodes the stored or the compact form. A blob with at most
+   * [[SparseCells.cap]] nonzero counters decodes to a sparse sketch, a
+   * fuller one to a dense sketch. Compact counter indices must ascend. */
   def fromBytes(bytes: Array[Byte]): CountMin = {
     require(bytes.length >= 16 || (bytes.length > 0 && bytes(0) == -1.toByte),
       "corrupt count-min payload (header)")
     if (bytes(0) == -1.toByte) { // compact sparse-pair form
       val r = new Varint.Reader(bytes, 1, "count-min")
-      val depth = r.read().toInt
-      val width = r.read().toInt
-      require(depth > 0 && width > 0 && depth.toLong * width <= MaxCells,
-        "corrupt count-min payload (sparse dims)")
+      val depth = r.read()
+      val width = r.read()
+      require(depth > 0 && width > 0 && depth <= MaxCells && width <= MaxCells &&
+        depth * width <= MaxCells, "corrupt count-min payload (sparse dims)")
       val total = r.read()
-      val n = depth * width
-      val nNonzero = r.read().toInt
+      val n = (depth * width).toInt
+      val nNonzero = r.read()
       require(nNonzero >= 0 && nNonzero <= n, "corrupt count-min payload (sparse count)")
-      val counters = if (nNonzero == 0) null else new Array[Long](n)
-      var idx = -1
+      val dense = nNonzero > SparseCells.cap(n)
+      val cells = if (dense) new Array[Long](n) else null
+      val keys = if (dense || nNonzero == 0) SparseCells.NoKeys else new Array[Int](nNonzero.toInt)
+      val vals = if (dense || nNonzero == 0) NoVals else new Array[Long](nNonzero.toInt)
+      var idx = -1L
       var k = 0
       while (k < nNonzero) {
-        idx += r.read().toInt
-        require(idx >= 0 && idx < n, "corrupt count-min payload (sparse index)")
-        counters(idx) = r.read()
+        val gap = r.read()
+        require(gap >= 1 && gap < n - idx, "corrupt count-min payload (sparse index)")
+        idx += gap
+        val v = r.read()
+        if (dense) cells(idx.toInt) = v
+        else {
+          keys(k) = idx.toInt
+          vals(k) = v
+        }
         k += 1
       }
-      return new CountMin(depth, width, counters, total)
+      return if (dense) new CountMin(depth.toInt, width.toInt, cells, SparseCells.NoKeys, NoVals,
+        0, total)
+      else new CountMin(depth.toInt, width.toInt, null, keys, vals, nNonzero.toInt, total)
     }
     val buf = ByteBuffer.wrap(bytes)
     val depth = buf.getInt
@@ -195,13 +318,32 @@ object CountMin {
     val total = buf.getLong
     val n = depth * width
     require(n.toLong * 8 <= buf.remaining, "corrupt count-min payload (length)")
-    val counters = new Array[Long](n)
+    // count the nonzero counters, stopping once past the cap
+    val cap = SparseCells.cap(n)
+    var nNonzero = 0
     var i = 0
-    while (i < n) {
-      counters(i) = buf.getLong
+    while (i < n && nNonzero <= cap) {
+      if (Platform.getLong(bytes, Platform.BYTE_ARRAY_OFFSET + 16L + i * 8L) != 0L) nNonzero += 1
       i += 1
     }
-    new CountMin(depth, width, counters, total)
+    if (nNonzero > cap) {
+      val counters = new Array[Long](n)
+      buf.asLongBuffer().get(counters)
+      return new CountMin(depth, width, counters, SparseCells.NoKeys, NoVals, 0, total)
+    }
+    val keys = if (nNonzero == 0) SparseCells.NoKeys else new Array[Int](nNonzero)
+    val vals = if (nNonzero == 0) NoVals else new Array[Long](nNonzero)
+    var k = 0
+    i = 0
+    while (k < nNonzero) {
+      if (Platform.getLong(bytes, Platform.BYTE_ARRAY_OFFSET + 16L + i * 8L) != 0L) {
+        keys(k) = i
+        vals(k) = buf.getLong(16 + i * 8)
+        k += 1
+      }
+      i += 1
+    }
+    new CountMin(depth, width, null, keys, vals, nNonzero, total)
   }
 }
 

@@ -1,5 +1,7 @@
 package graft.sketches
 
+import org.apache.spark.unsafe.Platform
+
 /**
  * xxHash64 (Yann Collet's public-domain XXH64 algorithm) — the 64-bit hash
  * kernel shared by the distinct-count / frequency / membership sketches.
@@ -33,19 +35,29 @@ object Hashing {
   /** Hash of the `len` bytes of `data` starting at `from`, read in place:
    * equal to `hashBytes` of a copy of that range. */
   def hashBytes(data: Array[Byte], from: Int, len: Int, seed: Long): Long = {
-    val end = from + len
+    require(from >= 0 && len >= 0 && from.toLong + len <= data.length, "byte range out of bounds")
+    hashBytes(data, Platform.BYTE_ARRAY_OFFSET + from.toLong, len, seed)
+  }
+
+  /** Hash of the `len` bytes at `offset` of `base`, read in place with
+   * word loads: `base` is an array (and `offset` includes its base offset,
+   * as in a `UTF8String` or an `UnsafeRow`), or null for an off-heap
+   * address. Equal to `hashBytes` of a copy of those bytes. The caller
+   * guarantees the range is readable. */
+  def hashBytes(base: AnyRef, offset: Long, len: Int, seed: Long): Long = {
+    val end = offset + len
     var h = 0L
-    var i = from
+    var i = offset
     if (len >= 32) {
       var v1 = seed + Prime1 + Prime2
       var v2 = seed + Prime2
       var v3 = seed
       var v4 = seed - Prime1
       while (i + 32 <= end) {
-        v1 = round(v1, readLong(data, i))
-        v2 = round(v2, readLong(data, i + 8))
-        v3 = round(v3, readLong(data, i + 16))
-        v4 = round(v4, readLong(data, i + 24))
+        v1 = round(v1, readLong(base, i))
+        v2 = round(v2, readLong(base, i + 8))
+        v3 = round(v3, readLong(base, i + 16))
+        v4 = round(v4, readLong(base, i + 24))
         i += 32
       }
       h = java.lang.Long.rotateLeft(v1, 1) + java.lang.Long.rotateLeft(v2, 7) +
@@ -59,17 +71,17 @@ object Hashing {
     }
     h += len.toLong
     while (i + 8 <= end) {
-      h ^= round(0L, readLong(data, i))
+      h ^= round(0L, readLong(base, i))
       h = java.lang.Long.rotateLeft(h, 27) * Prime1 + Prime4
       i += 8
     }
     if (i + 4 <= end) {
-      h ^= (readInt(data, i) & 0xffffffffL) * Prime1
+      h ^= (readInt(base, i) & 0xffffffffL) * Prime1
       h = java.lang.Long.rotateLeft(h, 23) * Prime2 + Prime3
       i += 4
     }
     while (i < end) {
-      h ^= (data(i) & 0xffL) * Prime5
+      h ^= (Platform.getByte(base, i) & 0xffL) * Prime5
       h = java.lang.Long.rotateLeft(h, 11) * Prime1
       i += 1
     }
@@ -92,13 +104,16 @@ object Hashing {
     h
   }
 
-  private def readLong(d: Array[Byte], i: Int): Long =
-    (d(i) & 0xffL) | ((d(i + 1) & 0xffL) << 8) | ((d(i + 2) & 0xffL) << 16) |
-      ((d(i + 3) & 0xffL) << 24) | ((d(i + 4) & 0xffL) << 32) |
-      ((d(i + 5) & 0xffL) << 40) | ((d(i + 6) & 0xffL) << 48) |
-      ((d(i + 7) & 0xffL) << 56)
+  private val BigEndian = java.nio.ByteOrder.nativeOrder() == java.nio.ByteOrder.BIG_ENDIAN
 
-  private def readInt(d: Array[Byte], i: Int): Int =
-    (d(i) & 0xff) | ((d(i + 1) & 0xff) << 8) | ((d(i + 2) & 0xff) << 16) |
-      ((d(i + 3) & 0xff) << 24)
+  // XXH64 reads its input as little-endian words
+  private def readLong(base: AnyRef, at: Long): Long = {
+    val v = Platform.getLong(base, at)
+    if (BigEndian) java.lang.Long.reverseBytes(v) else v
+  }
+
+  private def readInt(base: AnyRef, at: Long): Int = {
+    val v = Platform.getInt(base, at)
+    if (BigEndian) Integer.reverseBytes(v) else v
+  }
 }

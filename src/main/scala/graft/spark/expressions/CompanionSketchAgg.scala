@@ -26,11 +26,15 @@ import graft.sketches._
  * compact wire format, and the per-row update path is unboxed for
  * primitive inputs (getDouble/getLong on the bound ordinal).
  *
- * An empty buffer allocates nothing: HLL registers, count-min counters and
- * Bloom words are created on the first write, and a t-digest's insertion
- * buffer on the first `add`. Spark creates one buffer per group in the
- * final phase only to merge the group's partials into it, so HLL, CMS and
- * Bloom `merge` adopt the first partial when the buffer is still pristine
+ * An empty buffer allocates nothing. HLL and count-min keep the cells a
+ * group touched in a small sparse list and build their dense register or
+ * counter array only past [[graft.sketches.SparseCells.cap]] entries, so a
+ * small group's buffer never holds one: not in `update`, not decoded from
+ * a compact partial, not merged in the final phase. Bloom words are
+ * created on the first write, and a t-digest's insertion buffer on the
+ * first `add`. Spark creates one buffer per group in the final phase only
+ * to merge the group's partials into it, so HLL, CMS and Bloom `merge`
+ * adopt the first partial when the buffer is still pristine
  * (`other` is freshly deserialized and owned by this aggregate — the rule
  * `SketchMergeAgg.merge` applies). T-digest and KLL keep merging into the
  * fresh buffer: KLL's merge mixes its coin state, and a t-digest's flush
@@ -60,16 +64,13 @@ private[spark] object ItemSketchAgg {
    * String path so they hash the same U+FFFD-replaced encoding
    * `toString` would have produced. `isValid` caches per UTF8String.
    *
-   * An on-heap string (the `UnsafeRow` case) is hashed in place from its
-   * backing array, with no `getBytes` copy; an off-heap one is copied.
-   * ASCII strings (see [[isAscii]]) skip the byte-by-byte `isValid` scan. */
+   * Every string is hashed in place with word loads, from whatever base
+   * holds it: a `byte[]`, the `long[]` pages an `UnsafeRow` lives in after
+   * the sort-based aggregation fallback, or off-heap memory. ASCII strings
+   * (see [[isAscii]]) skip the byte-by-byte `isValid` scan. */
   def utf8Hash(s: UTF8String): Long =
     if (!isAscii(s) && !s.isValid) Hashing.hashString(s.toString)
-    else s.getBaseObject match {
-      case a: Array[Byte] =>
-        Hashing.hashBytes(a, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes, 0L)
-      case _ => Hashing.hashBytes(s.getBytes)
-    }
+    else Hashing.hashBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 0L)
 
   /** True when no byte of `s` has its high bit set, so it is valid UTF-8.
    * Reads eight bytes at a time. */

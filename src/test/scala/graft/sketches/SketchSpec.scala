@@ -1,5 +1,6 @@
 package graft.sketches
 
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 class SketchSpec extends AnyFunSuite {
@@ -321,5 +322,162 @@ class SketchSpec extends AnyFunSuite {
     val long = Array[Byte](-10) ++ Array.fill[Byte](11)(0x81.toByte) ++ Array[Byte](1)
     val e = intercept[IllegalArgumentException](Hll.fromBytes(long))
     assert(e.getMessage.contains("corrupt HLL payload (varint too long)"))
+  }
+
+  /** Runs a ScalaCheck property from a fixed seed and fails with its report. */
+  private def check(name: String)(prop: Prop): Unit = {
+    val params = Test.Parameters.default.withMinSuccessfulTests(150)
+      .withInitialSeed(org.scalacheck.rng.Seed(31L))
+    val res = Test.check(params, prop)
+    assert(res.passed, s"$name: ${res.status}")
+  }
+
+  private def same(a: Array[Byte], b: Array[Byte]): Boolean = java.util.Arrays.equals(a, b)
+
+  /** Up to `cap` or up to three times `cap` items: both sides of the cap. */
+  private def genSize(cap: Int): Gen[Int] =
+    Gen.oneOf(Gen.chooseNum(0, cap), Gen.chooseNum(0, 3 * cap))
+
+  private def genItems(cap: Int): Gen[List[Long]] =
+    genSize(cap).flatMap(n => Gen.listOfN(n, Gen.long))
+
+  private def hll(p: Int, items: Seq[Long], dense: Boolean): Hll = {
+    val h = Hll(p)
+    if (dense) h.densify()
+    items.foreach(h.addLong)
+    h
+  }
+
+  private def sameHll(a: Hll, b: Hll): Boolean =
+    same(a.toBytes, b.toBytes) && same(Hll.toCompactBytes(a), Hll.toCompactBytes(b)) &&
+      java.lang.Double.compare(a.estimate, b.estimate) == 0 && same(a.registers, b.registers)
+
+  test("sparse-first HLL equals a forced-dense HLL: adds, merges and decodes") {
+    for (p <- Seq(4, 10, 14)) {
+      val cap = SparseCells.cap(1 << p)
+      // the sparse list holds at most `cap` registers, then the sketch is dense
+      val seen = scala.collection.mutable.Set.empty[String]
+      check(s"hll p$p")(Prop.forAll(genItems(cap), genItems(cap)) { (a, b) =>
+        val sa = hll(p, a, dense = false)
+        val sb = hll(p, b, dense = false)
+        val da = hll(p, a, dense = true)
+        val db = hll(p, b, dense = true)
+        val setA = sa.registers.count(_ != 0)
+        val union = hll(p, a ++ b, dense = true)
+        val setUnion = union.registers.count(_ != 0)
+        seen += (if (setA <= cap) "sparse" else "dense")
+        if (setA <= cap / 2 && sb.registers.count(_ != 0) <= cap / 2) seen += "merge under cap"
+        if (setA <= cap && sb.registers.count(_ != 0) <= cap && setUnion > cap)
+          seen += "merge crossing cap"
+        // the form follows the count of set registers
+        sa.isDense == (setA > cap) &&
+        sameHll(sa, da) &&
+        // sparse+sparse, sparse+dense, dense+sparse, each against dense+dense
+        sameHll(hll(p, a, dense = false).merge(sb), union) &&
+        (hll(p, a, dense = false).merge(sb).isDense == (setUnion > cap)) &&
+        sameHll(hll(p, a, dense = false).merge(db), union) &&
+        sameHll(hll(p, a, dense = true).merge(sb), union) &&
+        sameHll(hll(p, a, dense = true).merge(db), union) &&
+        // compact blobs decode to the form their count of entries calls
+        // for; the stored form (also the compact encoder's dense fallback)
+        // decodes dense
+        {
+          val blob = Hll.toCompactBytes(sa)
+          val back = Hll.fromBytes(blob)
+          val stored = Hll.fromBytes(sa.toBytes)
+          sameHll(back, da) && back.isDense == (blob(0) > 0 || setA > cap) &&
+            sameHll(stored, da) && stored.isDense
+        }
+      })
+      assert(seen("sparse") && seen("dense") && seen("merge under cap"), s"p$p: $seen")
+      if (p > 4) assert(seen("merge crossing cap"), s"p$p: $seen")
+    }
+    // compact blobs holding more entries than the cap still decode (dense)
+    val over = hll(10, (0L until 150L).map(_ * 7919L), dense = false)
+    val blob = Hll.toCompactBytes(over)
+    assert(blob(0) < 0 && over.isDense)
+    val back = Hll.fromBytes(blob)
+    assert(back.isDense && sameHll(back, over))
+  }
+
+  /** (item, weight) streams; a third of the weights are 0, as
+   * `cms_sketch_weighted` may add. */
+  private def genWeighted(cap: Int, depth: Int): Gen[List[(Long, Long)]] =
+    genSize(cap / depth).flatMap(n => Gen.listOfN(n, Gen.zip(Gen.chooseNum(0L, 4L * cap),
+      Gen.frequency(1 -> Gen.const(0L), 1 -> Gen.const(1L), 1 -> Gen.chooseNum(2L, 1L << 40)))))
+
+  private def cms(d: Int, w: Int, items: Seq[(Long, Long)], dense: Boolean): CountMin = {
+    val c = CountMin(d, w)
+    if (dense) c.densify()
+    items.foreach { case (v, n) => c.addLong(v, n) }
+    c
+  }
+
+  private def sameCms(a: CountMin, b: CountMin, probes: Seq[Long]): Boolean =
+    same(a.toBytes, b.toBytes) &&
+      same(CountMin.toCompactBytes(a), CountMin.toCompactBytes(b)) &&
+      a.total == b.total && java.util.Arrays.equals(a.counters, b.counters) &&
+      probes.forall(v => a.estimateLong(v) == b.estimateLong(v))
+
+  test("sparse-first count-min equals a forced-dense count-min, weight 0 included") {
+    for ((d, w) <- Seq((4, 256), (2, 64), (5, 2048))) {
+      val cap = SparseCells.cap(d * w)
+      val seen = scala.collection.mutable.Set.empty[String]
+      check(s"cms ${d}x$w")(Prop.forAll(genWeighted(cap, d), genWeighted(cap, d)) { (a, b) =>
+        val probes = (a ++ b).map(_._1) ++ Seq(-1L, 1L << 50)
+        val sa = cms(d, w, a, dense = false)
+        val sb = cms(d, w, b, dense = false)
+        val da = cms(d, w, a, dense = true)
+        val db = cms(d, w, b, dense = true)
+        val union = cms(d, w, a ++ b, dense = true)
+        val nzA = da.counters.count(_ != 0L)
+        val nzB = db.counters.count(_ != 0L)
+        val nzUnion = union.counters.count(_ != 0L)
+        seen += (if (nzA <= cap) "sparse" else "dense")
+        if (nzA <= cap / 2 && nzB <= cap / 2) seen += "merge under cap"
+        if (nzA <= cap && nzB <= cap && nzUnion > cap) seen += "merge crossing cap"
+        sa.isDense == (nzA > cap) &&
+        sameCms(sa, da, probes) &&
+        sameCms(cms(d, w, a, dense = false).merge(sb), union, probes) &&
+        (cms(d, w, a, dense = false).merge(sb).isDense == (nzUnion > cap)) &&
+        sameCms(cms(d, w, a, dense = false).merge(db), union, probes) &&
+        sameCms(cms(d, w, a, dense = true).merge(sb), union, probes) &&
+        sameCms(cms(d, w, a, dense = true).merge(db), union, probes) &&
+        {
+          val back = CountMin.fromBytes(CountMin.toCompactBytes(sa))
+          val stored = CountMin.fromBytes(sa.toBytes)
+          sameCms(back, da, probes) && back.isDense == (nzA > cap) &&
+            sameCms(stored, da, probes) && stored.isDense == (nzA > cap)
+        }
+      })
+      assert(seen("sparse") && seen("dense") && seen("merge under cap") &&
+        seen("merge crossing cap"), s"${d}x$w: $seen")
+    }
+    // weight 0 adds nothing, in either form, and leaves a new sketch pristine
+    val zero = CountMin(4, 256).addLong(5L, 0L)
+    assert(zero.isPristine && zero.estimateLong(5L) == 0L)
+    assert(same(zero.toBytes, CountMin(4, 256).densify().addLong(5L, 0L).toBytes))
+    // a compact blob holding more entries than the cap still decodes (dense)
+    val over = cms(4, 256, (0L until 40L).map(v => (v, 3L)), dense = false)
+    val blob = CountMin.toCompactBytes(over)
+    assert(blob(0) == -1.toByte && over.isDense)
+    val back = CountMin.fromBytes(blob)
+    assert(back.isDense && sameCms(back, over, 0L until 40L))
+  }
+
+  test("sparse decoders reject unordered indices and out-of-range ranks") {
+    // HLL p10, two entries: gap 0 repeats an index
+    val dup = Array[Byte](-10, 2, 5, 1, 0, 2)
+    assert(intercept[IllegalArgumentException](Hll.fromBytes(dup)).getMessage
+      .contains("corrupt HLL payload (sparse index)"))
+    for (rank <- Seq(0, 56, -3)) {
+      val bad = Array[Byte](-10, 1, 5, rank.toByte)
+      assert(intercept[IllegalArgumentException](Hll.fromBytes(bad)).getMessage
+        .contains("corrupt HLL payload (sparse rank)"), s"rank $rank")
+    }
+    // count-min 1 x 16, two entries: gap 0 repeats an index
+    val cmsDup = Array[Byte](-1, 1, 16, 2, 2, 3, 1, 0, 1)
+    assert(intercept[IllegalArgumentException](CountMin.fromBytes(cmsDup)).getMessage
+      .contains("corrupt count-min payload (sparse index)"))
   }
 }

@@ -4,7 +4,8 @@ import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -64,16 +65,16 @@ class EmptyBufferSpec extends AnyFunSuite {
       checkAdoption[Hll](s"hll $ns", hllAgg,
         ns.zipWithIndex.map { case (n, i) =>
           val h = Hll(10); seededLongs(i, n).foreach(h.addLong); h },
-        () => { val h = Hll(10); h.registers; h }, (a, b) => a.merge(b))
+        () => Hll(10).densify(), (a, b) => a.merge(b))
 
       val cmsAgg = CountMinSketchAgg(Literal("x"), 4, 256)
       val cmsParts = ns.zipWithIndex.map { case (n, i) =>
         val c = CountMin(4, 256); seededLongs(i, n).foreach(v => c.addLong(v)); c }
       checkAdoption[CountMin](s"cms $ns", cmsAgg, cmsParts,
-        () => { val c = CountMin(4, 256); c.counters; c }, (a, b) => a.merge(b))
+        () => CountMin(4, 256).densify(), (a, b) => a.merge(b))
       val cmsWeighted = CountMinWeightedSketchAgg(Literal("x"), Literal(1L), 4, 256)
       checkAdoption[CountMin](s"cms_weighted $ns", cmsWeighted, cmsParts,
-        () => { val c = CountMin(4, 256); c.counters; c }, (a, b) => a.merge(b))
+        () => CountMin(4, 256).densify(), (a, b) => a.merge(b))
 
       val bloomAgg = BloomSketchAgg(Literal(1L), 1000L, 0.01)
       checkAdoption[BloomFilter](s"bloom $ns", bloomAgg,
@@ -191,6 +192,59 @@ class EmptyBufferSpec extends AnyFunSuite {
       assert(ItemSketchAgg.utf8Hash(u) == Hashing.hashString(u.toString))
       assert(ItemSketchAgg.utf8Hash(u) != Hashing.hashBytes(bad))
     }
+  }
+
+  test("strings hash in place from byte[], long[] and off-heap bases") {
+    import org.apache.spark.unsafe.Platform
+    val rnd = new java.util.SplittableRandom(23L)
+    // ASCII texts take the in-place path; with 0xC3/0xA9 bytes some are
+    // valid two-byte UTF-8 (in place) and some malformed (String fallback)
+    val alphabet = Array[Byte]('a', 'q', 'Z', ' ', 0xC3.toByte, 0xA9.toByte)
+    for (len <- 0 to 96; off <- Seq(0, 1, 3, 5, 8, 13); ascii <- Seq(true, false)) {
+      val text = Array.fill(len)(alphabet(rnd.nextInt(if (ascii) 4 else 6)))
+      val expected = Hashing.hashString(UTF8String.fromBytes(text).toString)
+      val bytes = new Array[Byte](off + len + 7)
+      System.arraycopy(text, 0, bytes, off, len)
+      val onBytes = UTF8String.fromBytes(bytes, off, len)
+      val longs = new Array[Long]((off + len + 7) / 8 + 1)
+      Platform.copyMemory(text, Platform.BYTE_ARRAY_OFFSET, longs,
+        Platform.LONG_ARRAY_OFFSET + off, len)
+      val onLongs = UTF8String.fromAddress(longs, Platform.LONG_ARRAY_OFFSET + off, len)
+      val addr = Platform.allocateMemory(off + len + 8L)
+      try {
+        Platform.copyMemory(text, Platform.BYTE_ARRAY_OFFSET, null, addr + off, len)
+        val offHeap = UTF8String.fromAddress(null, addr + off, len)
+        for ((name, s) <- Seq("byte[]" -> onBytes, "long[]" -> onLongs, "off-heap" -> offHeap))
+          assert(ItemSketchAgg.utf8Hash(s) == expected, s"$name len=$len off=$off")
+      } finally Platform.freeMemory(addr)
+      // the word reader itself, on raw bytes and seeds
+      assert(Hashing.hashBytes(longs, Platform.LONG_ARRAY_OFFSET + off, len, 7L) ==
+        Hashing.hashBytes(text, 7L), s"len=$len off=$off")
+    }
+  }
+
+  test("a small group stays sparse from update through the final phase") {
+    val rows = (0 until 20).map(i => InternalRow(UTF8String.fromString(s"turn $i")))
+    val text = BoundReference(0, StringType, nullable = true)
+    def run[S <: AnyRef](agg: TypedImperativeAggregate[S], dense: S => Boolean): Array[Byte] = {
+      // two partials of ten rows, adopted and merged in the final phase
+      val parts = rows.grouped(10).map { rs =>
+        val b = rs.foldLeft(agg.createAggregationBuffer())(agg.update)
+        assert(!dense(b), s"${agg.prettyName} partial went dense")
+        agg.deserialize(agg.serialize(b))
+      }.toSeq
+      val fin = parts.foldLeft(agg.createAggregationBuffer())(agg.merge)
+      assert(!dense(fin), s"${agg.prettyName} final buffer went dense")
+      agg.eval(fin).asInstanceOf[Array[Byte]]
+    }
+    val hllBytes = run[Hll](HllSketchAgg(text, 10), _.isDense)
+    val hDense = Hll(10).densify()
+    rows.foreach(r => hDense.addString(r.getUTF8String(0).toString))
+    assert(hllBytes.sameElements(hDense.toBytes))
+    val cmsBytes = run[CountMin](CountMinSketchAgg(text, 4, 256), _.isDense)
+    val cDense = CountMin(4, 256).densify()
+    rows.foreach(r => cDense.addString(r.getUTF8String(0).toString))
+    assert(cmsBytes.sameElements(cDense.toBytes))
   }
 
   test("the word-at-a-time ASCII check leaves every string hash unchanged") {
