@@ -11,11 +11,12 @@ import org.apache.spark.sql.functions._
  * Probes (each run once to warm up, then timed three times: the JSON
  * has the fastest time and the shuffle bytes of one run), at G = 1, 10k
  * and 100k groups:
- *  - hll_sketch_G, cms_sketch_G: the native aggregates over 2M distinct
- *    longs grouped by `id mod G`, with conv_sketches' parameters
- *    (precision 10; 4 x 256). At 100k groups a group sees 20 rows, as a
- *    conversation does, and its buffers stay sparse; at 1 and 10k groups
- *    they go dense. The partial buffers are the shuffle payload.
+ *  - hll_sketch_G, cms_sketch_G, hist_sketch_G: the native aggregates over
+ *    2M distinct longs grouped by `id mod G`, with conv_sketches'
+ *    parameters (precision 10; 4 x 256; `LogQuadraticLayout(1e-2, 1e-2, 0,
+ *    1e9)` over the id as a double). At 100k groups a group sees 20 rows,
+ *    as a conversation does, and its buffers stay sparse; at 1 and 10k
+ *    groups they go dense. The partial buffers are the shuffle payload.
  *  - hll_merge_G, cms_merge_G: `hll_merge`/`cms_merge` of 200k stored
  *    blobs (10 rows each, staged once in parquet) into G groups: 200k, 20
  *    or 2 blobs a group.
@@ -73,7 +74,8 @@ object BenchExtra {
     }
 
     import graft.spark.functions.{cms_merge, hll_merge}
-    import graft.spark.expressions.{CountMinSketchAgg, HllSketchAgg}
+    import graft.spark.expressions.{CountMinSketchAgg, HistogramSketchAgg, HllSketchAgg}
+    val histLayout = graft.core.LogQuadraticLayout(1e-2, 1e-2, 0, 1e9)
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     val parts = cpus.toInt * 2
@@ -93,6 +95,8 @@ object BenchExtra {
         measure(s"hll_sketch_$g", n, g)(noop(ids.groupBy(key).agg(HllSketchAgg(col("id"), 10)))),
         measure(s"cms_sketch_$g", n, g)(
           noop(ids.groupBy(key).agg(CountMinSketchAgg(col("id"), 4, 256)))),
+        measure(s"hist_sketch_$g", n, g)(
+          noop(ids.groupBy(key).agg(HistogramSketchAgg(col("id"), histLayout, packed = false)))),
         measure(s"hll_merge_$g", blobs, g)(
           noop(blobTable.groupBy(pmod(col("k"), lit(g))).agg(hll_merge(col("hll"))))),
         measure(s"cms_merge_$g", blobs, g)(

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /**
  * Scaling-efficiency evidence (north rule: >= 0.8 between N and 4N
  * executors). No real cluster exists in this sandbox, so the same job runs
- * at two parallelism levels — local[8] and local[32] — and we report
- * throughput at both plus efficiency = throughput(4N) / (4 * throughput(N)).
+ * at two parallelism levels — local[N] and local[4N], with 4N the host's
+ * core count and N = max(1, 4N / 4) — and we report throughput at both plus
+ * efficiency = throughput(4N) / ((4N / N) * throughput(N)).
  *
  * Two measurements, each in its own child JVM (sequential SparkSessions in
  * one JVM contaminate each other through GC/JIT state):
@@ -156,15 +157,18 @@ object Scaling {
       measureChild(args(0), args(1).toInt, args(2))
       return
     }
-    val (lowCpus, highCpus) = (8, 32)
+    // N vs 4N on this host's cores: more threads than cores would measure
+    // time slicing, not scaling
+    val highCpus = Runtime.getRuntime.availableProcessors
+    val lowCpus = math.max(1, highCpus / 4)
     val engineRows = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROWS", "1000000000")
     // sized so the cached input fits at BOTH parallelism levels under
-    // MEMORY_AND_DISK while giving the 32-core level enough work that
+    // MEMORY_AND_DISK while giving the higher level enough work that
     // per-action overhead does not dominate
     val numConvs = sys.env.getOrElse("SPARK_GRAFT_SCALE_CONVS", "600000").toLong
 
     // primary: sketch-update engine. Each level is measured in TWO separate
-    // child JVMs in interleaved order (8,32,32,8) and the min is taken —
+    // child JVMs in interleaved order (N,4N,4N,N) and the min is taken —
     // co-tenant load on this host drifts over minutes, and a single unlucky
     // leg otherwise swings the efficiency ratio by +-0.2.
     val (nLow1, engLow1) = spawnChild("engine", lowCpus, engineRows)
@@ -181,7 +185,7 @@ object Scaling {
     val tmp = java.nio.file.Files.createTempDirectory("graft_scaling").toString
     val inputDir = s"$tmp/transcripts"
     locally {
-      val spark = session(32)
+      val spark = session(highCpus)
       try {
         graft.spark.Transcripts
           .synthesize(spark, numConvs, maxTextLen = 1000)

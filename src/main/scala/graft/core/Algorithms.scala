@@ -111,12 +111,4 @@ object Algorithms {
     }
     high
   }
-
-  /** Clips value into [min, max]. */
-  def clip(value: Int, min: Int, max: Int): Int = {
-    if (value >= min && value <= max) value
-    else if (min > max) throw new IllegalArgumentException(s"min $min > max $max")
-    else if (value >= min) max
-    else min
-  }
 }

@@ -3,31 +3,43 @@ package graft.core
 /**
  * Mutable error-bounded histogram sketch over IEEE-754 doubles.
  *
- * State: a dense window of 64-bit counters over the regular bin-index range
- * actually touched, plus exact underflow/overflow/total counts and exact
- * min/max (signed zero respected). Recording is O(1); merge of equal-layout
- * histograms is bin-wise counter addition and therefore associative and
- * commutative — the property that makes this a valid distributed aggregation
- * buffer (partial aggregation + shuffle merge in any order yields identical
- * state).
+ * State: the regular bins' 64-bit counters, plus exact underflow/overflow/
+ * total counts and exact min/max (signed zero respected). The counters are
+ * stored sparse first, as in DynaHist's dynamic histogram, which spends
+ * memory only on the bins it has seen: the touched bins as (bin index,
+ * count) pairs sorted by index, until more than [[SparseCells.cap]] (at
+ * most 128) are touched; then one dense counter window over the touched
+ * span, grown geometrically by >= 25% as values land outside it. A new
+ * histogram allocates nothing, and a 20-value group never builds a window.
+ * Both forms answer every read and write the same bytes. Recording is
+ * O(log 128) sparse and O(1) dense; merge of equal-layout histograms is
+ * bin-wise counter addition and therefore associative and commutative —
+ * the property that makes this a valid distributed aggregation buffer
+ * (partial aggregation + shuffle merge in any order yields identical state).
  *
  * Behavior matches the reference semantics
  * (dynahist `AbstractMutableHistogram.java:30-255`, `DynamicHistogram.java:28-310`):
  * NaN rejected, +-inf allowed (land in under/overflow bins), counter overflow
- * raises ArithmeticException, -0.0 ordered below 0.0 for min/max, window grown
- * geometrically by >= 25%.
+ * raises ArithmeticException, -0.0 ordered below 0.0 for min/max.
  */
 final class Histogram private (val layout: Layout, packedCounters: Boolean)
     extends Serializable {
 
-  // Regular-bin counter storage: a dense window of `windowLen` counters
-  // starting at bin index `windowStart`. With `packedCounters` the counters
-  // are bit-packed at 2^mode bits each and the width class upgrades on
-  // demand, mode 0..6 (reference semantics dynahist `DynamicHistogram.java:
-  // 30-75, 152-221`) — up to 64x smaller resident buffers at low per-bin
-  // counts. Without it the mode is pinned to 6 (plain 64-bit counters, the
-  // reference's StaticHistogram-style buffer — fastest recording).
-  private var counts: Array[Long] = Histogram.EmptyCounts
+  // Sparse phase (`!dense`): the touched regular bins as `n` (bin index,
+  // count) pairs in `keys`/`vals`, ascending by index; every count is > 0.
+  private var keys: Array[Int] = SparseCells.NoKeys
+  private var vals: Array[Long] = SparseCells.NoCounts
+  private var n: Int = 0
+  private var dense: Boolean = false
+
+  // Dense phase: a window of `windowLen` counters starting at bin index
+  // `windowStart`. With `packedCounters` the counters are bit-packed at
+  // 2^mode bits each and the width class upgrades on demand, mode 0..6
+  // (reference semantics dynahist `DynamicHistogram.java: 30-75, 152-221`) —
+  // up to 64x smaller resident buffers at low per-bin counts. Without it the
+  // mode is pinned to 6 (plain 64-bit counters, the reference's
+  // StaticHistogram-style buffer — fastest recording).
+  private var counts: Array[Long] = SparseCells.NoCounts
   private var windowStart: Int = 0 // bin index of counter 0; meaningful iff windowLen > 0
   private var windowLen: Int = 0
   private var mode: Int = if (packedCounters) 0 else 6
@@ -77,6 +89,162 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
     else incrementRegular(idx, count)
     this
   }
+
+  // ---------------------------------------------------------------------
+  // sparse list
+  // ---------------------------------------------------------------------
+
+  /** Distinct bins the list holds before the histogram goes dense. */
+  private def sparseCap: Int =
+    SparseCells.cap(math.min(layout.regularBinCount, Int.MaxValue.toLong).toInt)
+
+  /** Adds `count` (> 0) to regular bin `idx`. The sparse path is a
+   * method of its own, so this one stays small enough to inline into
+   * `addValue`. */
+  private[core] def incrementRegular(idx: Int, count: Long): Unit =
+    if (dense) {
+      if (idx < windowStart || idx >= windowStart + windowLen) growWindow(idx)
+      addToCounterAt(idx - windowStart, count)
+    } else incrementSparse(idx, count)
+
+  private def incrementSparse(idx: Int, count: Long): Unit = {
+    val k = java.util.Arrays.binarySearch(keys, 0, n, idx)
+    if (k >= 0) {
+      val updated = vals(k) + count
+      if (updated < 0) throw new ArithmeticException("counter overflow")
+      vals(k) = updated
+    } else if (n == keys.length && n >= sparseCap) {
+      densify(idx, idx)
+      addToCounterAt(idx - windowStart, count)
+    } else {
+      val at = -k - 1
+      if (n == keys.length) {
+        val len = SparseCells.grown(n, sparseCap)
+        keys = java.util.Arrays.copyOf(keys, len)
+        vals = java.util.Arrays.copyOf(vals, len)
+      }
+      System.arraycopy(keys, at, keys, at + 1, n - at)
+      System.arraycopy(vals, at, vals, at + 1, n - at)
+      keys(at) = idx
+      vals(at) = count
+      n += 1
+    }
+  }
+
+  /** Sparse + sparse: a merge-walk that stays sparse up to the cap, in place
+   * when the union fits the arrays. */
+  private def mergeSparse(o: Histogram): Unit = {
+    var i = 0
+    var j = 0
+    var u = 0 // distinct bins of the union
+    while (i < n && j < o.n) {
+      val a = keys(i)
+      val b = o.keys(j)
+      if (a <= b) i += 1
+      if (b <= a) j += 1
+      u += 1
+    }
+    u += (n - i) + (o.n - j)
+    val cap = sparseCap
+    if (u > cap) {
+      densify(o.keys(0), o.keys(o.n - 1))
+      addSparse(o)
+    } else {
+      if (u > keys.length) {
+        val len = math.max(u, SparseCells.grown(n, cap))
+        keys = java.util.Arrays.copyOf(keys, len)
+        vals = java.util.Arrays.copyOf(vals, len)
+      }
+      // from the back, so the union overwrites only entries already moved
+      i = n - 1
+      j = o.n - 1
+      var w = u - 1
+      while (j >= 0) {
+        val b = o.keys(j)
+        if (i >= 0 && keys(i) > b) {
+          keys(w) = keys(i)
+          vals(w) = vals(i)
+          i -= 1
+        } else {
+          var c = o.vals(j)
+          if (i >= 0 && keys(i) == b) {
+            c += vals(i)
+            i -= 1
+          }
+          keys(w) = b
+          vals(w) = c
+          j -= 1
+        }
+        w -= 1
+      }
+      n = u
+    }
+  }
+
+  /** Adds sparse `o`'s counts into this dense window, which covers them. */
+  private def addSparse(o: Histogram): Unit = {
+    var k = 0
+    while (k < o.n) {
+      addToCounterAt(o.keys(k) - windowStart, o.vals(k))
+      k += 1
+    }
+  }
+
+  /** Bit-OR of all regular counters: its mode is the counters' width class. */
+  private[core] def regularCountMask: Long = {
+    var mask = 0L
+    if (dense) {
+      var i = 0
+      while (i < windowLen) { mask |= counterAt(i); i += 1 }
+    } else {
+      var k = 0
+      while (k < n) { mask |= vals(k); k += 1 }
+    }
+    mask
+  }
+
+  /** Moves to the dense phase (a no-op once dense), with a window over the
+   * list's span. */
+  private[graft] def densify(): this.type = {
+    if (!dense) {
+      if (n == 0) installWindow(0, 0)
+      else densify(keys(0), keys(n - 1))
+    }
+    this
+  }
+
+  /** Moves the list into one counter window over its span and [lo, hi]. */
+  private def densify(lo: Int, hi: Int): Unit = {
+    var from = lo
+    var to = hi
+    if (n > 0) {
+      from = math.min(from, keys(0))
+      to = math.max(to, keys(n - 1))
+    }
+    installWindow(from, to - from + 1)
+  }
+
+  /** Replaces the list with a counter window of `len` counters from bin
+   * `start` holding the list's counts, at the width class they need when
+   * packed. */
+  private def installWindow(start: Int, len: Int): Unit = {
+    if (packedCounters) mode = Histogram.modeFor(regularCountMask)
+    counts = new Array[Long](wordsFor(len, mode))
+    windowStart = start
+    windowLen = len
+    dense = true
+    var k = 0
+    while (k < n) {
+      setCounterAt(keys(k) - start, vals(k))
+      k += 1
+    }
+    keys = SparseCells.NoKeys
+    vals = SparseCells.NoCounts
+    n = 0
+  }
+
+  /** True once the histogram has moved to its counter window. */
+  private[graft] def isDense: Boolean = dense
 
   // ---------------------------------------------------------------------
   // packed counter storage primitives (mode 6 = plain long[], no packing)
@@ -136,19 +304,13 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
     mode = newMode
   }
 
-  private def incrementRegular(idx: Int, count: Long): this.type = {
+  private def growWindow(idx: Int): Unit = {
     if (windowLen == 0) {
-      windowLen = 1
       counts = new Array[Long](wordsFor(1, mode))
       windowStart = idx
-    } else if (idx < windowStart || idx >= windowStart + windowLen) {
-      growWindow(idx)
+      windowLen = 1
+      return
     }
-    addToCounterAt(idx - windowStart, count)
-    this
-  }
-
-  private def growWindow(idx: Int): Unit = {
     val curStart = windowStart
     val curEnd = windowStart + windowLen // exclusive
     var newStart = math.min(curStart, idx)
@@ -197,10 +359,40 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
     } else regularCountAt(binIndex)
   }
 
-  private def regularCountAt(binIndex: Int): Long = {
-    val pos = binIndex - windowStart
-    if (pos >= 0 && pos < windowLen) counterAt(pos) else 0L
-  }
+  private def regularCountAt(binIndex: Int): Long =
+    if (dense) {
+      val pos = binIndex - windowStart
+      if (pos >= 0 && pos < windowLen) counterAt(pos) else 0L
+    } else {
+      val k = java.util.Arrays.binarySearch(keys, 0, n, binIndex)
+      if (k >= 0) vals(k) else 0L
+    }
+
+  /** Smallest non-empty regular bin above `idx`; there must be one. */
+  private def nextNonEmptyRegular(idx: Int): Int =
+    if (dense) {
+      var pos = math.max(idx + 1, windowStart) - windowStart
+      while (counterAt(pos) == 0L) pos += 1
+      windowStart + pos
+    } else {
+      val k = java.util.Arrays.binarySearch(keys, 0, n, idx + 1)
+      keys(if (k >= 0) k else -k - 1)
+    }
+
+  /** Largest non-empty regular bin below `idx`; there must be one. */
+  private def previousNonEmptyRegular(idx: Int): Int =
+    if (dense) {
+      var pos = math.min(idx - 1, windowStart + windowLen - 1) - windowStart
+      while (counterAt(pos) == 0L) pos -= 1
+      windowStart + pos
+    } else {
+      val k = java.util.Arrays.binarySearch(keys, 0, n, idx - 1)
+      keys(if (k >= 0) k else -k - 2)
+    }
+
+  /** True when some regular bin is non-empty. */
+  private def hasRegularCounts: Boolean =
+    totalCountVar - underflowCountVar - overflowCountVar > 0L
 
   /**
    * Merges another histogram into this one. Equal layouts merge exactly
@@ -218,14 +410,24 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
       overflowCountVar += other.overflowCountVar
       updateMin(other.minVar)
       updateMax(other.maxVar)
-      if (other.windowLen > 0) {
+      if (!other.dense) {
+        if (other.n > 0) {
+          if (!dense) mergeSparse(other)
+          else {
+            ensureWindow(other.keys(0), other.keys(other.n - 1))
+            addSparse(other)
+          }
+        }
+      } else if (other.windowLen > 0) {
         // locate other's non-empty span to avoid over-allocating
         var lo = 0
         while (lo < other.windowLen && other.counterAt(lo) == 0L) lo += 1
         var hi = other.windowLen - 1
         while (hi >= lo && other.counterAt(hi) == 0L) hi -= 1
         if (lo <= hi) {
-          ensureWindow(other.windowStart + lo, other.windowStart + hi)
+          // a dense side with counts densifies this one
+          if (dense) ensureWindow(other.windowStart + lo, other.windowStart + hi)
+          else densify(other.windowStart + lo, other.windowStart + hi)
           var i = lo
           while (i <= hi) {
             val c = other.counterAt(i)
@@ -241,6 +443,7 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
     }
   }
 
+  /** Grows the dense window to cover [fromIdx, toIdx]. */
   private def ensureWindow(fromIdx: Int, toIdx: Int): Unit = {
     if (windowLen == 0) {
       windowLen = toIdx - fromIdx + 1
@@ -289,9 +492,6 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
   // Bin iteration
   // -------------------------------------------------------------------------
 
-  private def minAllocated: Int = windowStart
-  private def maxAllocatedExclusive: Int = windowStart + windowLen
-
   /** Cursor over non-empty bins in ascending order, with running less/greater
    * counts and [min,max]-clamped bounds. */
   final class BinCursor private[Histogram] (
@@ -318,11 +518,8 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
       if (greaterCountVar <= 0) throw new NoSuchElementException
       lessCountVar += countVar
       if (greaterCountVar != overflowCountVar) {
-        if (binIndexVar == layout.underflowBinIndex) binIndexVar = minAllocated - 1
-        do {
-          binIndexVar += 1
-          countVar = regularCountAt(binIndexVar)
-        } while (countVar == 0L)
+        binIndexVar = nextNonEmptyRegular(binIndexVar)
+        countVar = regularCountAt(binIndexVar)
         greaterCountVar -= countVar
       } else {
         binIndexVar = layout.overflowBinIndex
@@ -336,11 +533,8 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
       if (lessCountVar <= 0) throw new NoSuchElementException
       greaterCountVar += countVar
       if (lessCountVar != underflowCountVar) {
-        if (binIndexVar == layout.overflowBinIndex) binIndexVar = maxAllocatedExclusive
-        do {
-          binIndexVar -= 1
-          countVar = regularCountAt(binIndexVar)
-        } while (countVar == 0L)
+        binIndexVar = previousNonEmptyRegular(binIndexVar)
+        countVar = regularCountAt(binIndexVar)
         lessCountVar -= countVar
       } else {
         binIndexVar = layout.underflowBinIndex
@@ -371,21 +565,13 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
         0L,
         totalCountVar - underflowCountVar,
         underflowCountVar)
+    } else if (!hasRegularCounts) {
+      // only overflow is populated
+      new BinCursor(layout.overflowBinIndex, 0L, 0L, overflowCountVar)
     } else {
-      var idx = minAllocated
-      if (windowLen == 0 || {
-            var i = 0
-            var allZero = true
-            while (i < windowLen && allZero) { allZero = counterAt(i) == 0L; i += 1 }
-            allZero
-          }) {
-        // only overflow is populated
-        new BinCursor(layout.overflowBinIndex, 0L, 0L, overflowCountVar)
-      } else {
-        while (regularCountAt(idx) == 0L) idx += 1
-        val c = regularCountAt(idx)
-        new BinCursor(idx, 0L, totalCountVar - c, c)
-      }
+      val idx = nextNonEmptyRegular(layout.underflowBinIndex)
+      val c = regularCountAt(idx)
+      new BinCursor(idx, 0L, totalCountVar - c, c)
     }
   }
 
@@ -397,20 +583,12 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
         totalCountVar - overflowCountVar,
         0L,
         overflowCountVar)
+    } else if (!hasRegularCounts) {
+      new BinCursor(layout.underflowBinIndex, 0L, 0L, underflowCountVar)
     } else {
-      var idx = maxAllocatedExclusive - 1
-      if (windowLen == 0 || {
-            var i = 0
-            var allZero = true
-            while (i < windowLen && allZero) { allZero = counterAt(i) == 0L; i += 1 }
-            allZero
-          }) {
-        new BinCursor(layout.underflowBinIndex, 0L, 0L, underflowCountVar)
-      } else {
-        while (regularCountAt(idx) == 0L) idx -= 1
-        val c = regularCountAt(idx)
-        new BinCursor(idx, totalCountVar - c, 0L, c)
-      }
+      val idx = previousNonEmptyRegular(layout.overflowBinIndex)
+      val c = regularCountAt(idx)
+      new BinCursor(idx, totalCountVar - c, 0L, c)
     }
   }
 
@@ -476,16 +654,16 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
           overflowCountVar == h.overflowCountVar &&
           java.lang.Double.compare(minVar, h.minVar) == 0 &&
           java.lang.Double.compare(maxVar, h.maxVar) == 0)) false
-      else {
-        // compare non-empty regular bins (windows are bounded by actual use,
-        // so iterate both allocated windows rather than the full index range)
-        (0 until windowLen).forall(i =>
-          counterAt(i) == h.regularCountAt(windowStart + i)) &&
-        (0 until h.windowLen).forall(i =>
-          h.counterAt(i) == regularCountAt(h.windowStart + i))
-      }
+      else regularCountsIn(h) && h.regularCountsIn(this)
     case _ => false
   }
+
+  /** True when `h` holds each of this histogram's stored regular counts
+   * (the stored bins are bounded by actual use, so this iterates them
+   * rather than the full index range). */
+  private def regularCountsIn(h: Histogram): Boolean =
+    if (dense) (0 until windowLen).forall(i => counterAt(i) == h.regularCountAt(windowStart + i))
+    else (0 until n).forall(k => vals(k) == h.regularCountAt(keys(k)))
 
   override def hashCode(): Int = {
     var result = layout.hashCode()
@@ -499,61 +677,39 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
     s"Histogram(layout=$layout, total=$totalCountVar, min=$minVar, max=$maxVar, " +
       s"underflow=$underflowCountVar, overflow=$overflowCountVar)"
 
-  /** Rough in-memory footprint: counter window (packed or plain words) +
-   * fixed fields. */
+  /** Rough in-memory footprint: sparse list (4 + 8 bytes an entry) or
+   * counter window (packed or plain words) + fixed fields. */
   def estimatedFootprintBytes: Long =
-    16L + counts.length.toLong * 8L + 4L + 3L * 8L + 2L * 8L
+    16L + keys.length * 4L + vals.length * 8L + counts.length.toLong * 8L +
+      4L + 3L * 8L + 2L * 8L
 
   /** Current counter bit-width class: 2^mode bits per regular counter
-   * (always 6 for the plain-long buffer). */
-  def counterMode: Int = mode
+   * (always 6 for the plain-long buffer); while sparse, the class the
+   * window would take. */
+  def counterMode: Int =
+    if (dense || !packedCounters) mode else Histogram.modeFor(regularCountMask)
 
-  private[core] def preallocateFullRange(): Unit =
-    ensureWindow(layout.underflowBinIndex + 1, layout.overflowBinIndex - 1)
-
-  // internal accessors for serde and preprocessing
-  private[core] def regularWindowStart: Int = windowStart
-  private[core] def regularWindow: Array[Long] =
-    if (mode == 6) counts else Array.tabulate(windowLen)(counterAt)
-  private[graft] def setStateForDeserialization(
-      newCounts: Array[Long],
-      newWindowStart: Int,
+  /** Sets the non-regular state of a histogram whose regular counts a
+   * decoder has recorded. */
+  private[core] def setTotalsForDeserialization(
       underflow: Long,
       overflow: Long,
       total: Long,
       newMin: Double,
       newMax: Double): Unit = {
-    if (packedCounters) {
-      var mask = 0L
-      newCounts.foreach(c => mask |= c)
-      mode = Histogram.modeFor(mask)
-      windowLen = newCounts.length
-      if (mode == 6) counts = newCounts
-      else {
-        counts = new Array[Long](wordsFor(windowLen, mode))
-        var i = 0
-        while (i < windowLen) {
-          val v = newCounts(i)
-          if (v != 0L) setCounterAt(i, v)
-          i += 1
-        }
-      }
-    } else {
-      counts = newCounts
-      windowLen = newCounts.length
-      mode = 6
-    }
-    windowStart = newWindowStart
     underflowCountVar = underflow
     overflowCountVar = overflow
     totalCountVar = total
     minVar = newMin
     maxVar = newMax
   }
+
+  /** Preallocates the window over the layout's whole regular range. */
+  private def preallocateFullRange(): Unit =
+    installWindow(layout.underflowBinIndex + 1, layout.regularBinCount.toInt)
 }
 
 object Histogram {
-  private val EmptyCounts = new Array[Long](0)
 
   /** Largest counter value representable at each mode (2^(2^m) - 1). */
   private[core] val ModeMask: Array[Long] =
@@ -570,15 +726,16 @@ object Histogram {
     else if (v <= 0xffffffffL && v >= 0) 5
     else 6
 
-  /** Plain 64-bit counter window — fastest recording (StaticHistogram-class
-   * buffer, dynahist `StaticHistogram.java:26-66`). */
+  /** Plain 64-bit counters, sparse until [[SparseCells.cap]] bins, then
+   * one window — fastest recording (StaticHistogram-class buffer, dynahist
+   * `StaticHistogram.java:26-66`). */
   def apply(layout: Layout): Histogram = new Histogram(layout, packedCounters = false)
 
   /** Preallocated plain counter buffer over the layout's ENTIRE regular bin
    * range (dynahist `StaticHistogram.java:26-66`): recording never checks or
-   * grows the window, trading memory (8 bytes x regularBinCount up front)
-   * for the reference's fastest recording path. Only sensible for layouts
-   * with a bounded regular range. */
+   * grows the window and is never sparse, trading memory (8 bytes x
+   * regularBinCount up front) for the reference's fastest recording path.
+   * Only sensible for layouts with a bounded regular range. */
   def static(layout: Layout): Histogram = {
     require(
       layout.regularBinCount <= Int.MaxValue / 8,
@@ -588,11 +745,13 @@ object Histogram {
     h
   }
 
-  /** Adaptive bit-width counter buffer: 2^mode bits per counter, mode grows
-   * 0..6 on demand (dynahist `DynamicHistogram.java:30-75, 152-221`) — up to
-   * 64x smaller resident buffers at low per-bin counts, identical observable
-   * behavior. Prefer for very high group cardinality aggregations where
-   * millions of per-group buffers are resident at once. */
+  /** Adaptive bit-width counter buffer: once past the sparse phase,
+   * 2^mode bits per counter, mode grows 0..6 on demand (dynahist
+   * `DynamicHistogram.java:30-75, 152-221`) — up to 64x smaller resident
+   * windows at low per-bin counts, identical observable behavior. Prefer
+   * for very high group cardinality aggregations where millions of
+   * per-group buffers with more than 128 touched bins are resident at
+   * once. */
   def packed(layout: Layout): Histogram = new Histogram(layout, packedCounters = true)
 }
 

@@ -306,38 +306,24 @@ object HistogramSerde {
     }
   }
 
-  /** Growable reconstruction state shared by the V0/V1 readers. */
+  /** Reconstruction state shared by the V0/V1 readers. Regular counts go
+   * straight into the histogram's own store, so storage follows the nonzero
+   * counts actually read, never the index range a header claims. */
   private final class Builder(layout: Layout) {
-    var counts: Array[Long] = new Array[Long](0)
-    var start: Int = 0
+    private val h = Histogram(layout)
     var under: Long = 0L
     var over: Long = 0L
     var total: Long = 0L
     var minV: Double = Double.PositiveInfinity
     var maxV: Double = Double.NegativeInfinity
 
-    def allocate(fromIdx: Int, toIdx: Int): Unit = {
-      counts = new Array[Long](toIdx - fromIdx + 1)
-      start = fromIdx
-    }
-
     def incRegular(idx: Int, c: Long): Unit = {
-      if (c == 0) return
-      if (counts.length == 0) { allocate(idx, idx) }
-      else if (idx < start || idx >= start + counts.length) {
-        val newStart = math.min(start, idx)
-        val newEnd = math.max(start + counts.length, idx + 1)
-        val fresh = new Array[Long](newEnd - newStart)
-        System.arraycopy(counts, 0, fresh, start - newStart, counts.length)
-        counts = fresh
-        start = newStart
-      }
-      counts(idx - start) += c
+      require(c >= 0, "corrupt histogram payload (count)")
+      if (c != 0) h.incrementRegular(idx, c)
     }
 
     def result(): Histogram = {
-      val h = Histogram(layout)
-      h.setStateForDeserialization(counts, start, under, over, total, minV, maxV)
+      h.setTotalsForDeserialization(under, over, total, minV, maxV)
       h
     }
 
@@ -351,7 +337,9 @@ object HistogramSerde {
       total += 1
     }
 
-    /** Places the explicitly stored min/max back into their bins. */
+    /** Places the explicitly stored min/max back into their bins. Done
+     * before the effective counts: these bins bound all of them, so a
+     * decode that goes dense builds its window once. */
     def restoreExtremes(minBinIndex: Int, maxBinIndex: Int): Unit = {
       if (minBinIndex <= layout.underflowBinIndex) under += 1
       else if (minBinIndex >= layout.overflowBinIndex) over += 1
@@ -361,6 +349,19 @@ object HistogramSerde {
       else incRegular(maxBinIndex, 1)
     }
   }
+
+  /** Effective regular counts lie in regular bins between those of the
+   * stored min and max. */
+  private def checkBinRange(
+      layout: Layout,
+      firstIdx: Int,
+      lastIdx: Int,
+      minBinIndex: Int,
+      maxBinIndex: Int): Unit =
+    require(
+      firstIdx <= lastIdx && firstIdx > layout.underflowBinIndex &&
+        lastIdx < layout.overflowBinIndex && firstIdx >= minBinIndex && lastIdx <= maxBinIndex,
+      "corrupt histogram payload (bin range)")
 
   private def readV1(layout: Layout, in: DataInput): Histogram = {
     val b = new Builder(layout)
@@ -390,20 +391,7 @@ object HistogramSerde {
 
     b.minV = min
     b.maxV = max
-
-    // One counter window for the whole decode, over the first and last
-    // effective bins and the bins of min and max that lie in the regular
-    // range, so restoreExtremes does not regrow it.
-    val firstRegular = layout.underflowBinIndex + 1
-    val lastRegular = layout.overflowBinIndex - 1
-    var lo = Int.MaxValue
-    var hi = Int.MinValue
-    def cover(i: Int): Unit = if (i >= firstRegular && i <= lastRegular) {
-      lo = math.min(lo, i)
-      hi = math.max(hi, i)
-    }
-    cover(minBinIndex)
-    cover(maxBinIndex)
+    b.restoreExtremes(minBinIndex, maxBinIndex)
 
     if (effRegularClass >= 1) {
       var firstIdx = readSignedVarInt(in)
@@ -419,15 +407,13 @@ object HistogramSerde {
         }
       }
 
-      if (firstRegular <= lastRegular) {
-        cover(Algorithms.clip(firstIdx, firstRegular, lastRegular))
-        cover(Algorithms.clip(lastIdx, firstRegular, lastRegular))
-      }
-      if (lo <= hi) b.allocate(lo, hi)
+      checkBinRange(layout, firstIdx, lastIdx, minBinIndex, maxBinIndex)
 
       if (effRegularClass >= 3) {
         val bits = new BitReader(in)
         val bitsPerCount = bits.readBits(6).toInt
+        // the writer sizes counts over a mask that includes a count >= 1
+        require(bitsPerCount > 0, "corrupt histogram payload (bits per count)")
 
         if (dense) {
           var binIndex = firstIdx
@@ -446,7 +432,11 @@ object HistogramSerde {
             b.incRegular(binIndex, c)
             totalCount += c
             if (binIndex >= lastIdx) done = true
-            else binIndex += bits.readBits(bitsForDiffIndex).toInt + 1
+            else {
+              val next = binIndex + bits.readBits(bitsForDiffIndex) + 1L
+              require(next <= lastIdx, "corrupt histogram payload (bin range)")
+              binIndex = next.toInt
+            }
           }
         }
       } else {
@@ -457,9 +447,8 @@ object HistogramSerde {
           totalCount += 1
         }
       }
-    } else if (lo <= hi) b.allocate(lo, hi)
+    }
 
-    b.restoreExtremes(minBinIndex, maxBinIndex)
     b.under += effUnder
     b.over += effOver
     b.total += totalCount
@@ -474,8 +463,7 @@ object HistogramSerde {
    * histogram: required mode of the bit-OR of the raw regular counters
    * (dynahist `StaticHistogram.java:93-99`, `AbstractHistogram.java:69-85`). */
   def minimalMode(h: Histogram): Int = {
-    var mask = 0L
-    h.regularWindow.foreach(c => mask |= c)
+    val mask = h.regularCountMask
     if (mask > 0xffffffffL) 6
     else if (mask > 0xffffL) 5
     else if (mask > 0xffL) 4
@@ -570,28 +558,12 @@ object HistogramSerde {
 
     b.minV = min
     b.maxV = max
+    b.restoreExtremes(minBinIndex, maxBinIndex)
 
     if (effRegularClass >= 1) {
       val firstIdx = readSignedVarInt(in)
       val lastIdx = if (effRegularClass >= 2) readSignedVarInt(in) else firstIdx
-
-      if (layout.underflowBinIndex + 1 < layout.overflowBinIndex) {
-        val minAllocUnclipped =
-          if (minBinIndex <= layout.underflowBinIndex) firstIdx
-          else math.min(minBinIndex, firstIdx)
-        val maxAllocUnclipped =
-          if (maxBinIndex >= layout.overflowBinIndex) lastIdx
-          else math.max(maxBinIndex, lastIdx)
-        b.allocate(
-          Algorithms.clip(
-            minAllocUnclipped,
-            layout.underflowBinIndex + 1,
-            layout.overflowBinIndex - 1),
-          Algorithms.clip(
-            maxAllocUnclipped,
-            layout.underflowBinIndex + 1,
-            layout.overflowBinIndex - 1))
-      }
+      checkBinRange(layout, firstIdx, lastIdx, minBinIndex, maxBinIndex)
 
       if (effRegularClass >= 3) {
         val bits = new BitReader(in)
@@ -613,7 +585,6 @@ object HistogramSerde {
       }
     }
 
-    b.restoreExtremes(minBinIndex, maxBinIndex)
     b.under += effUnder
     b.over += effOver
     b.total += totalCount

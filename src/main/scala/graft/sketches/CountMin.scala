@@ -2,6 +2,8 @@ package graft.sketches
 
 import java.nio.ByteBuffer
 
+import graft.core.SparseCells
+
 import org.apache.spark.unsafe.Platform
 
 /**

@@ -1,5 +1,7 @@
 package graft.sketches
 
+import graft.core.SparseCells
+
 /**
  * HyperLogLog distinct-count sketch (Flajolet, Fusy, Gandouet, Meunier 2007)
  * with 64-bit hashing and linear-counting small-range correction (the

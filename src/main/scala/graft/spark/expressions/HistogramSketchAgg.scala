@@ -19,11 +19,13 @@ import graft.core.{Histogram, HistogramSerde, Layout, SketchEnvelope}
  * At 10^5-10^6 shuffled group buffers that is the difference between KBs
  * and tens of bytes per sketch on the wire.
  *
- * An empty buffer allocates no counters (they grow as values arrive, as in
- * DynaHist's dynamic histogram). In the final phase Spark creates one empty
- * buffer per group only to merge the group's partials into it, so `merge`
- * adopts the first partial while the buffer has recorded nothing: `other`
- * is freshly deserialized and owned by this aggregate.
+ * An empty buffer allocates no counters. A buffer keeps its touched bins
+ * as a sorted sparse list until more than 128 are touched, then one counter
+ * window (see [[Histogram]]); a partial with no more decodes sparse too, so
+ * a 20-row group never builds a window. In the final phase Spark creates
+ * one empty buffer per group only to merge the group's partials into it,
+ * so `merge` adopts the first partial while the buffer has recorded
+ * nothing: `other` is freshly deserialized and owned by this aggregate.
  */
 case class HistogramSketchAgg(
     child: Expression,
@@ -39,9 +41,10 @@ case class HistogramSketchAgg(
 
   override def dataType: DataType = BinaryType
 
-  // packed = adaptive bit-width counters for the PRE-shuffle partial buffers
-  // (where the 10^5-10^6 per-group buffers live); post-shuffle deserialize
-  // rebuilds dynamic counters, which is fine — result bytes are identical
+  // packed = adaptive bit-width counters for the PRE-shuffle partial buffers.
+  // It matters only once a buffer has left the sparse phase (more than 128
+  // touched bins): sparse lists are the same either way. Post-shuffle
+  // deserialize rebuilds plain counters — result bytes are identical
   override def createAggregationBuffer(): Histogram =
     if (packed) Histogram.packed(layout) else Histogram(layout)
 

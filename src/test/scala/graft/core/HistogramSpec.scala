@@ -1,5 +1,8 @@
 package graft.core
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 
 class HistogramSpec extends AnyFunSuite {
@@ -191,6 +194,114 @@ class HistogramSpec extends AnyFunSuite {
     assert(h.quantile(0.5).isNaN)
     h.addValue(42.0)
     assert(h.quantile(0.0) == 42.0 && h.quantile(0.5) == 42.0 && h.quantile(1.0) == 42.0)
+  }
+
+  // -------------------------------------------------------------------------
+  // sparse-first store vs a forced-dense window
+  // -------------------------------------------------------------------------
+
+  /** Runs a ScalaCheck property from a fixed seed and fails with its report. */
+  private def check(name: String)(prop: Prop): Unit = {
+    val params = Test.Parameters.default.withMinSuccessfulTests(150)
+      .withInitialSeed(org.scalacheck.rng.Seed(47L))
+    val res = Test.check(params, prop)
+    assert(res.passed, s"$name: ${res.status}")
+  }
+
+  private def same(a: Array[Byte], b: Array[Byte]): Boolean = java.util.Arrays.equals(a, b)
+
+  private def v0Bytes(h: Histogram): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    HistogramSerde.writeV0(h, new DataOutputStream(bos))
+    bos.toByteArray
+  }
+
+  private def regularBins(h: Histogram): Int =
+    h.nonEmptyBins.count(b => !b.isUnderflowBin && !b.isOverflowBin)
+
+  private val probes = Seq(0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0)
+
+  /** Every read and every encoding agree. */
+  private def sameHist(a: Histogram, b: Histogram): Boolean =
+    a == b && b == a && same(HistogramSerde.toBytes(a), HistogramSerde.toBytes(b)) &&
+      same(SketchEnvelope.toBytes(a), SketchEnvelope.toBytes(b)) &&
+      same(v0Bytes(a), v0Bytes(b)) && a.nonEmptyBins == b.nonEmptyBins &&
+      (a.isEmpty || probes.forall(p =>
+        java.lang.Double.compare(a.quantile(p), b.quantile(p)) == 0))
+
+  /** (value, weight) adds, weight 1 a plain add: regular values over the
+   * layout, plus +-0.0, under/overflow values and infinities; up to `cap`
+   * or up to three times `cap` adds, so both sides of the cap. */
+  private def genAdds(regular: Gen[Double], cap: Int): Gen[List[(Double, Long)]] = {
+    val special = Gen.oneOf(0.0, -0.0, -1.0, -1e12, 1e12, Double.NegativeInfinity,
+      Double.PositiveInfinity)
+    val weight = Gen.frequency(3 -> Gen.const(1L), 1 -> Gen.chooseNum(2L, 1L << 40))
+    Gen.oneOf(Gen.chooseNum(0, cap), Gen.chooseNum(0, 3 * cap)).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(Gen.frequency(1 -> special, 6 -> regular), weight)))
+  }
+
+  private def hist(l: Layout, adds: Seq[(Double, Long)], packed: Boolean,
+      dense: Boolean): Histogram = {
+    val h = if (packed) Histogram.packed(l) else Histogram(l)
+    if (dense) h.densify()
+    adds.foreach { case (v, w) => if (w == 1L) h.addValue(v) else h.addValue(v, w) }
+    h
+  }
+
+  test("sparse-first histogram equals a forced-dense one: adds, merges and decodes") {
+    val layouts = Seq[(Layout, Gen[Double])](
+      LogQuadraticLayout(1e-5, 1e-2, 0, 1e9) -> Gen.chooseNum(-5.0, 20.8).map(math.exp),
+      // 101 regular bins: a cap of 12
+      IntegerLayout(-50, 50) -> Gen.chooseNum(-60, 60).map(_.toDouble))
+    for ((l, regular) <- layouts; packed <- Seq(false, true)) {
+      val cap = SparseCells.cap(l.regularBinCount.toInt)
+      val seen = scala.collection.mutable.Set.empty[String]
+      val adds = genAdds(regular, cap)
+      // no shrinking: each step re-runs every check, for lists of up to 3 x cap adds
+      check(s"$l packed=$packed")(Prop.forAllNoShrink(adds, adds) { (a, b) =>
+        val sa = hist(l, a, packed, dense = false)
+        val sb = hist(l, b, packed, dense = false)
+        val da = hist(l, a, packed, dense = true)
+        val db = hist(l, b, packed, dense = true)
+        val union = hist(l, a ++ b, packed, dense = true)
+        val (binsA, binsB, binsUnion) = (regularBins(da), regularBins(db), regularBins(union))
+        seen += (if (binsA <= cap) "sparse" else "dense")
+        if (binsA <= cap / 2 && binsB <= cap / 2) seen += "merge under cap"
+        if (binsA <= cap && binsB <= cap && binsUnion > cap) seen += "merge crossing cap"
+        // the form follows the count of touched bins
+        da.isDense && sa.isDense == (binsA > cap) &&
+        sameHist(sa, da) && sa.counterMode == da.counterMode &&
+        sameHist(sa, hist(l, a, !packed, dense = false)) &&
+        // sparse+sparse, sparse+dense, dense+sparse, each against dense+dense
+        sameHist(hist(l, a, packed, dense = false).add(sb), union) &&
+        (hist(l, a, packed, dense = false).add(sb).isDense == (binsUnion > cap)) &&
+        sameHist(hist(l, a, packed, dense = false).add(db), union) &&
+        sameHist(hist(l, a, packed, dense = true).add(sb), union) &&
+        sameHist(hist(l, a, packed, dense = true).add(db), union) &&
+        // decoded payloads take the form their count of nonzero bins calls for
+        {
+          val back = HistogramSerde.fromBytes(l, HistogramSerde.toBytes(sa))
+          val env = SketchEnvelope.fromBytes(SketchEnvelope.toBytes(da))
+          val v0 = HistogramSerde.read(l, new DataInputStream(
+            new ByteArrayInputStream(v0Bytes(sa))))
+          sameHist(back, da) && back.isDense == (binsA > cap) &&
+            sameHist(env, da) && env.isDense == (binsA > cap) &&
+            sameHist(v0, da) && v0.isDense == (binsA > cap)
+        }
+      })
+      assert(seen("sparse") && seen("dense") && seen("merge under cap") &&
+        seen("merge crossing cap"), s"$l packed=$packed: $seen")
+    }
+  }
+
+  test("a histogram allocates nothing until its first regular value") {
+    val h = Histogram(LogQuadraticLayout(1e-5, 1e-2, 0, 1e9))
+    val empty = h.estimatedFootprintBytes
+    h.addValue(-1.0).addValue(2e9).addValue(Double.PositiveInfinity)
+    assert(h.estimatedFootprintBytes == empty && !h.isDense)
+    h.addValue(5.0)
+    assert(h.estimatedFootprintBytes > empty && !h.isDense)
+    assert(Histogram.static(IntegerLayout(0, 9)).isDense)
   }
 }
 

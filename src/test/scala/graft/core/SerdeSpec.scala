@@ -190,4 +190,92 @@ class SerdeSpec extends AnyFunSuite {
       }
     }
   }
+
+  /** Bytes the current thread allocates while `body` runs. */
+  private def allocatedBy(body: => Unit): Long = {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val before = mx.getCurrentThreadAllocatedBytes
+    body
+    mx.getCurrentThreadAllocatedBytes - before
+  }
+
+  /** A V1 sketch envelope over `IntegerLayout(0, 10^9)` holding min 0 and
+   * `max`, then `regular` (header, index bytes and bit fields). */
+  private def craftedEnvelope(max: Double, effRegularClass: Int)(
+      regular: DataOutputStream => Unit): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bos)
+    out.writeShort(0x4748)
+    LayoutCodec.write(IntegerLayout(0, 1000000000), out)
+    out.writeByte(1) // V1
+    out.writeByte(0x01 | 0x02 | (effRegularClass << 2)) // non-empty, min < max
+    out.writeDouble(0.0)
+    out.writeDouble(max)
+    regular(out)
+    bos.toByteArray
+  }
+
+  /** Dense effective counts over bins [1, last] with `bitsPerCount` bits
+   * each, `counts` of them written. */
+  private def denseCounts(last: Int, bitsPerCount: Int, counts: Int)(out: DataOutputStream) = {
+    Codecs.writeSignedVarInt(1, out)
+    Codecs.writeSignedVarInt(last, out)
+    val bits = new Codecs.BitWriter(out)
+    bits.writeBits(6, bitsPerCount.toLong)
+    (0 until counts).foreach(_ => bits.writeBits(bitsPerCount, 1L))
+    bits.finish()
+  }
+
+  test("a dense payload with zero bits per count fails as corrupt without allocating its span") {
+    // 34 bytes claiming 10^9 - 1 bins; before the check, decoding it threw
+    // OutOfMemoryError, and the 10^8-bin one allocated 800 MB
+    val huge = craftedEnvelope(1e9, 3)(denseCounts(999999999, 0, 0))
+    val large = craftedEnvelope(1e8, 3)(denseCounts(100000000, 0, 0))
+    assert(huge.length == 34 && large.length <= 34)
+    for (blob <- Seq(huge, large)) {
+      var e: IllegalArgumentException = null
+      val bytes = allocatedBy {
+        e = intercept[IllegalArgumentException](SketchEnvelope.fromBytes(blob))
+      }
+      assert(e.getMessage.contains("corrupt histogram payload (bits per count)"))
+      assert(bytes < (1L << 20), s"decoding ${blob.length} bytes allocated $bytes bytes")
+    }
+    // with counts present, storage follows the counts read, not the span:
+    // the payload ends after 40 of its 10^9 - 1 claimed counts
+    val truncated = craftedEnvelope(1e9, 3)(denseCounts(999999999, 1, 40))
+    val bytes = allocatedBy(intercept[java.io.EOFException](SketchEnvelope.fromBytes(truncated)))
+    assert(bytes < (1L << 20), s"truncated payload allocated $bytes bytes")
+  }
+
+  test("effective bins outside the regular range or past min and max fail as corrupt") {
+    val blobs = Seq(
+      // first bin below the regular range
+      craftedEnvelope(100.0, 1)(out => Codecs.writeSignedVarInt(-5, out)),
+      // a bin above the stored max
+      craftedEnvelope(100.0, 2) { out =>
+        Codecs.writeSignedVarInt(1, out)
+        Codecs.writeSignedVarInt(200, out)
+      },
+      // a sparse index gap that runs past the last bin
+      craftedEnvelope(100.0, 3) { out =>
+        Codecs.writeSignedVarInt(50, out) // swapped: the sparse variant
+        Codecs.writeSignedVarInt(1, out)
+        val bits = new Codecs.BitWriter(out)
+        bits.writeBits(6, 1L) // bits per count
+        bits.writeBits(5, 8L) // bits per index gap
+        bits.writeBits(1, 1L)
+        bits.writeBits(8, 200L)
+        bits.writeBits(1, 1L)
+        bits.finish()
+      })
+    for (blob <- blobs) {
+      val e = intercept[IllegalArgumentException](SketchEnvelope.fromBytes(blob))
+      assert(e.getMessage.contains("corrupt histogram payload (bin range)"), e.getMessage)
+    }
+    // the same envelope with an in-range bin decodes
+    val ok = SketchEnvelope.fromBytes(
+      craftedEnvelope(100.0, 1)(out => Codecs.writeSignedVarInt(5, out)))
+    assert(ok.totalCount == 3 && ok.countAt(5) == 1 && ok.countAt(100) == 1)
+  }
 }

@@ -1,5 +1,7 @@
 package graft.sketches
 
+import graft.core.SparseCells
+
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
 

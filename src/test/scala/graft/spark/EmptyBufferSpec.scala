@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -245,6 +245,44 @@ class EmptyBufferSpec extends AnyFunSuite {
     val cDense = CountMin(4, 256).densify()
     rows.foreach(r => cDense.addString(r.getUTF8String(0).toString))
     assert(cmsBytes.sameElements(cDense.toBytes))
+  }
+
+  test("a 20-row group's histogram stays sparse from update through the final phase") {
+    val rnd = new java.util.SplittableRandom(20L)
+    // conv_sketches-like turn lengths: log-uniform on [10, 1000), weights 1-3
+    val rows = (0 until 20).map(_ => InternalRow(
+      math.floor(math.exp(rnd.nextDouble(math.log(10.0), math.log(1000.0)))),
+      1L + rnd.nextInt(3)))
+    val value = BoundReference(0, DoubleType, nullable = true)
+    val weight = BoundReference(1, LongType, nullable = true)
+    for (agg <- Seq[TypedImperativeAggregate[Histogram]](
+        HistogramSketchAgg(value, layout),
+        HistogramSketchAgg(value, layout, packed = true),
+        HistogramSketchWeightedAgg(value, weight, layout))) {
+      val name = agg.prettyName
+      // two partials of ten rows, serialized, adopted and merged
+      val parts = rows.grouped(10).map { rs =>
+        val b = rs.foldLeft(agg.createAggregationBuffer())(agg.update)
+        assert(!b.isDense, s"$name partial went dense")
+        val back = agg.deserialize(agg.serialize(b))
+        assert(!back.isDense, s"$name decoded partial went dense")
+        back
+      }.toSeq
+      val fin = parts.foldLeft(agg.createAggregationBuffer())(agg.merge)
+      assert(fin eq parts.head, s"$name: the first partial was not adopted")
+      assert(!fin.isDense, s"$name final buffer went dense")
+      // the same rows through forced-dense buffers
+      val denseParts = rows.grouped(10).map { rs =>
+        val b = rs.foldLeft(agg.createAggregationBuffer().densify())(agg.update)
+        assert(b.isDense)
+        b
+      }.toSeq
+      val dense = denseParts.foldLeft(agg.createAggregationBuffer().densify())(agg.merge)
+      assert(dense.isDense)
+      assert(agg.serialize(fin).sameElements(agg.serialize(dense)), s"$name partial bytes")
+      assert(agg.eval(fin).asInstanceOf[Array[Byte]].sameElements(
+        agg.eval(dense).asInstanceOf[Array[Byte]]), s"$name result bytes")
+    }
   }
 
   test("the word-at-a-time ASCII check leaves every string hash unchanged") {
