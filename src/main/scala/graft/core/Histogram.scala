@@ -74,9 +74,32 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
   /** Records `value` once. */
   def addValue(value: Double): this.type = addValue(value, 1L)
 
-  /** Records `value` with multiplicity `count`. */
+  /** Records `value` with multiplicity `count`. A histogram still in its
+   * sparse phase records through [[addValueSparse]], so this method holds
+   * only the dense path: with the sparse insert inlined into it, C2
+   * compiled the dense path about 1 ns a value slower. */
   def addValue(value: Double, count: Long): this.type = {
-    if (count == 0) return this
+    if (!dense) return addValueSparse(value, count)
+    val idx = record(value, count)
+    if (idx != Histogram.NotRegular) {
+      if (idx < windowStart || idx >= windowStart + windowLen) growWindow(idx)
+      addToCounterAt(idx - windowStart, count)
+    }
+    this
+  }
+
+  /** [[addValue]] in the sparse phase, out of line. */
+  private def addValueSparse(value: Double, count: Long): this.type = {
+    val idx = record(value, count)
+    if (idx != Histogram.NotRegular) incrementSparse(idx, count)
+    this
+  }
+
+  /** Checks `value` and `count`, adds them to the total, extremes and
+   * under/overflow counts, and returns the regular bin to add `count` to,
+   * or [[Histogram.NotRegular]]. */
+  private def record(value: Double, count: Long): Int = {
+    if (count == 0) return Histogram.NotRegular
     require(count > 0, s"count must be non-negative, but was $count")
     if (value != value) throw new IllegalArgumentException("value must not be NaN")
     if (count > Long.MaxValue - totalCountVar) throw new ArithmeticException("count overflow")
@@ -84,10 +107,9 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
     totalCountVar += count
     updateMin(value)
     updateMax(value)
-    if (idx <= layout.underflowBinIndex) underflowCountVar += count
-    else if (idx >= layout.overflowBinIndex) overflowCountVar += count
-    else incrementRegular(idx, count)
-    this
+    if (idx <= layout.underflowBinIndex) { underflowCountVar += count; Histogram.NotRegular }
+    else if (idx >= layout.overflowBinIndex) { overflowCountVar += count; Histogram.NotRegular }
+    else idx
   }
 
   // ---------------------------------------------------------------------
@@ -98,9 +120,7 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
   private def sparseCap: Int =
     SparseCells.cap(math.min(layout.regularBinCount, Int.MaxValue.toLong).toInt)
 
-  /** Adds `count` (> 0) to regular bin `idx`. The sparse path is a
-   * method of its own, so this one stays small enough to inline into
-   * `addValue`. */
+  /** Adds `count` (> 0) to regular bin `idx`. */
   private[core] def incrementRegular(idx: Int, count: Long): Unit =
     if (dense) {
       if (idx < windowStart || idx >= windowStart + windowLen) growWindow(idx)
@@ -710,6 +730,9 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
 }
 
 object Histogram {
+
+  /** No regular bin: regular bins lie above the underflow bin. */
+  private final val NotRegular = Int.MinValue
 
   /** Largest counter value representable at each mode (2^(2^m) - 1). */
   private[core] val ModeMask: Array[Long] =

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInput, DataInputStream, DataOutput, DataOutputStream, IOException}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInput, DataInputStream, DataOutput, DataOutputStream, EOFException, IOException}
 
 /**
  * LEB128 varint / zigzag codecs and 64-bit-buffered bit I/O, wire-compatible
@@ -145,13 +145,22 @@ object HistogramSerde {
 
   def write(h: Histogram, out: DataOutput): Unit = writeV1(h, out)
 
-  def read(layout: Layout, in: DataInput): Histogram = {
+  def read(layout: Layout, in: DataInput): Histogram = untruncated {
     in.readByte() match {
       case SerialVersionV0 => readV0(layout, in)
       case SerialVersionV1 => readV1(layout, in)
       case v               => throw new IOException(s"unsupported histogram serial version $v")
     }
   }
+
+  /** `decode`, with input that ends early failing as the same
+   * `IllegalArgumentException` as the payload's other checks. */
+  private[core] def untruncated[T](decode: => T): T =
+    try decode
+    catch {
+      case _: EOFException =>
+        throw new IllegalArgumentException("corrupt histogram payload (truncated)")
+    }
 
   // -------------------------------------------------------------------------
   // shared helpers
@@ -797,7 +806,7 @@ object ReferenceLayoutSerde {
     HistogramSerde.write(h, out)
   }
 
-  def readHistogramWithTypeInfo(in: DataInput): Histogram = {
+  def readHistogramWithTypeInfo(in: DataInput): Histogram = HistogramSerde.untruncated {
     val layout = readWithTypeInfo(in)
     HistogramSerde.read(layout, in)
   }
@@ -828,7 +837,7 @@ object SketchEnvelope {
     bos.toByteArray
   }
 
-  def fromBytes(bytes: Array[Byte]): Histogram = {
+  def fromBytes(bytes: Array[Byte]): Histogram = HistogramSerde.untruncated {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     require(in.readShort() == Magic.toShort, "bad sketch magic")
     val layout = LayoutCodec.read(in)

@@ -35,18 +35,25 @@ import graft.spark.expressions.{CompanionSketchAgg, HistogramSketchAgg, Histogra
  * [[install]] appends the rule to the session's "User Provided Optimizers"
  * batch, which runs after the last `CollapseProject` (an operator-
  * optimization rule could see a single-use alias inlined straight back into
- * the aggregate).
+ * the aggregate). It also adds [[SketchAggregationStrategy]], which plans
+ * the map-side phase of the aggregates this rule leaves with column inputs
+ * onto a codegen'd operator.
  */
 object PullOutSketchInputs extends Rule[LogicalPlan] {
 
-  /** Adds the rule to `spark`'s extra optimizations once; a no-op when it
-   * is already there or the session is not a classic (in-JVM) one. */
+  /** Adds the rule to `spark`'s extra optimizations and
+   * [[SketchAggregationStrategy]] to its extra strategies, each once; a
+   * no-op for what is already there or when the session is not a classic
+   * (in-JVM) one. */
   def install(spark: SparkSession): Unit = spark match {
     case s: classic.SparkSession =>
       val methods = s.experimental
       methods.synchronized {
         if (!methods.extraOptimizations.contains(this)) {
           methods.extraOptimizations = methods.extraOptimizations :+ this
+        }
+        if (!methods.extraStrategies.contains(SketchAggregationStrategy)) {
+          methods.extraStrategies = methods.extraStrategies :+ SketchAggregationStrategy
         }
       }
     case _ =>

@@ -3,7 +3,8 @@ package graft.spark.expressions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.codegen.ExprCode
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -89,6 +90,25 @@ private[spark] object ItemSketchAgg {
     }
     true
   }
+
+  /** True for the item types `update` reads: string, long and int. */
+  def isItemType(t: DataType): Boolean = t match {
+    case LongType | IntegerType | _: StringType => true
+    case _ => false
+  }
+
+  /** The generated form of `update`'s item call on a `cls` buffer: skip a
+   * null item, else `addHash(utf8Hash(s)` or `addLong((long) v`, then
+   * `args` (the trailing arguments, with their leading comma) and `)`. */
+  def itemUpdateCode(
+      cls: Class[_], buffer: String, item: ExprCode, itemType: DataType, args: String): String = {
+    val b = s"((${cls.getName}) $buffer)"
+    val call = itemType match {
+      case _: StringType => s"$b.addHash(${getClass.getName}.MODULE$$.utf8Hash(${item.value})$args)"
+      case _ => s"$b.addLong((long) ${item.value}$args)"
+    }
+    s"if (!(${item.isNull})) $call;"
+  }
 }
 
 /** Item-keyed sketches (HLL / CMS / Bloom): string inputs hash as strings,
@@ -97,9 +117,19 @@ private[spark] object ItemSketchAgg {
  * String rows hash through [[ItemSketchAgg.utf8Hash]] (no per-row
  * `java.lang.String` for valid UTF-8 — the 100 TB string-key path); both
  * string and long bound-reference children take an unboxed ordinal read. */
-abstract class ItemSketchAgg[S <: AnyRef] extends CompanionSketchAgg[S] {
+abstract class ItemSketchAgg[S <: AnyRef] extends CompanionSketchAgg[S] with GeneratedUpdate {
   protected def addHash(buffer: S, h: Long): Unit
   protected def addLong(buffer: S, v: Long): Unit
+
+  /** The buffer class and the trailing arguments (count-min's count) of
+   * the `addHash`/`addLong` calls behind [[addHash]] and [[addLong]]. */
+  protected def bufferClass: Class[S]
+  protected def countArgument: String = ""
+
+  override def generatesUpdate: Boolean = ItemSketchAgg.isItemType(child.dataType)
+
+  override def updateCode(buffer: String, in: Seq[ExprCode]): String =
+    ItemSketchAgg.itemUpdateCode(bufferClass, buffer, in.head, child.dataType, countArgument)
 
   /** Ordinal of a bound long (or string) input column, else -1. A plain
    * column binds to a `BoundReference`, and so does a computed input once
@@ -172,6 +202,7 @@ case class HllSketchAgg(
     inputAggBufferOffset: Int = 0)
     extends ItemSketchAgg[Hll] {
   override def createAggregationBuffer(): Hll = Hll(precision)
+  override protected def bufferClass: Class[Hll] = classOf[Hll]
   override protected def addHash(b: Hll, h: Long): Unit = b.addHash(h)
   override protected def addLong(b: Hll, v: Long): Unit = b.addLong(v)
   override def merge(buffer: Hll, other: Hll): Hll =
@@ -210,6 +241,8 @@ case class CountMinSketchAgg(
     inputAggBufferOffset: Int = 0)
     extends ItemSketchAgg[CountMin] {
   override def createAggregationBuffer(): CountMin = CountMin(depth, width)
+  override protected def bufferClass: Class[CountMin] = classOf[CountMin]
+  override protected def countArgument: String = ", 1L"
   override protected def addHash(b: CountMin, h: Long): Unit = b.addHash(h)
   override protected def addLong(b: CountMin, v: Long): Unit = b.addLong(v)
   override def merge(buffer: CountMin, other: CountMin): CountMin =
@@ -247,7 +280,7 @@ case class CountMinWeightedSketchAgg(
     width: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends CompanionSketchAgg[CountMin] {
+    extends CompanionSketchAgg[CountMin] with GeneratedUpdate {
   override def child: Expression = item
   override def children: Seq[Expression] = Seq(item, weight)
   override def createAggregationBuffer(): CountMin = CountMin(depth, width)
@@ -275,6 +308,11 @@ case class CountMinWeightedSketchAgg(
     }
     buffer
   }
+  override def generatesUpdate: Boolean = ItemSketchAgg.isItemType(item.dataType) &&
+    (weight.dataType == LongType || weight.dataType == IntegerType)
+  override def updateCode(buffer: String, in: Seq[ExprCode]): String =
+    s"if (!(${in(1).isNull})) " + ItemSketchAgg.itemUpdateCode(
+      classOf[CountMin], buffer, in(0), item.dataType, s", (long) ${in(1).value}")
   override def merge(buffer: CountMin, other: CountMin): CountMin =
     if (buffer.isPristine) other else buffer.merge(other)
   override protected def toBytes(s: CountMin): Array[Byte] = s.toBytes
@@ -311,6 +349,7 @@ case class BloomSketchAgg(
     inputAggBufferOffset: Int = 0)
     extends ItemSketchAgg[BloomFilter] {
   override def createAggregationBuffer(): BloomFilter = BloomFilter(expectedItems, fpp)
+  override protected def bufferClass: Class[BloomFilter] = classOf[BloomFilter]
   override protected def addHash(b: BloomFilter, h: Long): Unit = b.addHash(h)
   override protected def addLong(b: BloomFilter, v: Long): Unit = b.addLong(v)
   override def merge(buffer: BloomFilter, other: BloomFilter): BloomFilter =

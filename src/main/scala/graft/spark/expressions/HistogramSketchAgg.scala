@@ -4,7 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.catalyst.expressions.codegen.ExprCode
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType}
 
 import graft.core.{Histogram, HistogramSerde, Layout, SketchEnvelope}
 
@@ -33,7 +34,7 @@ case class HistogramSketchAgg(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0,
     packed: Boolean = false)
-    extends TypedImperativeAggregate[Histogram] {
+    extends TypedImperativeAggregate[Histogram] with GeneratedUpdate {
 
   override def children: Seq[Expression] = Seq(child)
 
@@ -71,6 +72,11 @@ case class HistogramSketchAgg(
     }
     buffer
   }
+
+  override def generatesUpdate: Boolean = child.dataType == DoubleType
+
+  override def updateCode(buffer: String, in: Seq[ExprCode]): String =
+    s"if (!(${in(0).isNull})) ((${classOf[Histogram].getName}) $buffer).addValue(${in(0).value});"
 
   override def merge(buffer: Histogram, other: Histogram): Histogram =
     if (buffer.totalCount == 0L) other else buffer.add(other)
@@ -119,7 +125,7 @@ case class HistogramSketchWeightedAgg(
     layout: Layout,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Histogram] {
+    extends TypedImperativeAggregate[Histogram] with GeneratedUpdate {
 
   override def children: Seq[Expression] = Seq(value, weight)
 
@@ -139,7 +145,7 @@ case class HistogramSketchWeightedAgg(
   }
   @transient private lazy val weightOrdinal: Int = weight match {
     case b: org.apache.spark.sql.catalyst.expressions.BoundReference
-        if b.dataType == org.apache.spark.sql.types.LongType => b.ordinal
+        if b.dataType == LongType => b.ordinal
     case _ => -1
   }
 
@@ -159,6 +165,13 @@ case class HistogramSketchWeightedAgg(
     }
     buffer
   }
+
+  override def generatesUpdate: Boolean =
+    value.dataType == DoubleType && weight.dataType == LongType
+
+  override def updateCode(buffer: String, in: Seq[ExprCode]): String =
+    s"if (!(${in(0).isNull}) && !(${in(1).isNull})) " +
+      s"((${classOf[Histogram].getName}) $buffer).addValue(${in(0).value}, ${in(1).value});"
 
   override def merge(buffer: Histogram, other: Histogram): Histogram =
     if (buffer.totalCount == 0L) other else buffer.add(other)

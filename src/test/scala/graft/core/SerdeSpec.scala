@@ -244,8 +244,40 @@ class SerdeSpec extends AnyFunSuite {
     // with counts present, storage follows the counts read, not the span:
     // the payload ends after 40 of its 10^9 - 1 claimed counts
     val truncated = craftedEnvelope(1e9, 3)(denseCounts(999999999, 1, 40))
-    val bytes = allocatedBy(intercept[java.io.EOFException](SketchEnvelope.fromBytes(truncated)))
+    var e: IllegalArgumentException = null
+    val bytes = allocatedBy {
+      e = intercept[IllegalArgumentException](SketchEnvelope.fromBytes(truncated))
+    }
+    assert(e.getMessage == "corrupt histogram payload (truncated)")
     assert(bytes < (1L << 20), s"truncated payload allocated $bytes bytes")
+  }
+
+  test("every prefix of a V0, V1 or envelope blob fails as truncated") {
+    val layout = LogQuadraticLayout(1e-5, 1e-2, -1e6, 1e6)
+    val rnd = new java.util.SplittableRandom(17L)
+    val histograms = Seq(
+      Histogram(layout),
+      Histogram(layout).addValue(42.0),
+      Histogram(layout).addValue(-3.0, 5L).addValue(7.5).addValue(1e9),
+      { val h = Histogram(layout); (0 until 2000).foreach(_ => h.addValue(rnd.nextDouble() * 1e4)); h })
+    for (h <- histograms) {
+      val v0 = {
+        val bos = new ByteArrayOutputStream()
+        HistogramSerde.writeV0(h, new DataOutputStream(bos))
+        bos.toByteArray
+      }
+      val decoders = Seq[(String, Array[Byte], Array[Byte] => Histogram)](
+        ("V0", v0, HistogramSerde.fromBytes(layout, _)),
+        ("V1", HistogramSerde.toBytes(h), HistogramSerde.fromBytes(layout, _)),
+        ("envelope", SketchEnvelope.toBytes(h), SketchEnvelope.fromBytes(_)))
+      for ((name, blob, decode) <- decoders) {
+        assert(decode(blob) == h, name)
+        for (n <- 0 until blob.length) {
+          val e = intercept[IllegalArgumentException](decode(java.util.Arrays.copyOf(blob, n)))
+          assert(e.getMessage == "corrupt histogram payload (truncated)", s"$name prefix $n/${blob.length}")
+        }
+      }
+    }
   }
 
   test("effective bins outside the regular range or past min and max fail as corrupt") {

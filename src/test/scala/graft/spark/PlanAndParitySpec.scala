@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.{col, countDistinct, length => sqlLength}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -67,25 +67,30 @@ class PlanAndParitySpec extends AnyFunSuite {
 
   test("sketch aggregation plans as partial + final ObjectHashAggregate") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
-    val plan = li
+    def plan(sketch: Column): String = li
+      .groupBy(col("l_linenumber"))
+      .agg(sketch)
+      .queryExecution
+      .executedPlan
+      .toString
+    // map-side partial on the codegen'd sketch operator, final on ObjectHashAggregate
+    for (p <- Seq(plan(hist_sketch(col("l_extendedprice"), layout)),
+        // the native TypedImperativeAggregate variant plans identically
+        plan(hist_sketch_binary(col("l_extendedprice"), layout)))) {
+      assert("PartialSketchAggregate".r.findAllIn(p).size == 1, s"no partial phase:\n$p")
+      assert("ObjectHashAggregate".r.findAllIn(p).size == 1, s"no final phase:\n$p")
+      assert(p.indexOf("ObjectHashAggregate") < p.indexOf("PartialSketchAggregate"), p)
+      assert(p.contains("partial_hist_sketch("), s"no partial phase:\n$p")
+    }
+    // a string key keeps ObjectHashAggregate for both phases
+    val byFlag = li
       .groupBy(col("l_returnflag"))
       .agg(hist_sketch(col("l_extendedprice"), layout))
       .queryExecution
       .executedPlan
       .toString
-    // two ObjectHashAggregate occurrences = map-side partial + final
-    val n = "ObjectHashAggregate".r.findAllIn(plan).size
-    assert(n >= 2, s"expected partial+final object hash aggregate, plan:\n$plan")
-    // the native TypedImperativeAggregate variant plans identically
-    val planBin = li
-      .groupBy(col("l_returnflag"))
-      .agg(hist_sketch_binary(col("l_extendedprice"), layout))
-      .queryExecution
-      .executedPlan
-      .toString
-    val nBin = "ObjectHashAggregate".r.findAllIn(planBin).size
-    assert(nBin >= 2, s"native agg lost partial+final, plan:\n$planBin")
-    assert(planBin.contains("partial_hist_sketch("), s"no partial phase:\n$planBin")
+    assert("ObjectHashAggregate".r.findAllIn(byFlag).size == 2, byFlag)
+    assert(byFlag.contains("partial_hist_sketch("), byFlag)
   }
 
   test("HLL accuracy is in the same class as approx_count_distinct (HLL++)") {

@@ -7,9 +7,11 @@ and inclusive share (anywhere on the stack, counted once per sample).
 By default it counts `jdk.ExecutionSample` events; with --alloc it sums
 the `weight` (bytes) of `jdk.ObjectAllocationSample` events instead.
 --method adds a line for each named method even when it is not in the top
-list. It also prints the share of stacks that JFR truncated: a method
-below the cut is missing from those stacks, so its inclusive share reads
-low by up to that much.
+list. --within Class.method keeps only the samples whose stack holds that
+frame, so shares split one operator's time (say
+`--within ObjectAggregationIterator.processInputs`). It also prints the
+share of stacks that JFR truncated: a method below the cut is missing from
+those stacks, so its inclusive share reads low by up to that much.
 
 `jfr print` keeps only the top 5 frames of each stack unless told
 otherwise, which leaves the inclusive shares of everything below the
@@ -122,6 +124,14 @@ def tally(events, event_type="jdk.ExecutionSample"):
     return samples, truncated, total, self_n, incl_n
 
 
+def within(events, wanted):
+    """The events whose stack holds a frame that `wanted` names."""
+    for ev in events:
+        frames = ((ev.get("values") or {}).get("stackTrace") or {}).get("frames") or []
+        if any(matches(frame_name(f), wanted) for f in frames):
+            yield ev
+
+
 def matches(name, wanted):
     """True when `wanted` names the frame; a Scala object's methods (class
     `Name$`) answer to `Name.method` too."""
@@ -136,18 +146,24 @@ def main(argv=None):
                     help="weigh jdk.ObjectAllocationSample bytes instead of counting CPU samples")
     ap.add_argument("--method", action="append", default=[],
                     help="Class.method (simple or qualified class name) to report")
+    ap.add_argument("--within", metavar="CLASS.METHOD",
+                    help="keep only samples whose stack holds this frame")
     a = ap.parse_args(argv)
     event_type = "jdk.ObjectAllocationSample" if a.alloc else "jdk.ExecutionSample"
     with open(a.dump) as f:
-        samples, truncated, total, self_n, incl_n = tally(read_events(f), event_type)
+        events = read_events(f)
+        if a.within:
+            events = within(events, a.within)
+        samples, truncated, total, self_n, incl_n = tally(events, event_type)
+    where = "executor task threads" + (f", within {a.within}" if a.within else "")
     if total == 0:
-        print(f"no executor-thread {event_type} events", file=sys.stderr)
+        print(f"no {event_type} events ({where})", file=sys.stderr)
         return 1
     what = "allocated bytes" if a.alloc else "CPU samples"
     if a.alloc:
-        print(f"allocated: {total} B in {samples} samples (executor task threads)")
+        print(f"allocated: {total} B in {samples} samples ({where})")
     else:
-        print(f"samples: {samples} (executor task threads)")
+        print(f"samples: {samples} ({where})")
     print(f"truncated stacks: {100.0 * truncated / samples:.1f} %")
     for title, counts in (("self", self_n), ("inclusive", incl_n)):
         print(f"\ntop {TOP} by {title} share of {what}")

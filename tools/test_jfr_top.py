@@ -96,6 +96,18 @@ class JfrTopTest(unittest.TestCase):
         self.assertIn(" 75.0 % /   75.0 %  CountMin.fromBytes", out)
         self.assertIn(" 25.0 % /  100.0 %  SortBasedAggregator.next", out)
 
+    def test_within_keeps_samples_holding_the_frame(self):
+        out = self.run_main(self.dump(EVENTS), "--within", "CountMin.addHash",
+                            "--method", "SortBasedAggregator.next")
+        self.assertIn("samples: 2 (executor task threads, within CountMin.addHash)", out)
+        self.assertIn("truncated stacks: 50.0 %", out)
+        self.assertIn("  0.0 % /  100.0 %  SortBasedAggregator.next", out)
+        self.assertNotIn("fromBytes", out)
+        out = self.run_main(self.dump(EVENTS), "--alloc", "--within", "SortBasedAggregator.next")
+        self.assertIn("allocated: 4000 B in 2 samples (executor task threads, within", out)
+        with contextlib.redirect_stderr(io.StringIO()):
+            self.assertEqual(jfr_top.main([self.dump(EVENTS), "--within", "Hll.addHash"]), 1)
+
     def test_method_names(self):
         obj = ("CountMin$.fromBytes", "graft.sketches.CountMin$.fromBytes")
         for wanted in ("CountMin.fromBytes", "CountMin$.fromBytes", "sketches.CountMin.fromBytes",
