@@ -1,7 +1,12 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BindReferences
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, TypedImperativeAggregate}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
@@ -29,6 +34,10 @@ import graft.spark.functions._
  *
  * Inputs: 400 synthesized conversations (seed 11, one hot conversation of
  * 4000 turns), grouped by `conv_id`.
+ *
+ * The `partial.*` goldens pin the bytes one partial buffer serializes to
+ * (what a shuffle or a streaming state store holds), built by `update`
+ * over seeded rows without running a job.
  */
 class SketchGoldenSpec extends AnyFunSuite {
 
@@ -173,6 +182,59 @@ class SketchGoldenSpec extends AnyFunSuite {
       }
     }
     verify(withPlan("split")(named(rows, "sql") ++ named(merged, "sql_merge")))
+  }
+
+  /** Seeded turn rows (text, tool, turn_idx, len, w), with a null tool on
+   * every seventh row; `len` is log-uniform on [10, 1e5), so each of a few
+   * hundred rows lands in a bin of its own or shares it with one or two. */
+  private def partialRows(n: Int, seed: Long): Seq[InternalRow] = {
+    val rnd = new java.util.SplittableRandom(seed)
+    val tools = Seq("search", "python", "browser", "shell")
+    (0 until n).map { i =>
+      val words = Seq.fill(1 + rnd.nextInt(12))(s"w${rnd.nextInt(300)}").mkString(" ")
+      val tool = if (i % 7 == 3) null else UTF8String.fromString(tools(rnd.nextInt(tools.size)))
+      InternalRow(UTF8String.fromString(words), tool, i,
+        math.exp(rnd.nextDouble(math.log(10.0), math.log(1e5))), 1L + rnd.nextInt(3))
+    }
+  }
+
+  test("partial buffers built by update serialize to their goldens") {
+    val schema = StructType(Seq(
+      StructField("text", StringType), StructField("tool", StringType),
+      StructField("turn_idx", IntegerType), StructField("len", DoubleType),
+      StructField("w", LongType)))
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    // the DSL column's aggregate, its inputs bound to the row ordinals
+    def aggregate(c: Column): TypedImperativeAggregate[AnyRef] = {
+      val plan = empty.agg(c).queryExecution.analyzed
+      val fn = plan.expressions.flatMap(_.collect {
+        case a: AggregateExpression => a.aggregateFunction }).head
+      BindReferences.bindReference(fn, plan.children.head.output)
+        .asInstanceOf[TypedImperativeAggregate[AnyRef]]
+    }
+    val len = col("len")
+    val aggs = Seq(
+      "hist_sketch" -> hist_sketch(len, wideLayout),
+      "hist_sketch_packed" -> hist_sketch_packed(len, wideLayout),
+      "hist_sketch_weighted" -> hist_sketch_weighted(len, col("w"), wideLayout),
+      "hll_sketch" -> hll_sketch(col("text"), 10),
+      "cms_sketch" -> cms_sketch(col("tool"), 4, 256),
+      "bloom_sketch" -> bloom_sketch(col("turn_idx"), 1000L),
+      "kll_sketch" -> kll_sketch(len, 100),
+      "tdigest_sketch" -> tdigest_sketch(len, 100.0))
+    // an empty buffer, a conversation-sized group, and a group past the
+    // 128-bin sparse cap whose bins hold one to a few counts each
+    val sizes = Seq("empty" -> 0, "rows20" -> 20, "past_cap" -> 600)
+    verify(for ((name, c) <- aggs; (size, n) <- sizes) yield {
+      val agg = aggregate(c)
+      val buffer = partialRows(n, seed = 31L + n)
+        .foldLeft(agg.createAggregationBuffer())(agg.update)
+      buffer match {
+        case h: Histogram => assert(h.isDense == (size == "past_cap"), s"$name.$size")
+        case _ =>
+      }
+      s"partial.$name.$size" -> Seq("" -> agg.serialize(buffer))
+    })
   }
 
   test("*_merge edge cases: empty input, all-null rows and zero-length blobs yield empty bytes") {
