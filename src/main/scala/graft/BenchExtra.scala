@@ -96,7 +96,7 @@ object BenchExtra {
         measure(s"cms_sketch_$g", n, g)(
           noop(ids.groupBy(key).agg(CountMinSketchAgg(col("id"), 4, 256)))),
         measure(s"hist_sketch_$g", n, g)(
-          noop(ids.groupBy(key).agg(HistogramSketchAgg(col("id"), histLayout, packed = false)))),
+          noop(ids.groupBy(key).agg(HistogramSketchAgg(col("id"), histLayout)))),
         measure(s"hll_merge_$g", blobs, g)(
           noop(blobTable.groupBy(pmod(col("k"), lit(g))).agg(hll_merge(col("hll"))))),
         measure(s"cms_merge_$g", blobs, g)(

@@ -9,9 +9,10 @@ import graft.core._
  * reciprocal (log-uniform) distribution on [1e3, 1e12] (`Constants.java:
  * 19-21`: MIN=1000, RANGE=1e9), pre-generated in memory, recorded into a
  * fresh histogram per round; layouts configured at absolute error 10,
- * relative 1% over [0, 1e12]. Reports min-of-rounds ns/value for the plain
- * 64-bit ("static-class") buffer and the packed adaptive-width buffer, plus
- * resident buffer footprints and a high-group-cardinality memory comparison.
+ * relative 1% over [0, 1e12]. Reports min-of-rounds ns/value for the
+ * histogram grown on demand (plain) and the one preallocated over the whole
+ * layout (static), their resident footprints, and the per-group footprint
+ * at high group cardinality.
  *
  * Run: `sbt -batch "runMain graft.RecordingSpeed"`.
  */
@@ -58,16 +59,12 @@ object RecordingSpeed {
       val layout = mkLayout()
       val (nsStatic, hStatic) = timeNsPerValue(values, () => Histogram.static(layout))
       val (nsPlain, hPlain) = timeNsPerValue(values, () => Histogram(layout))
-      val (nsPacked, hPacked) = timeNsPerValue(values, () => Histogram.packed(layout))
-      require(hPlain == hPacked && hPlain == hStatic, s"$name: buffer variants disagree")
+      require(hPlain == hStatic, s"$name: buffer variants disagree")
       println(f"$name%-18s ${"static"}%-8s $nsStatic%10.2f ${hStatic.estimatedFootprintBytes}%12d")
       println(f"$name%-18s ${"plain"}%-8s $nsPlain%10.2f ${hPlain.estimatedFootprintBytes}%12d")
-      println(f"$name%-18s ${"packed"}%-8s $nsPacked%10.2f ${hPacked.estimatedFootprintBytes}%12d")
       results(s"${name}_static_ns") = nsStatic
       results(s"${name}_plain_ns") = nsPlain
-      results(s"${name}_packed_ns") = nsPacked
       results(s"${name}_plain_bytes") = hPlain.estimatedFootprintBytes.toDouble
-      results(s"${name}_packed_bytes") = hPacked.estimatedFootprintBytes.toDouble
     }
 
     // high-group-cardinality memory: 10^6 sparse per-group buffers (the
@@ -89,12 +86,8 @@ object RecordingSpeed {
       total.toDouble / groups
     }
     val plainPerGroup = groupBytes(() => Histogram(layout))
-    val packedPerGroup = groupBytes(() => Histogram.packed(layout))
-    println(f"per-group buffer bytes at 10^6 groups x 20 values: " +
-      f"plain=$plainPerGroup%.1f packed=$packedPerGroup%.1f " +
-      f"(${plainPerGroup / packedPerGroup}%.1fx smaller)")
+    println(f"per-group buffer bytes at 10^6 groups x 20 values: plain=$plainPerGroup%.1f")
     results("group_buffer_plain_bytes") = plainPerGroup
-    results("group_buffer_packed_bytes") = packedPerGroup
 
     // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
     val json = results.map { case (k, v) =>

@@ -230,8 +230,8 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // 1. CustomLayout bin counts, exploded — exact, SQL-checkable bin by bin.
     //    Every sketch aggregate is a native TypedImperativeAggregate (V1-
-    //    format shuffle buffers + unboxed update); q20 covers the packed
-    //    buffer.
+    //    format shuffle buffers + unboxed update); q20 and q33 call the
+    //    hist_sketch_packed names, kept as aliases of hist_sketch.
     "q01_hist_custom_bins" -> { (s, dir) =>
       table(s, dir, "lineitem")
         .agg(hist_sketch(col("l_extendedprice"), priceLayout).as("sk"))
@@ -742,9 +742,8 @@ object SparkEntry {
     // 20. OpenTelemetry exponential-buckets layout: exploded bin counts,
     //     re-counted by the oracle against the layout's own exact bin
     //     boundaries (verifies the OTel mapping + bound inversion end-to-end).
-    //     Aggregated with the PACKED adaptive-width counter buffer, so the
-    //     mode-0..6 packing is exercised by a driver oracle too (the output
-    //     envelope bytes are identical to the plain buffer by construction).
+    //     Aggregated through hist_sketch_packed, an alias of hist_sketch
+    //     (one counter store), so a driver oracle covers the alias too.
     "q20_otel_bins" -> { (s, dir) =>
       val layout = OtelExponentialLayout(4)
       table(s, dir, "lineitem")
@@ -1235,9 +1234,9 @@ object SparkEntry {
     //     path a SQL-only user hits first. Per-source doc-length bin counts
     //     are re-derived exactly by the oracle from the same boundaries; the
     //     ok-conjunction pins total/min/max to exact SQL aggregates and the
-    //     re-binned total to the row count, and asserts the packed-counter
-    //     SQL builder (hist_sketch_packed_custom) byte-equal to the plain
-    //     one — packing changes buffer representation, not results.
+    //     re-binned total to the row count, and asserts the SQL name kept
+    //     from the removed packed buffer (hist_sketch_packed_custom) byte-
+    //     equal to the plain one: both build one aggregate, computed once.
     "q33_sql_surface" -> { (s, dir) =>
       graft.spark.functions.registerAll(s)
       table(s, dir, "documents").createOrReplaceTempView("graft_documents")

@@ -22,8 +22,7 @@ package graft.core
  * NaN rejected, +-inf allowed (land in under/overflow bins), counter overflow
  * raises ArithmeticException, -0.0 ordered below 0.0 for min/max.
  */
-final class Histogram private (val layout: Layout, packedCounters: Boolean)
-    extends Serializable {
+final class Histogram private (val layout: Layout) extends Serializable {
 
   // Sparse phase (`!dense`): the touched regular bins as `n` (bin index,
   // count) pairs in `keys`/`vals`, ascending by index; every count is > 0.
@@ -32,17 +31,11 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
   private var n: Int = 0
   private var dense: Boolean = false
 
-  // Dense phase: a window of `windowLen` counters starting at bin index
-  // `windowStart`. With `packedCounters` the counters are bit-packed at
-  // 2^mode bits each and the width class upgrades on demand, mode 0..6
-  // (reference semantics dynahist `DynamicHistogram.java: 30-75, 152-221`) —
-  // up to 64x smaller resident buffers at low per-bin counts. Without it the
-  // mode is pinned to 6 (plain 64-bit counters, the reference's
-  // StaticHistogram-style buffer — fastest recording).
+  // Dense phase: a window of `windowLen` plain 64-bit counters starting at
+  // bin index `windowStart` (the reference's StaticHistogram-style buffer).
   private var counts: Array[Long] = SparseCells.NoCounts
   private var windowStart: Int = 0 // bin index of counter 0; meaningful iff windowLen > 0
   private var windowLen: Int = 0
-  private var mode: Int = if (packedCounters) 0 else 6
 
   private var underflowCountVar: Long = 0L
   private var overflowCountVar: Long = 0L
@@ -210,12 +203,13 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
     }
   }
 
-  /** Bit-OR of all regular counters: its mode is the counters' width class. */
+  /** Bit-OR of all regular counters: [[HistogramSerde.minimalMode]] takes
+   * the V0 counter width class from it. */
   private[core] def regularCountMask: Long = {
     var mask = 0L
     if (dense) {
       var i = 0
-      while (i < windowLen) { mask |= counterAt(i); i += 1 }
+      while (i < windowLen) { mask |= counts(i); i += 1 }
     } else {
       var k = 0
       while (k < n) { mask |= vals(k); k += 1 }
@@ -245,17 +239,15 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
   }
 
   /** Replaces the list with a counter window of `len` counters from bin
-   * `start` holding the list's counts, at the width class they need when
-   * packed. */
+   * `start` holding the list's counts. */
   private def installWindow(start: Int, len: Int): Unit = {
-    if (packedCounters) mode = Histogram.modeFor(regularCountMask)
-    counts = new Array[Long](wordsFor(len, mode))
+    counts = new Array[Long](len)
     windowStart = start
     windowLen = len
     dense = true
     var k = 0
     while (k < n) {
-      setCounterAt(keys(k) - start, vals(k))
+      counts(keys(k) - start) = vals(k)
       k += 1
     }
     keys = SparseCells.NoKeys
@@ -266,67 +258,16 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
   /** True once the histogram has moved to its counter window. */
   private[graft] def isDense: Boolean = dense
 
-  // ---------------------------------------------------------------------
-  // packed counter storage primitives (mode 6 = plain long[], no packing)
-  // ---------------------------------------------------------------------
-
-  @inline private def wordsFor(len: Int, m: Int): Int =
-    if (m == 6) len else (((len.toLong << m) + 63L) >>> 6).toInt
-
-  /** Counter at window position `pos` (0 <= pos < windowLen). Counter widths
-   * are powers of two <= 64 bits, so a counter never straddles words. */
-  @inline private def counterAt(pos: Int): Long = {
-    if (mode == 6) counts(pos)
-    else {
-      val bitPos = pos.toLong << mode
-      (counts((bitPos >>> 6).toInt) >>> (bitPos & 63L).toInt) & Histogram.ModeMask(mode)
-    }
-  }
-
-  @inline private def setCounterAt(pos: Int, v: Long): Unit = {
-    if (mode == 6) counts(pos) = v
-    else {
-      val bitPos = pos.toLong << mode
-      val w = (bitPos >>> 6).toInt
-      val s = (bitPos & 63L).toInt
-      val mask = Histogram.ModeMask(mode)
-      counts(w) = (counts(w) & ~(mask << s)) | ((v & mask) << s)
-    }
-  }
-
-  /** Adds `delta` to the counter at `pos`, upgrading the counter bit-width
-   * class when the new value no longer fits (reference
-   * `DynamicHistogram.java:152-221`). */
+  /** Adds `delta` to the counter at window position `pos`. */
   private def addToCounterAt(pos: Int, delta: Long): Unit = {
-    val updated = counterAt(pos) + delta
+    val updated = counts(pos) + delta
     if (updated < 0) throw new ArithmeticException("counter overflow")
-    if (mode < 6 && updated > Histogram.ModeMask(mode)) {
-      upgradeMode(Histogram.modeFor(updated))
-    }
-    setCounterAt(pos, updated)
-  }
-
-  private def upgradeMode(newMode: Int): Unit = {
-    val fresh = new Array[Long](wordsFor(windowLen, newMode))
-    var i = 0
-    while (i < windowLen) {
-      val v = counterAt(i)
-      if (v != 0L) {
-        if (newMode == 6) fresh(i) = v
-        else {
-          val bitPos = i.toLong << newMode
-          fresh((bitPos >>> 6).toInt) |= (v << (bitPos & 63L).toInt)
-        }
-      }
-      i += 1
-    }
-    counts = fresh
-    mode = newMode
+    counts(pos) = updated
   }
 
   private def growWindow(idx: Int): Unit = {
     if (windowLen == 0) {
-      counts = new Array[Long](wordsFor(1, mode))
+      counts = new Array[Long](1)
       windowStart = idx
       windowLen = 1
       return
@@ -351,20 +292,8 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
       }
     }
     val newLen = newEnd - newStart
-    val fresh = new Array[Long](wordsFor(newLen, mode))
-    val off = curStart - newStart
-    if (mode == 6) System.arraycopy(counts, 0, fresh, off, windowLen)
-    else {
-      var i = 0
-      while (i < windowLen) {
-        val v = counterAt(i)
-        if (v != 0L) {
-          val bitPos = (i + off).toLong << mode
-          fresh((bitPos >>> 6).toInt) |= (v << (bitPos & 63L).toInt)
-        }
-        i += 1
-      }
-    }
+    val fresh = new Array[Long](newLen)
+    System.arraycopy(counts, 0, fresh, curStart - newStart, windowLen)
     counts = fresh
     windowStart = newStart
     windowLen = newLen
@@ -382,7 +311,7 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
   private def regularCountAt(binIndex: Int): Long =
     if (dense) {
       val pos = binIndex - windowStart
-      if (pos >= 0 && pos < windowLen) counterAt(pos) else 0L
+      if (pos >= 0 && pos < windowLen) counts(pos) else 0L
     } else {
       val k = java.util.Arrays.binarySearch(keys, 0, n, binIndex)
       if (k >= 0) vals(k) else 0L
@@ -392,7 +321,7 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
   private def nextNonEmptyRegular(idx: Int): Int =
     if (dense) {
       var pos = math.max(idx + 1, windowStart) - windowStart
-      while (counterAt(pos) == 0L) pos += 1
+      while (counts(pos) == 0L) pos += 1
       windowStart + pos
     } else {
       val k = java.util.Arrays.binarySearch(keys, 0, n, idx + 1)
@@ -403,7 +332,7 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
   private def previousNonEmptyRegular(idx: Int): Int =
     if (dense) {
       var pos = math.min(idx - 1, windowStart + windowLen - 1) - windowStart
-      while (counterAt(pos) == 0L) pos -= 1
+      while (counts(pos) == 0L) pos -= 1
       windowStart + pos
     } else {
       val k = java.util.Arrays.binarySearch(keys, 0, n, idx - 1)
@@ -441,16 +370,16 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
       } else if (other.windowLen > 0) {
         // locate other's non-empty span to avoid over-allocating
         var lo = 0
-        while (lo < other.windowLen && other.counterAt(lo) == 0L) lo += 1
+        while (lo < other.windowLen && other.counts(lo) == 0L) lo += 1
         var hi = other.windowLen - 1
-        while (hi >= lo && other.counterAt(hi) == 0L) hi -= 1
+        while (hi >= lo && other.counts(hi) == 0L) hi -= 1
         if (lo <= hi) {
           // a dense side with counts densifies this one
           if (dense) ensureWindow(other.windowStart + lo, other.windowStart + hi)
           else densify(other.windowStart + lo, other.windowStart + hi)
           var i = lo
           while (i <= hi) {
-            val c = other.counterAt(i)
+            val c = other.counts(i)
             if (c != 0L) addToCounterAt(other.windowStart + i - windowStart, c)
             i += 1
           }
@@ -467,7 +396,7 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
   private def ensureWindow(fromIdx: Int, toIdx: Int): Unit = {
     if (windowLen == 0) {
       windowLen = toIdx - fromIdx + 1
-      counts = new Array[Long](wordsFor(windowLen, mode))
+      counts = new Array[Long](windowLen)
       windowStart = fromIdx
     } else {
       if (fromIdx < windowStart) growWindow(fromIdx)
@@ -682,7 +611,7 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
    * (the stored bins are bounded by actual use, so this iterates them
    * rather than the full index range). */
   private def regularCountsIn(h: Histogram): Boolean =
-    if (dense) (0 until windowLen).forall(i => counterAt(i) == h.regularCountAt(windowStart + i))
+    if (dense) (0 until windowLen).forall(i => counts(i) == h.regularCountAt(windowStart + i))
     else (0 until n).forall(k => vals(k) == h.regularCountAt(keys(k)))
 
   override def hashCode(): Int = {
@@ -698,16 +627,10 @@ final class Histogram private (val layout: Layout, packedCounters: Boolean)
       s"underflow=$underflowCountVar, overflow=$overflowCountVar)"
 
   /** Rough in-memory footprint: sparse list (4 + 8 bytes an entry) or
-   * counter window (packed or plain words) + fixed fields. */
+   * counter window (8 bytes a counter) + fixed fields. */
   def estimatedFootprintBytes: Long =
     16L + keys.length * 4L + vals.length * 8L + counts.length.toLong * 8L +
       4L + 3L * 8L + 2L * 8L
-
-  /** Current counter bit-width class: 2^mode bits per regular counter
-   * (always 6 for the plain-long buffer); while sparse, the class the
-   * window would take. */
-  def counterMode: Int =
-    if (dense || !packedCounters) mode else Histogram.modeFor(regularCountMask)
 
   /** Sets the non-regular state of a histogram whose regular counts a
    * decoder has recorded. */
@@ -734,48 +657,28 @@ object Histogram {
   /** No regular bin: regular bins lie above the underflow bin. */
   private final val NotRegular = Int.MinValue
 
-  /** Largest counter value representable at each mode (2^(2^m) - 1). */
-  private[core] val ModeMask: Array[Long] =
-    Array(1L, 3L, 0xfL, 0xffL, 0xffffL, 0xffffffffL, -1L)
+  /** An empty histogram: sparse until more than [[SparseCells.cap]] bins
+   * are touched, then one window of plain 64-bit counters grown on demand. */
+  def apply(layout: Layout): Histogram = new Histogram(layout)
 
-  /** Smallest mode whose counter width fits `v` (also valid on a bit-OR mask
-   * of counters — the reference's requiredMode, `AbstractHistogram.java`). */
-  private[core] def modeFor(v: Long): Int =
-    if (v >= 0 && v <= 1L) 0
-    else if (v <= 3L && v >= 0) 1
-    else if (v <= 0xfL && v >= 0) 2
-    else if (v <= 0xffL && v >= 0) 3
-    else if (v <= 0xffffL && v >= 0) 4
-    else if (v <= 0xffffffffL && v >= 0) 5
-    else 6
-
-  /** Plain 64-bit counters, sparse until [[SparseCells.cap]] bins, then
-   * one window — fastest recording (StaticHistogram-class buffer, dynahist
-   * `StaticHistogram.java:26-66`). */
-  def apply(layout: Layout): Histogram = new Histogram(layout, packedCounters = false)
-
-  /** Preallocated plain counter buffer over the layout's ENTIRE regular bin
-   * range (dynahist `StaticHistogram.java:26-66`): recording never checks or
-   * grows the window and is never sparse, trading memory (8 bytes x
-   * regularBinCount up front) for the reference's fastest recording path.
-   * Only sensible for layouts with a bounded regular range. */
+  /** A histogram whose window is preallocated over the layout's ENTIRE
+   * regular bin range (dynahist `StaticHistogram.java:26-66`): it is dense
+   * from the start and the window never grows, trading memory (8 bytes x
+   * regularBinCount up front) for growth-free recording; `addValue` still
+   * checks the window bounds. Only sensible for layouts with a bounded
+   * regular range. */
   def static(layout: Layout): Histogram = {
     require(
       layout.regularBinCount <= Int.MaxValue / 8,
       s"regular bin range too large to preallocate: ${layout.regularBinCount}")
-    val h = new Histogram(layout, packedCounters = false)
+    val h = new Histogram(layout)
     h.preallocateFullRange()
     h
   }
 
-  /** Adaptive bit-width counter buffer: once past the sparse phase,
-   * 2^mode bits per counter, mode grows 0..6 on demand (dynahist
-   * `DynamicHistogram.java:30-75, 152-221`) — up to 64x smaller resident
-   * windows at low per-bin counts, identical observable behavior. Prefer
-   * for very high group cardinality aggregations where millions of
-   * per-group buffers with more than 128 touched bins are resident at
-   * once. */
-  def packed(layout: Layout): Histogram = new Histogram(layout, packedCounters = true)
+  /** Alias of [[apply]]: the histogram has one counter store, with no
+   * separate bit-packed form. */
+  def packed(layout: Layout): Histogram = apply(layout)
 }
 
 /** Immutable snapshot of one histogram bin. */

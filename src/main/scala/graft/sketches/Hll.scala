@@ -183,8 +183,8 @@ object Hll {
 
   /**
    * Compact aggregation-buffer encoding for partial aggregation at extreme
-   * group cardinality (the adaptive-width idea behind the packed histogram
-   * buffers, applied to HLL): when few registers are set, emit
+   * group cardinality (the histogram V1 payload's sparse form, applied to
+   * HLL): when few registers are set, emit
    * [-(precision), varint nSet, (varint indexGap, rank byte)*] — about 3
    * bytes per SET register instead of the dense 1 + 2^p array, so a group
    * that saw a handful of items ships tens of bytes across the shuffle

@@ -2,9 +2,9 @@ package graft.sketches
 
 /**
  * LEB128 unsigned varints for the COMPACT aggregation-buffer encodings of
- * the companion sketches (the packed-histogram move applied to the
- * partial buffers crossing the shuffle: a group that saw 3 distinct items
- * ships ~10 bytes, not a dense 2^p register array). The STORED wire
+ * the companion sketches (the histogram V1 payload's sparse form applied
+ * to the partial buffers crossing the shuffle: a group that saw 3 distinct
+ * items ships ~10 bytes, not a dense 2^p register array). The STORED wire
  * formats (`toBytes`) stay dense; each sketch's `fromBytes` dispatches on
  * a marker byte, so both forms decode to identical state.
  *

@@ -124,12 +124,6 @@ object GraftExtensions {
     args => HistogramSketchAgg(Cast(args.head, DoubleType), mkLayout(args.tail))
       .toAggregateExpression()
 
-  private def packedSketchAgg(fn: String, mkLayout: Seq[Expression] => Layout)
-      : Seq[Expression] => Expression =
-    args => HistogramSketchAgg(
-      Cast(args.head, DoubleType), mkLayout(args.tail), packed = true)
-      .toAggregateExpression()
-
   /** (value, weight, layout params...) — the count-weighted native aggregate
    * (reference `addValue(double, long)`, Histogram.java:283-290). */
   private def weightedSketchAgg(fn: String, mkLayout: Seq[Expression] => Layout)
@@ -263,10 +257,10 @@ object GraftExtensions {
       expectArgs("hist_sketch_weighted_custom", 3, atLeast = true)(weightedSketchAgg(
         "hist_sketch_weighted_custom",
         a => CustomLayout(a.map(litDouble("hist_sketch_weighted_custom", _)).toArray))),
-    // packed-counter histogram aggregates (adaptive bit-width per-group
-    // buffers — the high-group-cardinality memory path, SQL-callable)
+    // names kept from the removed adaptive-width buffer: the same
+    // aggregate as hist_sketch_log_quadratic / hist_sketch_custom
     "hist_sketch_packed_log_quadratic" ->
-      expectArgs("hist_sketch_packed_log_quadratic", 5)(packedSketchAgg(
+      expectArgs("hist_sketch_packed_log_quadratic", 5)(sketchAgg(
         "hist_sketch_packed_log_quadratic",
         a => LogQuadraticLayout(
           litDouble("hist_sketch_packed_log_quadratic", a(0)),
@@ -274,7 +268,7 @@ object GraftExtensions {
           litDouble("hist_sketch_packed_log_quadratic", a(2)),
           litDouble("hist_sketch_packed_log_quadratic", a(3))))),
     "hist_sketch_packed_custom" ->
-      expectArgs("hist_sketch_packed_custom", 2, atLeast = true)(packedSketchAgg(
+      expectArgs("hist_sketch_packed_custom", 2, atLeast = true)(sketchAgg(
         "hist_sketch_packed_custom",
         a => CustomLayout(a.map(litDouble("hist_sketch_packed_custom", _)).toArray))),
     // parameterized companion-sketch aggregates: accuracy parameters are

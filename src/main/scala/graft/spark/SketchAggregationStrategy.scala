@@ -13,9 +13,9 @@ import graft.spark.expressions.GeneratedUpdate
 /**
  * Plans the map-side phase of a batch aggregate onto the codegen'd
  * [[PartialSketchAggregateExec]] when every aggregate is an order-
- * independent sketch ([[GeneratedUpdate]]: `hist_sketch` and its packed
- * and weighted forms, `hll_sketch`, `cms_sketch`, `cms_sketch_weighted`,
- * `bloom_sketch`) with no DISTINCT or FILTER and with column inputs (what
+ * independent sketch ([[GeneratedUpdate]]: `hist_sketch` (which
+ * `hist_sketch_packed` also builds) and `hist_sketch_weighted`,
+ * `hll_sketch`, `cms_sketch`, `cms_sketch_weighted`, `bloom_sketch`) with no DISTINCT or FILTER and with column inputs (what
  * [[PullOutSketchInputs]] leaves), and the grouping is empty or one
  * integral column. The plan is Spark's own two-phase plan
  * (`AggUtils.planAggregateWithoutDistinct`) with only the partial

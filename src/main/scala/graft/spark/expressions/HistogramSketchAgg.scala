@@ -32,8 +32,7 @@ case class HistogramSketchAgg(
     child: Expression,
     layout: Layout,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0,
-    packed: Boolean = false)
+    inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[Histogram] with GeneratedUpdate {
 
   override def children: Seq[Expression] = Seq(child)
@@ -42,12 +41,7 @@ case class HistogramSketchAgg(
 
   override def dataType: DataType = BinaryType
 
-  // packed = adaptive bit-width counters for the PRE-shuffle partial buffers.
-  // It matters only once a buffer has left the sparse phase (more than 128
-  // touched bins): sparse lists are the same either way. Post-shuffle
-  // deserialize rebuilds plain counters — result bytes are identical
-  override def createAggregationBuffer(): Histogram =
-    if (packed) Histogram.packed(layout) else Histogram(layout)
+  override def createAggregationBuffer(): Histogram = Histogram(layout)
 
   /** Unboxed hot path: after Spark binds references, a plain double column
    * arrives as a BoundReference — read it with getDouble instead of eval()
@@ -105,11 +99,10 @@ object HistogramSketchAgg {
   import org.apache.spark.sql.graftbridge.ColumnBridge
   import graft.spark.PullOutSketchInputs
 
-  /** Column constructor over `c` cast to double; `packed` selects
-   * adaptive bit-width partial buffers. */
-  def apply(c: Column, layout: Layout, packed: Boolean): Column =
+  /** Column constructor over `c` cast to double. */
+  def apply(c: Column, layout: Layout): Column =
     PullOutSketchInputs.column(
-      HistogramSketchAgg(ColumnBridge.expression(c.cast("double")), layout, packed = packed))
+      HistogramSketchAgg(ColumnBridge.expression(c.cast("double")), layout))
 }
 
 /**

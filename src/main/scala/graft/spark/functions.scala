@@ -28,13 +28,12 @@ object functions {
 
   /** Error-bounded histogram sketch of a column cast to double. */
   def hist_sketch(c: Column, layout: Layout): Column =
-    HistogramSketchAgg(c, layout, packed = false)
+    HistogramSketchAgg(c, layout)
 
-  /** Same aggregation with adaptive bit-width (packed) counter buffers —
-   * up to 64x smaller resident per-group state; prefer when millions of
-   * group buffers are live in the aggregation hash map at once. */
-  def hist_sketch_packed(c: Column, layout: Layout): Column =
-    HistogramSketchAgg(c, layout, packed = true)
+  /** Alias of [[hist_sketch]]: the histogram has one counter store, so
+   * this builds the same aggregate, and Spark computes the two over one
+   * input once. */
+  def hist_sketch_packed(c: Column, layout: Layout): Column = hist_sketch(c, layout)
 
   /** Alias of [[hist_sketch]]. */
   def hist_sketch_binary(c: Column, layout: Layout): Column = hist_sketch(c, layout)

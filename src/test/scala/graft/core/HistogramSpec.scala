@@ -240,9 +240,8 @@ class HistogramSpec extends AnyFunSuite {
       Gen.listOfN(n, Gen.zip(Gen.frequency(1 -> special, 6 -> regular), weight)))
   }
 
-  private def hist(l: Layout, adds: Seq[(Double, Long)], packed: Boolean,
-      dense: Boolean): Histogram = {
-    val h = if (packed) Histogram.packed(l) else Histogram(l)
+  private def hist(l: Layout, adds: Seq[(Double, Long)], dense: Boolean): Histogram = {
+    val h = Histogram(l)
     if (dense) h.densify()
     adds.foreach { case (v, w) => if (w == 1L) h.addValue(v) else h.addValue(v, w) }
     h
@@ -253,31 +252,30 @@ class HistogramSpec extends AnyFunSuite {
       LogQuadraticLayout(1e-5, 1e-2, 0, 1e9) -> Gen.chooseNum(-5.0, 20.8).map(math.exp),
       // 101 regular bins: a cap of 12
       IntegerLayout(-50, 50) -> Gen.chooseNum(-60, 60).map(_.toDouble))
-    for ((l, regular) <- layouts; packed <- Seq(false, true)) {
+    for ((l, regular) <- layouts) {
       val cap = SparseCells.cap(l.regularBinCount.toInt)
       val seen = scala.collection.mutable.Set.empty[String]
       val adds = genAdds(regular, cap)
       // no shrinking: each step re-runs every check, for lists of up to 3 x cap adds
-      check(s"$l packed=$packed")(Prop.forAllNoShrink(adds, adds) { (a, b) =>
-        val sa = hist(l, a, packed, dense = false)
-        val sb = hist(l, b, packed, dense = false)
-        val da = hist(l, a, packed, dense = true)
-        val db = hist(l, b, packed, dense = true)
-        val union = hist(l, a ++ b, packed, dense = true)
+      check(s"$l")(Prop.forAllNoShrink(adds, adds) { (a, b) =>
+        val sa = hist(l, a, dense = false)
+        val sb = hist(l, b, dense = false)
+        val da = hist(l, a, dense = true)
+        val db = hist(l, b, dense = true)
+        val union = hist(l, a ++ b, dense = true)
         val (binsA, binsB, binsUnion) = (regularBins(da), regularBins(db), regularBins(union))
         seen += (if (binsA <= cap) "sparse" else "dense")
         if (binsA <= cap / 2 && binsB <= cap / 2) seen += "merge under cap"
         if (binsA <= cap && binsB <= cap && binsUnion > cap) seen += "merge crossing cap"
         // the form follows the count of touched bins
         da.isDense && sa.isDense == (binsA > cap) &&
-        sameHist(sa, da) && sa.counterMode == da.counterMode &&
-        sameHist(sa, hist(l, a, !packed, dense = false)) &&
+        sameHist(sa, da) &&
         // sparse+sparse, sparse+dense, dense+sparse, each against dense+dense
-        sameHist(hist(l, a, packed, dense = false).add(sb), union) &&
-        (hist(l, a, packed, dense = false).add(sb).isDense == (binsUnion > cap)) &&
-        sameHist(hist(l, a, packed, dense = false).add(db), union) &&
-        sameHist(hist(l, a, packed, dense = true).add(sb), union) &&
-        sameHist(hist(l, a, packed, dense = true).add(db), union) &&
+        sameHist(hist(l, a, dense = false).add(sb), union) &&
+        (hist(l, a, dense = false).add(sb).isDense == (binsUnion > cap)) &&
+        sameHist(hist(l, a, dense = false).add(db), union) &&
+        sameHist(hist(l, a, dense = true).add(sb), union) &&
+        sameHist(hist(l, a, dense = true).add(db), union) &&
         // decoded payloads take the form their count of nonzero bins calls for
         {
           val back = HistogramSerde.fromBytes(l, HistogramSerde.toBytes(sa))
@@ -290,7 +288,7 @@ class HistogramSpec extends AnyFunSuite {
         }
       })
       assert(seen("sparse") && seen("dense") && seen("merge under cap") &&
-        seen("merge crossing cap"), s"$l packed=$packed: $seen")
+        seen("merge crossing cap"), s"$l: $seen")
     }
   }
 
@@ -327,45 +325,6 @@ class SciPyQuantileSpec extends AnyFunSuite {
     assert(est(1.0) == 5.0)
   }
 
-  test("packed counters: identical observable behavior, mode upgrades, less memory") {
-    val layout = LogQuadraticLayout(1e-3, 1e-2, 0, 1e6)
-    val plain = Histogram(layout)
-    val packed = Histogram.packed(layout)
-    assert(packed.counterMode == 0)
-    val rnd = new java.util.SplittableRandom(99L)
-    // log-uniform values: many bins at low counts — the packed sweet spot
-    (0 until 5000).foreach { _ =>
-      val v = math.exp(rnd.nextDouble() * math.log(1e6))
-      plain.addValue(v)
-      packed.addValue(v)
-    }
-    assert(packed == plain && plain == packed)
-    assert(packed.counterMode < 6, s"mode ${packed.counterMode} did not stay packed")
-    assert(
-      packed.estimatedFootprintBytes < plain.estimatedFootprintBytes / 2,
-      s"packed ${packed.estimatedFootprintBytes} vs plain ${plain.estimatedFootprintBytes}")
-    // serde round-trip + nonEmptyBins parity
-    assert(packed.nonEmptyBins == plain.nonEmptyBins)
-    val bytes = HistogramSerde.toBytes(packed)
-    assert(HistogramSerde.toBytes(plain).sameElements(bytes))
-    assert(HistogramSerde.fromBytes(layout, bytes) == packed)
-    // weighted adds force mode upgrades through every class up to 6
-    val p2 = Histogram.packed(layout)
-    Seq(1L, 3L, 12L, 200L, 60000L, 4000000000L, Long.MaxValue / 2).foreach { w =>
-      p2.addValue(5.0, w)
-    }
-    val pl2 = Histogram(layout)
-    Seq(1L, 3L, 12L, 200L, 60000L, 4000000000L, Long.MaxValue / 2).foreach { w =>
-      pl2.addValue(5.0, w)
-    }
-    assert(p2.counterMode == 6)
-    assert(p2 == pl2)
-    // merging packed into plain and vice versa stays exact
-    val m1 = Histogram(layout).add(packed).add(p2)
-    val m2 = Histogram.packed(layout).add(plain).add(pl2)
-    assert(m1 == m2)
-  }
-
   test("static (preallocated) histogram behaves identically to the windowed one") {
     val layout = LogQuadraticLayout(1e-3, 1e-2, 0, 1e6)
     val st = Histogram.static(layout)
@@ -383,18 +342,19 @@ class SciPyQuantileSpec extends AnyFunSuite {
     assert(st.estimatedFootprintBytes > dyn.estimatedFootprintBytes)
   }
 
-  test("packed counters: window growth in both directions preserves counts") {
+  test("window growth in both directions preserves counts") {
     val layout = LogQuadraticLayout(1e-6, 1e-2, -1e6, 1e6)
-    val packed = Histogram.packed(layout)
-    val plain = Histogram(layout)
+    val h = Histogram(layout)
+    val expected = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
     val rnd = new java.util.SplittableRandom(7L)
     // alternate far-apart values so the window repeatedly grows on both ends
     (0 until 2000).foreach { i =>
       val v = if (i % 2 == 0) rnd.nextDouble(1e-5, 1.0) else -rnd.nextDouble(1e-5, 1.0) * 1e5
-      packed.addValue(v)
-      plain.addValue(v)
+      h.addValue(v)
+      expected(layout.mapToBinIndex(v)) += 1L
     }
-    assert(packed == plain)
-    assert(packed.nonEmptyBins == plain.nonEmptyBins)
+    assert(h.isDense && h.totalCount == 2000L)
+    assert(h.nonEmptyBins.map(b => b.binIndex -> b.binCount) == expected.toVector.sorted)
+    expected.foreach { case (idx, c) => assert(h.countAt(idx) == c, s"bin $idx") }
   }
 }

@@ -89,8 +89,6 @@ class EmptyBufferSpec extends AnyFunSuite {
       }
       for ((agg, fresh) <- Seq[(TypedImperativeAggregate[Histogram], () => Histogram)](
           HistogramSketchAgg(Literal(0.0), layout) -> (() => Histogram(layout)),
-          HistogramSketchAgg(Literal(0.0), layout, packed = true) ->
-            (() => Histogram.packed(layout)),
           HistogramSketchWeightedAgg(Literal(0.0), Literal(1L), layout) ->
             (() => Histogram(layout)))) {
         checkAdoption[Histogram](s"${agg.prettyName} $ns", agg, hists, fresh,
@@ -257,7 +255,6 @@ class EmptyBufferSpec extends AnyFunSuite {
     val weight = BoundReference(1, LongType, nullable = true)
     for (agg <- Seq[TypedImperativeAggregate[Histogram]](
         HistogramSketchAgg(value, layout),
-        HistogramSketchAgg(value, layout, packed = true),
         HistogramSketchWeightedAgg(value, weight, layout))) {
       val name = agg.prettyName
       // two partials of ten rows, serialized, adopted and merged

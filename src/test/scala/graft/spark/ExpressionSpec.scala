@@ -584,8 +584,8 @@ class ExpressionSpec extends AnyFunSuite {
       .collect()(0).getDouble(0)
     assert(math.abs(rankOf(kq) - 0.5) < 0.05, s"kll p50 rank ${rankOf(kq)}")
 
-    // packed-counter histogram SQL form: byte-identical to the plain native
-    // aggregate (packing changes the buffer representation, not the result)
+    // the hist_sketch_packed_* SQL names are aliases: byte-identical to the
+    // plain native aggregate
     assert(java.util.Arrays.equals(
       bytes("SELECT hist_sketch_packed_log_quadratic(v, 1e-3, 1e-2, 0.0, 1e6) FROM sql_comp"),
       bytes("SELECT hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0.0, 1e6) FROM sql_comp")))

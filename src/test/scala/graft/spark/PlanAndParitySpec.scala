@@ -184,6 +184,39 @@ class PlanAndParitySpec extends AnyFunSuite {
     }
   }
 
+  test("hist_sketch_packed names build hist_sketch's aggregate, planned once beside it") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    import spark.implicits._
+    def aggregateFunctions(df: DataFrame) = df.queryExecution.analyzed.expressions
+      .flatMap(_.collect { case a: AggregateExpression => a.aggregateFunction })
+    def partials(df: DataFrame): Int =
+      "partial_hist_sketch\\(".r.findAllIn(df.queryExecution.sparkPlan.toString).size
+    val df = Seq(("a", 1L, 3.0), ("a", 2L, 40.0), ("b", 1L, 700.0)).toDF("source", "k", "v")
+    // DSL: one input, both names, one aggregate in the plan
+    val dsl = df.groupBy(col("k"))
+      .agg(hist_sketch(col("v"), layout).as("sk"), hist_sketch_packed(col("v"), layout).as("skp"))
+    val Seq(plain, packed) = aggregateFunctions(dsl)
+    assert(packed == plain)
+    assert(partials(dsl) == 1, dsl.queryExecution.sparkPlan)
+    // SQL: both builders, and a q33-shaped query over a string key
+    functions.registerAll(spark)
+    df.createOrReplaceTempView("packed_alias_t")
+    for ((packedCall, plainCall) <- Seq(
+        "hist_sketch_packed_log_quadratic(v, 1e-3, 1e-2, 0.0, 1e6)" ->
+          "hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0.0, 1e6)",
+        "hist_sketch_packed_custom(v, 10.0, 500.0, 900.0)" ->
+          "hist_sketch_custom(v, 10.0, 500.0, 900.0)")) {
+      val q = spark.sql(s"SELECT source, $plainCall AS sk, $packedCall AS skp " +
+        "FROM packed_alias_t GROUP BY source")
+      val Seq(p, pk) = aggregateFunctions(q)
+      assert(pk == p, packedCall)
+      assert(partials(q) == 1, q.queryExecution.sparkPlan)
+      assert(q.collect().forall(r =>
+        r.getAs[Array[Byte]]("sk").sameElements(r.getAs[Array[Byte]]("skp"))), packedCall)
+    }
+  }
+
   test("GraftExtensions installs the SQL surface via withExtensions") {
     val prior = spark // ensure shared context exists
     SparkSession.clearActiveSession()
