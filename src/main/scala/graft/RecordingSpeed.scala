@@ -72,20 +72,17 @@ object RecordingSpeed {
     val layout = LogQuadraticLayout(10, 0.01, 0, 1e12)
     val rnd = new java.util.SplittableRandom(7L)
     val lnRange = math.log(1e9)
-    def groupBytes(mk: () => Histogram): Double = {
-      var total = 0L
-      var g = 0
-      val groups = 1000000
-      while (g < groups) {
-        val h = mk()
-        var i = 0
-        while (i < 20) { h.addValue(1000.0 * math.exp(rnd.nextDouble() * lnRange)); i += 1 }
-        total += h.estimatedFootprintBytes
-        g += 1
-      }
-      total.toDouble / groups
+    val groups = 1000000
+    var total = 0L
+    var g = 0
+    while (g < groups) {
+      val h = Histogram(layout)
+      var i = 0
+      while (i < 20) { h.addValue(1000.0 * math.exp(rnd.nextDouble() * lnRange)); i += 1 }
+      total += h.estimatedFootprintBytes
+      g += 1
     }
-    val plainPerGroup = groupBytes(() => Histogram(layout))
+    val plainPerGroup = total.toDouble / groups
     println(f"per-group buffer bytes at 10^6 groups x 20 values: plain=$plainPerGroup%.1f")
     results("group_buffer_plain_bytes") = plainPerGroup
 

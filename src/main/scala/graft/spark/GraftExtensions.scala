@@ -124,6 +124,17 @@ object GraftExtensions {
     args => HistogramSketchAgg(Cast(args.head, DoubleType), mkLayout(args.tail))
       .toAggregateExpression()
 
+  /** `fn(v, absoluteLimit, relativeLimit, lo, hi)` over a
+   * [[LogQuadraticLayout]]. */
+  private def logQuadraticSketchAgg(fn: String): Seq[Expression] => Expression =
+    expectArgs(fn, 5)(sketchAgg(fn, a => LogQuadraticLayout(
+      litDouble(fn, a(0)), litDouble(fn, a(1)), litDouble(fn, a(2)), litDouble(fn, a(3)))))
+
+  /** `fn(v, boundaries...)` over a [[CustomLayout]]. */
+  private def customSketchAgg(fn: String): Seq[Expression] => Expression =
+    expectArgs(fn, 2, atLeast = true)(
+      sketchAgg(fn, a => CustomLayout(a.map(litDouble(fn, _)).toArray)))
+
   /** (value, weight, layout params...) — the count-weighted native aggregate
    * (reference `addValue(double, long)`, Histogram.java:283-290). */
   private def weightedSketchAgg(fn: String, mkLayout: Seq[Expression] => Layout)
@@ -217,13 +228,7 @@ object GraftExtensions {
       args => HistStat(args(0), HistStat.Overflow)),
     "hist_bins" -> expectArgs("hist_bins", 1)(args => HistBins(args(0))),
     // layout-parameterized histogram aggregates (value, layout params...)
-    "hist_sketch_log_quadratic" -> expectArgs("hist_sketch_log_quadratic", 5)(sketchAgg(
-      "hist_sketch_log_quadratic",
-      a => LogQuadraticLayout(
-        litDouble("hist_sketch_log_quadratic", a(0)),
-        litDouble("hist_sketch_log_quadratic", a(1)),
-        litDouble("hist_sketch_log_quadratic", a(2)),
-        litDouble("hist_sketch_log_quadratic", a(3))))),
+    "hist_sketch_log_quadratic" -> logQuadraticSketchAgg("hist_sketch_log_quadratic"),
     "hist_sketch_log_linear" -> expectArgs("hist_sketch_log_linear", 5)(sketchAgg(
       "hist_sketch_log_linear",
       a => LogLinearLayout(
@@ -241,9 +246,7 @@ object GraftExtensions {
     "hist_sketch_otel" -> expectArgs("hist_sketch_otel", 2)(sketchAgg(
       "hist_sketch_otel",
       a => OtelExponentialLayout(litInt("hist_sketch_otel", a(0))))),
-    "hist_sketch_custom" -> expectArgs("hist_sketch_custom", 2, atLeast = true)(sketchAgg(
-      "hist_sketch_custom",
-      a => CustomLayout(a.map(litDouble("hist_sketch_custom", _)).toArray))),
+    "hist_sketch_custom" -> customSketchAgg("hist_sketch_custom"),
     // count-weighted variants: (value, weight, layout params...)
     "hist_sketch_weighted_log_quadratic" ->
       expectArgs("hist_sketch_weighted_log_quadratic", 6)(weightedSketchAgg(
@@ -259,18 +262,8 @@ object GraftExtensions {
         a => CustomLayout(a.map(litDouble("hist_sketch_weighted_custom", _)).toArray))),
     // names kept from the removed adaptive-width buffer: the same
     // aggregate as hist_sketch_log_quadratic / hist_sketch_custom
-    "hist_sketch_packed_log_quadratic" ->
-      expectArgs("hist_sketch_packed_log_quadratic", 5)(sketchAgg(
-        "hist_sketch_packed_log_quadratic",
-        a => LogQuadraticLayout(
-          litDouble("hist_sketch_packed_log_quadratic", a(0)),
-          litDouble("hist_sketch_packed_log_quadratic", a(1)),
-          litDouble("hist_sketch_packed_log_quadratic", a(2)),
-          litDouble("hist_sketch_packed_log_quadratic", a(3))))),
-    "hist_sketch_packed_custom" ->
-      expectArgs("hist_sketch_packed_custom", 2, atLeast = true)(sketchAgg(
-        "hist_sketch_packed_custom",
-        a => CustomLayout(a.map(litDouble("hist_sketch_packed_custom", _)).toArray))),
+    "hist_sketch_packed_log_quadratic" -> logQuadraticSketchAgg("hist_sketch_packed_log_quadratic"),
+    "hist_sketch_packed_custom" -> customSketchAgg("hist_sketch_packed_custom"),
     // parameterized companion-sketch aggregates: accuracy parameters are
     // per-call SQL literals; 1-arg forms use the library defaults, matching
     // the DSL.
