@@ -743,7 +743,7 @@ object SparkEntry {
     //     re-counted by the oracle against the layout's own exact bin
     //     boundaries (verifies the OTel mapping + bound inversion end-to-end).
     //     Aggregated through hist_sketch_packed, an alias of hist_sketch
-    //     (one counter store), so a driver oracle covers the alias too.
+    //     (one counter store), so the query's oracle covers the alias too.
     "q20_otel_bins" -> { (s, dir) =>
       val layout = OtelExponentialLayout(4)
       table(s, dir, "lineitem")
