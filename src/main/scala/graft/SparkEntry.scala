@@ -79,6 +79,10 @@ object SparkEntry {
   // a subset, so its hist_rebin_custom check is exact
   private val docLenBoundaries = Seq(0.0, 50.0, 100.0, 200.0, 400.0, 800.0, 1600.0, 3200.0)
 
+  /** Most group runs one sorted partition may report to the driver in
+   * [[exactOrderStatistics]]' first pass. */
+  private[graft] val MaxRunsPerPartition = 10000
+
   /**
    * Distributed exact order statistics: the values at the requested
    * within-group ranks (0-indexed over each group's ascending value order).
@@ -100,6 +104,9 @@ object SparkEntry {
    *
    * Returns (group -> n, (group, rank) -> value). Group values must be
    * non-null strings and values non-null doubles (both call sites hold).
+   * Pass 1 fails when a partition holds more than [[MaxRunsPerPartition]]
+   * group runs, so the driver never collects O(partitions x groups) tuples
+   * of a high-cardinality grouping.
    */
   private[graft] def exactOrderStatistics(
       df: DataFrame,
@@ -124,6 +131,12 @@ object SparkEntry {
         it.foreach { case (g, _) =>
           if (!any || g != cur) {
             if (any) runs += ((cur, n))
+            if (runs.length == MaxRunsPerPartition) {
+              throw new IllegalArgumentException(
+                s"exactOrderStatistics: partition $pid holds more than " +
+                  s"$MaxRunsPerPartition groups of $groupCol; their runs are collected " +
+                  "on the driver, so exact order statistics serve low-cardinality groupings")
+            }
             cur = g; n = 0L; any = true
           }
           n += 1L
@@ -400,11 +413,10 @@ object SparkEntry {
     },
     // 10. text analysis: whitespace token counts per document, exact
     "q10_doc_tokens" -> { (s, dir) =>
-      val tokUdf = udf((t: String) => graft.text.TextFunctions.tokenCount(t))
       table(s, dir, "documents")
         .select(
           col("doc_id"),
-          tokUdf(col("text")).as("n_tokens"),
+          graft.text.Dedup.tokenCountUdf(col("text")).as("n_tokens"),
           (col("n_chars") === length(col("text")).cast("long")).as("n_chars_ok"))
     },
     // 11. text quality components (exact integers, each re-derived in SQL)
@@ -589,10 +601,9 @@ object SparkEntry {
     },
     // 17. language id + fingerprints over documents
     "q17_langid_fp" -> { (s, dir) =>
-      val langUdf = udf((t: String) => graft.text.TextFunctions.langId(t))
       val docs = table(s, dir, "documents")
       docs
-        .select(langUdf(col("text")).as("lang_pred"),
+        .select(graft.text.Dedup.langIdUdf(col("text")).as("lang_pred"),
           graft.text.Dedup.fingerprintUdf(col("text")).as("fp"))
         .agg(
           count(lit(1)).as("n_docs"),

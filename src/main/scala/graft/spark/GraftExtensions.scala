@@ -1,12 +1,19 @@
 package graft.spark
 
+import scala.reflect.{classTag, ClassTag}
+
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, ScalaUDF}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.graftbridge.RegistryBridge
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.core._
 import graft.spark.expressions._
+import graft.text.{Dedup, Similarity}
 
 /**
  * Config-based installation of the sketch function surface:
@@ -17,49 +24,42 @@ import graft.spark.expressions._
  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
  * }}}
  *
- * Native expressions (every sketch aggregate and the histogram scalar
- * queries) are registered via `injectFunction` with expression builders —
- * SQL-callable with per-call parameters, e.g.
- * `hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0, 1e6)` or `hll_sketch(c, 12)`.
- * The companion scalar queries and text scalars register through the
- * session UDF registry on first use, which also installs
- * [[PullOutSketchInputs]] ([[functions.registerAll]]).
+ * Injects every entry of [[GraftExtensions.functionTable]], the one list of
+ * SQL names that [[functions.registerAll]] registers on an existing session.
+ * Its only other hook installs [[PullOutSketchInputs]] (idempotent) when the
+ * session builds its analyzer.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(extensions: SparkSessionExtensions): Unit = {
-    GraftExtensions.nativeBuilders.foreach { case (name, builder) =>
-      extensions.injectFunction(
-        (
-          FunctionIdentifier(name),
-          new ExpressionInfo(classOf[HistQuantile].getName, name),
-          builder))
+    GraftExtensions.functionTable.foreach { f =>
+      extensions.injectFunction((FunctionIdentifier(f.name), f.info, f.builder))
     }
-    // A resolution rule runs with a session handle before analysis; use the
-    // first invocation to install the UDF/UDAF registry entries idempotently.
+    // a resolution rule's builder runs once per session, with the session
     extensions.injectResolutionRule { session =>
-      if (!GraftExtensions.installed.contains(session)) {
-        GraftExtensions.installed.synchronized {
-          if (!GraftExtensions.installed.contains(session)) {
-            functions.registerAll(session)
-            GraftExtensions.installed.add(session)
-          }
-        }
-      }
-      new org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-        override def apply(
-            plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-            : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = plan
-      }
+      PullOutSketchInputs.install(session)
+      new Rule[LogicalPlan] { override def apply(plan: LogicalPlan): LogicalPlan = plan }
     }
   }
 }
 
 object GraftExtensions {
-  private val installed =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]())
+
+  /** One SQL function: its name, the `ExpressionInfo` both install paths
+   * register (the `Class:` line of `DESCRIBE FUNCTION`), and the builder
+   * of its expression from the call's arguments. */
+  private[spark] final case class SqlFunction(
+      name: String,
+      info: ExpressionInfo,
+      builder: Seq[Expression] => Expression)
+
+  private def fn[T: ClassTag](name: String)(builder: Seq[Expression] => Expression) =
+    SqlFunction(name, new ExpressionInfo(classTag[T].runtimeClass.getName, name), builder)
+
+  /** A scalar UDF under `name`: the `ScalaUDF` that registering `udf` by
+   * name in the session's UDF registry builds. */
+  private def udfFn(name: String, udf: UserDefinedFunction): SqlFunction =
+    fn[ScalaUDF](name)(RegistryBridge.udfBuilder(name, udf))
 
   /** Wraps a builder with a proper wrong-number-of-arguments error (raw
    * args(i) indexing would throw an opaque IndexOutOfBoundsException during
@@ -119,48 +119,64 @@ object GraftExtensions {
     }
   }
 
-  private def sketchAgg(fn: String, mkLayout: Seq[Expression] => Layout)
-      : Seq[Expression] => Expression =
-    args => HistogramSketchAgg(Cast(args.head, DoubleType), mkLayout(args.tail))
-      .toAggregateExpression()
+  /** The layout `kind` from the literals of SQL call `fn`: the log layouts
+   * take `(absoluteLimit, relativeLimit, lo, hi)`, `otel` its scale, and
+   * `custom` its bin boundaries. */
+  private def layoutFrom(fn: String, kind: String, literals: Seq[Expression]): Layout =
+    kind match {
+      case "otel"   => OtelExponentialLayout(litInt(fn, literals.head))
+      case "custom" => CustomLayout(literals.map(litDouble(fn, _)).toArray)
+      case log =>
+        val Seq(abs, rel, lo, hi) = literals.map(litDouble(fn, _))
+        log match {
+          case "log_quadratic" => LogQuadraticLayout(abs, rel, lo, hi)
+          case "log_linear"    => LogLinearLayout(abs, rel, lo, hi)
+          case "log_optimal"   => LogOptimalLayout(abs, rel, lo, hi)
+        }
+    }
 
-  /** `fn(v, absoluteLimit, relativeLimit, lo, hi)` over a
-   * [[LogQuadraticLayout]]. */
-  private def logQuadraticSketchAgg(fn: String): Seq[Expression] => Expression =
-    expectArgs(fn, 5)(sketchAgg(fn, a => LogQuadraticLayout(
-      litDouble(fn, a(0)), litDouble(fn, a(1)), litDouble(fn, a(2)), litDouble(fn, a(3)))))
+  private val AllLayouts = Seq("log_quadratic", "log_linear", "log_optimal", "otel", "custom")
 
-  /** `fn(v, boundaries...)` over a [[CustomLayout]]. */
-  private def customSketchAgg(fn: String): Seq[Expression] => Expression =
-    expectArgs(fn, 2, atLeast = true)(
-      sketchAgg(fn, a => CustomLayout(a.map(litDouble(fn, _)).toArray)))
+  /** `<family>_<kind>(leading args..., layout literals...)` for each layout
+   * kind the family exposes; `custom` takes at least one boundary. */
+  private def layoutFamily[T: ClassTag](family: String, leading: Int, kinds: Seq[String])(
+      build: (Seq[Expression], Layout) => Expression): Seq[SqlFunction] =
+    kinds.map { kind =>
+      val name = s"${family}_$kind"
+      val arity = leading + (kind match {
+        case "otel" | "custom" => 1
+        case _                 => 4
+      })
+      fn[T](name)(expectArgs(name, arity, atLeast = kind == "custom") { args =>
+        build(args.take(leading), layoutFrom(name, kind, args.drop(leading)))
+      })
+    }
 
-  /** (value, weight, layout params...) — the count-weighted native aggregate
+  private def sketchAgg(args: Seq[Expression], layout: Layout): Expression =
+    HistogramSketchAgg(Cast(args.head, DoubleType), layout).toAggregateExpression()
+
+  /** (value, weight, layout) — the count-weighted native aggregate
    * (reference `addValue(double, long)`, Histogram.java:283-290). */
-  private def weightedSketchAgg(fn: String, mkLayout: Seq[Expression] => Layout)
-      : Seq[Expression] => Expression =
-    args => HistogramSketchWeightedAgg(
-      Cast(args(0), DoubleType),
-      Cast(args(1), LongType),
-      mkLayout(args.drop(2)))
+  private def weightedSketchAgg(args: Seq[Expression], layout: Layout): Expression =
+    HistogramSketchWeightedAgg(Cast(args(0), DoubleType), Cast(args(1), LongType), layout)
       .toAggregateExpression()
 
   /** The layout of the parameterless SQL `hist_sketch(v)` and
    * `hist_sketch_weighted(v, w)`. */
   private val SqlDefaultLayout: Layout = LogQuadraticLayout(1e-8, 1e-2, -1e9, 1e9)
 
-  /** Expression builders shared by `injectFunction` (new sessions) and
-   * [[functions.registerAll]] (existing sessions). */
-  private[spark] val nativeBuilders: Seq[(String, Seq[Expression] => Expression)] =
-    Seq[(String, Seq[Expression] => Expression)](
-    "hist_sketch" ->
-      expectArgs("hist_sketch", 1)(sketchAgg("hist_sketch", _ => SqlDefaultLayout)),
-    "hist_sketch_weighted" -> expectArgs("hist_sketch_weighted", 2)(
-      weightedSketchAgg("hist_sketch_weighted", _ => SqlDefaultLayout)),
+  /** Every SQL name of the library, read by both install paths:
+   * `injectFunction` (new sessions) and [[functions.registerAll]]
+   * (existing sessions). */
+  private[spark] val functionTable: Seq[SqlFunction] = Seq(
+    fn[HistogramSketchAgg]("hist_sketch")(
+      expectArgs("hist_sketch", 1)(sketchAgg(_, SqlDefaultLayout))),
+    fn[HistogramSketchWeightedAgg]("hist_sketch_weighted")(
+      expectArgs("hist_sketch_weighted", 2)(weightedSketchAgg(_, SqlDefaultLayout))),
     // scalar sketch queries. hist_quantile also takes the estimator-
     // parameterized forms (sk, p, alphap, betap[, estimator]);
     // hist_value_at_rank takes (sk, rank[, estimator]).
-    "hist_quantile" -> { args =>
+    fn[HistQuantile]("hist_quantile") { args =>
       args.length match {
         case 2 => HistQuantile(args(0), Cast(args(1), DoubleType))
         case 4 | 5 =>
@@ -175,7 +191,7 @@ object GraftExtensions {
           s"hist_quantile expects 2, 4 or 5 arguments, got $n")
       }
     },
-    "hist_value_at_rank" -> { args =>
+    fn[HistValueAtRank]("hist_value_at_rank") { args =>
       args.length match {
         case 2 => HistValueAtRank(args(0), Cast(args(1), LongType))
         case 3 => HistValueAtRankEst(
@@ -186,88 +202,20 @@ object GraftExtensions {
           s"hist_value_at_rank expects 2 or 3 arguments, got $n")
       }
     },
-    // sketch-rewriting scalars: cross-layout re-binning with layout literals
-    // and reference-blob migration (SQL-only users can reach them too)
-    "hist_rebin_log_quadratic" -> expectArgs("hist_rebin_log_quadratic", 5)(args =>
-      HistRebin(args(0), LogQuadraticLayout(
-        litDouble("hist_rebin_log_quadratic", args(1)),
-        litDouble("hist_rebin_log_quadratic", args(2)),
-        litDouble("hist_rebin_log_quadratic", args(3)),
-        litDouble("hist_rebin_log_quadratic", args(4))))),
-    "hist_rebin_log_linear" -> expectArgs("hist_rebin_log_linear", 5)(args =>
-      HistRebin(args(0), LogLinearLayout(
-        litDouble("hist_rebin_log_linear", args(1)),
-        litDouble("hist_rebin_log_linear", args(2)),
-        litDouble("hist_rebin_log_linear", args(3)),
-        litDouble("hist_rebin_log_linear", args(4))))),
-    "hist_rebin_log_optimal" -> expectArgs("hist_rebin_log_optimal", 5)(args =>
-      HistRebin(args(0), LogOptimalLayout(
-        litDouble("hist_rebin_log_optimal", args(1)),
-        litDouble("hist_rebin_log_optimal", args(2)),
-        litDouble("hist_rebin_log_optimal", args(3)),
-        litDouble("hist_rebin_log_optimal", args(4))))),
-    "hist_rebin_otel" -> expectArgs("hist_rebin_otel", 2)(args =>
-      HistRebin(args(0), OtelExponentialLayout(litInt("hist_rebin_otel", args(1))))),
-    "hist_rebin_custom" -> expectArgs("hist_rebin_custom", 2, atLeast = true)(args =>
-      HistRebin(args(0),
-        CustomLayout(args.tail.map(litDouble("hist_rebin_custom", _)).toArray))),
-    "hist_from_reference" -> expectArgs("hist_from_reference", 1)(args =>
-      HistFromReference(args(0))),
-    "hist_to_reference" -> expectArgs("hist_to_reference", 1)(args =>
-      HistToReference(args(0))),
-    "hist_quantiles" -> expectArgs("hist_quantiles", 2)(
+    // reference-blob migration (SQL-only users can reach it too)
+    fn[HistFromReference]("hist_from_reference")(expectArgs("hist_from_reference", 1)(args =>
+      HistFromReference(args(0)))),
+    fn[HistToReference]("hist_to_reference")(expectArgs("hist_to_reference", 1)(args =>
+      HistToReference(args(0)))),
+    fn[HistQuantiles]("hist_quantiles")(expectArgs("hist_quantiles", 2)(
       args => HistQuantiles(
         args(0),
-        Cast(args(1), org.apache.spark.sql.types.ArrayType(DoubleType)))),
-    "hist_total" -> expectArgs("hist_total", 1)(args => HistStat(args(0), HistStat.Total)),
-    "hist_min" -> expectArgs("hist_min", 1)(args => HistStat(args(0), HistStat.Min)),
-    "hist_max" -> expectArgs("hist_max", 1)(args => HistStat(args(0), HistStat.Max)),
-    "hist_underflow" -> expectArgs("hist_underflow", 1)(
-      args => HistStat(args(0), HistStat.Underflow)),
-    "hist_overflow" -> expectArgs("hist_overflow", 1)(
-      args => HistStat(args(0), HistStat.Overflow)),
-    "hist_bins" -> expectArgs("hist_bins", 1)(args => HistBins(args(0))),
-    // layout-parameterized histogram aggregates (value, layout params...)
-    "hist_sketch_log_quadratic" -> logQuadraticSketchAgg("hist_sketch_log_quadratic"),
-    "hist_sketch_log_linear" -> expectArgs("hist_sketch_log_linear", 5)(sketchAgg(
-      "hist_sketch_log_linear",
-      a => LogLinearLayout(
-        litDouble("hist_sketch_log_linear", a(0)),
-        litDouble("hist_sketch_log_linear", a(1)),
-        litDouble("hist_sketch_log_linear", a(2)),
-        litDouble("hist_sketch_log_linear", a(3))))),
-    "hist_sketch_log_optimal" -> expectArgs("hist_sketch_log_optimal", 5)(sketchAgg(
-      "hist_sketch_log_optimal",
-      a => LogOptimalLayout(
-        litDouble("hist_sketch_log_optimal", a(0)),
-        litDouble("hist_sketch_log_optimal", a(1)),
-        litDouble("hist_sketch_log_optimal", a(2)),
-        litDouble("hist_sketch_log_optimal", a(3))))),
-    "hist_sketch_otel" -> expectArgs("hist_sketch_otel", 2)(sketchAgg(
-      "hist_sketch_otel",
-      a => OtelExponentialLayout(litInt("hist_sketch_otel", a(0))))),
-    "hist_sketch_custom" -> customSketchAgg("hist_sketch_custom"),
-    // count-weighted variants: (value, weight, layout params...)
-    "hist_sketch_weighted_log_quadratic" ->
-      expectArgs("hist_sketch_weighted_log_quadratic", 6)(weightedSketchAgg(
-        "hist_sketch_weighted_log_quadratic",
-        a => LogQuadraticLayout(
-          litDouble("hist_sketch_weighted_log_quadratic", a(0)),
-          litDouble("hist_sketch_weighted_log_quadratic", a(1)),
-          litDouble("hist_sketch_weighted_log_quadratic", a(2)),
-          litDouble("hist_sketch_weighted_log_quadratic", a(3))))),
-    "hist_sketch_weighted_custom" ->
-      expectArgs("hist_sketch_weighted_custom", 3, atLeast = true)(weightedSketchAgg(
-        "hist_sketch_weighted_custom",
-        a => CustomLayout(a.map(litDouble("hist_sketch_weighted_custom", _)).toArray))),
-    // names kept from the removed adaptive-width buffer: the same
-    // aggregate as hist_sketch_log_quadratic / hist_sketch_custom
-    "hist_sketch_packed_log_quadratic" -> logQuadraticSketchAgg("hist_sketch_packed_log_quadratic"),
-    "hist_sketch_packed_custom" -> customSketchAgg("hist_sketch_packed_custom"),
+        Cast(args(1), org.apache.spark.sql.types.ArrayType(DoubleType))))),
+    fn[HistBins]("hist_bins")(expectArgs("hist_bins", 1)(args => HistBins(args(0)))),
     // parameterized companion-sketch aggregates: accuracy parameters are
     // per-call SQL literals; 1-arg forms use the library defaults, matching
     // the DSL.
-    "hll_sketch" -> { args =>
+    fn[HllSketchAgg]("hll_sketch") { args =>
       val p = args.length match {
         case 1 => graft.sketches.Hll.DefaultPrecision
         case 2 => litInt("hll_sketch", args(1))
@@ -276,7 +224,7 @@ object GraftExtensions {
       }
       HllSketchAgg(args.head, p).toAggregateExpression()
     },
-    "cms_sketch" -> { args =>
+    fn[CountMinSketchAgg]("cms_sketch") { args =>
       val (d, w) = args.length match {
         case 1 => (5, 2048)
         case 3 => (litInt("cms_sketch", args(1)), litInt("cms_sketch", args(2)))
@@ -285,7 +233,7 @@ object GraftExtensions {
       }
       CountMinSketchAgg(args.head, d, w).toAggregateExpression()
     },
-    "cms_sketch_weighted" -> { args =>
+    fn[CountMinWeightedSketchAgg]("cms_sketch_weighted") { args =>
       val (d, w) = args.length match {
         case 2 => (5, 2048)
         case 4 =>
@@ -296,7 +244,7 @@ object GraftExtensions {
       CountMinWeightedSketchAgg(args(0), Cast(args(1), LongType), d, w)
         .toAggregateExpression()
     },
-    "bloom_sketch" -> { args =>
+    fn[BloomSketchAgg]("bloom_sketch") { args =>
       val (exp, fpp) = args.length match {
         case 2 => (litDouble("bloom_sketch", args(1)).toLong, 0.01)
         case 3 =>
@@ -306,7 +254,7 @@ object GraftExtensions {
       }
       BloomSketchAgg(args.head, exp, fpp).toAggregateExpression()
     },
-    "tdigest_sketch" -> { args =>
+    fn[TDigestSketchAgg]("tdigest_sketch") { args =>
       val c = args.length match {
         case 1 => 100.0
         case 2 => litDouble("tdigest_sketch", args(1))
@@ -315,7 +263,7 @@ object GraftExtensions {
       }
       TDigestSketchAgg(Cast(args.head, DoubleType), c).toAggregateExpression()
     },
-    "kll_sketch" -> { args =>
+    fn[KllSketchAgg]("kll_sketch") { args =>
       val k = args.length match {
         case 1 => 200
         case 2 => litInt("kll_sketch", args(1))
@@ -323,25 +271,46 @@ object GraftExtensions {
           s"kll_sketch expects (value[, k]), got $n argument(s)")
       }
       KllSketchAgg(Cast(args.head, DoubleType), k).toAggregateExpression()
-    },
-    // native bin-index scalar with layout literals (whole-stage codegen)
-    "hist_bin_index_log_quadratic" -> expectArgs("hist_bin_index_log_quadratic", 5)(args =>
-      HistBinIndex(
-        Cast(args(0), DoubleType),
-        LogQuadraticLayout(
-          litDouble("hist_bin_index_log_quadratic", args(1)),
-          litDouble("hist_bin_index_log_quadratic", args(2)),
-          litDouble("hist_bin_index_log_quadratic", args(3)),
-          litDouble("hist_bin_index_log_quadratic", args(4))))),
-    "hist_bin_index_otel" -> expectArgs("hist_bin_index_otel", 2)(args =>
-      HistBinIndex(
-        Cast(args(0), DoubleType),
-        OtelExponentialLayout(litInt("hist_bin_index_otel", args(1))))),
-    "hist_bin_index_custom" -> expectArgs("hist_bin_index_custom", 2, atLeast = true)(args =>
-      HistBinIndex(
-        Cast(args(0), DoubleType),
-        CustomLayout(args.tail.map(litDouble("hist_bin_index_custom", _)).toArray)))) ++
+    }) ++
+    Seq("total" -> HistStat.Total, "min" -> HistStat.Min, "max" -> HistStat.Max,
+        "underflow" -> HistStat.Underflow, "overflow" -> HistStat.Overflow).map {
+      case (stat, s) =>
+        fn[HistStat](s"hist_$stat")(expectArgs(s"hist_$stat", 1)(args => HistStat(args(0), s)))
+    } ++
+    // layout-parameterized names: (leading args, layout literals)
+    layoutFamily[HistogramSketchAgg]("hist_sketch", 1, AllLayouts)(sketchAgg) ++
+    layoutFamily[HistogramSketchWeightedAgg](
+      "hist_sketch_weighted", 2, Seq("log_quadratic", "custom"))(weightedSketchAgg) ++
+    // names kept from the removed adaptive-width buffer: the same
+    // aggregate as hist_sketch_log_quadratic / hist_sketch_custom
+    layoutFamily[HistogramSketchAgg](
+      "hist_sketch_packed", 1, Seq("log_quadratic", "custom"))(sketchAgg) ++
+    // cross-layout re-binning of a stored sketch
+    layoutFamily[HistRebin]("hist_rebin", 1, AllLayouts)((a, l) => HistRebin(a(0), l)) ++
+    // native bin-index scalar (whole-stage codegen)
+    layoutFamily[HistBinIndex]("hist_bin_index", 1, Seq("log_quadratic", "otel", "custom"))(
+      (a, l) => HistBinIndex(Cast(a(0), DoubleType), l)) ++
     // re-merge of stored sketch blobs: hist_merge, hll_merge, ..., kll_merge
-    MergeKind.all.map(k => k.name -> expectArgs(k.name, 1)(args =>
-      SketchMergeAgg(args.head, k).toAggregateExpression()))
+    MergeKind.all.map(k => fn[SketchMergeAgg[_]](k.name)(expectArgs(k.name, 1)(args =>
+      SketchMergeAgg(args.head, k).toAggregateExpression()))) ++
+    // companion-sketch scalar queries and the text scalars
+    Seq(
+      "hll_estimate" -> functions.hllEstimateUdf,
+      "cms_estimate" -> functions.cmsEstimateUdf,
+      "cms_total" -> functions.cmsTotalUdf,
+      "bloom_might_contain" -> functions.bloomMightContainUdf,
+      "tdigest_quantile" -> functions.tdigestQuantileUdf,
+      "tdigest_cdf" -> functions.tdigestCdfUdf,
+      "kll_quantile" -> functions.kllQuantileUdf,
+      "kll_rank" -> functions.kllRankUdf,
+      "token_count" -> Dedup.tokenCountUdf,
+      "bpeish_token_count" -> Dedup.bpeishTokenCountUdf,
+      "quality_score" -> Dedup.qualityScoreUdf,
+      "lang_id" -> Dedup.langIdUdf,
+      "doc_fingerprint" -> Dedup.fingerprintUdf,
+      "simhash64" -> Dedup.simhashUdf,
+      "hamming64" -> Dedup.hammingUdf,
+      "shingle_jaccard" -> Dedup.jaccardUdf,
+      "minhash_signature" -> Dedup.minhashUdf,
+      "cosine_sim" -> Similarity.fastCosineUdf).map((udfFn _).tupled)
 }

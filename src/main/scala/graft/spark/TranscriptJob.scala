@@ -31,10 +31,10 @@ object TranscriptJob {
   /** As [[run]] plus text-feature sketches (token counts): the
    * compute-representative form used for throughput measurement. */
   def runWithTextFeatures(spark: SparkSession, transcripts: DataFrame): Result = {
-    val tokUdf = org.apache.spark.sql.functions.udf(
-      (t: String) => graft.text.TextFunctions.tokenCount(t))
     val tokens = transcripts
-      .select(col("role"), tokUdf(col("text")).cast("double").as("n_tokens"))
+      .select(
+        col("role"),
+        graft.text.Dedup.tokenCountUdf(col("text")).cast("double").as("n_tokens"))
       .groupBy(col("role"))
       .agg(hist_sketch(col("n_tokens"), countLayout).as("sk"))
       .select(col("role"), hist_quantile(col("sk"), 0.5).as("p50_tokens"))

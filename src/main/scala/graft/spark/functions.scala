@@ -16,9 +16,10 @@ import graft.spark.expressions._
  * ([[graft.spark.expressions]]): it runs as a partial aggregate per input
  * partition, ships each group's buffer across the shuffle in the sketch's
  * compact wire format, and merges the partials in a final aggregate. The
- * same classes back the SQL names ([[functions.registerAll]],
- * [[GraftExtensions]]). Building a sketch aggregate column installs
- * [[PullOutSketchInputs]] on the active session.
+ * same classes back the SQL names, which [[functions.registerAll]] and
+ * [[GraftExtensions]] both install from one table
+ * ([[GraftExtensions.functionTable]]). Building a sketch aggregate column
+ * installs [[PullOutSketchInputs]] on the active session.
  */
 object functions {
 
@@ -207,60 +208,21 @@ object functions {
   // -------------------------------------------------------------------------
 
   /**
-   * Registers the sketch functions for SQL use on an existing session.
-   *
-   * Every sketch aggregate and histogram scalar goes in as a NATIVE
-   * expression builder from [[GraftExtensions.nativeBuilders]] (the table
-   * `SparkSessionExtensions` injects), so `hist_sketch(v)`,
+   * Registers the library's SQL functions on an existing session: every
+   * entry of [[GraftExtensions.functionTable]], the same list
+   * [[GraftExtensions]] injects into new sessions. Sketch aggregates and
+   * histogram scalars are native expressions, so `hist_sketch(v)`,
    * `hll_sketch(c, 12)` and `hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0,
-   * 1e6)` run on the same aggregates as the Column DSL. The companion
-   * scalar queries and the text scalars register through the UDF registry.
-   * It also installs [[PullOutSketchInputs]], so computed SQL sketch inputs
-   * are evaluated once per row below the aggregate.
+   * 1e6)` run on the same aggregates as the Column DSL; the companion
+   * scalar queries and the text scalars are the UDF values of this object
+   * and of [[graft.text]]. It first installs [[PullOutSketchInputs]], so
+   * computed SQL sketch inputs are evaluated once per row below the
+   * aggregate. Idempotent: a second call re-registers the same entries.
    */
   def registerAll(spark: SparkSession): Unit = {
     PullOutSketchInputs.install(spark)
-    GraftExtensions.nativeBuilders.foreach { case (name, builder) =>
-      org.apache.spark.sql.graftbridge.RegistryBridge.registerNative(spark, name, builder)
+    GraftExtensions.functionTable.foreach { f =>
+      org.apache.spark.sql.graftbridge.RegistryBridge.register(spark, f.info, f.builder)
     }
-    spark.udf.register("hll_estimate", hllEstimateUdf)
-    spark.udf.register("cms_estimate", cmsEstimateUdf)
-    spark.udf.register("bloom_might_contain", bloomMightContainUdf)
-    spark.udf.register("tdigest_quantile", tdigestQuantileUdf)
-    spark.udf.register("tdigest_cdf", tdigestCdfUdf)
-    spark.udf.register("kll_quantile", kllQuantileUdf)
-    spark.udf.register("kll_rank", kllRankUdf)
-    // text-analysis / dedup scalar surface for SQL-only users (the column
-    // values these compute are oracle-covered through q10/q11/q12/q14/q17;
-    // SQL resolution parity is asserted in ExpressionSpec)
-    spark.udf.register("token_count", (s: String) => graft.text.TextFunctions.tokenCount(s))
-    spark.udf.register(
-      "bpeish_token_count",
-      (s: String) => graft.text.TextFunctions.bpeishTokenCount(s))
-    spark.udf.register("quality_score", (s: String) => graft.text.TextFunctions.qualityScore(s))
-    spark.udf.register("lang_id", (s: String) => graft.text.TextFunctions.langId(s))
-    spark.udf.register("doc_fingerprint", (s: String) => graft.text.TextFunctions.fingerprint64(s))
-    spark.udf.register("simhash64", (s: String) => graft.text.TextFunctions.simhash64(s))
-    spark.udf.register(
-      "hamming64",
-      (a: Long, b: Long) => graft.text.TextFunctions.hammingDistance(a, b))
-    spark.udf.register(
-      "shingle_jaccard",
-      (a: String, b: String, k: Int) => graft.text.TextFunctions.shingleJaccard(a, b, k))
-    spark.udf.register(
-      "minhash_signature",
-      (s: String, numHashes: Int, k: Int) =>
-        graft.text.TextFunctions.minhashSignature(s, numHashes, k))
-    spark.udf.register(
-      "cosine_sim",
-      (a: Seq[Float], b: Seq[Float]) => {
-        val len = math.min(a.length, b.length)
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < len) {
-          val x = a(i).toDouble; val y = b(i).toDouble
-          dot += x * y; na += x * x; nb += y * y; i += 1
-        }
-        dot / (math.sqrt(na) * math.sqrt(nb))
-      })
   }
 }

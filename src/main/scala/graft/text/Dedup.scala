@@ -101,6 +101,13 @@ object Dedup {
       case _ => ()
     }
 
+  // Column UDFs over TextFunctions; GraftExtensions.functionTable registers
+  // these values as the SQL text scalars.
+  val tokenCountUdf = udf((s: String) => TextFunctions.tokenCount(s))
+  val bpeishTokenCountUdf = udf((s: String) => TextFunctions.bpeishTokenCount(s))
+  val qualityScoreUdf = udf((s: String) => TextFunctions.qualityScore(s))
+  val langIdUdf = udf((s: String) => TextFunctions.langId(s))
+  val hammingUdf = udf((a: Long, b: Long) => TextFunctions.hammingDistance(a, b))
   val fingerprintUdf = udf((s: String) => TextFunctions.fingerprint64(s))
   val minhashUdf =
     udf((s: String, numHashes: Int, k: Int) => TextFunctions.minhashSignature(s, numHashes, k))
@@ -519,7 +526,6 @@ object Dedup {
       posexplode(array((0 until 4).map(b =>
         shiftrightunsigned(col("sig"), b * 16).bitwiseAND(lit(0xffffL))): _*))
         .as(Seq("block", "block_val")))
-    val hamming = udf((a: Long, b: Long) => TextFunctions.hammingDistance(a, b))
     val repPairs = blocked
       .as("a")
       .join(
@@ -529,7 +535,7 @@ object Dedup {
       .select(
         col("a.id").as("id_a"),
         col("b.id").as("id_b"),
-        hamming(col("a.sig"), col("b.sig")).as("hamming"))
+        hammingUdf(col("a.sig"), col("b.sig")).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
     val members = withFp.select(col("fp"), col("id")).localCheckpoint()

@@ -40,8 +40,9 @@ object Similarity {
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
 
   /** Cosine as a compiled UDF — same double math as [[cosine]] but without
-   * per-row array materialization; used on candidate pairs in the ANN paths. */
-  private[text] val fastCosineUdf = udf((aSeq: Seq[Float], bSeq: Seq[Float]) => {
+   * per-row array materialization; used on candidate pairs in the ANN paths
+   * and registered as the SQL `cosine_sim`. */
+  private[graft] val fastCosineUdf = udf((aSeq: Seq[Float], bSeq: Seq[Float]) => {
     val len = math.min(aSeq.length, bSeq.length)
     val a = new Array[Float](len)
     val b = new Array[Float](len)

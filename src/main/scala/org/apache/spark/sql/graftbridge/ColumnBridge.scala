@@ -15,21 +15,35 @@ object ColumnBridge {
 }
 
 /**
- * Bridge to the session's (private[sql]) function registry, so native
- * Catalyst expression builders can be registered on an EXISTING session —
+ * Bridge to the session's (private[sql]) function registry, so SQL function
+ * builders can be registered on an EXISTING session —
  * `SparkSessionExtensions.injectFunction` only covers sessions built with the
  * extension installed.
  */
 object RegistryBridge {
   import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.catalyst.FunctionIdentifier
+  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   import org.apache.spark.sql.classic
+  import org.apache.spark.sql.errors.QueryCompilationErrors
+  import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedFunction}
 
-  def registerNative(
+  def register(
       spark: SparkSession,
-      name: String,
+      info: ExpressionInfo,
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
+      .registerFunction(FunctionIdentifier(info.getName), info, builder)
+
+  /** The builder `UDFRegistration.register` installs for a Scala function
+   * under `name`: a `ScalaUDF` named `name`, with its arity checked. */
+  def udfBuilder(name: String, udf: UserDefinedFunction): Seq[Expression] => Expression = {
+    val named = udf.withName(name).asInstanceOf[SparkUserDefinedFunction]
+    val arity = named.inputEncoders.size
+    args =>
+      if (args.length == arity) classic.UserDefinedFunctionUtils.toScalaUDF(named, args)
+      else throw QueryCompilationErrors.wrongNumArgsError(name, Seq(arity.toString), args.length)
+  }
 }
 
 /**

@@ -330,4 +330,18 @@ class AggregatorSpec extends AnyFunSuite {
     }.toSet
     assert(hits.keySet == wanted)
   }
+
+  test("exactOrderStatistics fails in pass 1 when a partition holds too many groups") {
+    import spark.implicits._
+    val limit = graft.SparkEntry.MaxRunsPerPartition
+    val df = (0 to limit).map(i => (f"g$i%06d", i.toDouble)).toDF("g", "v")
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1") // all limit + 1 groups in one partition
+    try {
+      val e = intercept[org.apache.spark.SparkException] {
+        graft.SparkEntry.exactOrderStatistics(df, "g", "v", n => Seq(0L, n - 1))
+      }
+      assert(e.getMessage.contains(s"holds more than $limit groups of g"), e.getMessage)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
+  }
 }

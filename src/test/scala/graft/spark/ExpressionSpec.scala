@@ -600,4 +600,37 @@ class ExpressionSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("hll_sketch"), e.getMessage)
   }
+
+  test("SQL surface: cms_total, tdigest_cdf and kll_rank equal the DSL over one blob") {
+    functions.registerAll(spark)
+    import spark.implicits._
+    val rnd = new java.util.SplittableRandom(123L)
+    val rows = (0 until 4000).map { i =>
+      (s"item_${rnd.nextInt(500)}", (i % 7 + 1).toLong, rnd.nextDouble() * 1000.0, i.toLong)
+    }
+    rows.toDF("s", "w", "v", "id").createOrReplaceTempView("sql_comp")
+    // t-digest and KLL merges depend on partial order: build the blobs once
+    // and query the same bytes through both surfaces
+    val blobs = spark
+      .sql("""SELECT cms_sketch(s, 7, 1024) AS cms, tdigest_sketch(v, 50.0) AS td,
+                     kll_sketch(v, 160) AS kll FROM sql_comp""")
+      .collect()(0)
+    val sk = Seq((blobs.getAs[Array[Byte]](0), blobs.getAs[Array[Byte]](1),
+      blobs.getAs[Array[Byte]](2))).toDF("cms", "td", "kll")
+    sk.createOrReplaceTempView("sql_comp_sk")
+    val sql = spark
+      .sql("SELECT cms_total(cms), tdigest_cdf(td, 500.0D), kll_rank(kll, 500.0D) FROM sql_comp_sk")
+      .collect()(0)
+    val dsl = sk
+      .select(cms_total(col("cms")), tdigest_cdf(col("td"), lit(500.0)), kll_rank(col("kll"), lit(500.0)))
+      .collect()(0)
+    assert(sql.getLong(0) == dsl.getLong(0))
+    assert(sql.getDouble(1) == dsl.getDouble(1))
+    assert(sql.getLong(2) == dsl.getLong(2))
+    assert(sql.getLong(0) == rows.length.toLong)
+    val exact = rows.count(_._3 <= 500.0).toDouble / rows.length
+    assert(math.abs(sql.getDouble(1) - exact) < 0.05, s"tdigest cdf ${sql.getDouble(1)} vs $exact")
+    val kllFrac = sql.getLong(2).toDouble / rows.length // kll_rank counts values <= x
+    assert(math.abs(kllFrac - exact) < 0.05, s"kll rank fraction $kllFrac vs $exact")
+  }
 }

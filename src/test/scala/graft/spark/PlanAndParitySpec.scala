@@ -238,6 +238,99 @@ class PlanAndParitySpec extends AnyFunSuite {
     }
   }
 
+  /** A new session on the shared context, built with [[GraftExtensions]]. */
+  private lazy val extensionsSession: SparkSession = {
+    val prior = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      SparkSession.builder()
+        .config("spark.ui.enabled", "false")
+        .withExtensions(new GraftExtensions)
+        .getOrCreate()
+    } finally {
+      SparkSession.setDefaultSession(prior)
+      SparkSession.setActiveSession(prior)
+    }
+  }
+
+  /** A new session on the shared context, set up with `registerAll`. */
+  private lazy val registeredSession: SparkSession = {
+    val s = spark.newSession()
+    functions.registerAll(s)
+    s
+  }
+
+  test("GraftExtensions and registerAll install the same SQL functions") {
+    val ext = extensionsSession
+    val reg = registeredSession
+    assert(ext ne spark)
+    def allNames(s: SparkSession): Set[String] =
+      s.catalog.listFunctions().collect().map(_.name).toSet
+    val builtin = allNames(spark.newSession())
+    def names(s: SparkSession): Set[String] = allNames(s) -- builtin
+    val layouts = Seq("log_quadratic", "log_linear", "log_optimal", "otel", "custom")
+    val expected = Set("hist_sketch", "hist_sketch_weighted", "hist_quantile",
+      "hist_value_at_rank", "hist_from_reference", "hist_to_reference", "hist_quantiles",
+      "hist_total", "hist_min", "hist_max", "hist_underflow", "hist_overflow", "hist_bins",
+      "hll_sketch", "cms_sketch", "cms_sketch_weighted", "bloom_sketch", "tdigest_sketch",
+      "kll_sketch", "hist_sketch_weighted_log_quadratic", "hist_sketch_weighted_custom",
+      "hist_sketch_packed_log_quadratic", "hist_sketch_packed_custom",
+      "hist_bin_index_log_quadratic", "hist_bin_index_otel", "hist_bin_index_custom",
+      "hist_merge", "hll_merge", "cms_merge", "bloom_merge", "tdigest_merge", "kll_merge",
+      "hll_estimate", "cms_estimate", "cms_total", "bloom_might_contain", "tdigest_quantile",
+      "tdigest_cdf", "kll_quantile", "kll_rank", "token_count", "bpeish_token_count",
+      "quality_score", "lang_id", "doc_fingerprint", "simhash64", "hamming64",
+      "shingle_jaccard", "minhash_signature", "cosine_sim") ++
+      layouts.map("hist_sketch_" + _) ++ layouts.map("hist_rebin_" + _)
+    assert(expected.size == 60)
+    assert(names(ext) == expected, (names(ext) -- expected, expected -- names(ext)))
+    assert(names(reg) == expected, (names(reg) -- expected, expected -- names(reg)))
+
+    // every UDF-backed name resolves and evaluates alike on both sessions
+    val calls = Seq("hll_estimate(hll)", "cms_estimate(cms, s)", "cms_total(cms)",
+      "bloom_might_contain(bf, id)", "tdigest_quantile(td, 0.5D)", "tdigest_cdf(td, v)",
+      "kll_quantile(kll, 0.5D)", "kll_rank(kll, v)", "token_count(s)",
+      "bpeish_token_count(s)", "quality_score(s)", "lang_id(s)", "doc_fingerprint(s)",
+      "simhash64(s)", "hamming64(id, 3L)", "shingle_jaccard(s, 'the quick fox', 3)",
+      "size(minhash_signature(s, 16, 3))", "cosine_sim(vec, vec)")
+    def evaluate(sess: SparkSession): (Seq[String], Seq[Any]) = {
+      sess.sql("""SELECT 'the quick brown fox' AS s, 7L AS id, 2.5D AS v,
+                         array(1.0F, 2.0F) AS vec""").createOrReplaceTempView("udf_t")
+      sess.sql("""SELECT hll_sketch(s) AS hll, cms_sketch(s) AS cms, bloom_sketch(id, 100) AS bf,
+                         tdigest_sketch(v) AS td, kll_sketch(v) AS kll FROM udf_t""")
+        .createOrReplaceTempView("udf_sk")
+      val df = sess.sql(s"SELECT ${calls.mkString(", ")} FROM udf_t CROSS JOIN udf_sk")
+      (df.columns.toSeq, df.collect()(0).toSeq)
+    }
+    val (extColumns, extValues) = evaluate(ext)
+    assert(evaluate(reg) == ((extColumns, extValues)))
+    assert(extColumns.take(3) == Seq("hll_estimate(hll)", "cms_estimate(cms, s)", "cms_total(cms)"))
+    assert(extValues(1) == 1L && extValues(2) == 1L)
+
+    // the column header of a SQL call names the function; a DSL call keeps
+    // Spark's header for an unnamed UDF
+    for (sess <- Seq(ext, reg)) {
+      assert(sess.sql("SELECT hll_estimate(hll) FROM udf_sk").columns.toSeq ==
+        Seq("hll_estimate(hll)"))
+      assert(sess.table("udf_sk").select(hll_estimate(col("hll"))).columns.toSeq ==
+        Seq("UDF(hll)"))
+    }
+  }
+
+  test("DESCRIBE FUNCTION reports each function's own class on both install paths") {
+    import graft.spark.expressions.{HistRebin, HllSketchAgg}
+    def classLine(s: SparkSession, name: String): String =
+      s.sql(s"DESCRIBE FUNCTION EXTENDED $name").collect().map(_.getString(0))
+        .find(_.startsWith("Class:")).getOrElse(fail(s"no Class: line for $name"))
+    for ((name, cls) <- Seq(
+        "hll_sketch" -> classOf[HllSketchAgg], "hist_rebin_custom" -> classOf[HistRebin])) {
+      val line = classLine(extensionsSession, name)
+      assert(line == s"Class: ${cls.getName}")
+      assert(classLine(registeredSession, name) == line)
+    }
+  }
+
   test("every DSL and SQL sketch aggregate is a native aggregate, never a udaf wrapper") {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.catalyst.expressions.Expression
