@@ -53,13 +53,13 @@ object GraftExtensions {
       info: ExpressionInfo,
       builder: Seq[Expression] => Expression)
 
-  private def fn[T: ClassTag](name: String)(builder: Seq[Expression] => Expression) =
+  private def entry[T: ClassTag](name: String)(builder: Seq[Expression] => Expression) =
     SqlFunction(name, new ExpressionInfo(classTag[T].runtimeClass.getName, name), builder)
 
   /** A scalar UDF under `name`: the `ScalaUDF` that registering `udf` by
    * name in the session's UDF registry builds. */
   private def udfFn(name: String, udf: UserDefinedFunction): SqlFunction =
-    fn[ScalaUDF](name)(RegistryBridge.udfBuilder(name, udf))
+    entry[ScalaUDF](name)(RegistryBridge.udfBuilder(name, udf))
 
   /** Wraps a builder with a proper wrong-number-of-arguments error (raw
    * args(i) indexing would throw an opaque IndexOutOfBoundsException during
@@ -147,7 +147,7 @@ object GraftExtensions {
         case "otel" | "custom" => 1
         case _                 => 4
       })
-      fn[T](name)(expectArgs(name, arity, atLeast = kind == "custom") { args =>
+      entry[T](name)(expectArgs(name, arity, atLeast = kind == "custom") { args =>
         build(args.take(leading), layoutFrom(name, kind, args.drop(leading)))
       })
     }
@@ -169,14 +169,14 @@ object GraftExtensions {
    * `injectFunction` (new sessions) and [[functions.registerAll]]
    * (existing sessions). */
   private[spark] val functionTable: Seq[SqlFunction] = Seq(
-    fn[HistogramSketchAgg]("hist_sketch")(
+    entry[HistogramSketchAgg]("hist_sketch")(
       expectArgs("hist_sketch", 1)(sketchAgg(_, SqlDefaultLayout))),
-    fn[HistogramSketchWeightedAgg]("hist_sketch_weighted")(
+    entry[HistogramSketchWeightedAgg]("hist_sketch_weighted")(
       expectArgs("hist_sketch_weighted", 2)(weightedSketchAgg(_, SqlDefaultLayout))),
     // scalar sketch queries. hist_quantile also takes the estimator-
     // parameterized forms (sk, p, alphap, betap[, estimator]);
     // hist_value_at_rank takes (sk, rank[, estimator]).
-    fn[HistQuantile]("hist_quantile") { args =>
+    entry[HistQuantile]("hist_quantile") { args =>
       args.length match {
         case 2 => HistQuantile(args(0), Cast(args(1), DoubleType))
         case 4 | 5 =>
@@ -191,7 +191,7 @@ object GraftExtensions {
           s"hist_quantile expects 2, 4 or 5 arguments, got $n")
       }
     },
-    fn[HistValueAtRank]("hist_value_at_rank") { args =>
+    entry[HistValueAtRank]("hist_value_at_rank") { args =>
       args.length match {
         case 2 => HistValueAtRank(args(0), Cast(args(1), LongType))
         case 3 => HistValueAtRankEst(
@@ -203,19 +203,19 @@ object GraftExtensions {
       }
     },
     // reference-blob migration (SQL-only users can reach it too)
-    fn[HistFromReference]("hist_from_reference")(expectArgs("hist_from_reference", 1)(args =>
+    entry[HistFromReference]("hist_from_reference")(expectArgs("hist_from_reference", 1)(args =>
       HistFromReference(args(0)))),
-    fn[HistToReference]("hist_to_reference")(expectArgs("hist_to_reference", 1)(args =>
+    entry[HistToReference]("hist_to_reference")(expectArgs("hist_to_reference", 1)(args =>
       HistToReference(args(0)))),
-    fn[HistQuantiles]("hist_quantiles")(expectArgs("hist_quantiles", 2)(
+    entry[HistQuantiles]("hist_quantiles")(expectArgs("hist_quantiles", 2)(
       args => HistQuantiles(
         args(0),
         Cast(args(1), org.apache.spark.sql.types.ArrayType(DoubleType))))),
-    fn[HistBins]("hist_bins")(expectArgs("hist_bins", 1)(args => HistBins(args(0)))),
+    entry[HistBins]("hist_bins")(expectArgs("hist_bins", 1)(args => HistBins(args(0)))),
     // parameterized companion-sketch aggregates: accuracy parameters are
     // per-call SQL literals; 1-arg forms use the library defaults, matching
     // the DSL.
-    fn[HllSketchAgg]("hll_sketch") { args =>
+    entry[HllSketchAgg]("hll_sketch") { args =>
       val p = args.length match {
         case 1 => graft.sketches.Hll.DefaultPrecision
         case 2 => litInt("hll_sketch", args(1))
@@ -224,7 +224,7 @@ object GraftExtensions {
       }
       HllSketchAgg(args.head, p).toAggregateExpression()
     },
-    fn[CountMinSketchAgg]("cms_sketch") { args =>
+    entry[CountMinSketchAgg]("cms_sketch") { args =>
       val (d, w) = args.length match {
         case 1 => (5, 2048)
         case 3 => (litInt("cms_sketch", args(1)), litInt("cms_sketch", args(2)))
@@ -233,7 +233,7 @@ object GraftExtensions {
       }
       CountMinSketchAgg(args.head, d, w).toAggregateExpression()
     },
-    fn[CountMinWeightedSketchAgg]("cms_sketch_weighted") { args =>
+    entry[CountMinWeightedSketchAgg]("cms_sketch_weighted") { args =>
       val (d, w) = args.length match {
         case 2 => (5, 2048)
         case 4 =>
@@ -244,7 +244,7 @@ object GraftExtensions {
       CountMinWeightedSketchAgg(args(0), Cast(args(1), LongType), d, w)
         .toAggregateExpression()
     },
-    fn[BloomSketchAgg]("bloom_sketch") { args =>
+    entry[BloomSketchAgg]("bloom_sketch") { args =>
       val (exp, fpp) = args.length match {
         case 2 => (litDouble("bloom_sketch", args(1)).toLong, 0.01)
         case 3 =>
@@ -254,7 +254,7 @@ object GraftExtensions {
       }
       BloomSketchAgg(args.head, exp, fpp).toAggregateExpression()
     },
-    fn[TDigestSketchAgg]("tdigest_sketch") { args =>
+    entry[TDigestSketchAgg]("tdigest_sketch") { args =>
       val c = args.length match {
         case 1 => 100.0
         case 2 => litDouble("tdigest_sketch", args(1))
@@ -263,7 +263,7 @@ object GraftExtensions {
       }
       TDigestSketchAgg(Cast(args.head, DoubleType), c).toAggregateExpression()
     },
-    fn[KllSketchAgg]("kll_sketch") { args =>
+    entry[KllSketchAgg]("kll_sketch") { args =>
       val k = args.length match {
         case 1 => 200
         case 2 => litInt("kll_sketch", args(1))
@@ -275,7 +275,7 @@ object GraftExtensions {
     Seq("total" -> HistStat.Total, "min" -> HistStat.Min, "max" -> HistStat.Max,
         "underflow" -> HistStat.Underflow, "overflow" -> HistStat.Overflow).map {
       case (stat, s) =>
-        fn[HistStat](s"hist_$stat")(expectArgs(s"hist_$stat", 1)(args => HistStat(args(0), s)))
+        entry[HistStat](s"hist_$stat")(expectArgs(s"hist_$stat", 1)(args => HistStat(args(0), s)))
     } ++
     // layout-parameterized names: (leading args, layout literals)
     layoutFamily[HistogramSketchAgg]("hist_sketch", 1, AllLayouts)(sketchAgg) ++
@@ -291,7 +291,7 @@ object GraftExtensions {
     layoutFamily[HistBinIndex]("hist_bin_index", 1, Seq("log_quadratic", "otel", "custom"))(
       (a, l) => HistBinIndex(Cast(a(0), DoubleType), l)) ++
     // re-merge of stored sketch blobs: hist_merge, hll_merge, ..., kll_merge
-    MergeKind.all.map(k => fn[SketchMergeAgg[_]](k.name)(expectArgs(k.name, 1)(args =>
+    MergeKind.all.map(k => entry[SketchMergeAgg[_]](k.name)(expectArgs(k.name, 1)(args =>
       SketchMergeAgg(args.head, k).toAggregateExpression()))) ++
     // companion-sketch scalar queries and the text scalars
     Seq(

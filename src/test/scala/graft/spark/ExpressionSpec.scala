@@ -622,7 +622,8 @@ class ExpressionSpec extends AnyFunSuite {
       .sql("SELECT cms_total(cms), tdigest_cdf(td, 500.0D), kll_rank(kll, 500.0D) FROM sql_comp_sk")
       .collect()(0)
     val dsl = sk
-      .select(cms_total(col("cms")), tdigest_cdf(col("td"), lit(500.0)), kll_rank(col("kll"), lit(500.0)))
+      .select(
+        cms_total(col("cms")), tdigest_cdf(col("td"), lit(500.0)), kll_rank(col("kll"), lit(500.0)))
       .collect()(0)
     assert(sql.getLong(0) == dsl.getLong(0))
     assert(sql.getDouble(1) == dsl.getDouble(1))
