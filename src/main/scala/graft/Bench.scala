@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -11,16 +10,8 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus(default = 4)
+    val spark = LocalSession(cpus)
 
     // 32-way CPU sanity probe: pure-JVM splitmix64 throughput at 1 thread vs
     // `cpus` threads. On a quiet host the ratio approaches the core count; a
@@ -44,7 +35,7 @@ object Bench {
     val t1a = System.nanoTime()
     val sink1 = spin(spinIters, 1L)
     val oneThreadSec = (System.nanoTime() - t1a) / 1e9
-    val nThreads = cpus.toInt
+    val nThreads = cpus
     val threads = (0 until nThreads).map { t =>
       new Thread(() => { val s = spin(spinIters, t + 2L); if (s == 42L) println(s) })
     }
@@ -64,7 +55,7 @@ object Bench {
     val n = 200000000L
     def engine(): Unit =
       spark
-        .range(0, n, 1, cpus.toInt * 4)
+        .range(0, n, 1, cpus * 4)
         .select(
           (col("id") % 4).as("role_idx"),
           exp(
@@ -88,40 +79,7 @@ object Bench {
     // overhead-bound queries (many short sequential jobs, e.g. q29's
     // LSH chain + CC rounds) are then distinguishable from data-bound ones
     // in the artifact itself
-    val qListener = new org.apache.spark.scheduler.SparkListener {
-      val jobsStarted = new java.util.concurrent.atomic.AtomicLong
-      val jobsEnded = new java.util.concurrent.atomic.AtomicLong
-      val shuffleRead = new java.util.concurrent.atomic.AtomicLong
-      val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobsStarted.incrementAndGet()
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        jobsEnded.incrementAndGet()
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-      /** Listener events are async: wait (bounded) until every started job's
-       * end event has been processed so per-query diffs don't bleed over. */
-      def settle(): Unit = {
-        val deadline = System.nanoTime() + 5000000000L
-        while (jobsEnded.get() < jobsStarted.get() && System.nanoTime() < deadline)
-          Thread.sleep(10)
-        // a lagging listener bus (the contended-host case these metrics are
-        // meant to diagnose) bleeds one query's jobs/shuffle deltas into the
-        // next — make that identifiable in the artifact's stderr log
-        if (jobsEnded.get() < jobsStarted.get()) {
-          System.err.println(
-            s"[bench] WARN settle timeout: ${jobsStarted.get() - jobsEnded.get()} " +
-              "job-end event(s) unprocessed; next query's metrics may include them")
-        }
-        Thread.sleep(50) // task-end events for the last job trail the job end
-      }
-    }
-    spark.sparkContext.addSparkListener(qListener)
+    val recorder = graft.spark.JobRecorder.attach(spark.sparkContext)
 
     case class QMetrics(
         sec: Double, jobs: Long, shuffleRead: Long, shuffleWrite: Long, err: String)
@@ -132,10 +90,9 @@ object Bench {
         case c if c < ' ' => f"\\u${c.toInt}%04x"
         case c => c.toString
       } + "\""
+    recorder.drain() // the engine probe's trailing events; each query drains its own
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      qListener.settle()
-      val (j0, r0, w0) =
-        (qListener.jobsStarted.get(), qListener.shuffleRead.get(), qListener.shuffleWrite.get())
+      val before = recorder.snapshot
       val t0 = System.nanoTime()
       // a throwing query must surface as an err entry in the artifact, not
       // masquerade as a fast wall-time (verdict-r5 item 3)
@@ -144,9 +101,9 @@ object Bench {
           s"${t.getClass.getName}: ${Option(t.getMessage).getOrElse("").take(200)}"
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      qListener.settle()
-      val m = QMetrics(sec, qListener.jobsStarted.get() - j0,
-        qListener.shuffleRead.get() - r0, qListener.shuffleWrite.get() - w0, err)
+      recorder.drain()
+      val d = recorder.snapshot - before
+      val m = QMetrics(sec, d.jobs, d.shuffleReadBytes, d.shuffleWriteBytes, err)
       System.err.println(
         f"[bench] $name: $sec%.2f s (${m.jobs} jobs, ${m.shuffleRead}%d B shuffle read)" +
           (if (err != null) s" ERR $err" else ""))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.functions._
 
 /**
@@ -25,47 +23,30 @@ import org.apache.spark.sql.functions._
  * Each probe reports rows/s (input rows or blobs) and shuffle bytes per
  * group.
  *
- * Usage: SPARK_GRAFT_CPUS=4 sbt -batch "runMain graft.BenchExtra"
+ * Usage: sbt -batch "runMain graft.BenchExtra" (`SPARK_GRAFT_CPUS` defaults to
+ * the host's cores)
  * Prints one JSON line; not part of the driver contract.
  */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
+    val cpus = LocalSession.cpus()
+    val spark = LocalSession(cpus)
+    val recorder = graft.spark.JobRecorder.attach(spark.sparkContext)
 
     def measure(name: String, rows: Long, groups: Long)(body: => Unit): String = {
       spark.sparkContext.setJobDescription(name)
       body // warm-up
-      ListenerBridge.drain(spark.sparkContext)
-      val (r0, w0) = (shufRead.get(), shufWrite.get())
+      recorder.drain()
+      val before = recorder.snapshot
       val sec = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         body
         (System.nanoTime() - t0) / 1e9
       }.min
-      ListenerBridge.drain(spark.sparkContext) // task-end events
-      val read = (shufRead.get() - r0) / 3
-      val written = (shufWrite.get() - w0) / 3
+      recorder.drain()
+      val d = recorder.snapshot - before
+      val read = d.shuffleReadBytes / 3
+      val written = d.shuffleWriteBytes / 3
       val json = f"""\"$name\":{\"sec\":$sec%.3f,\"rows_per_s\":${rows / sec}%.0f,""" +
         f"""\"shuffle_read_bytes\":$read,\"shuffle_write_bytes\":$written,""" +
         f"""\"shuffle_bytes_per_group\":${written.toDouble / groups}%.1f}"""
@@ -78,7 +59,7 @@ object BenchExtra {
     val histLayout = graft.core.LogQuadraticLayout(1e-2, 1e-2, 0, 1e9)
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    val parts = cpus.toInt * 2
+    val parts = cpus * 2
     val n = 2000000L
     val blobs = 200000L
     val groupCounts = Seq(1L, 10000L, 100000L)

@@ -1,81 +1,80 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.ListenerBridge
+import graft.spark.JobRecorder
 
 /**
- * Writes `.explain("formatted")` of every declared query's returned frame
- * plus a per-query job/shuffle summary (the plan-shape evidence for the
- * optimization-round artifacts under plans/rNN/). Queries whose bodies run
- * internal actions execute them as part of building the frame; their
- * interesting "plan" is the job trace, which is appended after the explain
- * text.
+ * The query probe. For each `SparkEntry` query it writes `.explain("formatted")`
+ * of the returned frame and the job trace of one pass, run after a warm-up
+ * pass and counted as Bench counts it (queries that run internal actions
+ * run them while building the frame). The trace gives each job's wall
+ * time, tasks and description, then the sum of job walls, the time some
+ * job ran, the total and the driver-gap share: what tells a query of many
+ * short sequential jobs from a data-bound one. The files are the plan-shape
+ * evidence under plans/rNN/.
  *
- * Usage: SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.PlanDump plans/r07 _after [sfDir]"
+ * Usage: sbt -batch "runMain graft.PlanDump plans/r07 _after [sfDir [query ...]]"
+ * (every query unless some are named; `SPARK_GRAFT_CPUS` defaults to the
+ * host's cores).
  */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDump <outDir> <suffix> [sfDir]")
+    require(args.length >= 2, "usage: PlanDump <outDir> <suffix> [sfDir [query ...]]")
     val outDir = java.nio.file.Paths.get(args(0))
     val suffix = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
+    val names = if (args.length > 3) args.drop(3).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus())
+    val recorder = JobRecorder.attach(spark.sparkContext)
 
-    final case class Job(desc: String, var tasks: Int = 0)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse("?")
-        jobs.put(e.jobId, Job(desc, e.stageInfos.map(_.numTasks).sum))
-      }
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    })
-
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        jobs.clear()
-        val r0 = shufRead.get()
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      val body = try {
+        fn(spark, sfDir).count() // warm-up
+        recorder.drain()
+        val before = recorder.snapshot
+        val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
+        val buildNs = System.nanoTime() - t0
+        // explained before it runs, like the plans/rNN/ files of earlier rounds
         val explain = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        df.write.format("noop").mode("overwrite").save() // run the frame itself
-        ListenerBridge.drain(spark.sparkContext)
-        import scala.jdk.CollectionConverters._
-        val trace = jobs.asScala.toSeq.sortBy(_._1).map { case (id, j) =>
-          f"  job $id%3d  ${j.tasks}%4d tasks  ${j.desc.take(80)}"
-        }
-        val body =
-          s"== ${name} ($suffix) ==\n\n$explain\n" +
-            s"== jobs while building + running the returned frame " +
-            s"(${trace.size} jobs, ${shufRead.get() - r0} B shuffle read) ==\n" +
-            trace.mkString("\n") + "\n"
-        java.nio.file.Files.write(
-          outDir.resolve(s"$name$suffix.txt"), body.getBytes("UTF-8"))
-        System.err.println(s"[plandump] $name: ok (${trace.size} jobs)")
+        val t1 = System.nanoTime()
+        df.count()
+        val totalMs = (buildNs + System.nanoTime() - t1) / 1e6
+        recorder.drain()
+        val delta = recorder.snapshot - before
+        val jobs = recorder.jobsSince(before)
+        System.err.println(s"[plandump] $name: ok (${jobs.size} jobs)")
+        s"== $name ($suffix) ==\n\n$explain\n" +
+          s"== jobs while building + running the returned frame " +
+          s"(${jobs.size} jobs, ${delta.shuffleReadBytes} B shuffle read) ==\n" +
+          jobs.map { j =>
+            val desc = j.description.replace('\n', ' ').trim.take(80)
+            f"  job ${j.id}%3d  ${j.wallMs}%6d ms  ${j.tasks}%4d tasks  $desc"
+          }.mkString("\n") + "\n" + gapLine(jobs, totalMs) + "\n"
       } catch {
         case t: Throwable =>
           System.err.println(s"[plandump] $name FAILED: $t")
-          java.nio.file.Files.write(
-            outDir.resolve(s"$name$suffix.txt"),
-            s"PLANDUMP FAILED: $t".getBytes("UTF-8"))
+          s"PLANDUMP FAILED: $t"
       }
+      java.nio.file.Files.write(outDir.resolve(s"$name$suffix.txt"), body.getBytes("UTF-8"))
     }
     spark.stop()
+  }
+
+  /** Sum of job walls, time at least one job ran (an AQE query's jobs can
+   * overlap), the total, and the share of the total no job covers. */
+  private def gapLine(jobs: Seq[JobRecorder.Job], totalMs: Double): String = {
+    val done = jobs.filter(_.end >= 0).sortBy(_.start)
+    val (busyMs, _) = done.foldLeft((0L, 0L)) { case ((busy, reach), j) =>
+      (busy + math.max(0L, j.end - math.max(j.start, reach)), math.max(reach, j.end))
+    }
+    String.format(java.util.Locale.ROOT,
+      "  sum of job walls %.3f s, jobs running %.3f s, total %.3f s, driver gap %.1f%%",
+      Double.box(done.map(_.wallMs).sum / 1e3), Double.box(busyMs / 1e3),
+      Double.box(totalMs / 1e3), Double.box(100 * math.max(0.0, 1 - busyMs / totalMs)))
   }
 }

@@ -26,24 +26,6 @@ import org.apache.spark.sql.functions._
  */
 object Scaling {
 
-  private def session(cpus: Int): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      // 2x cores without AQE coalescing: the coalescer collapses reduce
-      // parallelism below the core count on these shuffle sizes (measured
-      // 3x slower window stages with it on)
-      .config("spark.sql.shuffle.partitions", (cpus * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Grouped sketch-update engine measurement (no I/O). */
   private def engineJob(spark: SparkSession, cpus: Int, n: Long): Unit = {
     val layout = graft.core.LogQuadraticLayout(1e-2, 1e-2, 0, 1e9)
@@ -61,7 +43,7 @@ object Scaling {
   }
 
   private def measureChild(mode: String, cpus: Int, arg: String): Unit = {
-    val spark = session(cpus)
+    val spark = LocalSession(cpus)
     try {
       mode match {
         case "engine" =>
@@ -185,7 +167,7 @@ object Scaling {
     val tmp = java.nio.file.Files.createTempDirectory("graft_scaling").toString
     val inputDir = s"$tmp/transcripts"
     locally {
-      val spark = session(highCpus)
+      val spark = LocalSession(highCpus)
       try {
         graft.spark.Transcripts
           .synthesize(spark, numConvs, maxTextLen = 1000)

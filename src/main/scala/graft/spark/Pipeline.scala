@@ -130,20 +130,4 @@ object Pipeline {
       (merged, lineage)
     }
   }
-
-  /** Simple per-stage metrics from the Spark listener bus: input records and
-   * shuffle bytes, for job-level observability at scale. */
-  final class MetricsListener extends org.apache.spark.scheduler.SparkListener {
-    @volatile var recordsRead: Long = 0L
-    @volatile var shuffleBytesWritten: Long = 0L
-    @volatile var tasksCompleted: Long = 0L
-    override def onTaskEnd(taskEnd: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = taskEnd.taskMetrics
-      if (m != null) {
-        recordsRead += m.inputMetrics.recordsRead
-        shuffleBytesWritten += m.shuffleWriteMetrics.bytesWritten
-        tasksCompleted += 1
-      }
-    }
-  }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
  * [[TranscriptJob.runWithTextFeatures]], and writes:
  *  - `<outDir>/per_role.parquet` — role, per-role sketch-derived stats
  *  - `<outDir>/summary.json`    — global latency/tool-call quantiles
- *  - `<outDir>/metrics.json`    — listener-bus job metrics (records read,
+ *  - `<outDir>/metrics.json`    — [[JobRecorder]] job metrics (records read,
  *    shuffle bytes written, tasks completed, wall seconds) for the
  *    observability contract; file-granular lineage is available through
  *    [[Pipeline.CheckpointedSketch]] when checkpoint-resumable execution
@@ -39,8 +39,7 @@ object TranscriptMain {
          builder
        else builder.master("local[*]")).getOrCreate()
 
-    val listener = new Pipeline.MetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val recorder = JobRecorder.attach(spark.sparkContext)
     val t0 = System.nanoTime()
 
     val transcripts = spark.read.parquet(input)
@@ -64,17 +63,22 @@ object TranscriptMain {
       s"""{"turns":${result.turns},"latency_p50_ms":${jsonNum(result.latencyP50)},""" +
         s""""latency_p99_ms":${jsonNum(result.latencyP99)},""" +
         s""""tool_calls_p95":${jsonNum(result.toolCallsP95)}}""")
+    // the last job's task-end events may still be queued on the bus
+    recorder.drain()
+    val m = recorder.snapshot
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/metrics.json"),
-      s"""{"records_read":${listener.recordsRead},""" +
-        s""""shuffle_bytes_written":${listener.shuffleBytesWritten},""" +
-        s""""tasks_completed":${listener.tasksCompleted},""" +
+      s"""{"records_read":${m.recordsRead},""" +
+        s""""shuffle_bytes_written":${m.shuffleWriteBytes},""" +
+        s""""tasks_completed":${m.tasks},""" +
         s""""wall_sec":${jsonNum(wallSec)}}""")
 
     // stop only sessions we effectively own (spark-submit / env-configured
     // masters); in-process callers (tests) keep their shared session alive
     if (sys.props.contains("spark.master") || sys.env.contains("SPARK_MASTER")) {
       spark.stop()
+    } else {
+      spark.sparkContext.removeSparkListener(recorder)
     }
   }
 }

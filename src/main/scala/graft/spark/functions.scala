@@ -190,6 +190,8 @@ object functions {
   val tdigestCdfUdf: UserDefinedFunction =
     udf((b: Array[Byte], x: Double) => TDigest.fromBytes(b).cdf(x))
 
+  /** The estimated fraction of values <= `x`, a `Double` in [0, 1] (unlike
+   * [[kll_rank]], which returns a count). */
   def tdigest_cdf(sketch: Column, x: Column): Column = tdigestCdfUdf(sketch, x)
 
   val kllQuantileUdf: UserDefinedFunction =
@@ -201,6 +203,8 @@ object functions {
   val kllRankUdf: UserDefinedFunction =
     udf((b: Array[Byte], x: Double) => Kll.fromBytes(b).rank(x))
 
+  /** The estimated count of values <= `x`, a `Long` (unlike
+   * [[tdigest_cdf]], which returns a fraction). */
   def kll_rank(sketch: Column, x: Column): Column = kllRankUdf(sketch, x)
 
   // -------------------------------------------------------------------------

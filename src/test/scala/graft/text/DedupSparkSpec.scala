@@ -308,18 +308,16 @@ class DedupSparkSpec extends AnyFunSuite {
         .filter(col("doc_id") >= 0)
         .select(col("doc_id"), col("text"))
         .unionByName(read.filter(col("doc_id") < 0).select(col("doc_id"), col("text")))
-      val jobs = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
+      val recorder = graft.spark.JobRecorder.attach(spark.sparkContext)
       try {
         val w = Dedup.planWidth(derived)
         assert(w > 0)
-        Thread.sleep(500) // listener events are async; absence needs a grace period
-        assert(jobs.get() == 0L, s"width probe launched ${jobs.get()} job(s)")
-      } finally spark.sparkContext.removeSparkListener(listener)
+        // a job the probe ran would have posted its start event before the
+        // probe returned; draining the bus processes it
+        recorder.drain()
+        val jobs = recorder.snapshot.jobs
+        assert(jobs == 0L, s"width probe launched $jobs job(s)")
+      } finally spark.sparkContext.removeSparkListener(recorder)
       // a frame whose plan contains a shuffle reports that shuffle's width
       assert(Dedup.planWidth(read.repartition(16)) == 16)
       assert(Dedup.planWidth(read.repartition(2)) == 2)
