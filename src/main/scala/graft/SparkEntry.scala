@@ -901,7 +901,8 @@ object SparkEntry {
       // weighted sums folded into ONE rollup pass (the grouping-sets trick:
       // global row + per-flag rows from a single shuffle). The weighted-CMS bound check evaluates
       // driver-side on the collected sketch bytes via the same CountMin
-      // kernel the cms_estimate UDF calls — 3 rows, identical arithmetic.
+      // kernel cms_estimate calls (SketchEval.cmsEstimate) — 3 rows,
+      // identical arithmetic.
       // MEMORY_AND_DISK, not MEMORY_ONLY — eviction under memory pressure
       // must spill, not trigger recompute storms (measured round 2).
       // widen(): the small parquet arrives 3 partitions wide, so every
@@ -974,7 +975,7 @@ object SparkEntry {
       val kllOk = math.abs(global.getLong(5).toDouble / n - 0.5) <= 0.015
       // weighted CMS (reference count-weighted addValue): no underestimate,
       // bounded overestimate vs exact weighted counts — the same CountMin
-      // calls cms_estimate/cms_total made, on the same bytes
+      // calls cms_estimate/cms_total make (SketchEval), on the same bytes
       val wcms = graft.sketches.CountMin.fromBytes(b(direct, 4))
       val wOk = stats.filter(_.getInt(1) == 0).forall { r =>
         val est = wcms.estimateString(r.getString(0))

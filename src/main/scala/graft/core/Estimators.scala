@@ -55,7 +55,7 @@ object ValueEstimator {
  * `mstats.mquantiles` plotting-position interpolation, default
  * alphap = betap = 0.4.
  */
-final class QuantileEstimator private (alphap: Double, betap: Double) extends Serializable {
+final case class QuantileEstimator(alphap: Double, betap: Double) {
   require(alphap >= 0 && alphap <= 1 && betap >= 0 && betap <= 1)
 
   def estimate(p: Double, sortedValueAt: Long => Double, numValues: Long): Double = {
@@ -74,8 +74,6 @@ final class QuantileEstimator private (alphap: Double, betap: Double) extends Se
 }
 
 object QuantileEstimator {
-  def apply(alphap: Double, betap: Double): QuantileEstimator =
-    new QuantileEstimator(alphap, betap)
 
   /** SciPy 1.5.2 default plotting positions. */
   val SciPyDefault: QuantileEstimator = apply(0.4, 0.4)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.graftbridge.RegistryBridge
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
 import graft.core._
 import graft.spark.expressions._
@@ -176,42 +176,32 @@ object GraftExtensions {
     // scalar sketch queries. hist_quantile also takes the estimator-
     // parameterized forms (sk, p, alphap, betap[, estimator]);
     // hist_value_at_rank takes (sk, rank[, estimator]).
-    entry[HistQuantile]("hist_quantile") { args =>
-      args.length match {
-        case 2 => HistQuantile(args(0), Cast(args(1), DoubleType))
+    entry[SketchScalar]("hist_quantile") { args =>
+      val consts = args.length match {
+        case 2 => Nil
         case 4 | 5 =>
           val est = if (args.length == 5) litString("hist_quantile", args(4)) else "uniform"
-          HistQuantileParam(
-            args(0),
-            Cast(args(1), DoubleType),
-            litDouble("hist_quantile", args(2)),
-            litDouble("hist_quantile", args(3)),
-            HistParamEval.estimator(est))
+          Seq(
+            QuantileEstimator(
+              litDouble("hist_quantile", args(2)), litDouble("hist_quantile", args(3))),
+            SketchEval.estimator(est))
         case n => throw new IllegalArgumentException(
           s"hist_quantile expects 2, 4 or 5 arguments, got $n")
       }
+      SketchScalar(SketchScalar.HistQuantile, Seq(args(0), Cast(args(1), DoubleType)), consts)
     },
-    entry[HistValueAtRank]("hist_value_at_rank") { args =>
-      args.length match {
-        case 2 => HistValueAtRank(args(0), Cast(args(1), LongType))
-        case 3 => HistValueAtRankEst(
-          args(0),
-          Cast(args(1), LongType),
-          HistParamEval.estimator(litString("hist_value_at_rank", args(2))))
+    entry[SketchScalar]("hist_value_at_rank") { args =>
+      val consts = args.length match {
+        case 2 => Nil
+        case 3 => Seq(SketchEval.estimator(litString("hist_value_at_rank", args(2))))
         case n => throw new IllegalArgumentException(
           s"hist_value_at_rank expects 2 or 3 arguments, got $n")
       }
+      SketchScalar(SketchScalar.HistValueAtRank, Seq(args(0), Cast(args(1), LongType)), consts)
     },
-    // reference-blob migration (SQL-only users can reach it too)
-    entry[HistFromReference]("hist_from_reference")(expectArgs("hist_from_reference", 1)(args =>
-      HistFromReference(args(0)))),
-    entry[HistToReference]("hist_to_reference")(expectArgs("hist_to_reference", 1)(args =>
-      HistToReference(args(0)))),
-    entry[HistQuantiles]("hist_quantiles")(expectArgs("hist_quantiles", 2)(
-      args => HistQuantiles(
-        args(0),
-        Cast(args(1), org.apache.spark.sql.types.ArrayType(DoubleType))))),
-    entry[HistBins]("hist_bins")(expectArgs("hist_bins", 1)(args => HistBins(args(0)))),
+    entry[SketchScalar]("hist_quantiles")(expectArgs("hist_quantiles", 2)(args =>
+      SketchScalar(
+        SketchScalar.HistQuantiles, Seq(args(0), Cast(args(1), ArrayType(DoubleType)))))),
     // parameterized companion-sketch aggregates: accuracy parameters are
     // per-call SQL literals; 1-arg forms use the library defaults, matching
     // the DSL.
@@ -272,10 +262,14 @@ object GraftExtensions {
       }
       KllSketchAgg(Cast(args.head, DoubleType), k).toAggregateExpression()
     }) ++
-    Seq("total" -> HistStat.Total, "min" -> HistStat.Min, "max" -> HistStat.Max,
-        "underflow" -> HistStat.Underflow, "overflow" -> HistStat.Overflow).map {
-      case (stat, s) =>
-        entry[HistStat](s"hist_$stat")(expectArgs(s"hist_$stat", 1)(args => HistStat(args(0), s)))
+    // the scalars whose every argument is a row argument
+    Seq(SketchScalar.HistTotal, SketchScalar.HistMin, SketchScalar.HistMax,
+        SketchScalar.HistUnderflow, SketchScalar.HistOverflow, SketchScalar.HistBins,
+        SketchScalar.HistFromReference, SketchScalar.HistToReference, SketchScalar.HllEstimate,
+        SketchScalar.CmsEstimate, SketchScalar.CmsTotal, SketchScalar.BloomMightContain,
+        SketchScalar.TDigestQuantile, SketchScalar.TDigestCdf, SketchScalar.KllQuantile,
+        SketchScalar.KllRank).map { fn =>
+      entry[SketchScalar](fn.name)(expectArgs(fn.name, fn.inputTypes.length)(SketchScalar(fn, _)))
     } ++
     // layout-parameterized names: (leading args, layout literals)
     layoutFamily[HistogramSketchAgg]("hist_sketch", 1, AllLayouts)(sketchAgg) ++
@@ -286,23 +280,15 @@ object GraftExtensions {
     layoutFamily[HistogramSketchAgg](
       "hist_sketch_packed", 1, Seq("log_quadratic", "custom"))(sketchAgg) ++
     // cross-layout re-binning of a stored sketch
-    layoutFamily[HistRebin]("hist_rebin", 1, AllLayouts)((a, l) => HistRebin(a(0), l)) ++
-    // native bin-index scalar (whole-stage codegen)
-    layoutFamily[HistBinIndex]("hist_bin_index", 1, Seq("log_quadratic", "otel", "custom"))(
-      (a, l) => HistBinIndex(Cast(a(0), DoubleType), l)) ++
+    layoutFamily[SketchScalar]("hist_rebin", 1, AllLayouts)(
+      (a, l) => SketchScalar(SketchScalar.HistRebin, a, Seq(l))) ++
+    layoutFamily[SketchScalar]("hist_bin_index", 1, Seq("log_quadratic", "otel", "custom"))(
+      (a, l) => SketchScalar(SketchScalar.HistBinIndex, Seq(Cast(a(0), DoubleType)), Seq(l))) ++
     // re-merge of stored sketch blobs: hist_merge, hll_merge, ..., kll_merge
     MergeKind.all.map(k => entry[SketchMergeAgg[_]](k.name)(expectArgs(k.name, 1)(args =>
       SketchMergeAgg(args.head, k).toAggregateExpression()))) ++
-    // companion-sketch scalar queries and the text scalars
+    // the text scalars
     Seq(
-      "hll_estimate" -> functions.hllEstimateUdf,
-      "cms_estimate" -> functions.cmsEstimateUdf,
-      "cms_total" -> functions.cmsTotalUdf,
-      "bloom_might_contain" -> functions.bloomMightContainUdf,
-      "tdigest_quantile" -> functions.tdigestQuantileUdf,
-      "tdigest_cdf" -> functions.tdigestCdfUdf,
-      "kll_quantile" -> functions.kllQuantileUdf,
-      "kll_rank" -> functions.kllRankUdf,
       "token_count" -> Dedup.tokenCountUdf,
       "bpeish_token_count" -> Dedup.bpeishTokenCountUdf,
       "quality_score" -> Dedup.qualityScoreUdf,

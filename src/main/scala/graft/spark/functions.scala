@@ -1,8 +1,8 @@
 package graft.spark
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.functions.{array, lit}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.core._
 import graft.sketches._
@@ -15,8 +15,10 @@ import graft.spark.expressions._
  * Every aggregation is a native `TypedImperativeAggregate`
  * ([[graft.spark.expressions]]): it runs as a partial aggregate per input
  * partition, ships each group's buffer across the shuffle in the sketch's
- * compact wire format, and merges the partials in a final aggregate. The
- * same classes back the SQL names, which [[functions.registerAll]] and
+ * compact wire format, and merges the partials in a final aggregate. Every
+ * scalar is one [[graft.spark.expressions.SketchScalar]]: a static call of
+ * [[graft.spark.expressions.SketchEval]]. The same classes back the SQL
+ * names, which [[functions.registerAll]] and
  * [[GraftExtensions]] both install from one table
  * ([[GraftExtensions.functionTable]]). Building a sketch aggregate column
  * installs [[PullOutSketchInputs]] on the active session.
@@ -93,119 +95,97 @@ object functions {
   // scalar sketch query functions (over sketch bytes)
   // -------------------------------------------------------------------------
 
-  // The histogram scalar query functions are native Catalyst expressions
-  // (graft.spark.expressions.HistScalars): a static call inside whole-stage
-  // codegen, no UDF boxing/encoding boundary.
+  // Every scalar is a native expression (SketchScalar): one static call of
+  // SketchEval inside whole-stage codegen, NULL when any argument is NULL.
+  private def scalar(fn: SketchScalar.Fn, args: Column*): Column = scalar(fn, Nil, args: _*)
+
+  private def scalar(fn: SketchScalar.Fn, consts: Seq[AnyRef], args: Column*): Column =
+    ColumnBridge.column(SketchScalar(fn, args.map(ColumnBridge.expression), consts))
+
   def hist_quantile(sketch: Column, p: Double): Column =
-    expressions.HistScalars.quantile(sketch, org.apache.spark.sql.functions.lit(p))
+    scalar(SketchScalar.HistQuantile, sketch, lit(p).cast("double"))
 
   def hist_quantiles(sketch: Column, ps: Seq[Double]): Column =
-    expressions.HistScalars.quantiles(
-      sketch,
-      org.apache.spark.sql.functions.array(ps.map(org.apache.spark.sql.functions.lit): _*))
+    scalar(SketchScalar.HistQuantiles, sketch, array(ps.map(lit): _*))
 
   def hist_value_at_rank(sketch: Column, rank: Column): Column =
-    expressions.HistScalars.valueAtRank(sketch, rank)
+    scalar(SketchScalar.HistValueAtRank, sketch, rank.cast("long"))
 
   /** Rank-value estimate under an explicit reconstruction policy (reference
    * `getValue(rank, ValueEstimator)`): uniform | lower_bound | upper_bound |
    * mid_point. lower/upper bracket the true order statistic; mid_point
-   * halves the error bounds. Native expression (whole-stage codegen). */
+   * halves the error bounds. */
   def hist_value_at_rank(sketch: Column, rank: Column, estimator: String): Column =
-    expressions.HistParamScalars.valueAtRank(sketch, rank, estimator)
+    scalar(SketchScalar.HistValueAtRank, Seq(SketchEval.estimator(estimator)),
+      sketch, rank.cast("long"))
 
   /** Quantile under explicit SciPy plotting positions and value estimator
-   * (reference `getQuantile(p, QuantileEstimator, ValueEstimator)`).
-   * Native expression (whole-stage codegen). */
+   * (reference `getQuantile(p, QuantileEstimator, ValueEstimator)`). */
   def hist_quantile(
       sketch: Column,
       p: Double,
       alphap: Double,
       betap: Double,
       estimator: String = "uniform"): Column =
-    expressions.HistParamScalars.quantile(
-      sketch, org.apache.spark.sql.functions.lit(p), alphap, betap, estimator)
+    scalar(SketchScalar.HistQuantile,
+      Seq(QuantileEstimator(alphap, betap), SketchEval.estimator(estimator)),
+      sketch, lit(p).cast("double"))
 
-  def hist_total(sketch: Column): Column =
-    expressions.HistScalars.stat(sketch, expressions.HistStat.Total)
-  def hist_min(sketch: Column): Column =
-    expressions.HistScalars.stat(sketch, expressions.HistStat.Min)
-  def hist_max(sketch: Column): Column =
-    expressions.HistScalars.stat(sketch, expressions.HistStat.Max)
-  def hist_underflow(sketch: Column): Column =
-    expressions.HistScalars.stat(sketch, expressions.HistStat.Underflow)
-  def hist_overflow(sketch: Column): Column =
-    expressions.HistScalars.stat(sketch, expressions.HistStat.Overflow)
+  def hist_total(sketch: Column): Column = scalar(SketchScalar.HistTotal, sketch)
+  def hist_min(sketch: Column): Column = scalar(SketchScalar.HistMin, sketch)
+  def hist_max(sketch: Column): Column = scalar(SketchScalar.HistMax, sketch)
+  def hist_underflow(sketch: Column): Column = scalar(SketchScalar.HistUnderflow, sketch)
+  def hist_overflow(sketch: Column): Column = scalar(SketchScalar.HistOverflow, sketch)
 
   /** Array of (bin_index, cnt, lower, upper) structs; explode() it for rows. */
-  def hist_bins(sketch: Column): Column = expressions.HistScalars.bins(sketch)
+  def hist_bins(sketch: Column): Column = scalar(SketchScalar.HistBins, sketch)
 
-  /** Lossy re-binning into a different layout — native expression; also
-   * SQL-callable as hist_rebin_log_quadratic/log_linear/log_optimal/otel/
-   * custom with layout literals. */
+  /** Lossy re-binning into a different layout; also SQL-callable as
+   * hist_rebin_log_quadratic/log_linear/log_optimal/otel/custom with layout
+   * literals. */
   def hist_rebin(sketch: Column, newLayout: Layout): Column =
-    expressions.HistParamScalars.rebin(sketch, newLayout)
+    scalar(SketchScalar.HistRebin, Seq(newLayout), sketch)
 
   /** Converts a histogram blob written by the reference toolchain
    * (`Layout.writeWithTypeInfo` + V1 payload) into this library's sketch
-   * envelope — the column-level migration path for existing data. Native
-   * expression; SQL-callable as hist_from_reference. */
-  def hist_from_reference(c: Column): Column = expressions.HistParamScalars.fromReference(c)
+   * envelope — the column-level migration path for existing data.
+   * SQL-callable as hist_from_reference. */
+  def hist_from_reference(c: Column): Column = scalar(SketchScalar.HistFromReference, c)
 
   /** Inverse of [[hist_from_reference]]: emits blobs the reference
    * toolchain reads back with `Layout.readWithTypeInfo` + V1 read. */
-  def hist_to_reference(c: Column): Column = expressions.HistParamScalars.toReference(c)
+  def hist_to_reference(c: Column): Column = scalar(SketchScalar.HistToReference, c)
 
-  /** Bin index of a value under a layout — a native Catalyst expression
-   * (whole-stage codegen, no boxing); see
-   * [[graft.spark.expressions.HistBinIndex]]. */
+  /** Bin index of a value (cast to double) under a layout: the layout's
+   * O(1) mapping on the unboxed double. */
   def hist_bin_index(value: Column, layout: Layout): Column =
-    graft.spark.expressions.HistBinIndex(value, layout)
+    scalar(SketchScalar.HistBinIndex, Seq(layout), value.cast("double"))
 
-  val hllEstimateUdf: UserDefinedFunction =
-    udf((b: Array[Byte]) => Hll.fromBytes(b).estimate)
+  def hll_estimate(sketch: Column): Column = scalar(SketchScalar.HllEstimate, sketch)
 
-  def hll_estimate(sketch: Column): Column = hllEstimateUdf(sketch)
+  /** The count-min estimate of `item`, hashed as a string. */
+  def cms_estimate(sketch: Column, item: Column): Column =
+    scalar(SketchScalar.CmsEstimate, sketch, item)
 
-  val cmsEstimateUdf: UserDefinedFunction =
-    udf((b: Array[Byte], item: String) => CountMin.fromBytes(b).estimateString(item))
-
-  def cms_estimate(sketch: Column, item: Column): Column = cmsEstimateUdf(sketch, item)
-
-  val cmsTotalUdf: UserDefinedFunction = udf((b: Array[Byte]) => CountMin.fromBytes(b).total)
-  def cms_total(sketch: Column): Column = cmsTotalUdf(sketch)
-
-  val bloomMightContainUdf: UserDefinedFunction =
-    udf((b: Array[Byte], item: Long) => BloomFilter.fromBytes(b).mightContainLong(item))
+  def cms_total(sketch: Column): Column = scalar(SketchScalar.CmsTotal, sketch)
 
   def bloom_might_contain(sketch: Column, item: Column): Column =
-    bloomMightContainUdf(sketch, item)
-
-  val tdigestQuantileUdf: UserDefinedFunction =
-    udf((b: Array[Byte], p: Double) => TDigest.fromBytes(b).quantile(p))
+    scalar(SketchScalar.BloomMightContain, sketch, item)
 
   def tdigest_quantile(sketch: Column, p: Double): Column =
-    tdigestQuantileUdf(sketch, org.apache.spark.sql.functions.lit(p))
-
-  val tdigestCdfUdf: UserDefinedFunction =
-    udf((b: Array[Byte], x: Double) => TDigest.fromBytes(b).cdf(x))
+    scalar(SketchScalar.TDigestQuantile, sketch, lit(p))
 
   /** The estimated fraction of values <= `x`, a `Double` in [0, 1] (unlike
    * [[kll_rank]], which returns a count). */
-  def tdigest_cdf(sketch: Column, x: Column): Column = tdigestCdfUdf(sketch, x)
-
-  val kllQuantileUdf: UserDefinedFunction =
-    udf((b: Array[Byte], p: Double) => Kll.fromBytes(b).quantile(p))
+  def tdigest_cdf(sketch: Column, x: Column): Column =
+    scalar(SketchScalar.TDigestCdf, sketch, x)
 
   def kll_quantile(sketch: Column, p: Double): Column =
-    kllQuantileUdf(sketch, org.apache.spark.sql.functions.lit(p))
-
-  val kllRankUdf: UserDefinedFunction =
-    udf((b: Array[Byte], x: Double) => Kll.fromBytes(b).rank(x))
+    scalar(SketchScalar.KllQuantile, sketch, lit(p))
 
   /** The estimated count of values <= `x`, a `Long` (unlike
    * [[tdigest_cdf]], which returns a fraction). */
-  def kll_rank(sketch: Column, x: Column): Column = kllRankUdf(sketch, x)
+  def kll_rank(sketch: Column, x: Column): Column = scalar(SketchScalar.KllRank, sketch, x)
 
   // -------------------------------------------------------------------------
   // SQL registration
@@ -215,13 +195,12 @@ object functions {
    * Registers the library's SQL functions on an existing session: every
    * entry of [[GraftExtensions.functionTable]], the same list
    * [[GraftExtensions]] injects into new sessions. Sketch aggregates and
-   * histogram scalars are native expressions, so `hist_sketch(v)`,
-   * `hll_sketch(c, 12)` and `hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0,
-   * 1e6)` run on the same aggregates as the Column DSL; the companion
-   * scalar queries and the text scalars are the UDF values of this object
-   * and of [[graft.text]]. It first installs [[PullOutSketchInputs]], so
-   * computed SQL sketch inputs are evaluated once per row below the
-   * aggregate. Idempotent: a second call re-registers the same entries.
+   * sketch scalars are native expressions, so `hist_sketch(v)`,
+   * `hll_sketch(c, 12)`, `hist_sketch_log_quadratic(v, 1e-3, 1e-2, 0, 1e6)`
+   * and `hll_estimate(sk)` run on the same expressions as the Column DSL;
+   * the text scalars are the UDF values of [[graft.text]]. It first
+   * installs [[PullOutSketchInputs]], so computed SQL sketch inputs are
+   * evaluated once per row below the aggregate. Idempotent: a second call re-registers the same entries.
    */
   def registerAll(spark: SparkSession): Unit = {
     PullOutSketchInputs.install(spark)

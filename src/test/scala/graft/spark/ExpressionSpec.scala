@@ -132,6 +132,31 @@ class ExpressionSpec extends AnyFunSuite {
       plan.linesIterator.exists(l => l.contains("*(") && l.contains("hist_quantile")),
       s"hist_quantile not inside a codegen stage:\n$plan")
     assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains("hist_total")))
+
+    // the companion scalars are the same native shape (over stored blobs:
+    // over a final ObjectHashAggregate they would run inside it)
+    val ids = vs.indices.map(_.toLong)
+    val blobs = ids.toDF("k")
+      .repartition(4)
+      .agg(hll_sketch(col("k")), kll_sketch(col("k")), bloom_sketch(col("k"), 20000L))
+      .collect()(0)
+    val comp = Seq((blobs.getAs[Array[Byte]](0), blobs.getAs[Array[Byte]](1),
+        blobs.getAs[Array[Byte]](2)))
+      .toDF("hll", "kll", "bf")
+      .repartition(2)
+      .select(
+        hll_estimate(col("hll")).as("n"),
+        kll_rank(col("kll"), lit(4999.5)).as("r"),
+        bloom_might_contain(col("bf"), lit(17L)).as("b"))
+    val c = comp.collect()(0)
+    assert(math.abs(c.getDouble(0) / ids.length - 1.0) < 0.05, s"hll estimate ${c.getDouble(0)}")
+    assert(math.abs(c.getLong(1) - 5000L) < 400L, s"kll rank ${c.getLong(1)}")
+    assert(c.getBoolean(2))
+    val compPlan = comp.queryExecution.executedPlan.toString
+    for (name <- Seq("hll_estimate", "kll_rank", "bloom_might_contain")) {
+      assert(compPlan.linesIterator.exists(l => l.contains("*(") && l.contains(name)),
+        s"$name not inside a codegen stage:\n$compPlan")
+    }
   }
 
   test("hist_quantiles native expression + reference-format migration columns") {
@@ -599,6 +624,60 @@ class ExpressionSpec extends AnyFunSuite {
       spark.sql("SELECT hll_sketch(s, 12, 99) FROM sql_comp").collect()
     }
     assert(e.getMessage.contains("hll_sketch"), e.getMessage)
+  }
+
+  test("every sketch scalar returns NULL when its sketch or value argument is NULL") {
+    functions.registerAll(spark)
+    import spark.implicits._
+    val rnd = new java.util.SplittableRandom(17L)
+    (0 until 300).map(i => (rnd.nextDouble() * 1000.0, s"item_${i % 40}", i.toLong))
+      .toDF("v", "s", "k").createOrReplaceTempView("null_in")
+    spark.sql("""SELECT hist_sketch(v) AS hist, hll_sketch(s) AS hll, cms_sketch(s) AS cms,
+                        bloom_sketch(k, 1000) AS bf, tdigest_sketch(v) AS td,
+                        kll_sketch(v) AS kll, 2.5D AS v, 'item_1' AS s, 7L AS k
+                 FROM null_in""").createOrReplaceTempView("null_sk")
+    // (name, arguments, how many leading arguments are row arguments)
+    val layouts = Seq("log_quadratic" -> "1e-3, 1e-2, 0.0, 1e6",
+      "log_linear" -> "1e-3, 1e-2, 0.0, 1e6", "log_optimal" -> "1e-3, 1e-2, 0.0, 1e6",
+      "otel" -> "6", "custom" -> "10.0, 100.0")
+    val cases: Seq[(String, Seq[String], Int)] = Seq(
+      ("hist_quantile", Seq("hist", "0.5D"), 2),
+      ("hist_quantile", Seq("hist", "0.5D", "0.4D", "0.4D", "'mid_point'"), 2),
+      ("hist_value_at_rank", Seq("hist", "10L"), 2),
+      ("hist_value_at_rank", Seq("hist", "10L", "'lower_bound'"), 2),
+      ("hist_quantiles", Seq("hist", "array(0.5D)"), 2),
+      ("hll_estimate", Seq("hll"), 1),
+      ("cms_estimate", Seq("cms", "s"), 2),
+      ("cms_total", Seq("cms"), 1),
+      ("bloom_might_contain", Seq("bf", "k"), 2),
+      ("tdigest_quantile", Seq("td", "0.5D"), 2),
+      ("tdigest_cdf", Seq("td", "v"), 2),
+      ("kll_quantile", Seq("kll", "0.5D"), 2),
+      ("kll_rank", Seq("kll", "v"), 2)) ++
+      Seq("hist_total", "hist_min", "hist_max", "hist_underflow", "hist_overflow", "hist_bins",
+        "hist_from_reference", "hist_to_reference").map(n => (n, Seq("hist"), 1)) ++
+      layouts.map { case (kind, lits) => (s"hist_rebin_$kind", Seq("hist", lits), 1) } ++
+      layouts.filter(l => Set("log_quadratic", "otel", "custom")(l._1)).map {
+        case (kind, lits) => (s"hist_bin_index_$kind", Seq("v", lits), 1)
+      }
+    val scalarNames = GraftExtensions.functionTable
+      .filter(_.info.getClassName == classOf[graft.spark.expressions.SketchScalar].getName)
+      .map(_.name).toSet
+    assert(cases.map(_._1).toSet == scalarNames)
+    // a NULL literal (constant-folded) and a NULL the row computes (codegen)
+    val nulls = Seq[String => String](_ => "NULL", a => s"IF(id < 0, $a, NULL)")
+    val failures = for {
+      (name, args, rowArgs) <- cases
+      i <- 0 until rowArgs
+      asNull <- nulls
+    } yield {
+      val call = s"$name(${args.updated(i, asNull(args(i))).mkString(", ")})"
+      val got = scala.util.Try(
+        spark.sql(s"SELECT $call FROM range(2) CROSS JOIN null_sk").collect().toSeq)
+      if (got.toOption.exists(rows => rows.size == 2 && rows.forall(_.isNullAt(0)))) None
+      else Some(s"$call -> $got")
+    }
+    assert(failures.flatten.isEmpty, failures.flatten.mkString("\n"))
   }
 
   test("SQL surface: cms_total, tdigest_cdf and kll_rank equal the DSL over one blob") {

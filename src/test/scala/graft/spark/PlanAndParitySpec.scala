@@ -287,7 +287,8 @@ class PlanAndParitySpec extends AnyFunSuite {
     assert(names(ext) == expected, (names(ext) -- expected, expected -- names(ext)))
     assert(names(reg) == expected, (names(reg) -- expected, expected -- names(reg)))
 
-    // every UDF-backed name resolves and evaluates alike on both sessions
+    // every companion and text scalar resolves and evaluates alike on both
+    // sessions
     val calls = Seq("hll_estimate(hll)", "cms_estimate(cms, s)", "cms_total(cms)",
       "bloom_might_contain(bf, id)", "tdigest_quantile(td, 0.5D)", "tdigest_cdf(td, v)",
       "kll_quantile(kll, 0.5D)", "kll_rank(kll, v)", "token_count(s)",
@@ -308,23 +309,22 @@ class PlanAndParitySpec extends AnyFunSuite {
     assert(extColumns.take(3) == Seq("hll_estimate(hll)", "cms_estimate(cms, s)", "cms_total(cms)"))
     assert(extValues(1) == 1L && extValues(2) == 1L)
 
-    // the column header of a SQL call names the function; a DSL call keeps
-    // Spark's header for an unnamed UDF
+    // the column header of a SQL call and of a DSL call names the function
     for (sess <- Seq(ext, reg)) {
       assert(sess.sql("SELECT hll_estimate(hll) FROM udf_sk").columns.toSeq ==
         Seq("hll_estimate(hll)"))
       assert(sess.table("udf_sk").select(hll_estimate(col("hll"))).columns.toSeq ==
-        Seq("UDF(hll)"))
+        Seq("hll_estimate(hll)"))
     }
   }
 
   test("DESCRIBE FUNCTION reports each function's own class on both install paths") {
-    import graft.spark.expressions.{HistRebin, HllSketchAgg}
+    import graft.spark.expressions.{HllSketchAgg, SketchScalar}
     def classLine(s: SparkSession, name: String): String =
       s.sql(s"DESCRIBE FUNCTION EXTENDED $name").collect().map(_.getString(0))
         .find(_.startsWith("Class:")).getOrElse(fail(s"no Class: line for $name"))
     for ((name, cls) <- Seq(
-        "hll_sketch" -> classOf[HllSketchAgg], "hist_rebin_custom" -> classOf[HistRebin])) {
+        "hll_sketch" -> classOf[HllSketchAgg], "hist_rebin_custom" -> classOf[SketchScalar])) {
       val line = classLine(extensionsSession, name)
       assert(line == s"Class: ${cls.getName}")
       assert(classLine(registeredSession, name) == line)
@@ -333,7 +333,7 @@ class PlanAndParitySpec extends AnyFunSuite {
 
   test("every DSL and SQL sketch aggregate is a native aggregate, never a udaf wrapper") {
     import org.apache.spark.sql.Column
-    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
     import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
     // Spark plans `udaf(Aggregator)` as a ScalaAggregator (kryo-encoded
     // buffers) and a UserDefinedAggregateFunction as a ScalaUDAF
@@ -377,24 +377,43 @@ class PlanAndParitySpec extends AnyFunSuite {
     assert((sketchAggregates.toSet ++ Set("hll_sketch_long", "hist_sketch_packed"))
       .subsetOf(dslNative), s"DSL aggregates not native: $dsl")
 
-    // SQL: every function registerAll installs, analyzed over argument
-    // lists that fit each sketch aggregate's signature
+    // SQL: every function of the table registerAll installs, analyzed over
+    // argument lists that fit each sketch aggregate's and scalar's signature
     val s = spark.newSession()
     functions.registerAll(s)
     s.createDataFrame(guard.rdd, guard.schema).createOrReplaceTempView("guard_t")
-    val argLists = Seq("x", "b", "x, w", "x, 12", "x, 5, 64", "x, w, 5, 64",
+    val valueArgs = Seq("x", "x, w", "x, 4", "x, 12", "x, 5, 64", "x, w, 5, 64",
       "x, 1e-3, 1e-2, 0.0, 1e6", "x, w, 1e-3, 1e-2, 0.0, 1e6")
-    val names = s.catalog.listFunctions().collect().filter(_.isTemporary).map(_.name).toSeq
-    val sql = names.map { name =>
+    val argLists = valueArgs ++ valueArgs.map("b" + _.drop(1)) ++
+      Seq("'a'", "b, 'a'", "b, w, 'uniform'", "b, x, 0.4, 0.4, 'uniform'", "b, array(0.5D)")
+    val names = GraftExtensions.functionTable.map(_.name)
+    val analyzed = names.map { name =>
       name -> argLists.flatMap { args =>
-        scala.util.Try(
-          s.sql(s"SELECT $name($args) FROM guard_t").queryExecution.analyzed
-            .flatMap(_.expressions.flatMap(aggregates))).getOrElse(Nil)
+        scala.util.Try(s.sql(s"SELECT $name($args) FROM guard_t").queryExecution.analyzed)
+          .toOption.toSeq.flatMap(_.flatMap(_.expressions))
       }
-    }.filter(_._2.nonEmpty)
+    }
+    val sql = analyzed.map { case (name, es) => name -> es.flatMap(aggregates) }
+      .filter(_._2.nonEmpty)
     val sqlWrapped = sql.filter(_._2.exists(wrapped))
     assert(sqlWrapped.isEmpty, s"SQL aggregates on a udaf wrapper: $sqlWrapped")
     assert(sketchAggregates.toSet.subsetOf(sql.filter(q => native(q._2)).map(_._1).toSet),
       s"SQL aggregates not native: $sql")
+
+    // every name but the ten text scalars analyzes, and to no ScalaUDF
+    val textScalars = Set("token_count", "bpeish_token_count", "quality_score", "lang_id",
+      "doc_fingerprint", "simhash64", "hamming64", "shingle_jaccard", "minhash_signature",
+      "cosine_sim")
+    val udfs = analyzed.map { case (name, es) =>
+      name -> es.flatMap(_.collect { case u: ScalaUDF => u.udfName.getOrElse("?") })
+    }.toMap
+    val sketchNames = names.filterNot(textScalars)
+    assert(sketchNames.size == names.size - textScalars.size)
+    val unresolved = analyzed.collect { case (n, Seq()) if !textScalars(n) => n }
+    assert(unresolved.isEmpty, s"no argument list analyzes: $unresolved")
+    val onUdf = sketchNames.filter(n => udfs(n).nonEmpty)
+    assert(onUdf.isEmpty, s"sketch functions on a ScalaUDF: $onUdf")
+    // the check has teeth: a text scalar is a ScalaUDF
+    assert(udfs("token_count").contains("token_count"))
   }
 }
