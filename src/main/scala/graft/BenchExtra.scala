@@ -55,7 +55,10 @@ object BenchExtra {
     }
 
     import graft.spark.functions.{cms_merge, hll_merge}
-    import graft.spark.expressions.{CountMinSketchAgg, HistogramSketchAgg, HllSketchAgg}
+    import graft.spark.expressions.SketchAgg
+    import graft.spark.functions.{hist_sketch, hll_sketch, hll_sketch_long}
+    // CMS over a long item: the DSL's cms_sketch hashes its input as a string
+    def cmsLong(c: org.apache.spark.sql.Column) = SketchAgg.column(SketchAgg.Cms(4, 256), c)
     val histLayout = graft.core.LogQuadraticLayout(1e-2, 1e-2, 0, 1e9)
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -67,17 +70,18 @@ object BenchExtra {
     val tmp = java.nio.file.Files.createTempDirectory("bench-extra")
     val stored = tmp.resolve("blobs").toString
     ids.groupBy(pmod(col("id"), lit(blobs)).as("k"))
-      .agg(HllSketchAgg(col("id"), 10).as("hll"), CountMinSketchAgg(col("id"), 4, 256).as("cms"))
+      .agg(hll_sketch_long(col("id"), 10).as("hll"), cmsLong(col("id")).as("cms"))
       .write.parquet(stored)
     val blobTable = spark.read.parquet(stored)
     val out = groupCounts.flatMap { g =>
       val key = pmod(col("id"), lit(g)).as("g")
       Seq(
-        measure(s"hll_sketch_$g", n, g)(noop(ids.groupBy(key).agg(HllSketchAgg(col("id"), 10)))),
+        measure(s"hll_sketch_$g", n, g)(
+          noop(ids.groupBy(key).agg(hll_sketch_long(col("id"), 10)))),
         measure(s"cms_sketch_$g", n, g)(
-          noop(ids.groupBy(key).agg(CountMinSketchAgg(col("id"), 4, 256)))),
+          noop(ids.groupBy(key).agg(cmsLong(col("id"))))),
         measure(s"hist_sketch_$g", n, g)(
-          noop(ids.groupBy(key).agg(HistogramSketchAgg(col("id"), histLayout)))),
+          noop(ids.groupBy(key).agg(hist_sketch(col("id"), histLayout)))),
         measure(s"hll_merge_$g", blobs, g)(
           noop(blobTable.groupBy(pmod(col("k"), lit(g))).agg(hll_merge(col("hll"))))),
         measure(s"cms_merge_$g", blobs, g)(
@@ -89,7 +93,7 @@ object BenchExtra {
         .select(pmod(col("id"), lit(4)).as("g"),
           concat(lit("user_"), col("id")).cast("string").as("s"))
         .groupBy(col("g"))
-        .agg(HllSketchAgg(col("s"), 14).as("sk")))
+        .agg(hll_sketch(col("s"), 14).as("sk")))
     }
     println(s"{${out.mkString(",")}}")
     spark.stop()

@@ -152,14 +152,19 @@ object GraftExtensions {
       })
     }
 
-  private def sketchAgg(args: Seq[Expression], layout: Layout): Expression =
-    HistogramSketchAgg(Cast(args.head, DoubleType), layout).toAggregateExpression()
+  /** The aggregate of `kind` over `input` and, when given, a count per row
+   * (`hist_sketch_weighted`, `cms_sketch_weighted`). */
+  private def sketch(kind: SketchAgg.Kind[_ <: AnyRef], input: Expression,
+      weight: Option[Expression] = None): Expression =
+    SketchAgg(kind, input +: weight.map(Cast(_, LongType)).toSeq).toAggregateExpression()
 
-  /** (value, weight, layout) — the count-weighted native aggregate
-   * (reference `addValue(double, long)`, Histogram.java:283-290). */
+  private def sketchAgg(args: Seq[Expression], layout: Layout): Expression =
+    sketch(SketchAgg.Hist(layout), Cast(args.head, DoubleType))
+
+  /** (value, weight, layout) — the count-weighted histogram (reference
+   * `addValue(double, long)`, Histogram.java:283-290). */
   private def weightedSketchAgg(args: Seq[Expression], layout: Layout): Expression =
-    HistogramSketchWeightedAgg(Cast(args(0), DoubleType), Cast(args(1), LongType), layout)
-      .toAggregateExpression()
+    sketch(SketchAgg.Hist(layout), Cast(args(0), DoubleType), Some(args(1)))
 
   /** The layout of the parameterless SQL `hist_sketch(v)` and
    * `hist_sketch_weighted(v, w)`. */
@@ -169,9 +174,9 @@ object GraftExtensions {
    * `injectFunction` (new sessions) and [[functions.registerAll]]
    * (existing sessions). */
   private[spark] val functionTable: Seq[SqlFunction] = Seq(
-    entry[HistogramSketchAgg]("hist_sketch")(
+    entry[SketchAgg[_]]("hist_sketch")(
       expectArgs("hist_sketch", 1)(sketchAgg(_, SqlDefaultLayout))),
-    entry[HistogramSketchWeightedAgg]("hist_sketch_weighted")(
+    entry[SketchAgg[_]]("hist_sketch_weighted")(
       expectArgs("hist_sketch_weighted", 2)(weightedSketchAgg(_, SqlDefaultLayout))),
     // scalar sketch queries. hist_quantile also takes the estimator-
     // parameterized forms (sk, p, alphap, betap[, estimator]);
@@ -205,25 +210,25 @@ object GraftExtensions {
     // parameterized companion-sketch aggregates: accuracy parameters are
     // per-call SQL literals; 1-arg forms use the library defaults, matching
     // the DSL.
-    entry[HllSketchAgg]("hll_sketch") { args =>
+    entry[SketchAgg[_]]("hll_sketch") { args =>
       val p = args.length match {
         case 1 => graft.sketches.Hll.DefaultPrecision
         case 2 => litInt("hll_sketch", args(1))
         case n => throw new IllegalArgumentException(
           s"hll_sketch expects (item[, precision]), got $n argument(s)")
       }
-      HllSketchAgg(args.head, p).toAggregateExpression()
+      sketch(SketchAgg.Hll(p), args.head)
     },
-    entry[CountMinSketchAgg]("cms_sketch") { args =>
+    entry[SketchAgg[_]]("cms_sketch") { args =>
       val (d, w) = args.length match {
         case 1 => (5, 2048)
         case 3 => (litInt("cms_sketch", args(1)), litInt("cms_sketch", args(2)))
         case n => throw new IllegalArgumentException(
           s"cms_sketch expects (item[, depth, width]), got $n argument(s)")
       }
-      CountMinSketchAgg(args.head, d, w).toAggregateExpression()
+      sketch(SketchAgg.Cms(d, w), args.head)
     },
-    entry[CountMinWeightedSketchAgg]("cms_sketch_weighted") { args =>
+    entry[SketchAgg[_]]("cms_sketch_weighted") { args =>
       val (d, w) = args.length match {
         case 2 => (5, 2048)
         case 4 =>
@@ -231,10 +236,9 @@ object GraftExtensions {
         case n => throw new IllegalArgumentException(
           s"cms_sketch_weighted expects (item, weight[, depth, width]), got $n argument(s)")
       }
-      CountMinWeightedSketchAgg(args(0), Cast(args(1), LongType), d, w)
-        .toAggregateExpression()
+      sketch(SketchAgg.Cms(d, w), args(0), Some(args(1)))
     },
-    entry[BloomSketchAgg]("bloom_sketch") { args =>
+    entry[SketchAgg[_]]("bloom_sketch") { args =>
       val (exp, fpp) = args.length match {
         case 2 => (litDouble("bloom_sketch", args(1)).toLong, 0.01)
         case 3 =>
@@ -242,25 +246,25 @@ object GraftExtensions {
         case n => throw new IllegalArgumentException(
           s"bloom_sketch expects (item, expected_items[, fpp]), got $n argument(s)")
       }
-      BloomSketchAgg(args.head, exp, fpp).toAggregateExpression()
+      sketch(SketchAgg.Bloom(exp, fpp), args.head)
     },
-    entry[TDigestSketchAgg]("tdigest_sketch") { args =>
+    entry[SketchAgg[_]]("tdigest_sketch") { args =>
       val c = args.length match {
         case 1 => 100.0
         case 2 => litDouble("tdigest_sketch", args(1))
         case n => throw new IllegalArgumentException(
           s"tdigest_sketch expects (value[, compression]), got $n argument(s)")
       }
-      TDigestSketchAgg(Cast(args.head, DoubleType), c).toAggregateExpression()
+      sketch(SketchAgg.TDigest(c), Cast(args.head, DoubleType))
     },
-    entry[KllSketchAgg]("kll_sketch") { args =>
+    entry[SketchAgg[_]]("kll_sketch") { args =>
       val k = args.length match {
         case 1 => 200
         case 2 => litInt("kll_sketch", args(1))
         case n => throw new IllegalArgumentException(
           s"kll_sketch expects (value[, k]), got $n argument(s)")
       }
-      KllSketchAgg(Cast(args.head, DoubleType), k).toAggregateExpression()
+      sketch(SketchAgg.Kll(k), Cast(args.head, DoubleType))
     }) ++
     // the scalars whose every argument is a row argument
     Seq(SketchScalar.HistTotal, SketchScalar.HistMin, SketchScalar.HistMax,
@@ -272,12 +276,12 @@ object GraftExtensions {
       entry[SketchScalar](fn.name)(expectArgs(fn.name, fn.inputTypes.length)(SketchScalar(fn, _)))
     } ++
     // layout-parameterized names: (leading args, layout literals)
-    layoutFamily[HistogramSketchAgg]("hist_sketch", 1, AllLayouts)(sketchAgg) ++
-    layoutFamily[HistogramSketchWeightedAgg](
+    layoutFamily[SketchAgg[_]]("hist_sketch", 1, AllLayouts)(sketchAgg) ++
+    layoutFamily[SketchAgg[_]](
       "hist_sketch_weighted", 2, Seq("log_quadratic", "custom"))(weightedSketchAgg) ++
     // names kept from the removed adaptive-width buffer: the same
     // aggregate as hist_sketch_log_quadratic / hist_sketch_custom
-    layoutFamily[HistogramSketchAgg](
+    layoutFamily[SketchAgg[_]](
       "hist_sketch_packed", 1, Seq("log_quadratic", "custom"))(sketchAgg) ++
     // cross-layout re-binning of a stored sketch
     layoutFamily[SketchScalar]("hist_rebin", 1, AllLayouts)(

@@ -17,11 +17,11 @@ import org.apache.spark.sql.execution.aggregate.{ObjectAggregationMap, ObjectHas
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
 
-import graft.spark.expressions.GeneratedUpdate
+import graft.spark.expressions.SketchAgg
 
 /**
  * The map-side (Partial) phase of an aggregate made only of order-
- * independent sketch aggregates ([[GeneratedUpdate]]s), grouped by nothing
+ * independent sketch aggregates ([[SketchAgg]]s), grouped by nothing
  * or by one integral column, as a whole-stage codegen operator. Planned by
  * [[SketchAggregationStrategy]] in place of the partial
  * `ObjectHashAggregateExec`; the final phase is unchanged.
@@ -139,7 +139,7 @@ case class PartialSketchAggregateExec(
     val bufs = ctx.freshName("bufs")
     val base = ctx.freshName("base")
     val updates = functions(child.output).zipWithIndex.map { case (f, i) =>
-      f.asInstanceOf[GeneratedUpdate].updateCode(s"$bufs[$base + $i]", f.children.map(_.genCode(ctx)))
+      f.asInstanceOf[SketchAgg[_]].updateCode(s"$bufs[$base + $i]", f.children.map(_.genCode(ctx)))
     }
     val record = (s"Object[] $bufs = $stateTerm.buffers();" +: updates).mkString("\n")
     groupingExpressions match {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.spark.expressions.{CompanionSketchAgg, HistogramSketchAgg, HistogramSketchWeightedAgg}
+import graft.spark.expressions.SketchAgg
 
 /**
  * Optimizer rule that evaluates each computed sketch input once per row, in
@@ -66,11 +66,6 @@ object PullOutSketchInputs extends Rule[LogicalPlan] {
     ColumnBridge.column(f.toAggregateExpression())
   }
 
-  private def isSketch(f: AggregateFunction): Boolean = f match {
-    case _: CompanionSketchAgg[_] | _: HistogramSketchAgg | _: HistogramSketchWeightedAgg => true
-    case _ => false
-  }
-
   private def pullable(e: Expression): Boolean =
     e.deterministic && !e.foldable && !e.isInstanceOf[Attribute]
 
@@ -82,7 +77,7 @@ object PullOutSketchInputs extends Rule[LogicalPlan] {
     val inputs = mutable.LinkedHashMap.empty[Expression, Alias]
     val aggregates = a.aggregateExpressions.map(_.transformDown {
       case ae @ AggregateExpression(f, _, false, None, _)
-          if isSketch(f) && f.children.exists(pullable) =>
+          if f.isInstanceOf[SketchAgg[_]] && f.children.exists(pullable) =>
         ae.copy(aggregateFunction = f.withNewChildren(f.children.map { c =>
           if (!pullable(c)) c
           else inputs.getOrElseUpdate(c.canonicalized, Alias(c, "_in")()).toAttribute

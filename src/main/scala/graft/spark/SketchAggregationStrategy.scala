@@ -8,16 +8,17 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.aggregate.{AggUtils, ObjectHashAggregateExec}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
-import graft.spark.expressions.GeneratedUpdate
+import graft.spark.expressions.SketchAgg
 
 /**
  * Plans the map-side phase of a batch aggregate onto the codegen'd
  * [[PartialSketchAggregateExec]] when every aggregate is an order-
- * independent sketch ([[GeneratedUpdate]]: `hist_sketch` (which
- * `hist_sketch_packed` also builds) and `hist_sketch_weighted`,
- * `hll_sketch`, `cms_sketch`, `cms_sketch_weighted`, `bloom_sketch`) with no DISTINCT or FILTER and with column inputs (what
- * [[PullOutSketchInputs]] leaves), and the grouping is empty or one
- * integral column. The plan is Spark's own two-phase plan
+ * independent [[SketchAgg]] with a generated update
+ * ([[SketchAgg.generatesUpdate]]: `hist_sketch` (which `hist_sketch_packed`
+ * also builds) and `hist_sketch_weighted`, `hll_sketch`, `cms_sketch`,
+ * `cms_sketch_weighted`, `bloom_sketch`) with no DISTINCT or FILTER and with
+ * column inputs (what [[PullOutSketchInputs]] leaves), and the grouping is
+ * empty or one integral column. The plan is Spark's own two-phase plan
  * (`AggUtils.planAggregateWithoutDistinct`) with only the partial
  * `ObjectHashAggregateExec` swapped; anything else, streaming included,
  * goes to Spark's strategies as before. T-digest and KLL are not eligible:
@@ -53,7 +54,7 @@ object SketchAggregationStrategy extends SparkStrategy {
 
   private def eligible(ae: AggregateExpression): Boolean =
     !ae.isDistinct && ae.filter.isEmpty && (ae.aggregateFunction match {
-      case f: GeneratedUpdate => f.generatesUpdate && f.children.forall(_.isInstanceOf[Attribute])
+      case f: SketchAgg[_] => f.generatesUpdate && f.children.forall(_.isInstanceOf[Attribute])
       case _ => false
     })
 }

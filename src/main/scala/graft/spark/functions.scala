@@ -12,10 +12,13 @@ import graft.spark.expressions._
  * Column-level sketch API: aggregation functions producing sketch bytes, and
  * scalar functions querying them.
  *
- * Every aggregation is a native `TypedImperativeAggregate`
- * ([[graft.spark.expressions]]): it runs as a partial aggregate per input
- * partition, ships each group's buffer across the shuffle in the sketch's
- * compact wire format, and merges the partials in a final aggregate. Every
+ * Every sketch aggregation is one native `TypedImperativeAggregate`,
+ * [[graft.spark.expressions.SketchAgg]], whose `kind` names the sketch and
+ * holds its parameters (the `*_merge` re-aggregations are
+ * [[graft.spark.expressions.SketchMergeAgg]]): it runs as a partial
+ * aggregate per input partition, ships each group's buffer across the
+ * shuffle in the sketch's compact wire format, and merges the partials in a
+ * final aggregate. Every
  * scalar is one [[graft.spark.expressions.SketchScalar]]: a static call of
  * [[graft.spark.expressions.SketchEval]]. The same classes back the SQL
  * names, which [[functions.registerAll]] and
@@ -31,7 +34,7 @@ object functions {
 
   /** Error-bounded histogram sketch of a column cast to double. */
   def hist_sketch(c: Column, layout: Layout): Column =
-    HistogramSketchAgg(c, layout)
+    SketchAgg.column(SketchAgg.Hist(layout), c.cast("double"))
 
   /** Alias of [[hist_sketch]]: the histogram has one counter store, so
    * this builds the same aggregate, and Spark computes the two over one
@@ -43,7 +46,7 @@ object functions {
 
   /** Count-weighted histogram sketch over (value as double, weight as long). */
   def hist_sketch_weighted(value: Column, weight: Column, layout: Layout): Column =
-    HistogramSketchWeightedAgg(value, weight, layout)
+    SketchAgg.column(SketchAgg.Hist(layout), value.cast("double"), weight.cast("long"))
 
   /** Alias of [[hist_sketch_weighted]]. */
   def hist_sketch_weighted_binary(value: Column, weight: Column, layout: Layout): Column =
@@ -51,15 +54,15 @@ object functions {
 
   /** HyperLogLog sketch of a column cast to string. */
   def hll_sketch(c: Column, precision: Int = Hll.DefaultPrecision): Column =
-    HllSketchAgg(c.cast("string"), precision)
+    SketchAgg.column(SketchAgg.Hll(precision), c.cast("string"))
 
   /** HyperLogLog sketch of a column cast to long. */
   def hll_sketch_long(c: Column, precision: Int = Hll.DefaultPrecision): Column =
-    HllSketchAgg(c.cast("long"), precision)
+    SketchAgg.column(SketchAgg.Hll(precision), c.cast("long"))
 
   /** Count-min frequency sketch of a column cast to string. */
   def cms_sketch(c: Column, depth: Int = 5, width: Int = 2048): Column =
-    CountMinSketchAgg(c.cast("string"), depth, width)
+    SketchAgg.column(SketchAgg.Cms(depth, width), c.cast("string"))
 
   /** Count-weighted count-min sketch over (item as string, weight as long). */
   def cms_sketch_weighted(
@@ -67,18 +70,19 @@ object functions {
       weight: Column,
       depth: Int = 5,
       width: Int = 2048): Column =
-    CountMinWeightedSketchAgg(item.cast("string"), weight, depth, width)
+    SketchAgg.column(SketchAgg.Cms(depth, width), item.cast("string"), weight.cast("long"))
 
   /** Bloom filter of a column cast to long. */
   def bloom_sketch(c: Column, expectedItems: Long, fpp: Double = 0.01): Column =
-    BloomSketchAgg(c.cast("long"), expectedItems, fpp)
+    SketchAgg.column(SketchAgg.Bloom(expectedItems, fpp), c.cast("long"))
 
   /** t-digest quantile sketch of a column cast to double. */
   def tdigest_sketch(c: Column, compression: Double = 100.0): Column =
-    TDigestSketchAgg(c, compression)
+    SketchAgg.column(SketchAgg.TDigest(compression), c.cast("double"))
 
   /** KLL rank/quantile sketch of a column cast to double. */
-  def kll_sketch(c: Column, k: Int = 200): Column = KllSketchAgg(c, k)
+  def kll_sketch(c: Column, k: Int = 200): Column =
+    SketchAgg.column(SketchAgg.Kll(k), c.cast("double"))
 
   /** Re-merge aggregators over stored sketch byte columns — the second
    * level of two-level rollups (per-day sketch tables -> monthly) and of

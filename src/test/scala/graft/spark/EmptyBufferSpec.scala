@@ -61,22 +61,22 @@ class EmptyBufferSpec extends AnyFunSuite {
   test("merging into a never-written buffer equals merging into an allocated empty one") {
     val sizes = Seq(Seq(5), Seq(0, 40), Seq(300, 0, 7), Seq(20000))
     for (ns <- sizes) {
-      val hllAgg = HllSketchAgg(Literal("x"), 10)
+      val hllAgg = SketchAgg(SketchAgg.Hll(10), Seq(Literal("x")))
       checkAdoption[Hll](s"hll $ns", hllAgg,
         ns.zipWithIndex.map { case (n, i) =>
           val h = Hll(10); seededLongs(i, n).foreach(h.addLong); h },
         () => Hll(10).densify(), (a, b) => a.merge(b))
 
-      val cmsAgg = CountMinSketchAgg(Literal("x"), 4, 256)
+      val cmsAgg = SketchAgg(SketchAgg.Cms(4, 256), Seq(Literal("x")))
       val cmsParts = ns.zipWithIndex.map { case (n, i) =>
         val c = CountMin(4, 256); seededLongs(i, n).foreach(v => c.addLong(v)); c }
       checkAdoption[CountMin](s"cms $ns", cmsAgg, cmsParts,
         () => CountMin(4, 256).densify(), (a, b) => a.merge(b))
-      val cmsWeighted = CountMinWeightedSketchAgg(Literal("x"), Literal(1L), 4, 256)
+      val cmsWeighted = SketchAgg(SketchAgg.Cms(4, 256), Seq(Literal("x"), Literal(1L)))
       checkAdoption[CountMin](s"cms_weighted $ns", cmsWeighted, cmsParts,
         () => CountMin(4, 256).densify(), (a, b) => a.merge(b))
 
-      val bloomAgg = BloomSketchAgg(Literal(1L), 1000L, 0.01)
+      val bloomAgg = SketchAgg(SketchAgg.Bloom(1000L, 0.01), Seq(Literal(1L)))
       checkAdoption[BloomFilter](s"bloom $ns", bloomAgg,
         ns.zipWithIndex.map { case (n, i) =>
           val f = BloomFilter(1000L, 0.01); seededLongs(i, n).foreach(f.addLong); f },
@@ -88,8 +88,8 @@ class EmptyBufferSpec extends AnyFunSuite {
         h
       }
       for ((agg, fresh) <- Seq[(TypedImperativeAggregate[Histogram], () => Histogram)](
-          HistogramSketchAgg(Literal(0.0), layout) -> (() => Histogram(layout)),
-          HistogramSketchWeightedAgg(Literal(0.0), Literal(1L), layout) ->
+          SketchAgg(SketchAgg.Hist(layout), Seq(Literal(0.0))) -> (() => Histogram(layout)),
+          SketchAgg(SketchAgg.Hist(layout), Seq(Literal(0.0), Literal(1L))) ->
             (() => Histogram(layout)))) {
         checkAdoption[Histogram](s"${agg.prettyName} $ns", agg, hists, fresh,
           (a, b) => a.add(b))
@@ -98,11 +98,11 @@ class EmptyBufferSpec extends AnyFunSuite {
   }
 
   test("t-digest and KLL keep merging into the fresh buffer") {
-    val td = TDigestSketchAgg(Literal(0.0), 100.0)
+    val td = SketchAgg(SketchAgg.TDigest(100.0), Seq(Literal(0.0)))
     val t = TDigest(100.0).add(1.0).add(2.0)
     val tPart = partial(td, t)
     assert(!(td.merge(td.createAggregationBuffer(), tPart) eq tPart))
-    val kll = KllSketchAgg(Literal(0.0), 100)
+    val kll = SketchAgg(SketchAgg.Kll(100), Seq(Literal(0.0)))
     val k = Kll(100).add(1.0).add(2.0)
     val kPart = partial(kll, k)
     assert(!(kll.merge(kll.createAggregationBuffer(), kPart) eq kPart))
@@ -170,7 +170,7 @@ class EmptyBufferSpec extends AnyFunSuite {
       java.util.Arrays.fill(buf, off, off + len, 'a'.toByte)
       (off until off + len by 5).foreach(i => buf(i) = ('a' + i % 26).toByte)
       val s = UTF8String.fromBytes(buf, off, len)
-      assert(ItemSketchAgg.utf8Hash(s) ==
+      assert(SketchAgg.utf8Hash(s) ==
         Hashing.hashBytes(java.util.Arrays.copyOfRange(buf, off, off + len)))
     }
     // an UnsafeRow-backed string: base is the row's array, offset past the header
@@ -180,15 +180,15 @@ class EmptyBufferSpec extends AnyFunSuite {
       UTF8String.fromString("x"), UTF8String.fromString(text)))
     val fromRow = row.getUTF8String(1)
     assert(fromRow.getBaseObject.isInstanceOf[Array[Byte]])
-    assert(ItemSketchAgg.utf8Hash(fromRow) == Hashing.hashString(text))
-    assert(ItemSketchAgg.utf8Hash(fromRow) == Hashing.hashBytes(text.getBytes(UTF_8)))
+    assert(SketchAgg.utf8Hash(fromRow) == Hashing.hashString(text))
+    assert(SketchAgg.utf8Hash(fromRow) == Hashing.hashBytes(text.getBytes(UTF_8)))
     // malformed UTF-8 at an offset still hashes like the replaced String
     for (bad <- Seq(Array(0x80.toByte), Array('a'.toByte, 0xC3.toByte),
         Array(0xED.toByte, 0xA0.toByte, 0x80.toByte))) {
       val buf = Array[Byte]('z', 'z') ++ bad ++ Array[Byte]('q')
       val u = UTF8String.fromBytes(buf, 2, bad.length)
-      assert(ItemSketchAgg.utf8Hash(u) == Hashing.hashString(u.toString))
-      assert(ItemSketchAgg.utf8Hash(u) != Hashing.hashBytes(bad))
+      assert(SketchAgg.utf8Hash(u) == Hashing.hashString(u.toString))
+      assert(SketchAgg.utf8Hash(u) != Hashing.hashBytes(bad))
     }
   }
 
@@ -213,7 +213,7 @@ class EmptyBufferSpec extends AnyFunSuite {
         Platform.copyMemory(text, Platform.BYTE_ARRAY_OFFSET, null, addr + off, len)
         val offHeap = UTF8String.fromAddress(null, addr + off, len)
         for ((name, s) <- Seq("byte[]" -> onBytes, "long[]" -> onLongs, "off-heap" -> offHeap))
-          assert(ItemSketchAgg.utf8Hash(s) == expected, s"$name len=$len off=$off")
+          assert(SketchAgg.utf8Hash(s) == expected, s"$name len=$len off=$off")
       } finally Platform.freeMemory(addr)
       // the word reader itself, on raw bytes and seeds
       assert(Hashing.hashBytes(longs, Platform.LONG_ARRAY_OFFSET + off, len, 7L) ==
@@ -235,11 +235,11 @@ class EmptyBufferSpec extends AnyFunSuite {
       assert(!dense(fin), s"${agg.prettyName} final buffer went dense")
       agg.eval(fin).asInstanceOf[Array[Byte]]
     }
-    val hllBytes = run[Hll](HllSketchAgg(text, 10), _.isDense)
+    val hllBytes = run[Hll](SketchAgg(SketchAgg.Hll(10), Seq(text)), _.isDense)
     val hDense = Hll(10).densify()
     rows.foreach(r => hDense.addString(r.getUTF8String(0).toString))
     assert(hllBytes.sameElements(hDense.toBytes))
-    val cmsBytes = run[CountMin](CountMinSketchAgg(text, 4, 256), _.isDense)
+    val cmsBytes = run[CountMin](SketchAgg(SketchAgg.Cms(4, 256), Seq(text)), _.isDense)
     val cDense = CountMin(4, 256).densify()
     rows.foreach(r => cDense.addString(r.getUTF8String(0).toString))
     assert(cmsBytes.sameElements(cDense.toBytes))
@@ -254,8 +254,8 @@ class EmptyBufferSpec extends AnyFunSuite {
     val value = BoundReference(0, DoubleType, nullable = true)
     val weight = BoundReference(1, LongType, nullable = true)
     for (agg <- Seq[TypedImperativeAggregate[Histogram]](
-        HistogramSketchAgg(value, layout),
-        HistogramSketchWeightedAgg(value, weight, layout))) {
+        SketchAgg(SketchAgg.Hist(layout), Seq(value)),
+        SketchAgg(SketchAgg.Hist(layout), Seq(value, weight)))) {
       val name = agg.prettyName
       // two partials of ten rows, serialized, adopted and merged
       val parts = rows.grouped(10).map { rs =>
@@ -285,8 +285,8 @@ class EmptyBufferSpec extends AnyFunSuite {
   test("the word-at-a-time ASCII check leaves every string hash unchanged") {
     def check(buf: Array[Byte], off: Int, len: Int, ascii: Boolean): Unit = {
       val s = UTF8String.fromBytes(buf, off, len)
-      assert(ItemSketchAgg.isAscii(s) == ascii, s"len=$len off=$off")
-      assert(ItemSketchAgg.utf8Hash(s) == Hashing.hashString(s.toString), s"len=$len off=$off")
+      assert(SketchAgg.isAscii(s) == ascii, s"len=$len off=$off")
+      assert(SketchAgg.utf8Hash(s) == Hashing.hashString(s.toString), s"len=$len off=$off")
     }
     for (len <- 0 to 96; off <- Seq(0, 1, 3, 8, 13)) {
       val buf = Array.tabulate[Byte](off + len + 9)(i => ('a' + i % 26).toByte)

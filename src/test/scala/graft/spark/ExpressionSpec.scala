@@ -362,9 +362,10 @@ class ExpressionSpec extends AnyFunSuite {
     def b(c: org.apache.spark.sql.Column): Array[Byte] =
       df.agg(c).collect()(0).getAs[Array[Byte]](0)
     // the goldens hold the kryo String-path bytes for these inputs
-    Goldens.check("expr.utf8.hll", b(graft.spark.expressions.HllSketchAgg(col("s"), 12)))
+    import graft.spark.expressions.SketchAgg
+    Goldens.check("expr.utf8.hll", b(SketchAgg.column(SketchAgg.Hll(12), col("s"))))
     Goldens.check("expr.utf8.hll", b(functions.hll_sketch(col("s"), 12)))
-    Goldens.check("expr.utf8.cms", b(graft.spark.expressions.CountMinSketchAgg(col("s"), 5, 512)))
+    Goldens.check("expr.utf8.cms", b(SketchAgg.column(SketchAgg.Cms(5, 512), col("s"))))
     Goldens.check("expr.utf8.cms", b(functions.cms_sketch(col("s"), 5, 512)))
     // malformed UTF-8 (unreachable via well-formed sources, but parquet
     // bytes are not validated): the hash must match what the kryo String
@@ -372,7 +373,7 @@ class ExpressionSpec extends AnyFunSuite {
     for (bad <- Seq(Array(0x80.toByte), Array('a'.toByte, 0xC3.toByte),
         Array(0xED.toByte, 0xA0.toByte, 0x80.toByte))) {
       val u = org.apache.spark.unsafe.types.UTF8String.fromBytes(bad)
-      assert(graft.spark.expressions.ItemSketchAgg.utf8Hash(u) ==
+      assert(SketchAgg.utf8Hash(u) ==
         graft.sketches.Hashing.hashString(u.toString))
     }
 
@@ -382,9 +383,9 @@ class ExpressionSpec extends AnyFunSuite {
     // the same weights as longs
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val rawIntWeight = ColumnBridge.column(
-      graft.spark.expressions.CountMinWeightedSketchAgg(
-        ColumnBridge.expression(col("s")), ColumnBridge.expression(col("wi")),
-        5, 512).toAggregateExpression())
+      SketchAgg(SketchAgg.Cms(5, 512),
+        Seq(ColumnBridge.expression(col("s")), ColumnBridge.expression(col("wi"))))
+        .toAggregateExpression())
     Goldens.check("expr.utf8.cms_weighted", b(rawIntWeight))
     Goldens.check("expr.utf8.cms_weighted",
       b(functions.cms_sketch_weighted(col("s"), col("wi").cast("long"), 5, 512)))
@@ -403,14 +404,15 @@ class ExpressionSpec extends AnyFunSuite {
       df.groupBy(col("g")).agg(c.as("sk")).collect()
         .map(r => r.getInt(0).toString -> r.getAs[Array[Byte]](1)).toMap
     // the goldens hold the kryo Aggregators' bytes for this input
+    import graft.spark.expressions.SketchAgg
     Goldens.check("expr.grouped.hll_long",
-      collectMap(graft.spark.expressions.HllSketchAgg(col("id"), 14)))
+      collectMap(SketchAgg.column(SketchAgg.Hll(14), col("id"))))
     Goldens.check("expr.grouped.hll_long", collectMap(functions.hll_sketch_long(col("id"), 14)))
     Goldens.check("expr.grouped.cms",
-      collectMap(graft.spark.expressions.CountMinSketchAgg(col("s"), 5, 2048)))
+      collectMap(SketchAgg.column(SketchAgg.Cms(5, 2048), col("s"))))
     Goldens.check("expr.grouped.cms", collectMap(functions.cms_sketch(col("s"), 5, 2048)))
     Goldens.check("expr.grouped.bloom",
-      collectMap(graft.spark.expressions.BloomSketchAgg(col("id"), 100000, 0.01)))
+      collectMap(SketchAgg.column(SketchAgg.Bloom(100000, 0.01), col("id"))))
     Goldens.check("expr.grouped.bloom",
       collectMap(functions.bloom_sketch(col("id"), 100000, 0.01)))
   }
@@ -624,6 +626,30 @@ class ExpressionSpec extends AnyFunSuite {
       spark.sql("SELECT hll_sketch(s, 12, 99) FROM sql_comp").collect()
     }
     assert(e.getMessage.contains("hll_sketch"), e.getMessage)
+  }
+
+  test("bad sketch parameters fail when the call is analyzed or built, not in a task") {
+    functions.registerAll(spark)
+    import spark.implicits._
+    Seq(("a", 1.0)).toDF("x", "v").createOrReplaceTempView("bad_params")
+    // the sketch factory's own parameter check, anywhere in the cause chain
+    def factoryCheck(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+        case i: IllegalArgumentException => i.getMessage.startsWith("requirement failed")
+        case _ => false
+      }
+    for (call <- Seq("hll_sketch(x, 40)", "kll_sketch(v, 2)", "tdigest_sketch(v, 1)",
+        "cms_sketch(x, 0, 10)", "cms_sketch_weighted(x, 1, 5, 0)", "bloom_sketch(x, 0)")) {
+      val e = intercept[Exception](spark.sql(s"SELECT $call FROM bad_params"))
+      assert(factoryCheck(e), s"$call: $e")
+    }
+    for (build <- Seq[() => org.apache.spark.sql.Column](
+        () => hll_sketch(col("x"), 40), () => hll_sketch_long(col("x"), 3),
+        () => kll_sketch(col("v"), 2), () => tdigest_sketch(col("v"), 1.0),
+        () => cms_sketch(col("x"), 0, 10), () => cms_sketch_weighted(col("x"), col("v"), 5, 0),
+        () => bloom_sketch(col("x"), 0L), () => bloom_sketch(col("x"), 100L, 1.5))) {
+      assert(factoryCheck(intercept[IllegalArgumentException](build())))
+    }
   }
 
   test("every sketch scalar returns NULL when its sketch or value argument is NULL") {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Layout, LogQuadraticLayout}
-import graft.spark.expressions.HistogramSketchAgg
+import graft.spark.expressions.SketchAgg
 
 /** [[PartialSketchAggregateExec]] and [[SketchAggregationStrategy]]: which
  * aggregates get the codegen'd map-side operator, that its output bytes
@@ -67,7 +67,7 @@ class PartialSketchAggregateSpec extends AnyFunSuite with AdaptiveSparkPlanHelpe
 
   /** `cms_sketch` over a long item (the DSL casts to string). */
   private def CountMinLong(c: Column): Column =
-    expressions.CountMinSketchAgg(c, 4, 256)
+    SketchAgg.column(SketchAgg.Cms(4, 256), c)
 
   private def aggregated(keys: Seq[String], aggs: Seq[(String, Column)]): DataFrame = {
     val cols = aggs.map { case (n, c) => c.as(n) }
@@ -141,9 +141,9 @@ class PartialSketchAggregateSpec extends AnyFunSuite with AdaptiveSparkPlanHelpe
     assertPlansAsToday(aggregated(Seq("k_long", "k_int"), eligible.take(1)))
     val v = ColumnBridge.expression(col("v").cast("double"))
     assertPlansAsToday(input.groupBy(col("k_long")).agg(ColumnBridge.column(
-      HistogramSketchAgg(v, layout).toAggregateExpression(isDistinct = true))))
+      SketchAgg(SketchAgg.Hist(layout), Seq(v)).toAggregateExpression(isDistinct = true))))
     assertPlansAsToday(input.groupBy(col("k_long")).agg(ColumnBridge.column(
-      HistogramSketchAgg(v, layout).toAggregateExpression(
+      SketchAgg(SketchAgg.Hist(layout), Seq(v)).toAggregateExpression(
         false, Some(ColumnBridge.expression(col("w") > 2))))))
     // one eligible and one order-dependent aggregate: the whole aggregate keeps Spark's plan
     assertPlansAsToday(aggregated(Seq("k_long"),

@@ -319,12 +319,12 @@ class PlanAndParitySpec extends AnyFunSuite {
   }
 
   test("DESCRIBE FUNCTION reports each function's own class on both install paths") {
-    import graft.spark.expressions.{HllSketchAgg, SketchScalar}
+    import graft.spark.expressions.{SketchAgg, SketchScalar}
     def classLine(s: SparkSession, name: String): String =
       s.sql(s"DESCRIBE FUNCTION EXTENDED $name").collect().map(_.getString(0))
         .find(_.startsWith("Class:")).getOrElse(fail(s"no Class: line for $name"))
     for ((name, cls) <- Seq(
-        "hll_sketch" -> classOf[HllSketchAgg], "hist_rebin_custom" -> classOf[SketchScalar])) {
+        "hll_sketch" -> classOf[SketchAgg[_]], "hist_rebin_custom" -> classOf[SketchScalar])) {
       val line = classLine(extensionsSession, name)
       assert(line == s"Class: ${cls.getName}")
       assert(classLine(registeredSession, name) == line)
@@ -352,12 +352,14 @@ class PlanAndParitySpec extends AnyFunSuite {
     // column for each Column), analyzed in a select
     import spark.implicits._
     val guard = Seq((1.0, 1L, Array[Byte](1))).toDF("x", "w", "b")
-    def placeholder(c: Class[_], column: String): AnyRef =
+    // a double is a probability, except t-digest's compression (at least
+    // 10), which is checked when the column is built
+    def placeholder(c: Class[_], column: String, fn: String): AnyRef =
       if (c == classOf[Column]) col(column)
       else if (classOf[graft.core.Layout].isAssignableFrom(c)) layout
       else if (c == java.lang.Integer.TYPE) Int.box(12)
       else if (c == java.lang.Long.TYPE) Long.box(1000L)
-      else if (c == java.lang.Double.TYPE) Double.box(0.5)
+      else if (c == java.lang.Double.TYPE) Double.box(if (fn == "tdigest_sketch") 100.0 else 0.5)
       else if (c == classOf[String]) "uniform"
       else if (c == classOf[Seq[_]]) Seq(0.5)
       else fail(s"no placeholder for $c")
@@ -365,7 +367,8 @@ class PlanAndParitySpec extends AnyFunSuite {
       .filter(m => m.getReturnType == classOf[Column] && !m.getName.contains("$"))
       .map { m =>
         m.getName -> Seq("x", "b").flatMap { column =>
-          val c = m.invoke(functions, m.getParameterTypes.map(placeholder(_, column)): _*)
+          val args = m.getParameterTypes.map(placeholder(_, column, m.getName))
+          val c = m.invoke(functions, args: _*)
           scala.util.Try(guard.select(c.asInstanceOf[Column]).queryExecution.analyzed
             .flatMap(_.expressions.flatMap(aggregates))).getOrElse(Nil)
         }

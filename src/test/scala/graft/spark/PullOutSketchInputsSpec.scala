@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.DoubleType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Layout, LogQuadraticLayout}
-import graft.spark.expressions.{HistogramSketchAgg, KllSketchAgg}
+import graft.spark.expressions.SketchAgg
 
 /** [[PullOutSketchInputs]]: computed sketch inputs are projected once
  * below the aggregate, output bytes do not change, and the inputs it must
@@ -94,6 +94,37 @@ class PullOutSketchInputsSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
+  /** The update shapes [[convAggregates]] leaves out, each over computed
+   * inputs: the weighted histogram and count-min, and integral items. */
+  private def otherShapes: Seq[Column] = {
+    val len = length(col("text")).cast("double")
+    val w = col("turn_idx") % 5 + 1
+    Seq(
+      functions.hist_sketch_weighted(len, w, layout).as("hist_w"),
+      functions.cms_sketch_weighted(col("tool"), w, 4, 256).as("cms_w"),
+      functions.cms_sketch_weighted(col("turn_idx") * 2, w, 4, 256).as("cms_w_expr"),
+      functions.hll_sketch_long(col("turn_idx") + 1).as("hll_long"),
+      SketchAgg.column(SketchAgg.Cms(4, 256), (col("turn_idx") + 1).cast("long")).as("cms_long"),
+      functions.bloom_sketch(col("turn_idx") * 3, 1000).as("bloom_long"))
+  }
+
+  test("output bytes of the weighted and integral-item shapes are identical with and without " +
+    "the rule") {
+    turns // the session exists before the columns are built, which install the rule
+    val aggs = otherShapes
+    val withRule = sketchTable(aggs)
+    val plan = withRule.queryExecution.optimizedPlan
+    assert(sketchInputs(plan).forall(_.isInstanceOf[Attribute]), plan)
+    val expected = withoutRule {
+      val df = sketchTable(aggs)
+      assert(sketchInputs(df.queryExecution.optimizedPlan).exists(!_.isInstanceOf[Attribute]))
+      rows(df)
+    }
+    val got = rows(withRule)
+    assert(got.size == 200)
+    assert(got == expected)
+  }
+
   test("nondeterministic, DISTINCT and FILTER inputs are not pulled out") {
     def agg(f: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction,
         isDistinct: Boolean = false, filter: Option[Column] = None): Column =
@@ -101,8 +132,9 @@ class PullOutSketchInputsSpec extends AnyFunSuite {
         f.toAggregateExpression(isDistinct, filter.map(ColumnBridge.expression)))
     val len = ColumnBridge.expression(length(col("text")).cast("double"))
     val df = sketchTable(Seq(
-      agg(HistogramSketchAgg(len, layout), isDistinct = true).as("distinct"),
-      agg(KllSketchAgg(len, 100), filter = Some(col("turn_idx") > 2)).as("filtered")))
+      agg(SketchAgg(SketchAgg.Hist(layout), Seq(len)), isDistinct = true).as("distinct"),
+      agg(SketchAgg(SketchAgg.Kll(100), Seq(len)), filter = Some(col("turn_idx") > 2))
+        .as("filtered")))
     val plan = df.queryExecution.optimizedPlan
     val inputs = sketchInputs(plan)
     assert(inputs.size == 2 && inputs.forall(!_.isInstanceOf[Attribute]), plan)
@@ -112,7 +144,8 @@ class PullOutSketchInputsSpec extends AnyFunSuite {
     // rule is applied to a hand-built plan
     val x = AttributeReference("x", DoubleType)()
     val random = Aggregate(Nil, Seq(Alias(
-      HistogramSketchAgg(Add(x, Rand(Literal(7L))), layout).toAggregateExpression(), "r")()),
+      SketchAgg(SketchAgg.Hist(layout), Seq(Add(x, Rand(Literal(7L))))).toAggregateExpression(),
+      "r")()),
       LocalRelation(x))
     assert(PullOutSketchInputs(random) eq random)
   }
@@ -125,7 +158,7 @@ class PullOutSketchInputsSpec extends AnyFunSuite {
     try {
       val in = Seq(("a", "1.5"), ("a", "x"), ("b", "2.5")).toDF("g", "s")
       val value = ColumnBridge.expression(col("s").cast("double"))
-      val sketch = ColumnBridge.column(HistogramSketchAgg(value, layout)
+      val sketch = ColumnBridge.column(SketchAgg(SketchAgg.Hist(layout), Seq(value))
         .toAggregateExpression(false, Some(ColumnBridge.expression(col("s") =!= "x"))))
       val df = in.groupBy(col("g")).agg(functions.hist_total(sketch).as("n"))
       assert(sketchInputs(df.queryExecution.optimizedPlan).forall(!_.isInstanceOf[Attribute]))

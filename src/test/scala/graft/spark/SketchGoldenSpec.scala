@@ -218,7 +218,9 @@ class SketchGoldenSpec extends AnyFunSuite {
       "hist_sketch_packed" -> hist_sketch_packed(len, wideLayout),
       "hist_sketch_weighted" -> hist_sketch_weighted(len, col("w"), wideLayout),
       "hll_sketch" -> hll_sketch(col("text"), 10),
+      "hll_sketch_long" -> hll_sketch_long(col("turn_idx")),
       "cms_sketch" -> cms_sketch(col("tool"), 4, 256),
+      "cms_sketch_weighted" -> cms_sketch_weighted(col("tool"), col("w"), 4, 256),
       "bloom_sketch" -> bloom_sketch(col("turn_idx"), 1000L),
       "kll_sketch" -> kll_sketch(len, 100),
       "tdigest_sketch" -> tdigest_sketch(len, 100.0))
