@@ -7,11 +7,12 @@ package graft.core
  * total counts and exact min/max (signed zero respected). The counters are
  * stored sparse first, as in DynaHist's dynamic histogram, which spends
  * memory only on the bins it has seen: the touched bins as (bin index,
- * count) pairs sorted by index, until more than [[SparseCells.cap]] (at
- * most 128) are touched; then one dense counter window over the touched
- * span, grown geometrically by >= 25% as values land outside it. A new
- * histogram allocates nothing, and a 20-value group never builds a window.
- * Both forms answer every read and write the same bytes. Recording is
+ * count) entries of a [[SparseCells]] list, until more than
+ * [[SparseCells.cap]] (at most 128) are touched; then one dense counter
+ * window over the touched span, grown geometrically by >= 25% as values
+ * land outside it. A new histogram allocates no counter array, and a
+ * 20-value group never builds a window. Both forms answer every read and
+ * write the same bytes. Recording is
  * O(log 128) sparse and O(1) dense; merge of equal-layout histograms is
  * bin-wise counter addition and therefore associative and commutative —
  * the property that makes this a valid distributed aggregation buffer
@@ -24,16 +25,14 @@ package graft.core
  */
 final class Histogram private (val layout: Layout) extends Serializable {
 
-  // Sparse phase (`!dense`): the touched regular bins as `n` (bin index,
-  // count) pairs in `keys`/`vals`, ascending by index; every count is > 0.
-  private var keys: Array[Int] = SparseCells.NoKeys
-  private var vals: Array[Long] = SparseCells.NoCounts
-  private var n: Int = 0
-  private var dense: Boolean = false
+  // Sparse phase: the touched regular bins with their counts (each > 0);
+  // null once the histogram is dense.
+  private var sparse: SparseCells =
+    SparseCells(math.min(layout.regularBinCount, Int.MaxValue.toLong).toInt)
 
   // Dense phase: a window of `windowLen` plain 64-bit counters starting at
   // bin index `windowStart` (the reference's StaticHistogram-style buffer).
-  private var counts: Array[Long] = SparseCells.NoCounts
+  private var counts: Array[Long] = Array.emptyLongArray
   private var windowStart: Int = 0 // bin index of counter 0; meaningful iff windowLen > 0
   private var windowLen: Int = 0
 
@@ -72,7 +71,7 @@ final class Histogram private (val layout: Layout) extends Serializable {
    * only the dense path: with the sparse insert inlined into it, C2
    * compiled the dense path about 1 ns a value slower. */
   def addValue(value: Double, count: Long): this.type = {
-    if (!dense) return addValueSparse(value, count)
+    if (sparse != null) return addValueSparse(value, count)
     val idx = record(value, count)
     if (idx != Histogram.NotRegular) {
       if (idx < windowStart || idx >= windowStart + windowLen) growWindow(idx)
@@ -84,7 +83,7 @@ final class Histogram private (val layout: Layout) extends Serializable {
   /** [[addValue]] in the sparse phase, out of line. */
   private def addValueSparse(value: Double, count: Long): this.type = {
     val idx = record(value, count)
-    if (idx != Histogram.NotRegular) incrementSparse(idx, count)
+    if (idx != Histogram.NotRegular) incrementSparse(idx, count, idx, idx)
     this
   }
 
@@ -109,154 +108,62 @@ final class Histogram private (val layout: Layout) extends Serializable {
   // sparse list
   // ---------------------------------------------------------------------
 
-  /** Distinct bins the list holds before the histogram goes dense. */
-  private def sparseCap: Int =
-    SparseCells.cap(math.min(layout.regularBinCount, Int.MaxValue.toLong).toInt)
-
   /** Adds `count` (> 0) to regular bin `idx`. */
   private[core] def incrementRegular(idx: Int, count: Long): Unit =
-    if (dense) {
+    if (sparse == null) {
       if (idx < windowStart || idx >= windowStart + windowLen) growWindow(idx)
       addToCounterAt(idx - windowStart, count)
-    } else incrementSparse(idx, count)
+    } else incrementSparse(idx, count, idx, idx)
 
-  private def incrementSparse(idx: Int, count: Long): Unit = {
-    val k = java.util.Arrays.binarySearch(keys, 0, n, idx)
-    if (k >= 0) {
-      val updated = vals(k) + count
-      if (updated < 0) throw new ArithmeticException("counter overflow")
-      vals(k) = updated
-    } else if (n == keys.length && n >= sparseCap) {
-      densify(idx, idx)
+  /** Adds `count` (> 0) to regular bin `idx` of the list. A full list moves
+   * to one counter window over its span and [lo, hi], which holds `idx`. */
+  private def incrementSparse(idx: Int, count: Long, lo: Int, hi: Int): Unit = {
+    val k = sparse.slot(idx)
+    if (k < 0) {
+      densify(lo, hi)
       addToCounterAt(idx - windowStart, count)
     } else {
-      val at = -k - 1
-      if (n == keys.length) {
-        val len = SparseCells.grown(n, sparseCap)
-        keys = java.util.Arrays.copyOf(keys, len)
-        vals = java.util.Arrays.copyOf(vals, len)
-      }
-      System.arraycopy(keys, at, keys, at + 1, n - at)
-      System.arraycopy(vals, at, vals, at + 1, n - at)
-      keys(at) = idx
-      vals(at) = count
-      n += 1
+      val updated = sparse.value(k) + count
+      if (updated < 0) throw new ArithmeticException("counter overflow")
+      sparse.setValue(k, updated)
     }
-  }
-
-  /** Sparse + sparse: a merge-walk that stays sparse up to the cap, in place
-   * when the union fits the arrays. */
-  private def mergeSparse(o: Histogram): Unit = {
-    var i = 0
-    var j = 0
-    var u = 0 // distinct bins of the union
-    while (i < n && j < o.n) {
-      val a = keys(i)
-      val b = o.keys(j)
-      if (a <= b) i += 1
-      if (b <= a) j += 1
-      u += 1
-    }
-    u += (n - i) + (o.n - j)
-    val cap = sparseCap
-    if (u > cap) {
-      densify(o.keys(0), o.keys(o.n - 1))
-      addSparse(o)
-    } else {
-      if (u > keys.length) {
-        val len = math.max(u, SparseCells.grown(n, cap))
-        keys = java.util.Arrays.copyOf(keys, len)
-        vals = java.util.Arrays.copyOf(vals, len)
-      }
-      // from the back, so the union overwrites only entries already moved
-      i = n - 1
-      j = o.n - 1
-      var w = u - 1
-      while (j >= 0) {
-        val b = o.keys(j)
-        if (i >= 0 && keys(i) > b) {
-          keys(w) = keys(i)
-          vals(w) = vals(i)
-          i -= 1
-        } else {
-          var c = o.vals(j)
-          if (i >= 0 && keys(i) == b) {
-            c += vals(i)
-            i -= 1
-          }
-          keys(w) = b
-          vals(w) = c
-          j -= 1
-        }
-        w -= 1
-      }
-      n = u
-    }
-  }
-
-  /** Adds sparse `o`'s counts into this dense window, which covers them. */
-  private def addSparse(o: Histogram): Unit = {
-    var k = 0
-    while (k < o.n) {
-      addToCounterAt(o.keys(k) - windowStart, o.vals(k))
-      k += 1
-    }
-  }
-
-  /** Bit-OR of all regular counters: [[HistogramSerde.minimalMode]] takes
-   * the V0 counter width class from it. */
-  private[core] def regularCountMask: Long = {
-    var mask = 0L
-    if (dense) {
-      var i = 0
-      while (i < windowLen) { mask |= counts(i); i += 1 }
-    } else {
-      var k = 0
-      while (k < n) { mask |= vals(k); k += 1 }
-    }
-    mask
   }
 
   /** Moves to the dense phase (a no-op once dense), with a window over the
    * list's span. */
   private[graft] def densify(): this.type = {
-    if (!dense) {
-      if (n == 0) installWindow(0, 0)
-      else densify(keys(0), keys(n - 1))
+    if (sparse != null) {
+      if (sparse.size == 0) installWindow(0, 0)
+      else densify(sparse.key(0), sparse.key(sparse.size - 1))
     }
     this
   }
 
   /** Moves the list into one counter window over its span and [lo, hi]. */
   private def densify(lo: Int, hi: Int): Unit = {
-    var from = lo
-    var to = hi
-    if (n > 0) {
-      from = math.min(from, keys(0))
-      to = math.max(to, keys(n - 1))
-    }
+    val n = sparse.size
+    val from = if (n > 0) math.min(lo, sparse.key(0)) else lo
+    val to = if (n > 0) math.max(hi, sparse.key(n - 1)) else hi
     installWindow(from, to - from + 1)
   }
 
   /** Replaces the list with a counter window of `len` counters from bin
    * `start` holding the list's counts. */
   private def installWindow(start: Int, len: Int): Unit = {
+    val s = sparse
     counts = new Array[Long](len)
     windowStart = start
     windowLen = len
-    dense = true
+    sparse = null
     var k = 0
-    while (k < n) {
-      counts(keys(k) - start) = vals(k)
+    while (k < s.size) {
+      counts(s.key(k) - start) = s.value(k)
       k += 1
     }
-    keys = SparseCells.NoKeys
-    vals = SparseCells.NoCounts
-    n = 0
   }
 
   /** True once the histogram has moved to its counter window. */
-  private[graft] def isDense: Boolean = dense
+  private[graft] def isDense: Boolean = sparse == null
 
   /** Adds `delta` to the counter at window position `pos`. */
   private def addToCounterAt(pos: Int, delta: Long): Unit = {
@@ -309,35 +216,26 @@ final class Histogram private (val layout: Layout) extends Serializable {
   }
 
   private def regularCountAt(binIndex: Int): Long =
-    if (dense) {
+    if (sparse == null) {
       val pos = binIndex - windowStart
       if (pos >= 0 && pos < windowLen) counts(pos) else 0L
-    } else {
-      val k = java.util.Arrays.binarySearch(keys, 0, n, binIndex)
-      if (k >= 0) vals(k) else 0L
-    }
+    } else sparse.get(binIndex)
 
   /** Smallest non-empty regular bin above `idx`; there must be one. */
   private def nextNonEmptyRegular(idx: Int): Int =
-    if (dense) {
+    if (sparse == null) {
       var pos = math.max(idx + 1, windowStart) - windowStart
       while (counts(pos) == 0L) pos += 1
       windowStart + pos
-    } else {
-      val k = java.util.Arrays.binarySearch(keys, 0, n, idx + 1)
-      keys(if (k >= 0) k else -k - 1)
-    }
+    } else sparse.ceiling(idx + 1)
 
   /** Largest non-empty regular bin below `idx`; there must be one. */
   private def previousNonEmptyRegular(idx: Int): Int =
-    if (dense) {
+    if (sparse == null) {
       var pos = math.min(idx - 1, windowStart + windowLen - 1) - windowStart
       while (counts(pos) == 0L) pos -= 1
       windowStart + pos
-    } else {
-      val k = java.util.Arrays.binarySearch(keys, 0, n, idx - 1)
-      keys(if (k >= 0) k else -k - 2)
-    }
+    } else sparse.floor(idx - 1)
 
   /** True when some regular bin is non-empty. */
   private def hasRegularCounts: Boolean =
@@ -359,12 +257,24 @@ final class Histogram private (val layout: Layout) extends Serializable {
       overflowCountVar += other.overflowCountVar
       updateMin(other.minVar)
       updateMax(other.maxVar)
-      if (!other.dense) {
-        if (other.n > 0) {
-          if (!dense) mergeSparse(other)
-          else {
-            ensureWindow(other.keys(0), other.keys(other.n - 1))
-            addSparse(other)
+      val o = other.sparse
+      if (o != null) {
+        if (o.size > 0) {
+          val lo = o.key(0)
+          val hi = o.key(o.size - 1)
+          // into the list while it has room; one that fills up goes dense
+          // over o's span too, and the rest go into the window
+          var k = 0
+          while (k < o.size && sparse != null) {
+            incrementSparse(o.key(k), o.value(k), lo, hi)
+            k += 1
+          }
+          if (k < o.size) {
+            ensureWindow(lo, hi)
+            while (k < o.size) {
+              addToCounterAt(o.key(k) - windowStart, o.value(k))
+              k += 1
+            }
           }
         }
       } else if (other.windowLen > 0) {
@@ -375,7 +285,7 @@ final class Histogram private (val layout: Layout) extends Serializable {
         while (hi >= lo && other.counts(hi) == 0L) hi -= 1
         if (lo <= hi) {
           // a dense side with counts densifies this one
-          if (dense) ensureWindow(other.windowStart + lo, other.windowStart + hi)
+          if (sparse == null) ensureWindow(other.windowStart + lo, other.windowStart + hi)
           else densify(other.windowStart + lo, other.windowStart + hi)
           var i = lo
           while (i <= hi) {
@@ -611,8 +521,9 @@ final class Histogram private (val layout: Layout) extends Serializable {
    * (the stored bins are bounded by actual use, so this iterates them
    * rather than the full index range). */
   private def regularCountsIn(h: Histogram): Boolean =
-    if (dense) (0 until windowLen).forall(i => counts(i) == h.regularCountAt(windowStart + i))
-    else (0 until n).forall(k => vals(k) == h.regularCountAt(keys(k)))
+    if (sparse == null)
+      (0 until windowLen).forall(i => counts(i) == h.regularCountAt(windowStart + i))
+    else (0 until sparse.size).forall(k => sparse.value(k) == h.regularCountAt(sparse.key(k)))
 
   override def hashCode(): Int = {
     var result = layout.hashCode()
@@ -629,7 +540,7 @@ final class Histogram private (val layout: Layout) extends Serializable {
   /** Rough in-memory footprint: sparse list (4 + 8 bytes an entry) or
    * counter window (8 bytes a counter) + fixed fields. */
   def estimatedFootprintBytes: Long =
-    16L + keys.length * 4L + vals.length * 8L + counts.length.toLong * 8L +
+    16L + (if (sparse != null) sparse.footprintBytes else 0L) + counts.length.toLong * 8L +
       4L + 3L * 8L + 2L * 8L
 
   /** Sets the non-regular state of a histogram whose regular counts a

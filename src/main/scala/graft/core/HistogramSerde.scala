@@ -470,9 +470,12 @@ object HistogramSerde {
 
   /** Counter bit-width class ("mode") as computed by the reference's static
    * histogram: required mode of the bit-OR of the raw regular counters
-   * (dynahist `StaticHistogram.java:93-99`, `AbstractHistogram.java:69-85`). */
+   * (dynahist `StaticHistogram.java:93-99`, `AbstractHistogram.java:69-85`);
+   * empty bins add nothing to the OR. */
   def minimalMode(h: Histogram): Int = {
-    val mask = h.regularCountMask
+    val mask = h.nonEmptyBins.collect {
+      case b if !b.isUnderflowBin && !b.isOverflowBin => b.binCount
+    }.foldLeft(0L)(_ | _)
     if (mask > 0xffffffffL) 6
     else if (mask > 0xffffL) 5
     else if (mask > 0xffL) 4

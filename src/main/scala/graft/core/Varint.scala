@@ -1,4 +1,4 @@
-package graft.sketches
+package graft.core
 
 /**
  * LEB128 unsigned varints for the COMPACT aggregation-buffer encodings of
@@ -11,7 +11,7 @@ package graft.sketches
  * Encoders size their output exactly with [[size]] in the pass that counts
  * the nonzero cells, then [[write]] into that one array.
  */
-private[sketches] object Varint {
+private[graft] object Varint {
 
   /** Encoded length of `v` in bytes (1..10). */
   def size(v: Long): Int = {
@@ -37,7 +37,7 @@ private[sketches] object Varint {
   /** Reads varints and raw bytes from `pos` on. Running past the end of
    * `bytes`, or a varint longer than 10 bytes, fails with
    * `require` "corrupt `what` payload (...)". */
-  final class Reader(val bytes: Array[Byte], var pos: Int, what: String) {
+  final class Reader(val bytes: Array[Byte], var pos: Int, val what: String) {
     def read(): Long = {
       var shift = 0
       var acc = 0L

@@ -2,7 +2,7 @@ package graft.sketches
 
 import java.nio.ByteBuffer
 
-import graft.core.SparseCells
+import graft.core.{SparseCells, Varint}
 
 import org.apache.spark.unsafe.Platform
 
@@ -13,19 +13,17 @@ import org.apache.spark.unsafe.Platform
  * 1 - delta, for eps = e/width and delta = e^-depth. Merge is element-wise
  * addition — associative and commutative.
  *
- * Counters are stored sparse first (see [[SparseCells]]): the touched
- * cells as (index, count) pairs sorted by index, until more than
- * [[SparseCells.cap]] are touched; then the dense depth x width matrix. A
- * new sketch holds the empty list and allocates nothing. Both forms give
- * the same bytes and estimates.
+ * Counters are stored sparse first: the touched cells as (index, count)
+ * entries of a [[SparseCells]] list, until more than [[SparseCells.cap]]
+ * are touched; then the dense depth x width matrix. A new sketch holds the
+ * empty list and no counter array. Both forms give the same bytes and
+ * estimates.
  */
 final class CountMin private (
     val depth: Int,
     val width: Int,
     private var cells: Array[Long], // dense depth * width, row-major; null while sparse
-    private var keys: Array[Int], // sparse: touched cell indices, ascending
-    private var vals: Array[Long], // sparse: their counts
-    private var n: Int, // sparse: entries in use
+    private var sparse: SparseCells, // touched cells; null once dense
     private var totalVar: Long)
     extends Serializable {
 
@@ -34,8 +32,8 @@ final class CountMin private (
   private def numCells: Int = depth * width
 
   /** True until the first count is added: the sparse list is empty, so an
-   * unused aggregation buffer costs only this object. */
-  def isPristine: Boolean = cells == null && n == 0 && totalVar == 0L
+   * unused aggregation buffer costs only this object and its empty list. */
+  def isPristine: Boolean = sparse != null && sparse.size == 0 && totalVar == 0L
 
   /** A copy of the depth x width counters, row-major. */
   def counters: Array[Long] =
@@ -43,23 +41,21 @@ final class CountMin private (
     else {
       val out = new Array[Long](numCells)
       var k = 0
-      while (k < n) {
-        out(keys(k)) = vals(k)
+      while (k < sparse.size) {
+        out(sparse.key(k)) = sparse.value(k)
         k += 1
       }
       out
     }
 
   /** True once the sketch has moved to its dense array. */
-  private[graft] def isDense: Boolean = cells != null
+  private[graft] def isDense: Boolean = sparse == null
 
   /** Moves to the dense counter matrix (a no-op once dense). */
   private[graft] def densify(): this.type = {
-    if (cells == null) {
+    if (sparse != null) {
       cells = counters
-      keys = SparseCells.NoKeys
-      vals = CountMin.NoVals
-      n = 0
+      sparse = null
     }
     this
   }
@@ -73,35 +69,17 @@ final class CountMin private (
   }
 
   /** Counter `i`. */
-  private def cell(i: Int): Long =
-    if (cells != null) cells(i)
-    else {
-      val k = java.util.Arrays.binarySearch(keys, 0, n, i)
-      if (k >= 0) vals(k) else 0L
-    }
+  private def cell(i: Int): Long = if (cells != null) cells(i) else sparse.get(i)
 
   /** Adds `v` to counter `i`. */
   private def addCell(i: Int, v: Long): Unit =
     if (cells != null) cells(i) += v
     else {
-      val k = java.util.Arrays.binarySearch(keys, 0, n, i)
-      if (k >= 0) vals(k) += v
-      else if (n == SparseCells.cap(numCells)) {
+      val k = sparse.slot(i)
+      if (k < 0) {
         densify()
         cells(i) += v
-      } else {
-        val at = -k - 1
-        if (n == keys.length) {
-          val len = SparseCells.grown(n, SparseCells.cap(numCells))
-          keys = java.util.Arrays.copyOf(keys, len)
-          vals = java.util.Arrays.copyOf(vals, len)
-        }
-        System.arraycopy(keys, at, keys, at + 1, n - at)
-        System.arraycopy(vals, at, vals, at + 1, n - at)
-        keys(at) = i
-        vals(at) = v
-        n += 1
-      }
+      } else sparse.setValue(k, sparse.value(k) + v)
     }
 
   def addHash(hash: Long, count: Long = 1L): this.type = {
@@ -147,9 +125,10 @@ final class CountMin private (
         i += 1
       }
     } else {
+      val s = other.sparse
       var k = 0
-      while (k < other.n) {
-        addCell(other.keys(k), other.vals(k))
+      while (k < s.size) {
+        addCell(s.key(k), s.value(k))
         k += 1
       }
     }
@@ -170,8 +149,8 @@ final class CountMin private (
       }
     } else {
       var k = 0
-      while (k < n) {
-        buf.putLong(16 + keys(k) * 8, vals(k))
+      while (k < sparse.size) {
+        buf.putLong(16 + sparse.key(k) * 8, sparse.value(k))
         k += 1
       }
     }
@@ -185,14 +164,12 @@ object CountMin {
    * a counter) still fits in one JVM array. */
   val MaxCells: Long = (Int.MaxValue - 8 - 16) / 8
 
-  private val NoVals = new Array[Long](0)
-
   def apply(depth: Int = 5, width: Int = 2048): CountMin = {
     require(depth > 0 && width > 0)
     val cells = depth.toLong * width
     require(cells <= MaxCells,
       s"count-min $depth x $width = $cells counters exceeds the $MaxCells an encoding can hold")
-    new CountMin(depth, width, null, SparseCells.NoKeys, NoVals, 0, 0L)
+    new CountMin(depth, width, null, SparseCells(depth * width), 0L)
   }
 
   /** Sizes the sketch for the published (eps, delta) guarantee. */
@@ -215,68 +192,33 @@ object CountMin {
   def toCompactBytes(c: CountMin): Array[Byte] = {
     val cells = c.cells
     val n = c.numCells
-    var keys = c.keys
-    var vals = c.vals
-    var len = c.n
-    if (cells != null) {
-      len = 0
+    // a sparse list (at most one entry in eight counters) is always smaller
+    var list = c.sparse
+    if (list == null) {
+      var len = 0
       var i = 0
       while (i < n) {
         if (cells(i) != 0L) len += 1
         i += 1
       }
+      // conservative sparse bound: ~5 B gap + ~10 B value per pair + header
       if (20L + len.toLong * 15L >= 16L + n * 8L) return c.toBytes
-      keys = new Array[Int](len)
-      vals = new Array[Long](len)
-      var k = 0
-      i = 0
-      while (k < len) {
-        if (cells(i) != 0L) {
-          keys(k) = i
-          vals(k) = cells(i)
-          k += 1
-        }
-        i += 1
-      }
+      list = SparseCells.nonzero(n, len)(cells(_))
     }
     // a sparse counter that wrapped to zero is not written, as in the dense scan
-    var nNonzero = 0
-    var pairBytes = 0
-    var prev = -1
-    var k = 0
-    while (k < len) {
-      if (vals(k) != 0L) {
-        nNonzero += 1
-        pairBytes += Varint.size((keys(k) - prev).toLong) + Varint.size(vals(k))
-        prev = keys(k)
-      }
-      k += 1
-    }
-    // conservative sparse bound: ~5 B gap + ~10 B value per pair + header
-    if (20L + nNonzero.toLong * 15L >= 16L + n * 8L) return c.toBytes
-    val out = new Array[Byte](1 + Varint.size(c.depth.toLong) + Varint.size(c.width.toLong) +
-      Varint.size(c.total) + Varint.size(nNonzero.toLong) + pairBytes)
+    val out = list.toGapCoded(1 + Varint.size(c.depth.toLong) + Varint.size(c.width.toLong) +
+      Varint.size(c.total), byteValues = false)
     out(0) = -1
     var pos = Varint.write(out, 1, c.depth.toLong)
     pos = Varint.write(out, pos, c.width.toLong)
-    pos = Varint.write(out, pos, c.total)
-    pos = Varint.write(out, pos, nNonzero.toLong)
-    prev = -1
-    k = 0
-    while (k < len) {
-      if (vals(k) != 0L) {
-        pos = Varint.write(out, pos, (keys(k) - prev).toLong)
-        pos = Varint.write(out, pos, vals(k))
-        prev = keys(k)
-      }
-      k += 1
-    }
+    Varint.write(out, pos, c.total)
     out
   }
 
-  /** Decodes the stored or the compact form. A blob with at most
-   * [[SparseCells.cap]] nonzero counters decodes to a sparse sketch, a
-   * fuller one to a dense sketch. Compact counter indices must ascend. */
+  /** Decodes the stored or the compact form. Nonzero counters go in one by
+   * one, as adds do, so a blob with at most [[SparseCells.cap]] of them
+   * decodes to a sparse sketch and a fuller one to a dense sketch. Compact
+   * counter indices must ascend. */
   def fromBytes(bytes: Array[Byte]): CountMin = {
     require(bytes.length >= 16 || (bytes.length > 0 && bytes(0) == -1.toByte),
       "corrupt count-min payload (header)")
@@ -288,29 +230,10 @@ object CountMin {
         depth * width <= MaxCells, "corrupt count-min payload (sparse dims)")
       val total = r.read()
       val n = (depth * width).toInt
-      val nNonzero = r.read()
-      require(nNonzero >= 0 && nNonzero <= n, "corrupt count-min payload (sparse count)")
-      val dense = nNonzero > SparseCells.cap(n)
-      val cells = if (dense) new Array[Long](n) else null
-      val keys = if (dense || nNonzero == 0) SparseCells.NoKeys else new Array[Int](nNonzero.toInt)
-      val vals = if (dense || nNonzero == 0) NoVals else new Array[Long](nNonzero.toInt)
-      var idx = -1L
-      var k = 0
-      while (k < nNonzero) {
-        val gap = r.read()
-        require(gap >= 1 && gap < n - idx, "corrupt count-min payload (sparse index)")
-        idx += gap
-        val v = r.read()
-        if (dense) cells(idx.toInt) = v
-        else {
-          keys(k) = idx.toInt
-          vals(k) = v
-        }
-        k += 1
-      }
-      return if (dense) new CountMin(depth.toInt, width.toInt, cells, SparseCells.NoKeys, NoVals,
-        0, total)
-      else new CountMin(depth.toInt, width.toInt, null, keys, vals, nNonzero.toInt, total)
+      val nNonzero = SparseCells.readCount(r, n)
+      val c = new CountMin(depth.toInt, width.toInt, null, SparseCells(n, nNonzero), total)
+      SparseCells.readGapCoded(r, nNonzero, n, byteValues = false)(c.addCell)
+      return c
     }
     val buf = ByteBuffer.wrap(bytes)
     val depth = buf.getInt
@@ -320,32 +243,16 @@ object CountMin {
     val total = buf.getLong
     val n = depth * width
     require(n.toLong * 8 <= buf.remaining, "corrupt count-min payload (length)")
-    // count the nonzero counters, stopping once past the cap
-    val cap = SparseCells.cap(n)
-    var nNonzero = 0
+    val c = new CountMin(depth, width, null, SparseCells(n), total)
+    // nonzero counters one by one until the list fills up; then all at once
     var i = 0
-    while (i < n && nNonzero <= cap) {
-      if (Platform.getLong(bytes, Platform.BYTE_ARRAY_OFFSET + 16L + i * 8L) != 0L) nNonzero += 1
+    while (i < n && c.sparse != null) {
+      val v = Platform.getLong(bytes, Platform.BYTE_ARRAY_OFFSET + 16L + i * 8L)
+      if (v != 0L) c.addCell(i, buf.getLong(16 + i * 8))
       i += 1
     }
-    if (nNonzero > cap) {
-      val counters = new Array[Long](n)
-      buf.asLongBuffer().get(counters)
-      return new CountMin(depth, width, counters, SparseCells.NoKeys, NoVals, 0, total)
-    }
-    val keys = if (nNonzero == 0) SparseCells.NoKeys else new Array[Int](nNonzero)
-    val vals = if (nNonzero == 0) NoVals else new Array[Long](nNonzero)
-    var k = 0
-    i = 0
-    while (k < nNonzero) {
-      if (Platform.getLong(bytes, Platform.BYTE_ARRAY_OFFSET + 16L + i * 8L) != 0L) {
-        keys(k) = i
-        vals(k) = buf.getLong(16 + i * 8)
-        k += 1
-      }
-      i += 1
-    }
-    new CountMin(depth, width, null, keys, vals, nNonzero, total)
+    if (c.sparse == null) buf.asLongBuffer().get(c.cells)
+    c
   }
 }
 

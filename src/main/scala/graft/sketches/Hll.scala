@@ -1,6 +1,6 @@
 package graft.sketches
 
-import graft.core.SparseCells
+import graft.core.{SparseCells, Varint}
 
 /**
  * HyperLogLog distinct-count sketch (Flajolet, Fusy, Gandouet, Meunier 2007)
@@ -11,40 +11,39 @@ import graft.core.SparseCells
  * register-wise max — associative, commutative, idempotent — so partial
  * aggregation over any partitioning yields the identical sketch.
  *
- * Registers are stored sparse first (HyperLogLog++'s sparse form, see
- * [[SparseCells]]): the set registers as (index, rank) pairs sorted by
- * index, until more than [[SparseCells.cap]] are set; then the dense
- * 2^precision array. A new sketch holds the empty list and allocates
- * nothing. Both forms give the same bytes and estimates.
+ * Registers are stored sparse first (HyperLogLog++'s sparse form): the
+ * set registers as (index, rank) entries of a [[SparseCells]] list, until
+ * more than [[SparseCells.cap]] are set; then the dense 2^precision byte
+ * array. A new sketch holds the empty list and no register array. Both
+ * forms give the same bytes and estimates.
  */
 final class Hll private (
     val precision: Int,
     private var regs: Array[Byte], // dense registers; null while sparse
-    private var keys: Array[Int], // sparse: set register indices, ascending
-    private var ranks: Array[Byte], // sparse: their ranks
-    private var n: Int) // sparse: entries in use
+    expected: Int) // set registers a new sparse list makes room for
     extends Serializable {
   require(precision >= 4 && precision <= 18, "precision must be in [4, 18]")
+
+  // set registers; null once dense
+  private var sparse: SparseCells = if (regs == null) SparseCells(m, expected) else null
 
   private def m: Int = 1 << precision
 
   /** True until the first register is set: the sparse list is empty, so
-   * an unused aggregation buffer costs only this object. */
-  def isPristine: Boolean = regs == null && n == 0
+   * an unused aggregation buffer costs only this object and its empty list. */
+  def isPristine: Boolean = sparse != null && sparse.size == 0
 
   /** A copy of the 2^precision registers, in index order. */
   def registers: Array[Byte] = if (regs != null) regs.clone() else scatter(new Array[Byte](m), 0)
 
   /** True once the sketch has moved to its dense array. */
-  private[graft] def isDense: Boolean = regs != null
+  private[graft] def isDense: Boolean = sparse == null
 
   /** Moves to the dense register array (a no-op once dense). */
   private[graft] def densify(): this.type = {
-    if (regs == null) {
+    if (sparse != null) {
       regs = scatter(new Array[Byte](m), 0)
-      keys = SparseCells.NoKeys
-      ranks = Hll.NoRanks
-      n = 0
+      sparse = null
     }
     this
   }
@@ -52,8 +51,8 @@ final class Hll private (
   /** Writes the sparse entries into `out`, register i at `out(base + i)`. */
   private def scatter(out: Array[Byte], base: Int): Array[Byte] = {
     var k = 0
-    while (k < n) {
-      out(base + keys(k)) = ranks(k)
+    while (k < sparse.size) {
+      out(base + sparse.key(k)) = sparse.value(k).toByte
       k += 1
     }
     out
@@ -61,28 +60,14 @@ final class Hll private (
 
   /** Raises register `idx` to `rank`. */
   private def update(idx: Int, rank: Byte): Unit =
-    if (regs != null) {
+    if (sparse == null) {
       if (rank > regs(idx)) regs(idx) = rank
     } else {
-      val k = java.util.Arrays.binarySearch(keys, 0, n, idx)
-      if (k >= 0) {
-        if (rank > ranks(k)) ranks(k) = rank
-      } else if (n == SparseCells.cap(m)) {
+      val k = sparse.slot(idx)
+      if (k < 0) {
         densify()
         regs(idx) = rank
-      } else {
-        val at = -k - 1
-        if (n == keys.length) {
-          val len = SparseCells.grown(n, SparseCells.cap(m))
-          keys = java.util.Arrays.copyOf(keys, len)
-          ranks = java.util.Arrays.copyOf(ranks, len)
-        }
-        System.arraycopy(keys, at, keys, at + 1, n - at)
-        System.arraycopy(ranks, at, ranks, at + 1, n - at)
-        keys(at) = idx
-        ranks(at) = rank
-        n += 1
-      }
+      } else if (rank > sparse.value(k)) sparse.setValue(k, rank)
     }
 
   def addHash(hash: Long): this.type = {
@@ -112,9 +97,10 @@ final class Hll private (
         i += 1
       }
     } else {
+      val s = other.sparse
       var k = 0
-      while (k < other.n) {
-        update(other.keys(k), other.ranks(k))
+      while (k < s.size) {
+        update(s.key(k), s.value(k).toByte)
         k += 1
       }
     }
@@ -134,16 +120,17 @@ final class Hll private (
         i += 1
       }
     } else {
+      val n = sparse.size
       var k = 0
       while (k <= n) {
-        val next = if (k < n) keys(k) else m
+        val next = if (k < n) sparse.key(k) else m
         zeros += next - i
         while (i < next) { // unset registers: 2^-0 each
           sum += 1.0
           i += 1
         }
         if (k < n) {
-          sum += java.lang.Double.longBitsToDouble((1023L - ranks(k)) << 52)
+          sum += java.lang.Double.longBitsToDouble((1023L - sparse.value(k)) << 52)
           i += 1
         }
         k += 1
@@ -176,10 +163,8 @@ final class Hll private (
 object Hll {
   val DefaultPrecision = 14 // 16384 registers, ~0.81% standard error
 
-  private val NoRanks = new Array[Byte](0)
-
   def apply(precision: Int = DefaultPrecision): Hll =
-    new Hll(precision, null, SparseCells.NoKeys, NoRanks, 0)
+    new Hll(precision, null, 0)
 
   /**
    * Compact aggregation-buffer encoding for partial aggregation at extreme
@@ -201,9 +186,9 @@ object Hll {
   def toCompactBytes(h: Hll): Array[Byte] = {
     val regs = h.regs
     val m = 1 << h.precision
-    var nSet = h.n
-    if (regs != null) {
-      nSet = 0
+    var nSet = 0
+    if (h.sparse != null) nSet = h.sparse.size
+    else {
       var i = 0
       while (i < m) {
         if (regs(i) != 0) nSet += 1
@@ -212,51 +197,19 @@ object Hll {
     }
     // conservative sparse upper bound: 1 marker + 5 count + nSet * (5 + 1)
     if (6L + nSet.toLong * 6L >= 1L + m) return h.toBytes
-    var keys = h.keys
-    var ranks = h.ranks
-    if (regs != null) {
-      keys = new Array[Int](nSet)
-      ranks = new Array[Byte](nSet)
-      var i = 0
-      var k = 0
-      while (i < m) {
-        if (regs(i) != 0) {
-          keys(k) = i
-          ranks(k) = regs(i)
-          k += 1
-        }
-        i += 1
-      }
-    }
-    var pairBytes = 0
-    var prev = -1
-    var k = 0
-    while (k < nSet) {
-      pairBytes += Varint.size((keys(k) - prev).toLong) + 1
-      prev = keys(k)
-      k += 1
-    }
-    val out = new Array[Byte](1 + Varint.size(nSet.toLong) + pairBytes)
+    val set = if (h.sparse != null) h.sparse else SparseCells.nonzero(m, nSet)(regs(_))
+    val out = set.toGapCoded(1, byteValues = true)
     out(0) = (-h.precision).toByte
-    var pos = Varint.write(out, 1, nSet.toLong)
-    prev = -1
-    k = 0
-    while (k < nSet) {
-      pos = Varint.write(out, pos, (keys(k) - prev).toLong)
-      out(pos) = ranks(k)
-      pos += 1
-      prev = keys(k)
-      k += 1
-    }
     out
   }
 
-  /** Decodes the stored or the compact form. A compact blob with at most
-   * [[SparseCells.cap]] set registers decodes to a sparse sketch; a fuller
-   * one, and the stored form, to a dense sketch (copying the stored
-   * registers, one byte each, is cheaper than scanning them for the set
-   * ones). Compact register indices must ascend and their ranks lie in
-   * [1, 65 - precision]. */
+  /** Decodes the stored or the compact form. The compact form's registers
+   * go in one by one, as adds do, so a blob with at most
+   * [[SparseCells.cap]] set registers decodes to a sparse sketch and a
+   * fuller one to a dense sketch. The stored form decodes dense (copying
+   * the stored registers, one byte each, is cheaper than scanning them for
+   * the set ones). Compact register indices must ascend and their ranks lie
+   * in [1, 65 - precision]. */
   def fromBytes(bytes: Array[Byte]): Hll = {
     require(bytes.length > 0, "corrupt HLL payload (empty)")
     val first = bytes(0).toInt
@@ -266,33 +219,16 @@ object Hll {
     if (first < 0) { // compact (sparse) aggregation-buffer form
       val maxRank = 65 - p
       val r = new Varint.Reader(bytes, 1, "HLL")
-      val nSet = r.read()
-      require(nSet >= 0 && nSet <= m, "corrupt HLL payload (sparse count)")
-      val dense = nSet > SparseCells.cap(m)
-      val regs = if (dense) new Array[Byte](m) else null
-      val keys = if (dense || nSet == 0) SparseCells.NoKeys else new Array[Int](nSet.toInt)
-      val ranks = if (dense || nSet == 0) NoRanks else new Array[Byte](nSet.toInt)
-      var idx = -1L
-      var k = 0
-      while (k < nSet) {
-        val gap = r.read()
-        require(gap >= 1 && gap < m - idx, "corrupt HLL payload (sparse index)")
-        idx += gap
-        val rank = r.readByte()
+      val nSet = SparseCells.readCount(r, m)
+      val h = new Hll(p, null, nSet)
+      SparseCells.readGapCoded(r, nSet, m, byteValues = true) { (idx, rank) =>
         require(rank >= 1 && rank <= maxRank, "corrupt HLL payload (sparse rank)")
-        if (dense) regs(idx.toInt) = rank
-        else {
-          keys(k) = idx.toInt
-          ranks(k) = rank
-        }
-        k += 1
+        h.update(idx, rank.toByte)
       }
-      if (dense) new Hll(p, regs, SparseCells.NoKeys, NoRanks, 0)
-      else new Hll(p, null, keys, ranks, nSet.toInt)
+      h
     } else {
       require(bytes.length == 1 + m, "corrupt HLL payload")
-      new Hll(p, java.util.Arrays.copyOfRange(bytes, 1, bytes.length), SparseCells.NoKeys,
-        NoRanks, 0)
+      new Hll(p, java.util.Arrays.copyOfRange(bytes, 1, bytes.length), 0)
     }
   }
 }

@@ -638,13 +638,15 @@ class ExpressionSpec extends AnyFunSuite {
         case i: IllegalArgumentException => i.getMessage.startsWith("requirement failed")
         case _ => false
       }
-    for (call <- Seq("hll_sketch(x, 40)", "kll_sketch(v, 2)", "tdigest_sketch(v, 1)",
+    for (call <- Seq("hll_sketch(x, 40)", "hll_sketch(x, 31)", "kll_sketch(v, 2)",
+        "tdigest_sketch(v, 1)",
         "cms_sketch(x, 0, 10)", "cms_sketch_weighted(x, 1, 5, 0)", "bloom_sketch(x, 0)")) {
       val e = intercept[Exception](spark.sql(s"SELECT $call FROM bad_params"))
       assert(factoryCheck(e), s"$call: $e")
     }
     for (build <- Seq[() => org.apache.spark.sql.Column](
-        () => hll_sketch(col("x"), 40), () => hll_sketch_long(col("x"), 3),
+        () => hll_sketch(col("x"), 40), () => hll_sketch(col("x"), -1),
+        () => hll_sketch_long(col("x"), 3),
         () => kll_sketch(col("v"), 2), () => tdigest_sketch(col("v"), 1.0),
         () => cms_sketch(col("x"), 0, 10), () => cms_sketch_weighted(col("x"), col("v"), 5, 0),
         () => bloom_sketch(col("x"), 0L), () => bloom_sketch(col("x"), 100L, 1.5))) {

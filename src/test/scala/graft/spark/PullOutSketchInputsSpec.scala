@@ -81,7 +81,8 @@ class PullOutSketchInputsSpec extends AnyFunSuite {
   }
 
   test("output bytes are identical with and without the rule") {
-    val aggs = convAggregates // building the columns installs the rule
+    turns // the session exists before the columns are built, which install the rule
+    val aggs = convAggregates
     val withRule = sketchTable(aggs)
     assert(occurrences(withRule.queryExecution.optimizedPlan, "length\\(") == 1)
     val expected = withoutRule {
