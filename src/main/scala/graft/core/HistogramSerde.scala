@@ -1,118 +1,8 @@
 package graft.core
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInput, DataInputStream, DataOutput, DataOutputStream, EOFException, IOException}
+import java.io.ByteArrayOutputStream
 
-/**
- * LEB128 varint / zigzag codecs and 64-bit-buffered bit I/O, wire-compatible
- * with the reference (dynahist `serialization/SerializationUtil.java:64-155`,
- * `BitOutput.java:33-50`, `BitInput.java:34-53`).
- */
-object Codecs {
-
-  def writeUnsignedVarLong(value0: Long, out: DataOutput): Unit = {
-    var value = value0
-    while ((value & 0xffffffffffffff80L) != 0L) {
-      out.writeByte((value.toInt & 0x7f) | 0x80)
-      value >>>= 7
-    }
-    out.writeByte(value.toInt & 0x7f)
-  }
-
-  def writeUnsignedVarInt(value0: Int, out: DataOutput): Unit = {
-    var value = value0
-    while ((value & 0xffffff80) != 0L) {
-      out.writeByte((value & 0x7f) | 0x80)
-      value >>>= 7
-    }
-    out.writeByte(value & 0x7f)
-  }
-
-  def writeSignedVarInt(value: Int, out: DataOutput): Unit =
-    writeUnsignedVarInt((value << 1) ^ (value >> 31), out)
-
-  def readUnsignedVarLong(in: DataInput): Long = {
-    var value = 0L
-    var i = 0
-    var b: Long = in.readByte().toLong
-    while ((b & 0x80L) != 0) {
-      value |= (b & 0x7f) << i
-      i += 7
-      if (i > 63) throw new IOException("varlong too long")
-      b = in.readByte().toLong
-    }
-    value | (b << i)
-  }
-
-  def readUnsignedVarInt(in: DataInput): Int = {
-    var value = 0
-    var i = 0
-    var b: Int = in.readByte().toInt
-    while ((b & 0x80) != 0) {
-      value |= (b & 0x7f) << i
-      i += 7
-      if (i > 35) throw new IOException("varint too long")
-      b = in.readByte().toInt
-    }
-    value | (b << i)
-  }
-
-  def readSignedVarInt(in: DataInput): Int = {
-    val raw = readUnsignedVarInt(in)
-    val temp = (((raw << 31) >> 31) ^ raw) >> 1
-    temp ^ (raw & (1 << 31))
-  }
-
-  final class BitWriter(out: DataOutput) {
-    private var buffer = 0L
-    private var bitCount = 0
-
-    def writeBits(numBits: Int, value: Long): Unit = {
-      if (numBits == 0) return
-      buffer |= (value << (-numBits)) >>> bitCount
-      bitCount += numBits
-      if (bitCount >= 64) {
-        out.writeLong(buffer)
-        buffer = value << 1 << ~bitCount
-        bitCount -= 64
-      }
-    }
-
-    def finish(): Unit = {
-      while (bitCount > 0) {
-        out.writeByte((buffer >>> 56).toByte.toInt)
-        buffer <<= 8
-        bitCount -= 8
-      }
-    }
-  }
-
-  final class BitReader(in: DataInput) {
-    private var buffer = 0L
-    private var bitCount = 0
-
-    def readBits(numBits0: Int): Long = {
-      var numBits = numBits0
-      if (numBits == 0) return 0L
-      var result = 0L
-      if (bitCount < numBits) {
-        result = buffer
-        numBits -= bitCount
-        while (numBits > 8) {
-          result <<= 8
-          result |= in.readUnsignedByte().toLong
-          numBits -= 8
-        }
-        result <<= numBits
-        buffer = in.readUnsignedByte().toLong
-        bitCount = 8
-      }
-      bitCount -= numBits
-      result |= buffer >>> bitCount
-      buffer &= (1L << bitCount) - 1
-      result
-    }
-  }
-}
+import Bytes.{BitReader, BitWriter, Reader, Writer}
 
 /**
  * Versioned binary histogram serialization, byte-compatible with the
@@ -127,40 +17,32 @@ object Codecs {
  * stored min/max ("effective counts") either dense (zero-filled index range)
  * or sparse (gap-coded), whichever costs fewer bits — the chosen variant is
  * signaled by writing the start/end bin indices in swapped order.
+ *
+ * Reads and writes go through the [[Bytes]] codec; every decode failure is
+ * a [[SketchFormatException]] "corrupt histogram payload (...)".
  */
 object HistogramSerde {
-  import Codecs._
 
   private val SerialVersionV0: Byte = 0
   private val SerialVersionV1: Byte = 1
 
+  /** The payload noun of every histogram decode failure. */
+  private[core] val What = "histogram"
+
   def toBytes(h: Histogram): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    write(h, new DataOutputStream(bos))
-    bos.toByteArray
+    val w = new Writer(64)
+    write(h, w)
+    w.result
   }
 
   def fromBytes(layout: Layout, bytes: Array[Byte]): Histogram =
-    read(layout, new DataInputStream(new ByteArrayInputStream(bytes)))
+    read(layout, new Reader(bytes, 0, What))
 
-  def write(h: Histogram, out: DataOutput): Unit = writeV1(h, out)
-
-  def read(layout: Layout, in: DataInput): Histogram = untruncated {
-    in.readByte() match {
-      case SerialVersionV0 => readV0(layout, in)
-      case SerialVersionV1 => readV1(layout, in)
-      case v               => throw new IOException(s"unsupported histogram serial version $v")
-    }
+  private[graft] def read(layout: Layout, r: Reader): Histogram = r.readByte() match {
+    case SerialVersionV0 => readV0(layout, r)
+    case SerialVersionV1 => readV1(layout, r)
+    case v               => r.fail(s"unsupported serial version $v")
   }
-
-  /** `decode`, with input that ends early failing as the same
-   * `IllegalArgumentException` as the payload's other checks. */
-  private[core] def untruncated[T](decode: => T): T =
-    try decode
-    catch {
-      case _: EOFException =>
-        throw new IllegalArgumentException("corrupt histogram payload (truncated)")
-    }
 
   // -------------------------------------------------------------------------
   // shared helpers
@@ -205,14 +87,15 @@ object HistogramSerde {
   // V1
   // -------------------------------------------------------------------------
 
-  def writeV1(h: Histogram, out: DataOutput): Unit = {
-    out.writeByte(SerialVersionV1.toInt)
+  /** The V1 payload of `h`. */
+  private[graft] def write(h: Histogram, w: Writer): Unit = {
+    w.putByte(SerialVersionV1.toInt)
     val min = h.min
     if (h.totalCount <= 1) {
-      if (h.isEmpty) out.writeByte(0x00)
+      if (h.isEmpty) w.putByte(0x00)
       else {
-        out.writeByte(0x02)
-        out.writeDouble(min)
+        w.putByte(0x02)
+        w.putDouble(min)
       }
       return
     }
@@ -226,13 +109,13 @@ object HistogramSerde {
     infoByte |= math.min(3L, eff.regular).toInt << 2
     infoByte |= math.min(3L, eff.under).toInt << 4
     infoByte |= math.min(3L, eff.over).toInt << 6
-    out.writeByte(infoByte)
+    w.putByte(infoByte)
 
-    out.writeDouble(min)
-    if (isMinSmallerThanMax) out.writeDouble(max)
+    w.putDouble(min)
+    if (isMinSmallerThanMax) w.putDouble(max)
 
-    if (eff.under >= 3) writeUnsignedVarLong(eff.under - 3, out)
-    if (eff.over >= 3) writeUnsignedVarLong(eff.over - 3, out)
+    if (eff.under >= 3) w.putVarLong(eff.under - 3)
+    if (eff.over >= 3) w.putVarLong(eff.over - 3)
 
     if (eff.regular >= 1) {
       val itStart = firstNonEmptyRegular(h)
@@ -240,8 +123,8 @@ object HistogramSerde {
 
       if (eff.regular == 2) {
         val endBinIndex = lastNonEmptyRegular(h).binIndex
-        writeSignedVarInt(startBinIndex, out)
-        writeSignedVarInt(endBinIndex, out)
+        w.putZigzag(startBinIndex)
+        w.putZigzag(endBinIndex)
       } else if (eff.regular >= 3) {
         val endBinIndex = lastNonEmptyRegular(h).binIndex
 
@@ -274,13 +157,13 @@ object HistogramSerde {
         }
 
         if (dense) {
-          writeSignedVarInt(startBinIndex, out)
-          writeSignedVarInt(endBinIndex, out)
+          w.putZigzag(startBinIndex)
+          w.putZigzag(endBinIndex)
         } else {
-          writeSignedVarInt(endBinIndex, out)
-          writeSignedVarInt(startBinIndex, out)
+          w.putZigzag(endBinIndex)
+          w.putZigzag(startBinIndex)
         }
-        val bits = new BitWriter(out)
+        val bits = new BitWriter(w)
         bits.writeBits(6, bitsPerCount.toLong)
         if (dense) {
           bits.writeBits(bitsPerCount, effectiveCount(itStart))
@@ -310,7 +193,7 @@ object HistogramSerde {
         }
         bits.finish()
       } else {
-        writeSignedVarInt(startBinIndex, out)
+        w.putZigzag(startBinIndex)
       }
     }
   }
@@ -318,16 +201,18 @@ object HistogramSerde {
   /** Reconstruction state shared by the V0/V1 readers. Regular counts go
    * straight into the histogram's own store, so storage follows the nonzero
    * counts actually read, never the index range a header claims. */
-  private final class Builder(layout: Layout) {
+  private final class Builder(layout: Layout, r: Reader) {
     private val h = Histogram(layout)
     var under: Long = 0L
     var over: Long = 0L
     var total: Long = 0L
-    var minV: Double = Double.PositiveInfinity
-    var maxV: Double = Double.NegativeInfinity
+    private var minV: Double = Double.PositiveInfinity
+    private var maxV: Double = Double.NegativeInfinity
+    private var minBin = 0
+    private var maxBin = 0
 
     def incRegular(idx: Int, c: Long): Unit = {
-      require(c >= 0, "corrupt histogram payload (count)")
+      r.check(c >= 0, "count")
       if (c != 0) h.incrementRegular(idx, c)
     }
 
@@ -336,47 +221,45 @@ object HistogramSerde {
       h
     }
 
-    def setSingleValue(value: Double): Unit = {
-      minV = value
-      maxV = value
-      val binIndex = layout.mapToBinIndex(value)
+    /** One count in bin `binIndex`. */
+    private def place(binIndex: Int): Unit =
       if (binIndex <= layout.underflowBinIndex) under += 1
       else if (binIndex >= layout.overflowBinIndex) over += 1
       else incRegular(binIndex, 1)
+
+    def setSingleValue(value: Double): Unit = {
+      minV = value
+      maxV = value
+      place(layout.mapToBinIndex(value))
       total += 1
     }
 
-    /** Places the explicitly stored min/max back into their bins. Done
-     * before the effective counts: these bins bound all of them, so a
-     * decode that goes dense builds its window once. */
-    def restoreExtremes(minBinIndex: Int, maxBinIndex: Int): Unit = {
-      if (minBinIndex <= layout.underflowBinIndex) under += 1
-      else if (minBinIndex >= layout.overflowBinIndex) over += 1
-      else incRegular(minBinIndex, 1)
-      if (maxBinIndex <= layout.underflowBinIndex) under += 1
-      else if (maxBinIndex >= layout.overflowBinIndex) over += 1
-      else incRegular(maxBinIndex, 1)
+    /** Reads the stored min, and the max when it is larger, and places both
+     * back into their bins. Done before the effective counts: these bins
+     * bound all of them, so a decode that goes dense builds its window once. */
+    def readExtremes(minSmallerThanMax: Boolean): Unit = {
+      minV = r.readDouble()
+      maxV = if (minSmallerThanMax) r.readDouble() else minV
+      minBin = layout.mapToBinIndex(minV)
+      maxBin = layout.mapToBinIndex(maxV)
+      place(minBin)
+      place(maxBin)
     }
+
+    /** Effective regular counts lie in regular bins between those of the
+     * stored min and max. */
+    def checkBinRange(firstIdx: Int, lastIdx: Int): Unit =
+      r.check(
+        firstIdx <= lastIdx && firstIdx > layout.underflowBinIndex &&
+          lastIdx < layout.overflowBinIndex && firstIdx >= minBin && lastIdx <= maxBin,
+        "bin range")
   }
 
-  /** Effective regular counts lie in regular bins between those of the
-   * stored min and max. */
-  private def checkBinRange(
-      layout: Layout,
-      firstIdx: Int,
-      lastIdx: Int,
-      minBinIndex: Int,
-      maxBinIndex: Int): Unit =
-    require(
-      firstIdx <= lastIdx && firstIdx > layout.underflowBinIndex &&
-        lastIdx < layout.overflowBinIndex && firstIdx >= minBinIndex && lastIdx <= maxBinIndex,
-      "corrupt histogram payload (bin range)")
-
-  private def readV1(layout: Layout, in: DataInput): Histogram = {
-    val b = new Builder(layout)
-    val infoByte = in.readUnsignedByte()
+  private def readV1(layout: Layout, r: Reader): Histogram = {
+    val b = new Builder(layout, r)
+    val infoByte = r.readUnsignedByte()
     if ((infoByte & 0x01) == 0) {
-      if ((infoByte & 0x02) > 0) b.setSingleValue(in.readDouble())
+      if ((infoByte & 0x02) > 0) b.setSingleValue(r.readDouble())
       return b.result()
     }
 
@@ -385,29 +268,18 @@ object HistogramSerde {
     var effUnder: Long = (infoByte >>> 4) & 0x03
     var effOver: Long = (infoByte >>> 6) & 0x03
 
-    val min = in.readDouble()
-    val minBinIndex = layout.mapToBinIndex(min)
-    val (max, maxBinIndex) =
-      if (isMinSmallerThanMax) {
-        val m = in.readDouble()
-        (m, layout.mapToBinIndex(m))
-      } else (min, minBinIndex)
-
-    if (effUnder == 3) effUnder += readUnsignedVarLong(in)
-    if (effOver == 3) effOver += readUnsignedVarLong(in)
+    b.readExtremes(isMinSmallerThanMax)
+    if (effUnder == 3) effUnder += r.readVarLong()
+    if (effOver == 3) effOver += r.readVarLong()
 
     var totalCount = 2L + effOver + effUnder
 
-    b.minV = min
-    b.maxV = max
-    b.restoreExtremes(minBinIndex, maxBinIndex)
-
     if (effRegularClass >= 1) {
-      var firstIdx = readSignedVarInt(in)
+      var firstIdx = r.readZigzag()
       var lastIdx = firstIdx
       var dense = true
       if (effRegularClass >= 2) {
-        lastIdx = readSignedVarInt(in)
+        lastIdx = r.readZigzag()
         if (firstIdx > lastIdx) {
           dense = false
           val t = firstIdx
@@ -416,13 +288,13 @@ object HistogramSerde {
         }
       }
 
-      checkBinRange(layout, firstIdx, lastIdx, minBinIndex, maxBinIndex)
+      b.checkBinRange(firstIdx, lastIdx)
 
       if (effRegularClass >= 3) {
-        val bits = new BitReader(in)
+        val bits = new BitReader(r)
         val bitsPerCount = bits.readBits(6).toInt
         // the writer sizes counts over a mask that includes a count >= 1
-        require(bitsPerCount > 0, "corrupt histogram payload (bits per count)")
+        r.check(bitsPerCount > 0, "bits per count")
 
         if (dense) {
           var binIndex = firstIdx
@@ -443,7 +315,7 @@ object HistogramSerde {
             if (binIndex >= lastIdx) done = true
             else {
               val next = binIndex + bits.readBits(bitsForDiffIndex) + 1L
-              require(next <= lastIdx, "corrupt histogram payload (bin range)")
+              r.check(next <= lastIdx, "bin range")
               binIndex = next.toInt
             }
           }
@@ -485,18 +357,24 @@ object HistogramSerde {
     else 0
   }
 
-  def writeV0(h: Histogram, out: DataOutput, modeOverride: Int = -1): Unit = {
-    out.writeByte(SerialVersionV0.toInt)
+  def toBytesV0(h: Histogram): Array[Byte] = {
+    val w = new Writer(64)
+    writeV0(h, w)
+    w.result
+  }
+
+  private def writeV0(h: Histogram, w: Writer): Unit = {
+    w.putByte(SerialVersionV0.toInt)
     val min = h.min
     if (h.totalCount <= 1) {
-      if (h.isEmpty) out.writeByte(0x00) else {
-        out.writeByte(0x08)
-        out.writeDouble(min)
+      if (h.isEmpty) w.putByte(0x00) else {
+        w.putByte(0x08)
+        w.putDouble(min)
       }
       return
     }
     val eff = effectiveCounts(h)
-    val mode = if (modeOverride >= 0) modeOverride else minimalMode(h)
+    val mode = minimalMode(h)
     val max = h.max
     val isMinSmallerThanMax = java.lang.Double.compare(min, max) < 0
 
@@ -505,23 +383,23 @@ object HistogramSerde {
     infoByte |= math.min(eff.regular, 3L).toInt << 4
     if (eff.under > 0) infoByte |= 0x40
     if (eff.over > 0) infoByte |= 0x80
-    out.writeByte(infoByte)
+    w.putByte(infoByte)
 
-    out.writeDouble(min)
-    if (isMinSmallerThanMax) out.writeDouble(max)
+    w.putDouble(min)
+    if (isMinSmallerThanMax) w.putDouble(max)
 
-    if (eff.under >= 1) writeUnsignedVarLong(eff.under - 1, out)
-    if (eff.over >= 1) writeUnsignedVarLong(eff.over - 1, out)
+    if (eff.under >= 1) w.putVarLong(eff.under - 1)
+    if (eff.over >= 1) w.putVarLong(eff.over - 1)
 
     if (eff.regular >= 1) {
       val itStart = firstNonEmptyRegular(h)
-      writeSignedVarInt(itStart.binIndex, out)
+      w.putZigzag(itStart.binIndex)
       if (eff.regular >= 2) {
         val endBinIndex = lastNonEmptyRegular(h).binIndex
-        writeSignedVarInt(endBinIndex, out)
+        w.putZigzag(endBinIndex)
         if (eff.regular >= 3) {
           val bitsPerCount = 1 << mode
-          val bits = new BitWriter(out)
+          val bits = new BitWriter(w)
           bits.writeBits(bitsPerCount, effectiveCount(itStart))
           var binIndex = itStart.binIndex
           while (binIndex < endBinIndex) {
@@ -541,11 +419,11 @@ object HistogramSerde {
     }
   }
 
-  private def readV0(layout: Layout, in: DataInput): Histogram = {
-    val b = new Builder(layout)
-    val infoByte = in.readUnsignedByte()
+  private def readV0(layout: Layout, r: Reader): Histogram = {
+    val b = new Builder(layout, r)
+    val infoByte = r.readUnsignedByte()
     if ((infoByte & 0x07) == 0) {
-      if ((infoByte & 0x08) > 0) b.setSingleValue(in.readDouble())
+      if ((infoByte & 0x08) > 0) b.setSingleValue(r.readDouble())
       return b.result()
     }
 
@@ -555,30 +433,19 @@ object HistogramSerde {
     var effUnder: Long = (infoByte >>> 6) & 0x01
     var effOver: Long = (infoByte >>> 7) & 0x01
 
-    val min = in.readDouble()
-    val minBinIndex = layout.mapToBinIndex(min)
-    val (max, maxBinIndex) =
-      if (isMinSmallerThanMax) {
-        val m = in.readDouble()
-        (m, layout.mapToBinIndex(m))
-      } else (min, minBinIndex)
-
-    if (effUnder == 1) effUnder += readUnsignedVarLong(in)
-    if (effOver == 1) effOver += readUnsignedVarLong(in)
+    b.readExtremes(isMinSmallerThanMax)
+    if (effUnder == 1) effUnder += r.readVarLong()
+    if (effOver == 1) effOver += r.readVarLong()
 
     var totalCount = 2L + effOver + effUnder
 
-    b.minV = min
-    b.maxV = max
-    b.restoreExtremes(minBinIndex, maxBinIndex)
-
     if (effRegularClass >= 1) {
-      val firstIdx = readSignedVarInt(in)
-      val lastIdx = if (effRegularClass >= 2) readSignedVarInt(in) else firstIdx
-      checkBinRange(layout, firstIdx, lastIdx, minBinIndex, maxBinIndex)
+      val firstIdx = r.readZigzag()
+      val lastIdx = if (effRegularClass >= 2) r.readZigzag() else firstIdx
+      b.checkBinRange(firstIdx, lastIdx)
 
       if (effRegularClass >= 3) {
-        val bits = new BitReader(in)
+        val bits = new BitReader(r)
         val bitsPerCount = 1 << mode
         var binIndex = firstIdx
         while (binIndex <= lastIdx) {
@@ -636,192 +503,141 @@ object Compression {
 }
 
 /**
- * Self-describing layout codec (own compact format: 1 tag byte + params).
- * Used by [[SketchEnvelope]] so sketch columns carry their layout.
+ * Self-describing layout codec: a 1-byte tag, then the layout's parameter
+ * bytes. Used by [[SketchEnvelope]] so sketch columns carry their layout.
+ *
+ * The parameter bytes are the reference's layout V0 payload, so
+ * [[ReferenceLayoutSerde]] writes and reads them here too, after its own
+ * header:
+ *  - custom: unsigned varint boundary count, then each boundary as a double;
+ *  - log-linear, log-quadratic, log-optimal: absolute and relative limit as
+ *    doubles, then the underflow and overflow bin index as zigzag varints;
+ *  - OTel exponential: the scale as one byte;
+ *  - integer (no reference form): min and max regular index as zigzag varints.
+ *
+ * A decode checks the claimed boundary count against the bytes present
+ * before it allocates the boundaries.
  */
 object LayoutCodec {
-  import Codecs._
 
-  private val TagCustom: Byte = 1
-  private val TagLogLinear: Byte = 2
-  private val TagLogQuadratic: Byte = 3
-  private val TagLogOptimal: Byte = 4
-  private val TagOtel: Byte = 5
-  private val TagInteger: Byte = 6
+  private[core] val TagCustom = 1
+  private[core] val TagLogLinear = 2
+  private[core] val TagLogQuadratic = 3
+  private[core] val TagLogOptimal = 4
+  private[core] val TagOtel = 5
+  private[core] val TagInteger = 6
 
-  def write(layout: Layout, out: DataOutput): Unit = layout match {
-    case c: CustomLayout =>
-      out.writeByte(TagCustom.toInt)
-      writeUnsignedVarInt(c.boundaries.length, out)
-      c.boundaries.foreach(out.writeDouble)
-    case l: LogLinearLayout =>
-      out.writeByte(TagLogLinear.toInt)
-      out.writeDouble(l.absoluteLimit)
-      out.writeDouble(l.relativeLimit)
-      writeSignedVarInt(l.underflowBinIndex, out)
-      writeSignedVarInt(l.overflowBinIndex, out)
-    case l: LogQuadraticLayout =>
-      out.writeByte(TagLogQuadratic.toInt)
-      out.writeDouble(l.absoluteLimit)
-      out.writeDouble(l.relativeLimit)
-      writeSignedVarInt(l.underflowBinIndex, out)
-      writeSignedVarInt(l.overflowBinIndex, out)
-    case l: LogOptimalLayout =>
-      out.writeByte(TagLogOptimal.toInt)
-      out.writeDouble(l.absoluteLimit)
-      out.writeDouble(l.relativeLimit)
-      writeSignedVarInt(l.underflowBinIndex, out)
-      writeSignedVarInt(l.overflowBinIndex, out)
-    case l: OtelExponentialLayout =>
-      out.writeByte(TagOtel.toInt)
-      out.writeByte(l.scale)
-    case l: IntegerLayout =>
-      out.writeByte(TagInteger.toInt)
-      writeSignedVarInt(l.minRegular, out)
-      writeSignedVarInt(l.maxRegular, out)
+  /** The tag of `layout`'s kind. */
+  private[core] def tag(layout: Layout): Int = layout match {
+    case _: CustomLayout          => TagCustom
+    case _: LogLinearLayout       => TagLogLinear
+    case _: LogQuadraticLayout    => TagLogQuadratic
+    case _: LogOptimalLayout      => TagLogOptimal
+    case _: OtelExponentialLayout => TagOtel
+    case _: IntegerLayout         => TagInteger
     case other =>
-      throw new IOException(s"layout type not serializable: ${other.getClass.getName}")
+      throw new IllegalArgumentException(s"layout type not serializable: ${other.getClass.getName}")
   }
 
-  def read(in: DataInput): Layout = in.readByte() match {
+  /** The parameter bytes of `layout`, whose kind [[tag]] accepts. */
+  private[core] def writeParams(layout: Layout, w: Writer): Unit = layout match {
+    case c: CustomLayout =>
+      w.putVarLong(c.boundaries.length.toLong)
+      // canonical NaN bits, as the reference writes its boundaries
+      c.boundaries.foreach(b => w.putLong(java.lang.Double.doubleToLongBits(b)))
+    case l: ErrorLimitingLayout =>
+      w.putDouble(l.absoluteLimit)
+      w.putDouble(l.relativeLimit)
+      w.putZigzag(l.underflowBinIndex)
+      w.putZigzag(l.overflowBinIndex)
+    case l: OtelExponentialLayout => w.putByte(l.scale)
+    case l: IntegerLayout =>
+      w.putZigzag(l.minRegular)
+      w.putZigzag(l.maxRegular)
+  }
+
+  /** The layout of kind `tag` from its parameter bytes. */
+  private[core] def readParams(tag: Int, r: Reader): Layout = tag match {
     case TagCustom =>
-      val n = readUnsignedVarInt(in)
-      val bs = Array.fill(n)(in.readDouble())
-      CustomLayout(bs)
+      val n = r.fits(r.readVarLong(), 8)
+      CustomLayout(Array.fill(n)(r.readDouble()))
     case TagLogLinear =>
-      val (a, r) = (in.readDouble(), in.readDouble())
-      LogLinearLayout.withIndices(a, r, readSignedVarInt(in), readSignedVarInt(in))
+      LogLinearLayout.withIndices(r.readDouble(), r.readDouble(), r.readZigzag(), r.readZigzag())
     case TagLogQuadratic =>
-      val (a, r) = (in.readDouble(), in.readDouble())
-      LogQuadraticLayout.withIndices(a, r, readSignedVarInt(in), readSignedVarInt(in))
+      LogQuadraticLayout.withIndices(r.readDouble(), r.readDouble(), r.readZigzag(), r.readZigzag())
     case TagLogOptimal =>
-      val (a, r) = (in.readDouble(), in.readDouble())
-      LogOptimalLayout.withIndices(a, r, readSignedVarInt(in), readSignedVarInt(in))
-    case TagOtel =>
-      OtelExponentialLayout(in.readUnsignedByte())
-    case TagInteger =>
-      IntegerLayout(readSignedVarInt(in), readSignedVarInt(in))
-    case t => throw new IOException(s"unknown layout tag $t")
+      LogOptimalLayout.withIndices(r.readDouble(), r.readDouble(), r.readZigzag(), r.readZigzag())
+    case TagOtel    => OtelExponentialLayout(r.readUnsignedByte())
+    case TagInteger => IntegerLayout(r.readZigzag(), r.readZigzag())
+    case t          => r.fail(s"unknown layout tag $t")
   }
 
+  private[graft] def write(layout: Layout, w: Writer): Unit = {
+    w.putByte(tag(layout))
+    writeParams(layout, w)
+  }
+
+  private[graft] def read(r: Reader): Layout = readParams(r.readByte(), r)
 }
 
 /**
  * Reference-compatible layout type-info serde (dynahist
  * `layout/LayoutSerialization.java:196-221`, `Layout.java:125-141`): an
- * 8-byte registered serial version followed by the layout's own V0 payload
- * (`LogLinearLayout.java:254-268`, `CustomLayout.java:115-126`,
+ * 8-byte registered serial version and a version byte, followed by the
+ * layout's own V0 payload (`LogLinearLayout.java:254-268`,
+ * `CustomLayout.java:115-126`,
  * `OpenTelemetryExponentialBucketsLayout.java:217-224`; LogQuadratic and
- * LogOptimal are structurally identical to LogLinear). Together with the V1
- * histogram payload this lets blobs written by the reference toolchain with
+ * LogOptimal are structurally identical to LogLinear), which is
+ * [[LayoutCodec]]'s parameter bytes. Together with the V1 histogram payload
+ * this lets blobs written by the reference toolchain with
  * `writeWithTypeInfo` round-trip through this library and vice versa — the
  * migration path for existing DynaHist data. [[LayoutCodec]] (the compact
  * internal tag format used by [[SketchEnvelope]]) remains the at-rest format
- * for sketches produced here.
+ * for sketches produced here. Decode failures are the histogram's
+ * [[SketchFormatException]].
  */
 object ReferenceLayoutSerde {
-  import Codecs._
+  import LayoutCodec._
 
   // registered serial versions, LayoutSerialization.java:199-220
-  private val SerialCustom = 0x7f862c3808df6fcdL
-  private val SerialLogLinear = 0x05d0c7e2dc0316e8L
-  private val SerialLogQuadratic = 0x9d36115de11d38d6L
-  private val SerialLogOptimal = 0x70c0ef16c3809948L
-  private val SerialOtel = 0xf6e717a16f0a6a4aL
+  private val Serials: Map[Int, Long] = Map(
+    TagCustom -> 0x7f862c3808df6fcdL,
+    TagLogLinear -> 0x05d0c7e2dc0316e8L,
+    TagLogQuadratic -> 0x9d36115de11d38d6L,
+    TagLogOptimal -> 0x70c0ef16c3809948L,
+    TagOtel -> 0xf6e717a16f0a6a4aL)
+  private val Tags: Map[Long, Int] = Serials.map(_.swap)
   private val V0 = 0
 
-  private def writeLog(
-      serial: Long,
-      a: Double,
-      r: Double,
-      underflowIdx: Int,
-      overflowIdx: Int,
-      out: DataOutput): Unit = {
-    out.writeLong(serial)
-    out.writeByte(V0)
-    out.writeDouble(a)
-    out.writeDouble(r)
-    writeSignedVarInt(underflowIdx, out)
-    writeSignedVarInt(overflowIdx, out)
+  private[graft] def writeWithTypeInfo(layout: Layout, w: Writer): Unit = {
+    val serial = Serials.getOrElse(tag(layout), throw new IllegalArgumentException(
+      s"layout type has no registered reference serial version: ${layout.getClass.getName}"))
+    w.putLong(serial)
+    w.putByte(V0)
+    writeParams(layout, w)
   }
 
-  def writeWithTypeInfo(layout: Layout, out: DataOutput): Unit = layout match {
-    case c: CustomLayout =>
-      out.writeLong(SerialCustom)
-      out.writeByte(V0)
-      writeUnsignedVarInt(c.boundaries.length, out)
-      c.boundaries.foreach(out.writeDouble)
-    case l: LogLinearLayout =>
-      writeLog(
-        SerialLogLinear, l.absoluteLimit, l.relativeLimit,
-        l.underflowBinIndex, l.overflowBinIndex, out)
-    case l: LogQuadraticLayout =>
-      writeLog(
-        SerialLogQuadratic, l.absoluteLimit, l.relativeLimit,
-        l.underflowBinIndex, l.overflowBinIndex, out)
-    case l: LogOptimalLayout =>
-      writeLog(
-        SerialLogOptimal, l.absoluteLimit, l.relativeLimit,
-        l.underflowBinIndex, l.overflowBinIndex, out)
-    case l: OtelExponentialLayout =>
-      out.writeLong(SerialOtel)
-      out.writeByte(V0)
-      out.writeByte(l.scale)
-    case other =>
-      throw new IOException(
-        s"layout type has no registered reference serial version: ${other.getClass.getName}")
-  }
-
-  private def checkV0(in: DataInput): Unit = {
-    val v = in.readByte()
-    if (v != V0) throw new IOException(s"unsupported layout serial version $v")
-  }
-
-  def readWithTypeInfo(in: DataInput): Layout = in.readLong() match {
-    case SerialCustom =>
-      checkV0(in)
-      val n = readUnsignedVarInt(in)
-      CustomLayout(Array.fill(n)(in.readDouble()))
-    case SerialLogLinear =>
-      checkV0(in)
-      val (a, r) = (in.readDouble(), in.readDouble())
-      LogLinearLayout.withIndices(a, r, readSignedVarInt(in), readSignedVarInt(in))
-    case SerialLogQuadratic =>
-      checkV0(in)
-      val (a, r) = (in.readDouble(), in.readDouble())
-      LogQuadraticLayout.withIndices(a, r, readSignedVarInt(in), readSignedVarInt(in))
-    case SerialLogOptimal =>
-      checkV0(in)
-      val (a, r) = (in.readDouble(), in.readDouble())
-      LogOptimalLayout.withIndices(a, r, readSignedVarInt(in), readSignedVarInt(in))
-    case SerialOtel =>
-      checkV0(in)
-      OtelExponentialLayout(in.readUnsignedByte())
-    case unknown =>
-      throw new IOException(
-        f"0x$unknown%016x is an unknown layout serialization version")
+  private[graft] def readWithTypeInfo(r: Reader): Layout = {
+    val serial = r.readLong()
+    val t = Tags.getOrElse(serial, r.fail(f"unknown layout serial 0x$serial%016x"))
+    val v = r.readByte()
+    if (v != V0) r.fail(s"unsupported layout serial version $v")
+    readParams(t, r)
   }
 
   /** Histogram blob in the reference's self-describing convention: layout
    * type info followed by the V1 histogram payload. */
-  def writeHistogramWithTypeInfo(h: Histogram, out: DataOutput): Unit = {
-    writeWithTypeInfo(h.layout, out)
-    HistogramSerde.write(h, out)
-  }
-
-  def readHistogramWithTypeInfo(in: DataInput): Histogram = HistogramSerde.untruncated {
-    val layout = readWithTypeInfo(in)
-    HistogramSerde.read(layout, in)
-  }
-
   def toBytesWithTypeInfo(h: Histogram): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    writeHistogramWithTypeInfo(h, new DataOutputStream(bos))
-    bos.toByteArray
+    val w = new Writer(64)
+    writeWithTypeInfo(h.layout, w)
+    HistogramSerde.write(h, w)
+    w.result
   }
 
-  def fromBytesWithTypeInfo(bytes: Array[Byte]): Histogram =
-    readHistogramWithTypeInfo(new DataInputStream(new ByteArrayInputStream(bytes)))
+  def fromBytesWithTypeInfo(bytes: Array[Byte]): Histogram = {
+    val r = new Reader(bytes, 0, HistogramSerde.What)
+    HistogramSerde.read(readWithTypeInfo(r), r)
+  }
 }
 
 /**
@@ -832,18 +648,18 @@ object SketchEnvelope {
   private val Magic: Int = 0x4748 // "GH"
 
   def toBytes(h: Histogram): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeShort(Magic)
-    LayoutCodec.write(h.layout, out)
-    HistogramSerde.write(h, out)
-    bos.toByteArray
+    val w = new Writer(64)
+    w.putByte(Magic >>> 8)
+    w.putByte(Magic)
+    LayoutCodec.write(h.layout, w)
+    HistogramSerde.write(h, w)
+    w.result
   }
 
-  def fromBytes(bytes: Array[Byte]): Histogram = HistogramSerde.untruncated {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    require(in.readShort() == Magic.toShort, "bad sketch magic")
-    val layout = LayoutCodec.read(in)
-    HistogramSerde.read(layout, in)
+  def fromBytes(bytes: Array[Byte]): Histogram = {
+    val r = new Reader(bytes, 0, HistogramSerde.What)
+    r.check(r.readUnsignedByte() == (Magic >>> 8) && r.readUnsignedByte() == (Magic & 0xff),
+      "bad magic")
+    HistogramSerde.read(LayoutCodec.read(r), r)
   }
 }

@@ -78,10 +78,11 @@ private[graft] final class SparseCells private (limit: Int, capacity: Int)
 
   private def find(key: Int): Int = java.util.Arrays.binarySearch(keys, 0, n, key)
 
-  /** The entries with a nonzero value, after `header` bytes the caller
-   * fills: a varint count, then for each entry a varint index gap (from
-   * -1) and the value, one byte when `byteValues`, else a varint. */
-  def toGapCoded(header: Int, byteValues: Boolean): Array[Byte] = {
+  /** The entries with a nonzero value, after `headerBytes` bytes that
+   * `header` writes: a varint count, then for each entry a varint index gap
+   * (from -1) and the value, one byte when `byteValues`, else a varint. */
+  def toGapCoded(headerBytes: Int, byteValues: Boolean)(
+      header: Bytes.Writer => Unit): Array[Byte] = {
     var count = 0
     var bytes = 0
     var prev = -1
@@ -89,28 +90,26 @@ private[graft] final class SparseCells private (limit: Int, capacity: Int)
     while (k < n) {
       if (vals(k) != 0L) {
         count += 1
-        bytes += Varint.size((keys(k) - prev).toLong) +
-          (if (byteValues) 1 else Varint.size(vals(k)))
+        bytes += Bytes.varSize((keys(k) - prev).toLong) +
+          (if (byteValues) 1 else Bytes.varSize(vals(k)))
         prev = keys(k)
       }
       k += 1
     }
-    val out = new Array[Byte](header + Varint.size(count.toLong) + bytes)
-    var pos = Varint.write(out, header, count.toLong)
+    val w = new Bytes.Writer(headerBytes + Bytes.varSize(count.toLong) + bytes)
+    header(w)
+    w.putVarLong(count.toLong)
     prev = -1
     k = 0
     while (k < n) {
       if (vals(k) != 0L) {
-        pos = Varint.write(out, pos, (keys(k) - prev).toLong)
-        if (byteValues) {
-          out(pos) = vals(k).toByte
-          pos += 1
-        } else pos = Varint.write(out, pos, vals(k))
+        w.putVarLong((keys(k) - prev).toLong)
+        if (byteValues) w.putByte(vals(k).toInt) else w.putVarLong(vals(k))
         prev = keys(k)
       }
       k += 1
     }
-    out
+    w.result
   }
 }
 
@@ -144,25 +143,25 @@ private[graft] object SparseCells {
     s
   }
 
-  /** Reads the entry count [[SparseCells.toGapCoded]] wrote for a sketch of
-   * `cells` cells. */
-  def readCount(r: Varint.Reader, cells: Int): Int = {
-    val count = r.read()
-    require(count >= 0 && count <= cells, s"corrupt ${r.what} payload (sparse count)")
+  /** Reads the entry count [[SparseCells.toGapCoded]] wrote for a sketch
+   * of `cells` cells. */
+  def readCount(r: Bytes.Reader, cells: Int): Int = {
+    val count = r.readVarLong()
+    r.check(count >= 0 && count <= cells, "sparse count")
     count.toInt
   }
 
   /** Reads `count` (index gap, value) entries and hands each to `put` in
    * ascending index order; the indices must ascend below `cells`. */
-  def readGapCoded(r: Varint.Reader, count: Int, cells: Int, byteValues: Boolean)(
+  def readGapCoded(r: Bytes.Reader, count: Int, cells: Int, byteValues: Boolean)(
       put: (Int, Long) => Unit): Unit = {
     var idx = -1L
     var k = 0
     while (k < count) {
-      val gap = r.read()
-      require(gap >= 1 && gap < cells - idx, s"corrupt ${r.what} payload (sparse index)")
+      val gap = r.readVarLong()
+      r.check(gap >= 1 && gap < cells - idx, "sparse index")
       idx += gap
-      put(idx.toInt, if (byteValues) r.readByte().toLong else r.read())
+      put(idx.toInt, if (byteValues) r.readByte().toLong else r.readVarLong())
       k += 1
     }
   }

@@ -1,10 +1,6 @@
 package graft.sketches
 
-import java.nio.ByteBuffer
-
-import graft.core.{SparseCells, Varint}
-
-import org.apache.spark.unsafe.Platform
+import graft.core.{Bytes, SparseCells}
 
 /**
  * Count-min frequency sketch (Cormode & Muthukrishnan 2005). depth x width
@@ -139,22 +135,28 @@ final class CountMin private (
   /** Stored format: [int32 depth, int32 width, int64 total, int64 counter*],
    * big-endian, counters row-major. */
   def toBytes: Array[Byte] = {
-    val buf = ByteBuffer.allocate(16 + numCells * 8)
-    buf.putInt(depth).putInt(width).putLong(totalVar)
+    val w = new Bytes.Writer(16 + numCells * 8)
+    w.putInt(depth)
+    w.putInt(width)
+    w.putLong(totalVar)
     if (cells != null) {
       var i = 0
       while (i < cells.length) {
-        buf.putLong(cells(i))
+        w.putLong(cells(i))
         i += 1
       }
     } else {
+      var next = 0 // first counter not yet written
       var k = 0
       while (k < sparse.size) {
-        buf.putLong(16 + sparse.key(k) * 8, sparse.value(k))
+        w.putZeros((sparse.key(k) - next) * 8)
+        w.putLong(sparse.value(k))
+        next = sparse.key(k) + 1
         k += 1
       }
+      w.putZeros((numCells - next) * 8)
     }
-    buf.array()
+    w.result
   }
 }
 
@@ -206,13 +208,13 @@ object CountMin {
       list = SparseCells.nonzero(n, len)(cells(_))
     }
     // a sparse counter that wrapped to zero is not written, as in the dense scan
-    val out = list.toGapCoded(1 + Varint.size(c.depth.toLong) + Varint.size(c.width.toLong) +
-      Varint.size(c.total), byteValues = false)
-    out(0) = -1
-    var pos = Varint.write(out, 1, c.depth.toLong)
-    pos = Varint.write(out, pos, c.width.toLong)
-    Varint.write(out, pos, c.total)
-    out
+    list.toGapCoded(1 + Bytes.varSize(c.depth.toLong) + Bytes.varSize(c.width.toLong) +
+        Bytes.varSize(c.total), byteValues = false) { w =>
+      w.putByte(-1)
+      w.putVarLong(c.depth.toLong)
+      w.putVarLong(c.width.toLong)
+      w.putVarLong(c.total)
+    }
   }
 
   /** Decodes the stored or the compact form. Nonzero counters go in one by
@@ -220,38 +222,38 @@ object CountMin {
    * decodes to a sparse sketch and a fuller one to a dense sketch. Compact
    * counter indices must ascend. */
   def fromBytes(bytes: Array[Byte]): CountMin = {
-    require(bytes.length >= 16 || (bytes.length > 0 && bytes(0) == -1.toByte),
-      "corrupt count-min payload (header)")
-    if (bytes(0) == -1.toByte) { // compact sparse-pair form
-      val r = new Varint.Reader(bytes, 1, "count-min")
-      val depth = r.read()
-      val width = r.read()
-      require(depth > 0 && width > 0 && depth <= MaxCells && width <= MaxCells &&
-        depth * width <= MaxCells, "corrupt count-min payload (sparse dims)")
-      val total = r.read()
+    if (bytes.length > 0 && bytes(0) == -1.toByte) { // compact sparse-pair form
+      val r = new Bytes.Reader(bytes, 1, "count-min")
+      val depth = r.readVarLong()
+      val width = r.readVarLong()
+      r.check(depth > 0 && width > 0 && depth <= MaxCells && width <= MaxCells &&
+        depth * width <= MaxCells, "sparse dims")
+      val total = r.readVarLong()
       val n = (depth * width).toInt
       val nNonzero = SparseCells.readCount(r, n)
       val c = new CountMin(depth.toInt, width.toInt, null, SparseCells(n, nNonzero), total)
       SparseCells.readGapCoded(r, nNonzero, n, byteValues = false)(c.addCell)
       return c
     }
-    val buf = ByteBuffer.wrap(bytes)
-    val depth = buf.getInt
-    val width = buf.getInt
-    require(depth > 0 && width > 0 && depth.toLong * width <= MaxCells,
-      "corrupt count-min payload (dims)")
-    val total = buf.getLong
-    val n = depth * width
-    require(n.toLong * 8 <= buf.remaining, "corrupt count-min payload (length)")
+    val r = new Bytes.Reader(bytes, 0, "count-min")
+    val depth = r.readInt()
+    val width = r.readInt()
+    r.check(depth > 0 && width > 0 && depth.toLong * width <= MaxCells, "dims")
+    val total = r.readLong()
+    val n = r.fits(depth * width, 8)
     val c = new CountMin(depth, width, null, SparseCells(n), total)
-    // nonzero counters one by one until the list fills up; then all at once
+    // nonzero counters one by one until the list fills up; then straight
+    // into the dense array
     var i = 0
     while (i < n && c.sparse != null) {
-      val v = Platform.getLong(bytes, Platform.BYTE_ARRAY_OFFSET + 16L + i * 8L)
-      if (v != 0L) c.addCell(i, buf.getLong(16 + i * 8))
+      val v = r.readLong()
+      if (v != 0L) c.addCell(i, v)
       i += 1
     }
-    if (c.sparse == null) buf.asLongBuffer().get(c.cells)
+    while (i < n) {
+      c.cells(i) = r.readLong()
+      i += 1
+    }
     c
   }
 }
@@ -332,16 +334,17 @@ final class BloomFilter private (
 
   def toBytes: Array[Byte] = {
     val n = numWords
-    val buf = ByteBuffer.allocate(8 + 4 + n * 8)
-    buf.putLong(numBits).putInt(numHashes)
+    val w = new Bytes.Writer(8 + 4 + n * 8)
+    w.putLong(numBits)
+    w.putInt(numHashes)
     if (words != null) {
       var i = 0
       while (i < n) {
-        buf.putLong(words(i))
+        w.putLong(words(i))
         i += 1
       }
-    }
-    buf.array()
+    } else w.putZeros(n * 8)
+    w.result
   }
 }
 
@@ -383,75 +386,63 @@ object BloomFilter {
     if (words != null) while (i < n) {
       if (words(i) != 0L) {
         nNonzero += 1
-        gapBytes += Varint.size((i - prev).toLong)
+        gapBytes += Bytes.varSize((i - prev).toLong)
         prev = i
       }
       i += 1
     }
     val dense = 12L + n * 8L
     if (16L + nNonzero.toLong * 13L >= dense) return f.toBytes
-    val out = new Array[Byte](1 + Varint.size(f.numBits) + Varint.size(f.numHashes.toLong) +
-      Varint.size(nNonzero.toLong) + gapBytes + nNonzero * 8)
-    out(0) = -1
-    var pos = Varint.write(out, 1, f.numBits)
-    pos = Varint.write(out, pos, f.numHashes.toLong)
-    pos = Varint.write(out, pos, nNonzero.toLong)
+    val w = new Bytes.Writer(1 + Bytes.varSize(f.numBits) + Bytes.varSize(f.numHashes.toLong) +
+      Bytes.varSize(nNonzero.toLong) + gapBytes + nNonzero * 8)
+    w.putByte(-1)
+    w.putVarLong(f.numBits)
+    w.putVarLong(f.numHashes.toLong)
+    w.putVarLong(nNonzero.toLong)
     prev = -1
     i = 0
     if (words != null) while (i < n) {
       if (words(i) != 0L) {
-        pos = Varint.write(out, pos, (i - prev).toLong)
-        var s = 56
-        val w = words(i)
-        while (s >= 0) {
-          out(pos) = (w >>> s).toByte
-          pos += 1
-          s -= 8
-        }
+        w.putVarLong((i - prev).toLong)
+        w.putLong(words(i))
         prev = i
       }
       i += 1
     }
-    out
+    w.result
   }
 
   def fromBytes(bytes: Array[Byte]): BloomFilter = {
-    require(bytes.length >= 12 || (bytes.length > 0 && bytes(0) == -1.toByte),
-      "corrupt bloom payload (header)")
-    if (bytes(0) == -1.toByte) { // compact sparse-word form
-      val r = new Varint.Reader(bytes, 1, "bloom")
-      val numBits = r.read()
-      val numHashes = r.read().toInt
-      require(numBits > 0 && (numBits & 63L) == 0L && (numBits >>> 6) <= MaxWords &&
-        numHashes > 0, "corrupt bloom payload (sparse dims)")
+    if (bytes.length > 0 && bytes(0) == -1.toByte) { // compact sparse-word form
+      val r = new Bytes.Reader(bytes, 1, "bloom")
+      val numBits = r.readVarLong()
+      val numHashes = r.readVarLong().toInt
+      r.check(numBits > 0 && (numBits & 63L) == 0L && (numBits >>> 6) <= MaxWords &&
+        numHashes > 0, "sparse dims")
       val nWords = (numBits >>> 6).toInt
-      val nNonzero = r.read().toInt
-      require(nNonzero >= 0 && nNonzero <= nWords, "corrupt bloom payload (sparse count)")
+      val nNonzero = r.readVarLong().toInt
+      r.check(nNonzero >= 0 && nNonzero <= nWords, "sparse count")
       val words = if (nNonzero == 0) null else new Array[Long](nWords)
       var idx = -1
       var k = 0
       while (k < nNonzero) {
-        idx += r.read().toInt
-        require(idx >= 0 && idx < nWords, "corrupt bloom payload (sparse index)")
-        var w = 0L
-        var b = 0
-        while (b < 8) { w = (w << 8) | (r.readByte() & 0xffL); b += 1 }
-        words(idx) = w
+        idx += r.readVarLong().toInt
+        r.check(idx >= 0 && idx < nWords, "sparse index")
+        words(idx) = r.readLong()
         k += 1
       }
       return new BloomFilter(numBits, numHashes, words)
     }
-    val buf = ByteBuffer.wrap(bytes)
-    val numBits = buf.getLong
-    val numHashes = buf.getInt
-    require(numBits > 0 && (numBits & 63L) == 0L && (numBits >>> 6) <= MaxWords &&
-      numHashes > 0, "corrupt bloom payload (dims)")
-    val n = (numBits >>> 6).toInt
-    require(n.toLong * 8 <= buf.remaining, "corrupt bloom payload (length)")
+    val r = new Bytes.Reader(bytes, 0, "bloom")
+    val numBits = r.readLong()
+    val numHashes = r.readInt()
+    r.check(numBits > 0 && (numBits & 63L) == 0L && (numBits >>> 6) <= MaxWords &&
+      numHashes > 0, "dims")
+    val n = r.fits(numBits >>> 6, 8)
     val bits = new Array[Long](n)
     var i = 0
     while (i < n) {
-      bits(i) = buf.getLong
+      bits(i) = r.readLong()
       i += 1
     }
     new BloomFilter(numBits, numHashes, bits)

@@ -1,6 +1,6 @@
 package graft.sketches
 
-import graft.core.{SparseCells, Varint}
+import graft.core.{Bytes, SparseCells}
 
 /**
  * HyperLogLog distinct-count sketch (Flajolet, Fusy, Gandouet, Meunier 2007)
@@ -198,9 +198,7 @@ object Hll {
     // conservative sparse upper bound: 1 marker + 5 count + nSet * (5 + 1)
     if (6L + nSet.toLong * 6L >= 1L + m) return h.toBytes
     val set = if (h.sparse != null) h.sparse else SparseCells.nonzero(m, nSet)(regs(_))
-    val out = set.toGapCoded(1, byteValues = true)
-    out(0) = (-h.precision).toByte
-    out
+    set.toGapCoded(1, byteValues = true)(_.putByte(-h.precision))
   }
 
   /** Decodes the stored or the compact form. The compact form's registers
@@ -211,23 +209,22 @@ object Hll {
    * the set ones). Compact register indices must ascend and their ranks lie
    * in [1, 65 - precision]. */
   def fromBytes(bytes: Array[Byte]): Hll = {
-    require(bytes.length > 0, "corrupt HLL payload (empty)")
-    val first = bytes(0).toInt
+    val r = new Bytes.Reader(bytes, 0, "HLL")
+    val first = r.readByte().toInt
     val p = math.abs(first)
-    require(p >= 4 && p <= 18, "corrupt HLL payload (precision)")
+    r.check(p >= 4 && p <= 18, "precision")
     val m = 1 << p
     if (first < 0) { // compact (sparse) aggregation-buffer form
       val maxRank = 65 - p
-      val r = new Varint.Reader(bytes, 1, "HLL")
       val nSet = SparseCells.readCount(r, m)
       val h = new Hll(p, null, nSet)
       SparseCells.readGapCoded(r, nSet, m, byteValues = true) { (idx, rank) =>
-        require(rank >= 1 && rank <= maxRank, "corrupt HLL payload (sparse rank)")
+        r.check(rank >= 1 && rank <= maxRank, "sparse rank")
         h.update(idx, rank.toByte)
       }
       h
     } else {
-      require(bytes.length == 1 + m, "corrupt HLL payload")
+      r.check(r.remaining == m, "length")
       new Hll(p, java.util.Arrays.copyOfRange(bytes, 1, bytes.length), 0)
     }
   }

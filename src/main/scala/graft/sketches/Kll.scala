@@ -1,6 +1,7 @@
 package graft.sketches
 
-import java.nio.ByteBuffer
+import graft.core.Bytes
+
 import scala.collection.mutable.ArrayBuffer
 
 /**
@@ -179,17 +180,20 @@ final class Kll private (
 
   def toBytes: Array[Byte] = {
     val n = size
-    val buf = ByteBuffer.allocate(4 + 8 + 8 + 4 + compactors.length * 4 + n * 8)
-    buf.putInt(k).putLong(totalVar).putLong(coinState).putInt(compactors.length)
-    compactors.foreach(cc => buf.putInt(cc.length))
+    val w = new Bytes.Writer(4 + 8 + 8 + 4 + compactors.length * 4 + n * 8)
+    w.putInt(k)
+    w.putLong(totalVar)
+    w.putLong(coinState)
+    w.putInt(compactors.length)
+    compactors.foreach(cc => w.putInt(cc.length))
     compactors.foreach { cc =>
       var i = 0
       while (i < cc.length) {
-        buf.putDouble(cc.items(i))
+        w.putDouble(cc.items(i))
         i += 1
       }
     }
-    buf.array()
+    w.result
   }
 }
 
@@ -227,30 +231,28 @@ object Kll {
   }
 
   def fromBytes(bytes: Array[Byte]): Kll = {
-    require(bytes.length >= 24, "corrupt KLL payload (header)")
-    val buf = ByteBuffer.wrap(bytes)
-    val k = buf.getInt
-    val total = buf.getLong
-    val coinState = buf.getLong
-    val nLevels = buf.getInt
-    require(nLevels >= 0 && nLevels.toLong * 4 <= buf.remaining, "corrupt KLL payload (levels)")
+    val r = new Bytes.Reader(bytes, 0, "KLL")
+    val k = r.readInt()
+    val total = r.readLong()
+    val coinState = r.readLong()
+    val nLevels = r.fits(r.readInt(), 4)
     val sizes = new Array[Int](nLevels)
     var items = 0L
     var i = 0
     while (i < nLevels) {
-      sizes(i) = buf.getInt
-      require(sizes(i) >= 0, "corrupt KLL payload (level size)")
+      sizes(i) = r.readInt()
+      r.check(sizes(i) >= 0, "level size")
       items += sizes(i)
       i += 1
     }
-    require(items * 8 <= buf.remaining, "corrupt KLL payload (count)")
+    r.fits(items, 8)
     val compactors = new ArrayBuffer[Level](nLevels)
     i = 0
     while (i < nLevels) {
       val a = new Array[Double](sizes(i))
       var j = 0
       while (j < a.length) {
-        a(j) = buf.getDouble
+        a(j) = r.readDouble()
         j += 1
       }
       compactors += new Level(a, a.length)

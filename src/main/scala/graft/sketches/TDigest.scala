@@ -1,6 +1,6 @@
 package graft.sketches
 
-import java.nio.ByteBuffer
+import graft.core.Bytes
 
 /**
  * Merging t-digest (Dunning & Ertl, "Computing Extremely Accurate Quantiles
@@ -184,15 +184,19 @@ final class TDigest private (
 
   def toBytes: Array[Byte] = {
     flush()
-    val buf = ByteBuffer.allocate(8 + 4 + 8 * 3 + nCentroids * 16)
-    buf.putDouble(compression).putInt(nCentroids)
-    buf.putDouble(totalVar).putDouble(minVar).putDouble(maxVar)
+    val w = new Bytes.Writer(8 + 4 + 8 * 3 + nCentroids * 16)
+    w.putDouble(compression)
+    w.putInt(nCentroids)
+    w.putDouble(totalVar)
+    w.putDouble(minVar)
+    w.putDouble(maxVar)
     var i = 0
     while (i < nCentroids) {
-      buf.putDouble(means(i)).putDouble(weights(i))
+      w.putDouble(means(i))
+      w.putDouble(weights(i))
       i += 1
     }
-    buf.array()
+    w.result
   }
 }
 
@@ -254,20 +258,19 @@ object TDigest {
   }
 
   def fromBytes(bytes: Array[Byte]): TDigest = {
-    require(bytes.length >= 36, "corrupt t-digest payload (header)")
-    val buf = ByteBuffer.wrap(bytes)
-    val compression = buf.getDouble
-    val n = buf.getInt
-    val total = buf.getDouble
-    val minV = buf.getDouble
-    val maxV = buf.getDouble
-    require(n >= 0 && n.toLong * 16 <= buf.remaining, "corrupt t-digest payload (count)")
+    val r = new Bytes.Reader(bytes, 0, "t-digest")
+    val compression = r.readDouble()
+    val nClaimed = r.readInt()
+    val total = r.readDouble()
+    val minV = r.readDouble()
+    val maxV = r.readDouble()
+    val n = r.fits(nClaimed, 16)
     val ms = new Array[Double](n)
     val ws = new Array[Double](n)
     var i = 0
     while (i < n) {
-      ms(i) = buf.getDouble
-      ws(i) = buf.getDouble
+      ms(i) = r.readDouble()
+      ws(i) = r.readDouble()
       i += 1
     }
     new TDigest(compression, ms, ws, n, total, minV, maxV)

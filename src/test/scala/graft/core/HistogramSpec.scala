@@ -1,6 +1,5 @@
 package graft.core
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
@@ -210,11 +209,7 @@ class HistogramSpec extends AnyFunSuite {
 
   private def same(a: Array[Byte], b: Array[Byte]): Boolean = java.util.Arrays.equals(a, b)
 
-  private def v0Bytes(h: Histogram): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    HistogramSerde.writeV0(h, new DataOutputStream(bos))
-    bos.toByteArray
-  }
+  private def v0Bytes(h: Histogram): Array[Byte] = HistogramSerde.toBytesV0(h)
 
   private def regularBins(h: Histogram): Int =
     h.nonEmptyBins.count(b => !b.isUnderflowBin && !b.isOverflowBin)
@@ -280,8 +275,7 @@ class HistogramSpec extends AnyFunSuite {
         {
           val back = HistogramSerde.fromBytes(l, HistogramSerde.toBytes(sa))
           val env = SketchEnvelope.fromBytes(SketchEnvelope.toBytes(da))
-          val v0 = HistogramSerde.read(l, new DataInputStream(
-            new ByteArrayInputStream(v0Bytes(sa))))
+          val v0 = HistogramSerde.fromBytes(l, v0Bytes(sa))
           sameHist(back, da) && back.isDense == (binsA > cap) &&
             sameHist(env, da) && env.isDense == (binsA > cap) &&
             sameHist(v0, da) && v0.isDense == (binsA > cap)

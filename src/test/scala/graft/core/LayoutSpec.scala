@@ -193,10 +193,9 @@ class LayoutSpec extends AnyFunSuite {
       OtelExponentialLayout(5),
       IntegerLayout(-100, 100))
     for (l <- layouts) {
-      val bos = new java.io.ByteArrayOutputStream()
-      LayoutCodec.write(l, new java.io.DataOutputStream(bos))
-      val back = LayoutCodec.read(
-        new java.io.DataInputStream(new java.io.ByteArrayInputStream(bos.toByteArray)))
+      val bos = new Bytes.Writer(64)
+      LayoutCodec.write(l, bos)
+      val back = LayoutCodec.read(new Bytes.Reader(bos.result, 0, "histogram"))
       assert(back == l, s"codec round-trip failed for $l")
       // behavioral equality too
       for (v <- Seq(-1e5, -1.0, 0.0, 0.5, 123.0, 99999.0)) {

@@ -66,10 +66,9 @@ object HistogramProperties extends Properties("Histogram") {
         Gen.chooseNum(0, 10).map(s => OtelExponentialLayout(s): Layout),
         Gen.nonEmptyListOf(Gen.chooseNum(-1e6, 1e6)).map(bs =>
           CustomLayout(bs.distinct.sorted.toArray): Layout))) { l =>
-      val bos = new java.io.ByteArrayOutputStream()
-      ReferenceLayoutSerde.writeWithTypeInfo(l, new java.io.DataOutputStream(bos))
-      val back = ReferenceLayoutSerde.readWithTypeInfo(
-        new java.io.DataInputStream(new java.io.ByteArrayInputStream(bos.toByteArray)))
+      val bos = new Bytes.Writer(64)
+      ReferenceLayoutSerde.writeWithTypeInfo(l, bos)
+      val back = ReferenceLayoutSerde.readWithTypeInfo(new Bytes.Reader(bos.result, 0, "histogram"))
       back == l
     }
 

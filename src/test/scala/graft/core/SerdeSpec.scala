@@ -1,7 +1,6 @@
 package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 class SerdeSpec extends AnyFunSuite {
 
@@ -11,24 +10,23 @@ class SerdeSpec extends AnyFunSuite {
   test("varint/varlong/zigzag round-trips") {
     val longs = Seq(0L, 1L, 127L, 128L, 300L, Long.MaxValue, 0x7fffffffL, 1L << 62)
     val ints = Seq(0, 1, -1, 63, -64, 64, Int.MaxValue, Int.MinValue, 12345, -12345)
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    longs.foreach(Codecs.writeUnsignedVarLong(_, out))
-    ints.foreach(Codecs.writeSignedVarInt(_, out))
-    val in = new DataInputStream(new ByteArrayInputStream(bos.toByteArray))
-    longs.foreach(l => assert(Codecs.readUnsignedVarLong(in) == l))
-    ints.foreach(i => assert(Codecs.readSignedVarInt(in) == i))
+    val out = new Bytes.Writer(16)
+    longs.foreach(out.putVarLong)
+    ints.foreach(out.putZigzag)
+    val in = new Bytes.Reader(out.result, 0, "test")
+    longs.foreach(l => assert(in.readVarLong() == l))
+    ints.foreach(i => assert(in.readZigzag() == i))
   }
 
   test("bit writer/reader round-trip with odd widths") {
     val rnd = new java.util.SplittableRandom(8L)
     val widths = Array.fill(500)(rnd.nextInt(1, 64))
     val values = widths.map(w => rnd.nextLong() >>> (64 - w))
-    val bos = new ByteArrayOutputStream()
-    val w = new Codecs.BitWriter(new DataOutputStream(bos))
+    val bos = new Bytes.Writer(16)
+    val w = new Bytes.BitWriter(bos)
     widths.zip(values).foreach { case (width, v) => w.writeBits(width, v) }
     w.finish()
-    val r = new Codecs.BitReader(new DataInputStream(new ByteArrayInputStream(bos.toByteArray)))
+    val r = new Bytes.BitReader(new Bytes.Reader(bos.result, 0, "test"))
     widths.zip(values).foreach { case (width, v) =>
       assert(r.readBits(width) == v, s"width=$width")
     }
@@ -65,11 +63,7 @@ class SerdeSpec extends AnyFunSuite {
     val rnd = new java.util.SplittableRandom(321L)
     for (_ <- 0 until 200) {
       val h = randomHistogram(rnd)
-      val bos = new ByteArrayOutputStream()
-      HistogramSerde.writeV0(h, new DataOutputStream(bos))
-      val back = HistogramSerde.read(
-        h.layout,
-        new DataInputStream(new ByteArrayInputStream(bos.toByteArray)))
+      val back = HistogramSerde.fromBytes(h.layout, HistogramSerde.toBytesV0(h))
       assert(back == h, s"V0 round trip failed: $h")
     }
   }
@@ -103,9 +97,7 @@ class SerdeSpec extends AnyFunSuite {
       val layout = CustomLayout(boundaries)
       val h = Histogram(layout)
       random.doubles(numDataPoints).forEach(v => h.addValue(v))
-      val bos = new ByteArrayOutputStream()
-      HistogramSerde.writeV0(h, new DataOutputStream(bos))
-      assert(hex(bos.toByteArray) == expectedHex, s"seed=${seed.toHexString}")
+      assert(hex(HistogramSerde.toBytesV0(h)) == expectedHex, s"seed=${seed.toHexString}")
     }
   }
 
@@ -168,13 +160,12 @@ class SerdeSpec extends AnyFunSuite {
       val parts = line.split(" ")
       val expectedHex = parts.last.toUpperCase
       val layout = layoutFor(parts)
-      val bos = new ByteArrayOutputStream()
-      ReferenceLayoutSerde.writeWithTypeInfo(layout, new DataOutputStream(bos))
-      assert(hex(bos.toByteArray) == expectedHex, s"line: $line")
+      val bos = new Bytes.Writer(64)
+      ReferenceLayoutSerde.writeWithTypeInfo(layout, bos)
+      assert(hex(bos.result) == expectedHex, s"line: $line")
       // a reference-written blob reads back to an equal layout
-      val back = ReferenceLayoutSerde.readWithTypeInfo(
-        new DataInputStream(new ByteArrayInputStream(
-          expectedHex.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)))
+      val back = ReferenceLayoutSerde.readWithTypeInfo(new Bytes.Reader(
+        expectedHex.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray, 0, "histogram"))
       assert(back == layout, s"read-back mismatch for $line")
     }
   }
@@ -203,25 +194,25 @@ class SerdeSpec extends AnyFunSuite {
   /** A V1 sketch envelope over `IntegerLayout(0, 10^9)` holding min 0 and
    * `max`, then `regular` (header, index bytes and bit fields). */
   private def craftedEnvelope(max: Double, effRegularClass: Int)(
-      regular: DataOutputStream => Unit): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeShort(0x4748)
+      regular: Bytes.Writer => Unit): Array[Byte] = {
+    val out = new Bytes.Writer(64)
+    out.putByte(0x47)
+    out.putByte(0x48)
     LayoutCodec.write(IntegerLayout(0, 1000000000), out)
-    out.writeByte(1) // V1
-    out.writeByte(0x01 | 0x02 | (effRegularClass << 2)) // non-empty, min < max
-    out.writeDouble(0.0)
-    out.writeDouble(max)
+    out.putByte(1) // V1
+    out.putByte(0x01 | 0x02 | (effRegularClass << 2)) // non-empty, min < max
+    out.putDouble(0.0)
+    out.putDouble(max)
     regular(out)
-    bos.toByteArray
+    out.result
   }
 
   /** Dense effective counts over bins [1, last] with `bitsPerCount` bits
    * each, `counts` of them written. */
-  private def denseCounts(last: Int, bitsPerCount: Int, counts: Int)(out: DataOutputStream) = {
-    Codecs.writeSignedVarInt(1, out)
-    Codecs.writeSignedVarInt(last, out)
-    val bits = new Codecs.BitWriter(out)
+  private def denseCounts(last: Int, bitsPerCount: Int, counts: Int)(out: Bytes.Writer) = {
+    out.putZigzag(1)
+    out.putZigzag(last)
+    val bits = new Bytes.BitWriter(out)
     bits.writeBits(6, bitsPerCount.toLong)
     (0 until counts).foreach(_ => bits.writeBits(bitsPerCount, 1L))
     bits.finish()
@@ -261,15 +252,12 @@ class SerdeSpec extends AnyFunSuite {
       Histogram(layout).addValue(-3.0, 5L).addValue(7.5).addValue(1e9),
       { val h = Histogram(layout); (0 until 2000).foreach(_ => h.addValue(rnd.nextDouble() * 1e4)); h })
     for (h <- histograms) {
-      val v0 = {
-        val bos = new ByteArrayOutputStream()
-        HistogramSerde.writeV0(h, new DataOutputStream(bos))
-        bos.toByteArray
-      }
       val decoders = Seq[(String, Array[Byte], Array[Byte] => Histogram)](
-        ("V0", v0, HistogramSerde.fromBytes(layout, _)),
+        ("V0", HistogramSerde.toBytesV0(h), HistogramSerde.fromBytes(layout, _)),
         ("V1", HistogramSerde.toBytes(h), HistogramSerde.fromBytes(layout, _)),
-        ("envelope", SketchEnvelope.toBytes(h), SketchEnvelope.fromBytes(_)))
+        ("envelope", SketchEnvelope.toBytes(h), SketchEnvelope.fromBytes(_)),
+        ("reference", ReferenceLayoutSerde.toBytesWithTypeInfo(h),
+          ReferenceLayoutSerde.fromBytesWithTypeInfo(_)))
       for ((name, blob, decode) <- decoders) {
         assert(decode(blob) == h, name)
         for (n <- 0 until blob.length) {
@@ -283,17 +271,17 @@ class SerdeSpec extends AnyFunSuite {
   test("effective bins outside the regular range or past min and max fail as corrupt") {
     val blobs = Seq(
       // first bin below the regular range
-      craftedEnvelope(100.0, 1)(out => Codecs.writeSignedVarInt(-5, out)),
+      craftedEnvelope(100.0, 1)(out => out.putZigzag(-5)),
       // a bin above the stored max
       craftedEnvelope(100.0, 2) { out =>
-        Codecs.writeSignedVarInt(1, out)
-        Codecs.writeSignedVarInt(200, out)
+        out.putZigzag(1)
+        out.putZigzag(200)
       },
       // a sparse index gap that runs past the last bin
       craftedEnvelope(100.0, 3) { out =>
-        Codecs.writeSignedVarInt(50, out) // swapped: the sparse variant
-        Codecs.writeSignedVarInt(1, out)
-        val bits = new Codecs.BitWriter(out)
+        out.putZigzag(50) // swapped: the sparse variant
+        out.putZigzag(1)
+        val bits = new Bytes.BitWriter(out)
         bits.writeBits(6, 1L) // bits per count
         bits.writeBits(5, 8L) // bits per index gap
         bits.writeBits(1, 1L)
@@ -307,7 +295,60 @@ class SerdeSpec extends AnyFunSuite {
     }
     // the same envelope with an in-range bin decodes
     val ok = SketchEnvelope.fromBytes(
-      craftedEnvelope(100.0, 1)(out => Codecs.writeSignedVarInt(5, out)))
+      craftedEnvelope(100.0, 1)(out => out.putZigzag(5)))
     assert(ok.totalCount == 3 && ok.countAt(5) == 1 && ok.countAt(100) == 1)
+  }
+
+  private def unhex(s: String): Array[Byte] =
+    s.replace(" ", "").grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+
+  test("a custom layout claiming more boundaries than bytes fails as truncated before allocating") {
+    val blobs = Seq[(Array[Byte], Array[Byte] => Histogram)](
+      // envelope, custom layout, Int.MaxValue boundaries
+      (unhex("47 48 01 ff ff ff ff 07"), SketchEnvelope.fromBytes(_)),
+      // envelope, custom layout, 2^26 boundaries
+      (unhex("47 48 01 80 80 80 20"), SketchEnvelope.fromBytes(_)),
+      // reference type info, custom layout V0, Int.MaxValue boundaries
+      (unhex("7f 86 2c 38 08 df 6f cd 00 ff ff ff ff 07"),
+        ReferenceLayoutSerde.fromBytesWithTypeInfo(_)))
+    for ((blob, decode) <- blobs) {
+      var e: IllegalArgumentException = null
+      val bytes = allocatedBy {
+        e = intercept[IllegalArgumentException](decode(blob))
+      }
+      assert(e.getMessage == "corrupt histogram payload (truncated)", hex(blob))
+      assert(bytes < (1L << 20), s"decoding ${hex(blob)} allocated $bytes bytes")
+    }
+  }
+
+  test("every histogram decode failure is a typed corrupt-payload error") {
+    val layout = LogQuadraticLayout(1e-5, 1e-2, -1e6, 1e6)
+    val cases = Seq[(String, () => Histogram, String, Int)](
+      // V1, non-empty, effective underflow class 3, min 0.0, then an
+      // 11-byte varint
+      ("over-long varint", () => HistogramSerde.fromBytes(layout,
+        unhex("01 31 0000000000000000") ++ Array.fill[Byte](11)(0x80.toByte)),
+        "varint too long", 20),
+      // integer layout whose min index is a zero-padded 6-byte zigzag varint
+      ("over-long zigzag varint", () => SketchEnvelope.fromBytes(
+        unhex("47 48 06 80 80 80 80 80 00 00")),
+        "varint too long", 9),
+      ("serial version", () => HistogramSerde.fromBytes(layout, Array[Byte](9)),
+        "unsupported serial version 9", 1),
+      ("layout tag", () => SketchEnvelope.fromBytes(unhex("47 48 2a 01 00")),
+        "unknown layout tag 42", 3),
+      ("reference serial", () => ReferenceLayoutSerde.fromBytesWithTypeInfo(
+        unhex("01 02 03 04 05 06 07 08 00 01")),
+        "unknown layout serial 0x0102030405060708", 8),
+      ("reference layout version", () => ReferenceLayoutSerde.fromBytesWithTypeInfo(
+        unhex("7f 86 2c 38 08 df 6f cd 01 01") ++ new Array[Byte](8)),
+        "unsupported layout serial version 1", 9))
+    for ((name, decode, reason, offset) <- cases) {
+      val e = intercept[SketchFormatException](decode())
+      assert(e.isInstanceOf[IllegalArgumentException], name)
+      assert(e.getMessage == s"corrupt histogram payload ($reason)", name)
+      assert(e.what == "histogram" && e.reason == reason && e.offset == offset,
+        s"$name: offset ${e.offset}")
+    }
   }
 }

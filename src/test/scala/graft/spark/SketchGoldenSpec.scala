@@ -239,6 +239,42 @@ class SketchGoldenSpec extends AnyFunSuite {
     })
   }
 
+  /** One layout per [[LayoutCodec]] tag; all but the integer one have a
+   * reference serial version too. */
+  private val codecLayouts: Seq[(String, Layout)] = Seq(
+    "custom" -> CustomLayout(Array.tabulate(40)(i => math.pow(10.0, i / 8.0))),
+    "log_linear" -> LogLinearLayout(1e-2, 1e-2, 0, 1e6),
+    "log_quadratic" -> LogQuadraticLayout(1e-5, 1e-2, -1e6, 1e6),
+    "log_optimal" -> LogOptimalLayout(1e-2, 1e-2, 0, 1e6),
+    "otel" -> OtelExponentialLayout(3),
+    "integer" -> IntegerLayout(0, 100000))
+
+  /** Histograms over `layout`: empty, one value, 20 values and 600 values
+   * (past the sparse cap), the larger two with under- and overflow. */
+  private def codecHistograms(layout: Layout): Seq[(String, Histogram)] = {
+    val rnd = new java.util.SplittableRandom(47L)
+    def filled(n: Int): Histogram = {
+      val h = Histogram(layout)
+      (0 until n).foreach(_ => h.addValue(math.exp(rnd.nextDouble(math.log(10.0), math.log(1e5)))))
+      h.addValue(-1e9, 2L).addValue(1e9)
+    }
+    Seq("empty" -> Histogram(layout), "one" -> Histogram(layout).addValue(42.0),
+      "rows20" -> filled(20), "past_cap" -> filled(600))
+  }
+
+  test("envelopes of every layout and their hist_to_reference blobs match their goldens") {
+    import spark.implicits._
+    verify(codecLayouts.flatMap { case (name, layout) =>
+      val envelopes = codecHistograms(layout).map { case (k, h) => k -> SketchEnvelope.toBytes(h) }
+      val reference =
+        if (layout.isInstanceOf[IntegerLayout]) Nil
+        else Seq(s"reference.$name" -> envelopes.toDF("k", "b")
+          .select(col("k"), hist_to_reference(col("b"))).collect().toSeq
+          .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)))
+      (s"envelope.$name" -> envelopes) +: reference
+    })
+  }
+
   test("*_merge edge cases: empty input, all-null rows and zero-length blobs yield empty bytes") {
     import spark.implicits._
     val merges: Seq[Column => Column] =
