@@ -6,7 +6,7 @@ package graft.core
  * Semantics follow the reference sketch library (dynahist
  * `util/Algorithms.java:44-244`): a strictly symmetric, monotone, range-bounded
  * interpolation; an order-preserving double<->long bijection; and a
- * predicate-bisection `findFirst` with an optional galloping initial guess.
+ * predicate search `findFirst` that gallops from an initial guess.
  */
 object Algorithms {
 
@@ -59,23 +59,9 @@ object Algorithms {
 
   /**
    * Smallest l in [min,max] with pred(l) == true, assuming pred is monotone
-   * (false below some threshold X, true at and above X). O(log(max-min)).
-   */
-  def findFirst(pred: Long => Boolean, min: Long, max: Long): Long = {
-    require(min <= max)
-    var low = min
-    var high = max
-    while (low + 1 < high) {
-      val mid = midpoint(low, high)
-      if (pred(mid)) high = mid else low = mid
-    }
-    require(high != max || pred(high), s"predicate must hold at max=$max")
-    if (low == min && low != high && pred(min)) min else high
-  }
-
-  /**
-   * Like [[findFirst]] but starts a doubling (galloping) search from
-   * `initialGuess`, which is fast when the guess is near the answer.
+   * (false below some threshold X, true at and above X) and true at max. A
+   * doubling (galloping) search from `initialGuess` brackets the answer,
+   * then bisection finds it: O(log |X - initialGuess|).
    */
   def findFirst(pred: Long => Boolean, min: Long, max: Long, initialGuess: Long): Long = {
     require(min <= initialGuess && initialGuess <= max)

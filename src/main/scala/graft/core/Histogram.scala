@@ -537,11 +537,12 @@ final class Histogram private (val layout: Layout) extends Serializable {
     s"Histogram(layout=$layout, total=$totalCountVar, min=$minVar, max=$maxVar, " +
       s"underflow=$underflowCountVar, overflow=$overflowCountVar)"
 
-  /** Rough in-memory footprint: sparse list (4 + 8 bytes an entry) or
-   * counter window (8 bytes a counter) + fixed fields. */
+  /** Rough in-memory footprint: the object with its fields, and the sparse
+   * list or the counter window (8 bytes a counter), each array with its
+   * header. */
   def estimatedFootprintBytes: Long =
-    16L + (if (sparse != null) sparse.footprintBytes else 0L) + counts.length.toLong * 8L +
-      4L + 3L * 8L + 2L * 8L
+    16L + (if (sparse != null) sparse.footprintBytes else 0L) +
+      SparseCells.arrayBytes(counts.length, 8) + 4L + 3L * 8L + 2L * 8L
 
   /** Sets the non-regular state of a histogram whose regular counts a
    * decoder has recorded. */

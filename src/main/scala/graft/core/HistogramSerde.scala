@@ -562,11 +562,11 @@ object LayoutCodec {
       val n = r.fits(r.readVarLong(), 8)
       CustomLayout(Array.fill(n)(r.readDouble()))
     case TagLogLinear =>
-      LogLinearLayout.withIndices(r.readDouble(), r.readDouble(), r.readZigzag(), r.readZigzag())
+      new LogLinearLayout(r.readDouble(), r.readDouble(), r.readZigzag(), r.readZigzag())
     case TagLogQuadratic =>
-      LogQuadraticLayout.withIndices(r.readDouble(), r.readDouble(), r.readZigzag(), r.readZigzag())
+      new LogQuadraticLayout(r.readDouble(), r.readDouble(), r.readZigzag(), r.readZigzag())
     case TagLogOptimal =>
-      LogOptimalLayout.withIndices(r.readDouble(), r.readDouble(), r.readZigzag(), r.readZigzag())
+      new LogOptimalLayout(r.readDouble(), r.readDouble(), r.readZigzag(), r.readZigzag())
     case TagOtel    => OtelExponentialLayout(r.readUnsignedByte())
     case TagInteger => IntegerLayout(r.readZigzag(), r.readZigzag())
     case t          => r.fail(s"unknown layout tag $t")

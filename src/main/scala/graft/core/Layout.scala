@@ -13,8 +13,9 @@ import Algorithms._
  *  - all indices <= `underflowBinIndex` belong to the underflow bin, all
  *    indices >= `overflowBinIndex` to the overflow bin;
  *  - `binLowerBound(i)` is the smallest value mapped to bin i, and
- *    `binUpperBound(i)` the largest, computed exactly by bisection over the
- *    order-preserving double<->long bijection.
+ *    `binUpperBound(i)` the largest, found exactly by one galloping search
+ *    over the order-preserving double<->long bijection, started at
+ *    [[binLowerBoundApproximation]].
  */
 trait Layout extends Serializable {
 
@@ -24,12 +25,22 @@ trait Layout extends Serializable {
 
   def overflowBinIndex: Int
 
+  /** Approximation of the lower bound of bin `binIndex`, where the exact
+   * bound search starts; defined for indices in (underflowBinIndex,
+   * overflowBinIndex] and never NaN. A layout with a fast approximate
+   * inverse overrides it (dynahist `layout/AbstractLayout.java:30-58`). */
+  protected def binLowerBoundApproximation(binIndex: Int): Double = 0.0
+
   /** Smallest value mapped to bin `binIndex` (-inf for underflow bins). */
   def binLowerBound(binIndex: Int): Double = {
     if (binIndex <= underflowBinIndex) return Double.NegativeInfinity
     val effective = math.min(overflowBinIndex, binIndex)
     longToDouble(
-      findFirst(l => mapToBinIndex(longToDouble(l)) >= effective, NegInfAsLong, PosInfAsLong))
+      findFirst(
+        l => mapToBinIndex(longToDouble(l)) >= effective,
+        NegInfAsLong,
+        PosInfAsLong,
+        doubleToLong(binLowerBoundApproximation(effective))))
   }
 
   /** Largest value mapped to bin `binIndex` (+inf for overflow bins). */
@@ -37,47 +48,15 @@ trait Layout extends Serializable {
     if (binIndex >= overflowBinIndex) return Double.PositiveInfinity
     val effective = math.max(underflowBinIndex, binIndex)
     longToDouble(
-      ~findFirst(l => mapToBinIndex(longToDouble(~l)) <= effective, ~PosInfAsLong, ~NegInfAsLong))
-  }
-
-  /** Number of regular (non-under/overflow) bins. */
-  final def regularBinCount: Long = overflowBinIndex.toLong - underflowBinIndex - 1
-}
-
-/**
- * Base for layouts that provide a fast approximate inverse mapping; the exact
- * bound is then found by a bisection seeded with the approximation
- * (dynahist `layout/AbstractLayout.java:30-58`).
- */
-abstract class SeededBoundLayout extends Layout {
-
-  /** Approximation of the lower bound of the bin with the given index; must be
-   * defined for indices in (underflowBinIndex, overflowBinIndex] and never NaN. */
-  protected def binLowerBoundApproximation(binIndex: Int): Double
-
-  override final def binLowerBound(binIndex: Int): Double = {
-    if (binIndex <= underflowBinIndex) return Double.NegativeInfinity
-    val effective = math.min(overflowBinIndex, binIndex)
-    val approx = binLowerBoundApproximation(effective)
-    longToDouble(
-      findFirst(
-        l => mapToBinIndex(longToDouble(l)) >= effective,
-        NegInfAsLong,
-        PosInfAsLong,
-        doubleToLong(approx)))
-  }
-
-  override final def binUpperBound(binIndex: Int): Double = {
-    if (binIndex >= overflowBinIndex) return Double.PositiveInfinity
-    val effective = math.max(underflowBinIndex, binIndex)
-    val approx = binLowerBoundApproximation(effective + 1)
-    longToDouble(
       ~findFirst(
         l => mapToBinIndex(longToDouble(~l)) <= effective,
         ~PosInfAsLong,
         ~NegInfAsLong,
-        ~doubleToLong(approx)))
+        ~doubleToLong(binLowerBoundApproximation(effective + 1))))
   }
+
+  /** Number of regular (non-under/overflow) bins. */
+  final def regularBinCount: Long = overflowBinIndex.toLong - underflowBinIndex - 1
 }
 
 /**

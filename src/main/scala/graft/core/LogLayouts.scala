@@ -8,30 +8,64 @@ import Algorithms._
  * relative to its magnitude. Values map to indices in O(1) via bit twiddling;
  * negative values are folded by index complement (perfect sign symmetry).
  *
- * The three variants trade mapping cost against bin-count overhead versus the
+ * The three shapes trade mapping cost against bin-count overhead versus the
  * information-theoretic optimum (reference README.md:108-140):
  *  - [[LogLinearLayout]]    — piecewise linear per octave, ~44% overhead, fastest;
  *  - [[LogQuadraticLayout]] — piecewise quadratic per octave, ~8% overhead;
  *  - [[LogOptimalLayout]]   — exact logarithm, 0% overhead, slowest mapping.
  *
- * Construction calibrates the subnormal/normal transition exactly by
- * predicate bisection so the piecewise mapping is continuous and index-exact
- * at the boundary (dynahist `layout/LogLinearLayout.java:145-187`, same
- * machinery in the quadratic/optimal variants).
+ * A shape is its monotone `indexHelper`, the `scale` that makes one
+ * `log1p(relativeLimit)` step of it one bin, and its approximate inverse
+ * `normalBound`. Everything else is shared here: below the normal limit
+ * values map linearly (`value / absoluteLimit`), above it through the
+ * shape. Construction calibrates the hand-over exactly by predicate search
+ * so the mapping is continuous and index-exact at the boundary (dynahist
+ * `layout/LogLinearLayout.java:145-187`, same machinery in the quadratic
+ * and optimal variants).
  */
-sealed abstract class ErrorLimitingLayout extends SeededBoundLayout {
-
-  def absoluteLimit: Double
-  def relativeLimit: Double
-
-  // calibrated at construction by the concrete companion
-  protected def factorNormal: Double
-  protected def factorSubnormal: Double
-  protected def offset: Double
-  protected def normalLimitBits: Long
+sealed abstract class ErrorLimitingLayout(
+    val absoluteLimit: Double,
+    val relativeLimit: Double,
+    val underflowBinIndex: Int,
+    val overflowBinIndex: Int)
+    extends Layout {
 
   /** Monotone per-octave shape function of the unsigned value bits. */
   protected def indexHelper(unsignedValueBits: Long): Double
+
+  /** Bins per shape unit, times `log1p(relativeLimit)`: 1.0, or 0.25 for
+   * the quadratic shape. */
+  protected def scale: Double
+
+  /** Approximate inverse of the shape: the value whose helper is `s`. */
+  protected def normalBound(s: Double): Double
+
+  private def firstNormalIdx: Int = math.ceil(1.0 / relativeLimit).toInt
+
+  private val factorNormal: Double = scale / math.log1p(relativeLimit)
+  private val factorSubnormal: Double = 1.0 / absoluteLimit
+
+  /** Exact bit threshold where the linear (subnormal) regime hands over to
+   * the shape (normal) regime, so every subnormal index stays below
+   * `firstNormalIdx`. */
+  protected final val normalLimitBits: Long =
+    findFirst(
+      l => (factorSubnormal * java.lang.Double.longBitsToDouble(l)).toInt >= firstNormalIdx,
+      0L,
+      java.lang.Double.doubleToRawLongBits(Double.PositiveInfinity),
+      doubleToLong(firstNormalIdx / factorSubnormal))
+
+  /** Smallest offset making the normal mapping start at `firstNormalIdx` at
+   * the normal limit. */
+  private val offset: Double = {
+    val helperAtLimit = indexHelper(normalLimitBits)
+    longToDouble(
+      findFirst(
+        l => (factorNormal * helperAtLimit + longToDouble(l)).toInt >= firstNormalIdx,
+        NegInfAsLong,
+        PosInfAsLong,
+        doubleToLong(firstNormalIdx - factorNormal * helperAtLimit)))
+  }
 
   protected final def normalIdx(unsignedValueBits: Long): Int =
     (factorNormal * indexHelper(unsignedValueBits) + offset).toInt
@@ -48,205 +82,99 @@ sealed abstract class ErrorLimitingLayout extends SeededBoundLayout {
     if (valueBits >= 0) idx else ~idx
   }
 
-  protected final def binLowerBoundApproximationFolded(binIndex: Int): Double =
+  override protected def binLowerBoundApproximation(binIndex: Int): Double =
     if (binIndex >= 0) positiveBoundApprox(binIndex) else -positiveBoundApprox(-binIndex)
 
-  override protected def binLowerBoundApproximation(binIndex: Int): Double =
-    binLowerBoundApproximationFolded(binIndex)
-
   /** Approximate inverse on the positive half-axis. */
-  protected def positiveBoundApprox(idx: Int): Double
+  private def positiveBoundApprox(idx: Int): Double = {
+    val x = idx * absoluteLimit
+    if (x < java.lang.Double.longBitsToDouble(normalLimitBits)) x
+    else normalBound((idx - offset) / factorNormal)
+  }
+
+  override def equals(o: Any): Boolean = o match {
+    case l: ErrorLimitingLayout =>
+      l.getClass == getClass &&
+        java.lang.Double.doubleToLongBits(absoluteLimit) ==
+          java.lang.Double.doubleToLongBits(l.absoluteLimit) &&
+        java.lang.Double.doubleToLongBits(relativeLimit) ==
+          java.lang.Double.doubleToLongBits(l.relativeLimit) &&
+        underflowBinIndex == l.underflowBinIndex && overflowBinIndex == l.overflowBinIndex
+    case _ => false
+  }
+
+  override def hashCode(): Int =
+    (absoluteLimit, relativeLimit, underflowBinIndex, overflowBinIndex).hashCode()
 
   override def toString: String =
     s"${getClass.getSimpleName}(abs=$absoluteLimit, rel=$relativeLimit, " +
       s"underflow=$underflowBinIndex, overflow=$overflowBinIndex)"
 }
 
-private[core] object ErrorLimitingLayout {
+object ErrorLimitingLayout {
 
-  def firstNormalIndex(relativeLimit: Double): Int = math.ceil(1.0 / relativeLimit).toInt
-
-  def subnormalFactor(absoluteLimit: Double): Double = 1.0 / absoluteLimit
-
-  /** Exact bit threshold where the linear (subnormal) regime must hand over to
-   * the log (normal) regime so every subnormal index stays < firstNormalIdx. */
-  def calibrateNormalLimitBits(factorSubnormal: Double, firstNormalIdx: Int): Long =
-    findFirst(
-      l => (factorSubnormal * java.lang.Double.longBitsToDouble(l)).toInt >= firstNormalIdx,
-      0L,
-      java.lang.Double.doubleToRawLongBits(Double.PositiveInfinity),
-      doubleToLong(firstNormalIdx / factorSubnormal))
-
-  /** Exact offset making the normal mapping start at firstNormalIdx at the
-   * transition point: smallest offset o with
-   * (fNormal * helperAtLimit + o).toInt >= firstNormalIdx. */
-  def calibrateOffset(helperAtLimit: Double, fNormal: Double, firstNormalIdx: Int): Double = {
-    val approx = firstNormalIdx - fNormal * helperAtLimit
-    longToDouble(
-      findFirst(
-        l => (fNormal * helperAtLimit + longToDouble(l)).toInt >= firstNormalIdx,
-        NegInfAsLong,
-        PosInfAsLong,
-        doubleToLong(approx)))
-  }
-
-  def checkLimits(
+  /** The layout `make(absoluteLimit, relativeLimit, underflow, overflow)`
+   * whose regular bins cover `[lo, hi]`. */
+  private[core] def covering[L <: ErrorLimitingLayout](make: (Double, Double, Int, Int) => L)(
       absoluteLimit: Double,
       relativeLimit: Double,
       lo: Double,
-      hi: Double): Unit = {
-    require(java.lang.Double.isFinite(lo) && java.lang.Double.isFinite(hi) && hi >= lo)
-    require(absoluteLimit >= java.lang.Double.MIN_NORMAL && absoluteLimit <= Double.MaxValue)
-    require(relativeLimit >= 0 && relativeLimit <= Double.MaxValue)
-  }
-
-  def boundIndices(layoutOf: Double => Int, lo: Double, hi: Double): (Int, Int) = {
-    val loIdx = layoutOf(lo)
-    val hiIdx = layoutOf(hi)
-    require(loIdx > Int.MinValue && hiIdx < Int.MaxValue)
-    val under = loIdx - 1
-    val over = hiIdx + 1
-    require(over.toLong - under.toLong - 1L <= Int.MaxValue.toLong)
-    (under, over)
+      hi: Double): L = {
+    require(java.lang.Double.isFinite(lo), s"valueRangeLowerBound must be finite, got $lo")
+    require(java.lang.Double.isFinite(hi), s"valueRangeUpperBound must be finite, got $hi")
+    require(hi >= lo, s"valueRangeLowerBound $lo exceeds valueRangeUpperBound $hi")
+    require(
+      absoluteLimit >= java.lang.Double.MIN_NORMAL && absoluteLimit <= Double.MaxValue,
+      s"absoluteLimit must be in [${java.lang.Double.MIN_NORMAL}, ${Double.MaxValue}], " +
+        s"got $absoluteLimit")
+    require(
+      relativeLimit >= 0 && relativeLimit <= Double.MaxValue,
+      s"relativeLimit must be in [0, ${Double.MaxValue}], got $relativeLimit")
+    val probe = make(absoluteLimit, relativeLimit, 0, 0)
+    val under = probe.mapToBinIndex(lo).toLong - 1
+    val over = probe.mapToBinIndex(hi).toLong + 1
+    require(
+      under >= Int.MinValue && over <= Int.MaxValue && over - under - 1 <= Int.MaxValue,
+      s"value range [$lo, $hi] needs more bins than an Int indexes")
+    make(absoluteLimit, relativeLimit, under.toInt, over.toInt)
   }
 }
 
 /** Piecewise-linear log layout (dynahist `layout/LogLinearLayout.java`). */
-final class LogLinearLayout private (
-    val absoluteLimit: Double,
-    val relativeLimit: Double,
-    val underflowBinIndex: Int,
-    val overflowBinIndex: Int,
-    protected val factorNormal: Double,
-    protected val factorSubnormal: Double,
-    protected val offset: Double,
-    protected val normalLimitBits: Long)
-    extends ErrorLimitingLayout {
-
-  override protected def indexHelper(bits: Long): Double = LogLinearLayout.helper(bits)
-
-  override protected def positiveBoundApprox(idx: Int): Double = {
-    val x = idx * absoluteLimit
-    if (x < java.lang.Double.longBitsToDouble(normalLimitBits)) x
-    else {
-      val s = (idx - offset) / factorNormal
-      val exponent = math.floor(s).toInt - 1
-      val mantissaPlus1 = s - exponent
-      math.scalb(mantissaPlus1, exponent - 1023)
-    }
-  }
-
-  override def equals(o: Any): Boolean = o match {
-    case l: LogLinearLayout =>
-      java.lang.Double.doubleToLongBits(absoluteLimit) ==
-        java.lang.Double.doubleToLongBits(l.absoluteLimit) &&
-        java.lang.Double.doubleToLongBits(relativeLimit) ==
-          java.lang.Double.doubleToLongBits(l.relativeLimit) &&
-        underflowBinIndex == l.underflowBinIndex && overflowBinIndex == l.overflowBinIndex
-    case _ => false
-  }
-
-  override def hashCode(): Int =
-    (absoluteLimit, relativeLimit, underflowBinIndex, overflowBinIndex).hashCode()
-}
-
-object LogLinearLayout {
-  import ErrorLimitingLayout._
+final class LogLinearLayout private[core] (abs: Double, rel: Double, under: Int, over: Int)
+    extends ErrorLimitingLayout(abs, rel, under, over) {
 
   /** `(mantissa+1) + exponent`: continuous, monotone, linear per octave. */
-  private[core] def helper(unsignedValueBits: Long): Double = {
+  override protected def indexHelper(unsignedValueBits: Long): Double = {
     val exponent = unsignedValueBits >>> 52
     val mantissaPlus1 = java.lang.Double.longBitsToDouble(
       (unsignedValueBits & 0x000fffffffffffffL) | 0x3ff0000000000000L)
     mantissaPlus1 + exponent
   }
 
-  private def calibrate(absoluteLimit: Double, relativeLimit: Double) = {
-    val firstNormalIdx = firstNormalIndex(relativeLimit)
-    val fNormal = 1.0 / math.log1p(relativeLimit)
-    val fSub = subnormalFactor(absoluteLimit)
-    val limitBits = calibrateNormalLimitBits(fSub, firstNormalIdx)
-    val off = calibrateOffset(helper(limitBits), fNormal, firstNormalIdx)
-    (fNormal, fSub, off, limitBits)
-  }
+  override protected def scale: Double = 1.0
 
-  /** Rebuilds a layout from its serialized parameters. */
-  private[core] def withIndices(
-      absoluteLimit: Double,
-      relativeLimit: Double,
-      underflowBinIndex: Int,
-      overflowBinIndex: Int): LogLinearLayout = {
-    val (fNormal, fSub, off, limitBits) = calibrate(absoluteLimit, relativeLimit)
-    new LogLinearLayout(
-      absoluteLimit,
-      relativeLimit,
-      underflowBinIndex,
-      overflowBinIndex,
-      fNormal,
-      fSub,
-      off,
-      limitBits)
+  override protected def normalBound(s: Double): Double = {
+    val exponent = math.floor(s).toInt - 1
+    val mantissaPlus1 = s - exponent
+    math.scalb(mantissaPlus1, exponent - 1023)
   }
+}
 
-  def apply(
-      absoluteLimit: Double,
-      relativeLimit: Double,
-      valueRangeLowerBound: Double,
-      valueRangeUpperBound: Double): LogLinearLayout = {
-    checkLimits(absoluteLimit, relativeLimit, valueRangeLowerBound, valueRangeUpperBound)
-    val probe = withIndices(absoluteLimit, relativeLimit, 0, 0)
-    val (under, over) =
-      boundIndices(probe.mapToBinIndex, valueRangeLowerBound, valueRangeUpperBound)
-    withIndices(absoluteLimit, relativeLimit, under, over)
-  }
+object LogLinearLayout {
+  def apply(absoluteLimit: Double, relativeLimit: Double, valueRangeLowerBound: Double,
+      valueRangeUpperBound: Double): LogLinearLayout =
+    ErrorLimitingLayout.covering(new LogLinearLayout(_, _, _, _))(
+      absoluteLimit, relativeLimit, valueRangeLowerBound, valueRangeUpperBound)
 }
 
 /** Piecewise-quadratic log layout (dynahist `layout/LogQuadraticLayout.java`). */
-final class LogQuadraticLayout private (
-    val absoluteLimit: Double,
-    val relativeLimit: Double,
-    val underflowBinIndex: Int,
-    val overflowBinIndex: Int,
-    protected val factorNormal: Double,
-    protected val factorSubnormal: Double,
-    protected val offset: Double,
-    protected val normalLimitBits: Long)
-    extends ErrorLimitingLayout {
-
-  override protected def indexHelper(bits: Long): Double = LogQuadraticLayout.helper(bits)
-
-  override protected def positiveBoundApprox(idx: Int): Double = {
-    val x = idx * absoluteLimit
-    if (x < java.lang.Double.longBitsToDouble(normalLimitBits)) x
-    else {
-      val s = (idx - offset) / factorNormal
-      val exponent = math.floor(s).toInt / 3
-      val exponentMul3Plus4 = exponent + (exponent << 1) + 4
-      val mantissaPlus1 = 3.0 - math.sqrt(exponentMul3Plus4 - s) // in [1, 2)
-      math.scalb(mantissaPlus1, exponent - 1023)
-    }
-  }
-
-  override def equals(o: Any): Boolean = o match {
-    case l: LogQuadraticLayout =>
-      java.lang.Double.doubleToLongBits(absoluteLimit) ==
-        java.lang.Double.doubleToLongBits(l.absoluteLimit) &&
-        java.lang.Double.doubleToLongBits(relativeLimit) ==
-          java.lang.Double.doubleToLongBits(l.relativeLimit) &&
-        underflowBinIndex == l.underflowBinIndex && overflowBinIndex == l.overflowBinIndex
-    case _ => false
-  }
-
-  override def hashCode(): Int =
-    (absoluteLimit, relativeLimit, underflowBinIndex, overflowBinIndex).hashCode()
-}
-
-object LogQuadraticLayout {
-  import ErrorLimitingLayout._
+final class LogQuadraticLayout private[core] (abs: Double, rel: Double, under: Int, over: Int)
+    extends ErrorLimitingLayout(abs, rel, under, over) {
 
   /** `(m-1)(5-m) + 3e` with m = mantissa+1: continuous, monotone, quadratic
    * per octave; approximates 4*log2 up to affine transform. */
-  private[core] def helper(unsignedValueBits: Long): Double = {
+  override protected def indexHelper(unsignedValueBits: Long): Double = {
     val exponent = unsignedValueBits >>> 52
     val exponentMul3 = (exponent + (exponent << 1)).toDouble
     val mantissaPlus1 = java.lang.Double.longBitsToDouble(
@@ -254,61 +182,36 @@ object LogQuadraticLayout {
     (mantissaPlus1 - 1d) * (5d - mantissaPlus1) + exponentMul3
   }
 
-  private def calibrate(absoluteLimit: Double, relativeLimit: Double) = {
-    val firstNormalIdx = firstNormalIndex(relativeLimit)
-    val fNormal = 0.25 / math.log1p(relativeLimit)
-    val fSub = subnormalFactor(absoluteLimit)
-    val limitBits = calibrateNormalLimitBits(fSub, firstNormalIdx)
-    val off = calibrateOffset(helper(limitBits), fNormal, firstNormalIdx)
-    (fNormal, fSub, off, limitBits)
-  }
+  override protected def scale: Double = 0.25
 
-  /** Rebuilds a layout from its serialized parameters. */
-  private[core] def withIndices(
-      absoluteLimit: Double,
-      relativeLimit: Double,
-      underflowBinIndex: Int,
-      overflowBinIndex: Int): LogQuadraticLayout = {
-    val (fNormal, fSub, off, limitBits) = calibrate(absoluteLimit, relativeLimit)
-    new LogQuadraticLayout(
-      absoluteLimit,
-      relativeLimit,
-      underflowBinIndex,
-      overflowBinIndex,
-      fNormal,
-      fSub,
-      off,
-      limitBits)
+  override protected def normalBound(s: Double): Double = {
+    val exponent = math.floor(s).toInt / 3
+    val exponentMul3Plus4 = exponent + (exponent << 1) + 4
+    val mantissaPlus1 = 3.0 - math.sqrt(exponentMul3Plus4 - s) // in [1, 2)
+    math.scalb(mantissaPlus1, exponent - 1023)
   }
+}
 
-  def apply(
-      absoluteLimit: Double,
-      relativeLimit: Double,
-      valueRangeLowerBound: Double,
-      valueRangeUpperBound: Double): LogQuadraticLayout = {
-    checkLimits(absoluteLimit, relativeLimit, valueRangeLowerBound, valueRangeUpperBound)
-    val probe = withIndices(absoluteLimit, relativeLimit, 0, 0)
-    val (under, over) =
-      boundIndices(probe.mapToBinIndex, valueRangeLowerBound, valueRangeUpperBound)
-    withIndices(absoluteLimit, relativeLimit, under, over)
-  }
+object LogQuadraticLayout {
+  def apply(absoluteLimit: Double, relativeLimit: Double, valueRangeLowerBound: Double,
+      valueRangeUpperBound: Double): LogQuadraticLayout =
+    ErrorLimitingLayout.covering(new LogQuadraticLayout(_, _, _, _))(
+      absoluteLimit, relativeLimit, valueRangeLowerBound, valueRangeUpperBound)
 }
 
 /** Exact-log layout with zero bin-count overhead
  * (dynahist `layout/LogOptimalLayout.java`). */
-final class LogOptimalLayout private (
-    val absoluteLimit: Double,
-    val relativeLimit: Double,
-    val underflowBinIndex: Int,
-    val overflowBinIndex: Int,
-    protected val factorNormal: Double,
-    protected val factorSubnormal: Double,
-    protected val offset: Double,
-    protected val normalLimitBits: Long)
-    extends ErrorLimitingLayout {
+final class LogOptimalLayout private[core] (abs: Double, rel: Double, under: Int, over: Int)
+    extends ErrorLimitingLayout(abs, rel, under, over) {
+  import LogOptimalLayout.LogMinValue
 
-  override protected def indexHelper(bits: Long): Double =
-    LogOptimalLayout.helper(java.lang.Double.longBitsToDouble(bits))
+  /** `log(v) - log(MIN_VALUE)`: always nonnegative for positive v. */
+  override protected def indexHelper(unsignedValueBits: Long): Double =
+    math.log(java.lang.Double.longBitsToDouble(unsignedValueBits)) - LogMinValue
+
+  override protected def scale: Double = 1.0
+
+  override protected def normalBound(s: Double): Double = math.exp(s + LogMinValue)
 
   override def mapToBinIndex(value: Double): Int = {
     val valueBits = java.lang.Double.doubleToRawLongBits(value)
@@ -319,78 +222,13 @@ final class LogOptimalLayout private (
       else subnormalIdx(unsignedBits)
     if (valueBits >= 0) idx else ~idx
   }
-
-  override protected def positiveBoundApprox(idx: Int): Double = {
-    val x = idx * absoluteLimit
-    if (x < java.lang.Double.longBitsToDouble(normalLimitBits)) x
-    else {
-      val s = (idx - offset) / factorNormal + LogOptimalLayout.LogMinValue
-      math.exp(s)
-    }
-  }
-
-  override def equals(o: Any): Boolean = o match {
-    case l: LogOptimalLayout =>
-      java.lang.Double.doubleToLongBits(absoluteLimit) ==
-        java.lang.Double.doubleToLongBits(l.absoluteLimit) &&
-        java.lang.Double.doubleToLongBits(relativeLimit) ==
-          java.lang.Double.doubleToLongBits(l.relativeLimit) &&
-        underflowBinIndex == l.underflowBinIndex && overflowBinIndex == l.overflowBinIndex
-    case _ => false
-  }
-
-  override def hashCode(): Int =
-    (absoluteLimit, relativeLimit, underflowBinIndex, overflowBinIndex).hashCode()
 }
 
 object LogOptimalLayout {
-  import ErrorLimitingLayout._
+  private val LogMinValue: Double = math.log(java.lang.Double.MIN_VALUE)
 
-  private[core] val LogMinValue: Double = math.log(java.lang.Double.MIN_VALUE)
-
-  /** `log(v) - log(MIN_VALUE)`: always nonnegative for positive v. */
-  private[core] def helper(unsignedValue: Double): Double =
-    math.log(unsignedValue) - LogMinValue
-
-  private def calibrate(absoluteLimit: Double, relativeLimit: Double) = {
-    val firstNormalIdx = firstNormalIndex(relativeLimit)
-    val fNormal = 1.0 / math.log1p(relativeLimit)
-    val fSub = subnormalFactor(absoluteLimit)
-    val limitBits = calibrateNormalLimitBits(fSub, firstNormalIdx)
-    val off = calibrateOffset(
-      helper(java.lang.Double.longBitsToDouble(limitBits)),
-      fNormal,
-      firstNormalIdx)
-    (fNormal, fSub, off, limitBits)
-  }
-
-  /** Rebuilds a layout from its serialized parameters. */
-  private[core] def withIndices(
-      absoluteLimit: Double,
-      relativeLimit: Double,
-      underflowBinIndex: Int,
-      overflowBinIndex: Int): LogOptimalLayout = {
-    val (fNormal, fSub, off, limitBits) = calibrate(absoluteLimit, relativeLimit)
-    new LogOptimalLayout(
-      absoluteLimit,
-      relativeLimit,
-      underflowBinIndex,
-      overflowBinIndex,
-      fNormal,
-      fSub,
-      off,
-      limitBits)
-  }
-
-  def apply(
-      absoluteLimit: Double,
-      relativeLimit: Double,
-      valueRangeLowerBound: Double,
-      valueRangeUpperBound: Double): LogOptimalLayout = {
-    checkLimits(absoluteLimit, relativeLimit, valueRangeLowerBound, valueRangeUpperBound)
-    val probe = withIndices(absoluteLimit, relativeLimit, 0, 0)
-    val (under, over) =
-      boundIndices(probe.mapToBinIndex, valueRangeLowerBound, valueRangeUpperBound)
-    withIndices(absoluteLimit, relativeLimit, under, over)
-  }
+  def apply(absoluteLimit: Double, relativeLimit: Double, valueRangeLowerBound: Double,
+      valueRangeUpperBound: Double): LogOptimalLayout =
+    ErrorLimitingLayout.covering(new LogOptimalLayout(_, _, _, _))(
+      absoluteLimit, relativeLimit, valueRangeLowerBound, valueRangeUpperBound)
 }

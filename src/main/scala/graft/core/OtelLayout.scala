@@ -16,7 +16,7 @@ package graft.core
  *
  * Negative values map to negated indices (the zero bucket index 0 is shared).
  */
-final class OtelExponentialLayout private (val scale: Int) extends SeededBoundLayout {
+final class OtelExponentialLayout private (val scale: Int) extends Layout {
   import OtelExponentialLayout._
 
   private val boundaries: Array[Long] = calculateBoundaries(scale)

@@ -73,8 +73,10 @@ private[graft] final class SparseCells private (limit: Int, capacity: Int)
     keys(if (k >= 0) k else -k - 2)
   }
 
-  /** Bytes of the two arrays: 4 + 8 an entry of capacity. */
-  def footprintBytes: Long = keys.length * 4L + vals.length * 8L
+  /** Heap bytes of the list: its 32-byte object and the two arrays it
+   * owns, 4 + 8 bytes an entry of capacity plus a header each. */
+  def footprintBytes: Long =
+    32L + SparseCells.arrayBytes(keys.length, 4) + SparseCells.arrayBytes(vals.length, 8)
 
   private def find(key: Int): Int = java.util.Arrays.binarySearch(keys, 0, n, key)
 
@@ -118,6 +120,12 @@ private[graft] object SparseCells {
   /** Entries a sketch of `cells` cells keeps sparse: at most 128, and at
    * most one in eight of its cells. */
   def cap(cells: Int): Int = math.min(128, cells / 8)
+
+  /** Heap bytes of an array of `length` elements `width` bytes wide: a
+   * 16-byte header and the elements; 0 when empty, as the shared empty
+   * arrays cost nothing per sketch. */
+  def arrayBytes(length: Int, width: Int): Long =
+    if (length == 0) 0L else 16L + length.toLong * width
 
   /** An empty list for a sketch of `cells` cells, with room for `expected`
    * entries (up to the cap) before it grows. */

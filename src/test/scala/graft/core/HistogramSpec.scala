@@ -291,8 +291,11 @@ class HistogramSpec extends AnyFunSuite {
     val empty = h.estimatedFootprintBytes
     h.addValue(-1.0).addValue(2e9).addValue(Double.PositiveInfinity)
     assert(h.estimatedFootprintBytes == empty && !h.isDense)
+    // the object and its fields (60 B) and the empty list's object (32 B)
+    assert(empty == 92L)
     h.addValue(5.0)
-    assert(h.estimatedFootprintBytes > empty && !h.isDense)
+    // one sparse insert allocates the list's two arrays at 8 entries each
+    assert(h.estimatedFootprintBytes - empty == 2 * 16 + 8 * (4 + 8) && !h.isDense)
     assert(Histogram.static(IntegerLayout(0, 9)).isDense)
   }
 }

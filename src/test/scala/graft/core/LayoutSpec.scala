@@ -202,5 +202,9 @@ class LayoutSpec extends AnyFunSuite {
         assert(back.mapToBinIndex(v) == l.mapToBinIndex(v))
       }
     }
+    // the three log shapes with the same parameters are three layouts
+    val shapes = Seq[Layout](LogLinearLayout(1e-5, 1e-2, -1e6, 1e6),
+      LogQuadraticLayout(1e-5, 1e-2, -1e6, 1e6), LogOptimalLayout(1e-5, 1e-2, -1e6, 1e6))
+    for (a <- shapes; b <- shapes if a ne b) assert(a != b, s"$a == $b")
   }
 }

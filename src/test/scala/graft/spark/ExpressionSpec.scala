@@ -224,6 +224,16 @@ class ExpressionSpec extends AnyFunSuite {
       .collect()
     val cl = graft.core.CustomLayout(10.0, 100.0, 1000.0)
     customRows.foreach(r => assert(r.getInt(1) == cl.mapToBinIndex(r.getDouble(0))))
+    // the three log shapes with the same literals stay three aggregates
+    val shapes = Seq("log_linear", "log_quadratic", "log_optimal")
+    val blobs = spark
+      .sql(shapes.map(k => s"hist_sketch_$k(v, 1e-3, 1e-2, 0.0, 1e6) AS $k")
+        .mkString("SELECT ", ", ", " FROM sql_vals"))
+      .collect()(0)
+    val layouts = shapes.indices.map(i => SketchEnvelope.fromBytes(blobs.getAs[Array[Byte]](i)).layout)
+    assert(layouts == Seq(LogLinearLayout(1e-3, 1e-2, 0, 1e6),
+      LogQuadraticLayout(1e-3, 1e-2, 0, 1e6), LogOptimalLayout(1e-3, 1e-2, 0, 1e6)))
+    assert(shapes.indices.map(i => blobs.getAs[Array[Byte]](i).toSeq).distinct.size == 3)
   }
 
   test("estimator-parameterized native expressions agree with the kernel and stay in codegen") {
@@ -632,17 +642,25 @@ class ExpressionSpec extends AnyFunSuite {
     functions.registerAll(spark)
     import spark.implicits._
     Seq(("a", 1.0)).toDF("x", "v").createOrReplaceTempView("bad_params")
-    // the sketch factory's own parameter check, anywhere in the cause chain
-    def factoryCheck(e: Throwable): Boolean =
+    // the sketch factory's own parameter check, anywhere in the cause
+    // chain, with `param` in its message
+    def factoryCheck(e: Throwable, param: String = ""): Boolean =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
-        case i: IllegalArgumentException => i.getMessage.startsWith("requirement failed")
+        case i: IllegalArgumentException =>
+          i.getMessage.startsWith("requirement failed") && i.getMessage.contains(param)
         case _ => false
       }
-    for (call <- Seq("hll_sketch(x, 40)", "hll_sketch(x, 31)", "kll_sketch(v, 2)",
+    for ((call, param) <- Seq("hll_sketch(x, 40)", "hll_sketch(x, 31)", "kll_sketch(v, 2)",
         "tdigest_sketch(v, 1)",
-        "cms_sketch(x, 0, 10)", "cms_sketch_weighted(x, 1, 5, 0)", "bloom_sketch(x, 0)")) {
+        "cms_sketch(x, 0, 10)", "cms_sketch_weighted(x, 1, 5, 0)", "bloom_sketch(x, 0)")
+        .map(_ -> "") ++ Seq(
+        "hist_sketch_log_linear(v, 0.0, 0.01, 0.0, 1.0)" -> "absoluteLimit",
+        "hist_sketch_log_quadratic(v, 1e-3, -0.01, 0.0, 1.0)" -> "relativeLimit",
+        "hist_sketch_log_optimal(v, 1e-3, 0.01, 2.0, 1.0)" -> "valueRangeLowerBound 2.0",
+        "hist_sketch_log_linear(v, 1e-3, 0.01, 0.0, double('Infinity'))" ->
+          "valueRangeUpperBound")) {
       val e = intercept[Exception](spark.sql(s"SELECT $call FROM bad_params"))
-      assert(factoryCheck(e), s"$call: $e")
+      assert(factoryCheck(e, param), s"$call: $e")
     }
     for (build <- Seq[() => org.apache.spark.sql.Column](
         () => hll_sketch(col("x"), 40), () => hll_sketch(col("x"), -1),

@@ -275,6 +275,67 @@ class SketchGoldenSpec extends AnyFunSuite {
     })
   }
 
+  /** The three error-limiting shapes at three parameter sets
+   * (absoluteLimit, relativeLimit, lo, hi): a wide signed range, the
+   * recording benchmark's and the conversation sketches'. */
+  private val pinnedLayouts: Seq[(String, ErrorLimitingLayout, Double, Double)] = {
+    val params = Seq("wide" -> (1e-8, 1e-2, -1e6, 1e6), "bench" -> (10.0, 0.01, 0.0, 1e12),
+      "conv" -> (1e-2, 1e-2, 0.0, 1e9))
+    for {
+      (shape, make) <- Seq[(String, (Double, Double, Double, Double) => ErrorLimitingLayout)](
+        "log_linear" -> (LogLinearLayout(_, _, _, _)),
+        "log_quadratic" -> (LogQuadraticLayout(_, _, _, _)),
+        "log_optimal" -> (LogOptimalLayout(_, _, _, _)))
+      (p, (abs, rel, lo, hi)) <- params
+    } yield (s"$shape.$p", make(abs, rel, lo, hi), lo, hi)
+  }
+
+  /** 10^5 seeded values, a quarter each of any bit pattern (NaNs included),
+   * uniform on [lo, hi], signed log-uniform on [1e-12, 1e13], and uniform
+   * around the subnormal/normal hand-over; then the special values. */
+  private def probeValues(abs: Double, lo: Double, hi: Double): Array[Double] = {
+    val rnd = new java.util.SplittableRandom(101L)
+    val drawn = Array.tabulate(100000) { i =>
+      val sign = if (rnd.nextBoolean()) 1.0 else -1.0
+      i % 4 match {
+        case 0 => java.lang.Double.longBitsToDouble(rnd.nextLong())
+        case 1 => rnd.nextDouble(lo, hi)
+        case 2 => sign * math.exp(rnd.nextDouble(math.log(1e-12), math.log(1e13)))
+        case _ => rnd.nextDouble(-200.0, 200.0) * abs
+      }
+    }
+    drawn ++ Array(0.0, -0.0, Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN,
+      java.lang.Double.MIN_NORMAL, -java.lang.Double.MIN_NORMAL, Double.MinPositiveValue,
+      -Double.MinPositiveValue, Double.MaxValue, Double.MinValue, lo, hi,
+      math.nextDown(lo), math.nextUp(hi))
+  }
+
+  test("error-limiting layouts map values and bound bins as their goldens record") {
+    def sha(fill: java.nio.ByteBuffer => Unit, bytes: Int): String = {
+      val buf = java.nio.ByteBuffer.allocate(bytes)
+      fill(buf)
+      java.security.MessageDigest.getInstance("SHA-256").digest(buf.array())
+        .map(x => f"${x & 0xff}%02x").mkString
+    }
+    val bad = pinnedLayouts.flatMap { case (name, l, lo, hi) =>
+      val under = l.underflowBinIndex
+      val over = l.overflowBinIndex
+      val values = probeValues(l.absoluteLimit, lo, hi)
+      // every index from underflow - 1 to overflow + 1, and the Int extremes
+      val indices = (Int.MinValue +: (under - 1 to over + 1)) :+ Int.MaxValue
+      val got = Seq(
+        s"layout.$name.range" -> s"$under:$over",
+        s"layout.$name.map" -> sha(b => values.foreach(v => b.putInt(l.mapToBinIndex(v))),
+          4 * values.length),
+        s"layout.$name.bounds" -> sha(b => indices.foreach { i =>
+          b.putLong(java.lang.Double.doubleToRawLongBits(l.binLowerBound(i)))
+          b.putLong(java.lang.Double.doubleToRawLongBits(l.binUpperBound(i)))
+        }, 16 * indices.length))
+      got.collect { case (k, v) if !Goldens.expected(k).contains(v) => s"$k $v" }
+    }
+    assert(bad.isEmpty, bad.mkString("golden mismatches:\n", "\n", ""))
+  }
+
   test("*_merge edge cases: empty input, all-null rows and zero-length blobs yield empty bytes") {
     import spark.implicits._
     val merges: Seq[Column => Column] =
