@@ -22,6 +22,11 @@ object SparkEntry {
   private def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** A long metric of a completed `Observation`, 0 when the batch produced
+   * none (a no-data micro-batch can leave it absent or null). */
+  private[graft] def observedCount(obs: org.apache.spark.sql.Observation, name: String): Long =
+    obs.get.get(name).collect { case n: java.lang.Long => n.longValue() }.getOrElse(0L)
+
   /** Run `body` under an explicit shuffle width, restoring the session value
    * after. Queries whose frames are orders of magnitude smaller than the
    * session's data-sized default (the dedup pair graphs are O(dup docs);
@@ -29,11 +34,6 @@ object SparkEntry {
    * stage pays the task count, not the data. A real deployment sizes
    * `spark.sql.shuffle.partitions` to the frame it processes — this is that
    * knob, applied per query. Every action of `body` must run inside. */
-  /** A long metric of a completed `Observation`, 0 when the batch produced
-   * none (a no-data micro-batch can leave it absent or null). */
-  private[graft] def observedCount(obs: org.apache.spark.sql.Observation, name: String): Long =
-    obs.get.get(name).collect { case n: java.lang.Long => n.longValue() }.getOrElse(0L)
-
   private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", n.toString)

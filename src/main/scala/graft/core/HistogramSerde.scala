@@ -1,7 +1,5 @@
 package graft.core
 
-import java.io.ByteArrayOutputStream
-
 import Bytes.{BitReader, BitWriter, Reader, Writer}
 
 /**
@@ -471,37 +469,6 @@ object HistogramSerde {
   }
 }
 
-/** Deflate wrappers for at-rest sketch bytes
- * (dynahist `serialization/SerializationUtil.java:235-313`). */
-object Compression {
-
-  def compress(data: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(data)
-    deflater.finish()
-    val buffer = new Array[Byte](1024)
-    while (!deflater.finished()) out.write(buffer, 0, deflater.deflate(buffer))
-    deflater.end()
-    out.toByteArray
-  }
-
-  def decompress(data: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(data.length)
-    val inflater = new java.util.zip.Inflater()
-    inflater.setInput(data)
-    val buffer = new Array[Byte](1024)
-    while (!inflater.finished()) out.write(buffer, 0, inflater.inflate(buffer))
-    inflater.end()
-    out.toByteArray
-  }
-
-  def writeCompressed(h: Histogram): Array[Byte] = compress(HistogramSerde.toBytes(h))
-
-  def readCompressed(layout: Layout, bytes: Array[Byte]): Histogram =
-    HistogramSerde.fromBytes(layout, decompress(bytes))
-}
-
 /**
  * Self-describing layout codec: a 1-byte tag, then the layout's parameter
  * bytes. Used by [[SketchEnvelope]] so sketch columns carry their layout.
@@ -556,20 +523,27 @@ object LayoutCodec {
       w.putZigzag(l.maxRegular)
   }
 
-  /** The layout of kind `tag` from its parameter bytes. */
-  private[core] def readParams(tag: Int, r: Reader): Layout = tag match {
-    case TagCustom =>
-      val n = r.fits(r.readVarLong(), 8)
-      CustomLayout(Array.fill(n)(r.readDouble()))
-    case TagLogLinear =>
-      new LogLinearLayout(r.readDouble(), r.readDouble(), r.readZigzag(), r.readZigzag())
-    case TagLogQuadratic =>
-      new LogQuadraticLayout(r.readDouble(), r.readDouble(), r.readZigzag(), r.readZigzag())
-    case TagLogOptimal =>
-      new LogOptimalLayout(r.readDouble(), r.readDouble(), r.readZigzag(), r.readZigzag())
-    case TagOtel    => OtelExponentialLayout(r.readUnsignedByte())
-    case TagInteger => IntegerLayout(r.readZigzag(), r.readZigzag())
-    case t          => r.fail(s"unknown layout tag $t")
+  /** The layout of kind `tag` from its parameter bytes. The parameters
+   * pass the checks of the layout's factory or constructor; one that does
+   * not fails as a [[SketchFormatException]] with the check's message. */
+  private[core] def readParams(tag: Int, r: Reader): Layout = {
+    def errorLimiting[L <: ErrorLimitingLayout](make: (Double, Double, Int, Int) => L): L =
+      ErrorLimitingLayout.decoded(make)(r.readDouble(), r.readDouble(), r.readZigzag(),
+        r.readZigzag())
+    try tag match {
+      case TagCustom =>
+        val n = r.fits(r.readVarLong(), 8)
+        CustomLayout(Array.fill(n)(r.readDouble()))
+      case TagLogLinear    => errorLimiting(new LogLinearLayout(_, _, _, _))
+      case TagLogQuadratic => errorLimiting(new LogQuadraticLayout(_, _, _, _))
+      case TagLogOptimal   => errorLimiting(new LogOptimalLayout(_, _, _, _))
+      case TagOtel         => OtelExponentialLayout(r.readUnsignedByte())
+      case TagInteger      => IntegerLayout(r.readZigzag(), r.readZigzag())
+      case t               => r.fail(s"unknown layout tag $t")
+    } catch {
+      case e: IllegalArgumentException if !e.isInstanceOf[SketchFormatException] =>
+        r.fail(e.getMessage)
+    }
   }
 
   private[graft] def write(layout: Layout, w: Writer): Unit = {

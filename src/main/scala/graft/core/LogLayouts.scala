@@ -123,13 +123,7 @@ object ErrorLimitingLayout {
     require(java.lang.Double.isFinite(lo), s"valueRangeLowerBound must be finite, got $lo")
     require(java.lang.Double.isFinite(hi), s"valueRangeUpperBound must be finite, got $hi")
     require(hi >= lo, s"valueRangeLowerBound $lo exceeds valueRangeUpperBound $hi")
-    require(
-      absoluteLimit >= java.lang.Double.MIN_NORMAL && absoluteLimit <= Double.MaxValue,
-      s"absoluteLimit must be in [${java.lang.Double.MIN_NORMAL}, ${Double.MaxValue}], " +
-        s"got $absoluteLimit")
-    require(
-      relativeLimit >= 0 && relativeLimit <= Double.MaxValue,
-      s"relativeLimit must be in [0, ${Double.MaxValue}], got $relativeLimit")
+    checkLimits(absoluteLimit, relativeLimit)
     val probe = make(absoluteLimit, relativeLimit, 0, 0)
     val under = probe.mapToBinIndex(lo).toLong - 1
     val over = probe.mapToBinIndex(hi).toLong + 1
@@ -137,6 +131,30 @@ object ErrorLimitingLayout {
       under >= Int.MinValue && over <= Int.MaxValue && over - under - 1 <= Int.MaxValue,
       s"value range [$lo, $hi] needs more bins than an Int indexes")
     make(absoluteLimit, relativeLimit, under.toInt, over.toInt)
+  }
+
+  /** The layout `make(absoluteLimit, relativeLimit, underflow, overflow)`
+   * from decoded parameters, which pass the checks [[covering]] makes: the
+   * limits' ranges, and an underflow index below the overflow index. */
+  private[core] def decoded[L <: ErrorLimitingLayout](make: (Double, Double, Int, Int) => L)(
+      absoluteLimit: Double,
+      relativeLimit: Double,
+      underflow: Int,
+      overflow: Int): L = {
+    checkLimits(absoluteLimit, relativeLimit)
+    require(underflow < overflow,
+      s"underflowBinIndex $underflow must be below overflowBinIndex $overflow")
+    make(absoluteLimit, relativeLimit, underflow, overflow)
+  }
+
+  private def checkLimits(absoluteLimit: Double, relativeLimit: Double): Unit = {
+    require(
+      absoluteLimit >= java.lang.Double.MIN_NORMAL && absoluteLimit <= Double.MaxValue,
+      s"absoluteLimit must be in [${java.lang.Double.MIN_NORMAL}, ${Double.MaxValue}], " +
+        s"got $absoluteLimit")
+    require(
+      relativeLimit >= 0 && relativeLimit <= Double.MaxValue,
+      s"relativeLimit must be in [0, ${Double.MaxValue}], got $relativeLimit")
   }
 }
 

@@ -3,14 +3,16 @@ package graft.spark
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{
+  Alias, Attribute, Expression, Length, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.StringType
 
-import graft.spark.expressions.SketchAgg
+import graft.spark.expressions.{SketchAgg, SketchScalar}
 
 /**
  * Optimizer rule that evaluates each computed sketch input once per row, in
@@ -25,6 +27,14 @@ import graft.spark.expressions.SketchAgg
  * child into a `Project` below the `Aggregate`; semantically equal inputs
  * share one alias. The Project runs in whole-stage codegen and the
  * aggregates read its output column on their unboxed path.
+ *
+ * Inside a pulled-out input, every `length(s)` of a UTF8_BINARY string is
+ * counted by the native `char_count` ([[SketchScalar.CharCount]]): an ASCII
+ * string's character count is its byte count, found by an eight-bytes-at-a-
+ * time scan, where Spark's `numChars` walks the UTF-8 one byte at a time
+ * (and its per-object cache never hits on the fresh string a Parquet reader
+ * hands out each row). The count is Spark's for every input; binary and
+ * collated `length` stay as they are.
  *
  * `FILTER` aggregates keep their inputs: a Project would evaluate the input
  * on rows the filter skips, which can throw (an ANSI cast) where the
@@ -69,6 +79,10 @@ object PullOutSketchInputs extends Rule[LogicalPlan] {
   private def pullable(e: Expression): Boolean =
     e.deterministic && !e.foldable && !e.isInstanceOf[Attribute]
 
+  private def countChars(e: Expression): Expression = e.transformUp {
+    case Length(s) if s.dataType == StringType => SketchScalar(SketchScalar.CharCount, Seq(s))
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case a: Aggregate => pullOut(a)
   }
@@ -80,7 +94,8 @@ object PullOutSketchInputs extends Rule[LogicalPlan] {
           if f.isInstanceOf[SketchAgg[_]] && f.children.exists(pullable) =>
         ae.copy(aggregateFunction = f.withNewChildren(f.children.map { c =>
           if (!pullable(c)) c
-          else inputs.getOrElseUpdate(c.canonicalized, Alias(c, "_in")()).toAttribute
+          else inputs.getOrElseUpdate(c.canonicalized, Alias(countChars(c), "_in")())
+            .toAttribute
         }).asInstanceOf[AggregateFunction])
     }.asInstanceOf[NamedExpression])
     if (inputs.isEmpty) a

@@ -86,6 +86,12 @@ object SketchEval {
   def kllQuantile(b: Array[Byte], p: Double): Double = Kll.fromBytes(b).quantile(p)
   def kllRank(b: Array[Byte], x: Double): Long = Kll.fromBytes(b).rank(x)
 
+  /** Spark's `length` of a string, its `numChars`. An all-ASCII string has
+   * one character a byte, so it is counted by the word-at-a-time
+   * [[SketchAgg.isAscii]] scan; any other string, malformed UTF-8 included,
+   * by `numChars` itself. */
+  def charCount(s: UTF8String): Int = if (SketchAgg.isAscii(s)) s.numBytes else s.numChars
+
   /** Parses an estimator name (reference `ValueEstimatorImpls` policies). */
   def estimator(name: String): ValueEstimator = name.toLowerCase match {
     case "uniform"     => ValueEstimator.Uniform
@@ -169,4 +175,7 @@ object SketchScalar {
   val TDigestCdf: Fn = onSketch("tdigest_cdf", DoubleType, DoubleType)
   val KllQuantile: Fn = onSketch("kll_quantile", DoubleType, DoubleType)
   val KllRank: Fn = onSketch("kll_rank", LongType, DoubleType)
+  /** `length(s)` of a UTF8_BINARY string; [[graft.spark.PullOutSketchInputs]]
+   * puts it in place of Spark's `Length` in sketch inputs (no SQL name). */
+  val CharCount: Fn = Fn("char_count", Seq(StringType), IntegerType)
 }

@@ -351,4 +351,59 @@ class SerdeSpec extends AnyFunSuite {
         s"$name: offset ${e.offset}")
     }
   }
+
+  test("decoded layout parameters pass the factory's checks or fail as corrupt") {
+    def envelope(layout: Layout): Array[Byte] = {
+      val h = Histogram(layout)
+      h.addValue(3.0)
+      SketchEnvelope.toBytes(h)
+    }
+    // magic (2 bytes) and tag (1 byte) come before the parameters
+    def patched(layout: Layout, at: Int, bytes: Array[Byte]): Array[Byte] = {
+      val b = envelope(layout)
+      System.arraycopy(bytes, 0, b, at, bytes.length)
+      b
+    }
+    def double(v: Double): Array[Byte] =
+      java.nio.ByteBuffer.allocate(8).putDouble(v).array()
+    val log = LogLinearLayout(1e-2, 1e-2, 0, 1e9)
+    val limits = s"[${java.lang.Double.MIN_NORMAL}, ${Double.MaxValue}]"
+    val cases = Seq[(String, Array[Byte], String)](
+      ("absoluteLimit NaN", patched(log, 3, double(Double.NaN)),
+        s"absoluteLimit must be in $limits, got NaN"),
+      ("absoluteLimit 0", patched(log, 3, double(0.0)),
+        s"absoluteLimit must be in $limits, got 0.0"),
+      ("relativeLimit NaN", patched(log, 11, double(Double.NaN)),
+        s"relativeLimit must be in [0, ${Double.MaxValue}], got NaN"),
+      ("relativeLimit -1", patched(log, 11, double(-1.0)),
+        s"relativeLimit must be in [0, ${Double.MaxValue}], got -1.0"),
+      // under/overflow zigzag varints 0 and 0 (LogLinear over [0, 1e9] has
+      // underflow index -1, one byte)
+      ("underflow not below overflow",
+        patched(LogLinearLayout(1e-2, 1e-2, 0, 0), 19, Array[Byte](0, 0)),
+        "underflowBinIndex 0 must be below overflowBinIndex 0"),
+      // boundaries 1.0, 2.0, 3.0 -> 1.0, 2.0, 2.0
+      ("custom boundaries not increasing",
+        patched(CustomLayout(1.0, 2.0, 3.0), 20, double(2.0)),
+        "boundaries must be strictly ascending"),
+      ("OTel scale 11", patched(OtelExponentialLayout(3), 3, Array[Byte](11)),
+        "scale must be in [0, 10]"),
+      // zigzag -5 is 9 and 5 is 10: min and max swapped
+      ("integer min > max", patched(IntegerLayout(-5, 5), 3, Array[Byte](10, 9)), ""))
+    for ((name, blob, message) <- cases) {
+      val e = intercept[SketchFormatException](SketchEnvelope.fromBytes(blob))
+      assert(e.what == "histogram", name)
+      assert(e.reason == s"requirement failed${if (message.isEmpty) "" else ": " + message}",
+        s"$name: ${e.reason}")
+    }
+    // the reference type-info form decodes its parameters through the same checks
+    val ref = ReferenceLayoutSerde.toBytesWithTypeInfo(Histogram(log))
+    System.arraycopy(double(0.0), 0, ref, 9, 8)
+    val e = intercept[SketchFormatException](ReferenceLayoutSerde.fromBytesWithTypeInfo(ref))
+    assert(e.reason == s"requirement failed: absoluteLimit must be in $limits, got 0.0")
+    // unpatched envelopes of each kind still decode
+    for (l <- Seq[Layout](log, CustomLayout(1.0, 2.0, 3.0), OtelExponentialLayout(3),
+        IntegerLayout(-5, 5)))
+      assert(SketchEnvelope.fromBytes(envelope(l)).layout == l)
+  }
 }

@@ -58,6 +58,13 @@ class PullOutSketchInputsSpec extends AnyFunSuite {
   private def occurrences(plan: LogicalPlan, s: String): Int =
     s.r.findAllIn(plan.toString).size
 
+  /** The shared `length(text)` input is computed once, as the rule's
+   * native `char_count`. */
+  private def assertCountedOnce(plan: LogicalPlan): Unit = {
+    assert(occurrences(plan, "char_count\\(") == 1, plan)
+    assert(occurrences(plan, "length\\(") == 0, plan)
+  }
+
   /** Runs `body` with the rule taken out of the session's optimizer. */
   private def withoutRule[T](body: => T): T = {
     val methods = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
@@ -74,7 +81,7 @@ class PullOutSketchInputsSpec extends AnyFunSuite {
 
   test("conv_sketches inputs are computed once, below the aggregate") {
     val plan = sketchTable(convAggregates).queryExecution.optimizedPlan
-    assert(occurrences(plan, "length\\(") == 1, plan)
+    assertCountedOnce(plan)
     val inputs = sketchInputs(plan)
     assert(inputs.size == 6)
     assert(inputs.forall(_.isInstanceOf[Attribute]), plan)
@@ -84,7 +91,7 @@ class PullOutSketchInputsSpec extends AnyFunSuite {
     turns // the session exists before the columns are built, which install the rule
     val aggs = convAggregates
     val withRule = sketchTable(aggs)
-    assert(occurrences(withRule.queryExecution.optimizedPlan, "length\\(") == 1)
+    assertCountedOnce(withRule.queryExecution.optimizedPlan)
     val expected = withoutRule {
       val df = sketchTable(aggs)
       assert(occurrences(df.queryExecution.optimizedPlan, "length\\(") == 3)
@@ -93,6 +100,45 @@ class PullOutSketchInputsSpec extends AnyFunSuite {
     val got = rows(withRule)
     assert(got.size == 200)
     assert(got == expected)
+  }
+
+  test("binary and collated length in a sketch input stay Spark's length") {
+    turns // the session exists before the columns are built, which install the rule
+    val aggs = Seq(
+      functions.hist_sketch(length(col("text").cast("binary")), layout).as("bin"),
+      functions.kll_sketch(length(collate(col("text"), "UTF8_LCASE")), 100).as("lcase"))
+    val withRule = sketchTable(aggs)
+    val plan = withRule.queryExecution.optimizedPlan
+    assert(sketchInputs(plan).forall(_.isInstanceOf[Attribute]), plan)
+    assert(occurrences(plan, "length\\(") == 2, plan)
+    assert(occurrences(plan, "char_count\\(") == 0, plan)
+    val got = rows(withRule)
+    assert(got.size == 200)
+    assert(got == withoutRule(rows(sketchTable(aggs))))
+  }
+
+  test("char_count equals Spark's length on non-ASCII, malformed and NULL strings") {
+    import spark.implicits._
+    val texts = Seq("plain ascii", "h\u00e9llo w\u00f6rld", "\u6f22\u5b57" * 9 + "\ud83d\ude00x",
+      null, "x" * 17 + "\u00e9", "")
+    // bytes that are not valid UTF-8 (a lone 0xC3, a lone continuation byte)
+    val malformed = Seq("61C36280", "78787878787878787878C3").toDF("h")
+      .select(unhex(col("h")).cast("string").as("s"))
+    val in = texts.toDF("s").union(malformed).withColumn("g", monotonically_increasing_id())
+      .localCheckpoint()
+    def table(): DataFrame = in.groupBy(col("g")).agg(
+      functions.hist_sketch(length(col("s")), layout).as("h"),
+      functions.kll_sketch(length(col("s")), 100).as("k"),
+      max(length(col("s"))).as("spark_len"))
+    val withRule = table()
+    assert(occurrences(withRule.queryExecution.optimizedPlan, "char_count\\(") == 1)
+    val got = rows(withRule)
+    assert(got.size == 8)
+    assert(got == withoutRule(rows(table())))
+    // each group holds one string: the sketch's max is its length
+    val lengths = withRule.select(functions.hist_max(col("h")), col("spark_len")).collect()
+    assert(lengths.count(_.isNullAt(1)) == 1)
+    for (r <- lengths if !r.isNullAt(1)) assert(r.getDouble(0) == r.getInt(1).toDouble)
   }
 
   /** The update shapes [[convAggregates]] leaves out, each over computed
@@ -205,7 +251,7 @@ class PullOutSketchInputsSpec extends AnyFunSuite {
         """SELECT g, hist_total(hist_sketch(length(s))) AS n, kll_sketch(length(s)) AS k,
           |tdigest_sketch(length(s)) AS t FROM pullout_t GROUP BY g""".stripMargin)
       val plan = df.queryExecution.optimizedPlan
-      assert(occurrences(plan, "length\\(") == 1, plan)
+      assertCountedOnce(plan)
       assert(sketchInputs(plan).forall(_.isInstanceOf[Attribute]), plan)
       assert(df.collect().map(_.getLong(1)).sum == 100L)
     } finally {

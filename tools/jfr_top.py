@@ -12,6 +12,9 @@ frame, so shares split one operator's time (say
 `--within ObjectAggregationIterator.processInputs`). It also prints the
 share of stacks that JFR truncated: a method below the cut is missing from
 those stacks, so its inclusive share reads low by up to that much.
+--callers Class.method [--depth N] places a frame's cost: it prints the
+chains of the N frames (default 3) that called the frame's innermost
+occurrence on each stack, with their share of the frame's own samples.
 
 `jfr print` keeps only the top 5 frames of each stack unless told
 otherwise, which leaves the inclusive shares of everything below the
@@ -27,6 +30,7 @@ recorded):
         --events jdk.ExecutionSample,jdk.ObjectAllocationSample /tmp/conv.jfr > /tmp/conv.json
     python3 tools/jfr_top.py /tmp/conv.json --method UTF8String.numChars
     python3 tools/jfr_top.py /tmp/conv.json --alloc --method CountMin.fromBytes
+    python3 tools/jfr_top.py /tmp/conv.json --callers UTF8String.numChars --depth 4
 
 The recording covers the whole JVM: set-up, warm-up and timed passes. At
 stack depth 64 a dump of one benchmark run is over a gigabyte, so the
@@ -94,10 +98,28 @@ def frame_name(frame):
     return f"{cls.rsplit('.', 1)[-1]}.{m.get('name', '?')}", f"{cls}.{m.get('name', '?')}"
 
 
-def tally(events, event_type="jdk.ExecutionSample"):
+class Callers:
+    """Weight per chain of the `depth` frames that call the innermost frame
+    that `wanted` names, over the samples that hold it (`total`)."""
+
+    def __init__(self, wanted, depth):
+        self.wanted, self.depth = wanted, depth
+        self.chains = collections.Counter()
+        self.total = 0
+
+    def add(self, names, weight):
+        for i, name in enumerate(names):
+            if matches(name, self.wanted):
+                self.chains[tuple(short for short, _ in names[i + 1:i + 1 + self.depth])] += weight
+                self.total += weight
+                return
+
+
+def tally(events, event_type="jdk.ExecutionSample", callers=None):
     """(samples, truncated samples, total weight, self weight per frame,
     inclusive weight per frame) over executor-thread events of
-    `event_type`. A CPU sample weighs 1, an allocation sample its bytes."""
+    `event_type`. A CPU sample weighs 1, an allocation sample its bytes.
+    A `Callers` given as `callers` is fed each sample in the same pass."""
     thread_field = THREAD_FIELD[event_type]
     samples = truncated = total = 0
     self_n = collections.Counter()
@@ -121,6 +143,8 @@ def tally(events, event_type="jdk.ExecutionSample"):
         self_n[names[0]] += w
         for name in set(names):
             incl_n[name] += w
+        if callers:
+            callers.add(names, w)
     return samples, truncated, total, self_n, incl_n
 
 
@@ -148,13 +172,20 @@ def main(argv=None):
                     help="Class.method (simple or qualified class name) to report")
     ap.add_argument("--within", metavar="CLASS.METHOD",
                     help="keep only samples whose stack holds this frame")
+    ap.add_argument("--callers", metavar="CLASS.METHOD",
+                    help="print the top chains of frames that call this frame")
+    ap.add_argument("--depth", type=int, default=3,
+                    help="frames per caller chain (default 3)")
     a = ap.parse_args(argv)
+    if a.depth < 1:
+        ap.error("--depth must be at least 1")
     event_type = "jdk.ObjectAllocationSample" if a.alloc else "jdk.ExecutionSample"
+    callers = Callers(a.callers, a.depth) if a.callers else None
     with open(a.dump) as f:
         events = read_events(f)
         if a.within:
             events = within(events, a.within)
-        samples, truncated, total, self_n, incl_n = tally(events, event_type)
+        samples, truncated, total, self_n, incl_n = tally(events, event_type, callers)
     where = "executor task threads" + (f", within {a.within}" if a.within else "")
     if total == 0:
         print(f"no {event_type} events ({where})", file=sys.stderr)
@@ -175,6 +206,12 @@ def main(argv=None):
             s = sum(n for k, n in self_n.items() if matches(k, wanted))
             i = max([n for k, n in incl_n.items() if matches(k, wanted)], default=0)
             print(f"{100.0 * s / total:6.1f} % / {100.0 * i / total:6.1f} %  {wanted}")
+    if callers:
+        print(f"\ntop {TOP} caller chains of {callers.wanted} (depth {callers.depth}), "
+              f"share of its {what} / of all")
+        for chain, n in callers.chains.most_common(TOP):
+            print(f"{100.0 * n / callers.total:6.1f} % / {100.0 * n / total:6.1f} %  "
+                  + (" <- ".join(chain) or "(no caller on the stack)"))
     return 0
 
 

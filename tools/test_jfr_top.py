@@ -108,6 +108,37 @@ class JfrTopTest(unittest.TestCase):
         with contextlib.redirect_stderr(io.StringIO()):
             self.assertEqual(jfr_top.main([self.dump(EVENTS), "--within", "Hll.addHash"]), 1)
 
+    def test_callers_prints_the_top_caller_chains(self):
+        numchars = frame("org/apache/spark/unsafe/types/UTF8String", "numChars")
+        length = frame("org/apache/spark/sql/catalyst/expressions/Length", "nullSafeEval")
+        project = frame("org/apache/spark/sql/catalyst/expressions/GeneratedClass$"
+                        "GeneratedIteratorForCodegenStage1", "processNext")
+        events = [
+            cpu(WORKER, [numchars, project, AGG]),
+            cpu(WORKER, [numchars, project, AGG]),
+            cpu(WORKER, [numchars, length, project, AGG]),
+            cpu(WORKER, [numchars]),  # no caller below the frame
+            cpu(WORKER, [UPDATE, AGG]),
+            cpu(MAIN_THREAD, [numchars, length]),  # not an executor thread: left out
+        ]
+        gen = "GeneratedClass$GeneratedIteratorForCodegenStage1.processNext"
+        callers = jfr_top.Callers("UTF8String.numChars", 2)
+        jfr_top.tally(events, callers=callers)
+        self.assertEqual(callers.total, 4)
+        self.assertEqual(callers.chains, {
+            (gen, "SortBasedAggregator.next"): 2,
+            ("Length.nullSafeEval", gen): 1,
+            (): 1})
+        out = self.run_main(self.dump(events), "--callers", "UTF8String.numChars",
+                            "--depth", "1")
+        self.assertIn("top 20 caller chains of UTF8String.numChars (depth 1), "
+                      "share of its CPU samples / of all", out)
+        self.assertIn(f" 50.0 % /   40.0 %  {gen}\n", out)
+        self.assertIn(" 25.0 % /   20.0 %  Length.nullSafeEval\n", out)
+        self.assertIn(" 25.0 % /   20.0 %  (no caller on the stack)\n", out)
+        out = self.run_main(self.dump(events), "--callers", "Length.nullSafeEval")
+        self.assertIn(f"100.0 % /   20.0 %  {gen} <- SortBasedAggregator.next\n", out)
+
     def test_method_names(self):
         obj = ("CountMin$.fromBytes", "graft.sketches.CountMin$.fromBytes")
         for wanted in ("CountMin.fromBytes", "CountMin$.fromBytes", "sketches.CountMin.fromBytes",
